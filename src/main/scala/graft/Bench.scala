@@ -156,10 +156,11 @@ object Bench {
     def run(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Int, Double, Boolean) = {
       // Heap hygiene OUTSIDE the timed window (the ScaleProbe pattern,
-      // round-12 CacheProbe attribution: q74 at 74.6 s with 67.4 s GC
-      // under 60% live-heap ballast vs 5.7 s clean) — allocation-heavy
-      // cells are GC-bound under the old-gen occupancy a long bench JVM
-      // accumulates, which was exactly the co-spiked-cells signature.
+      // round-12 heap-ballast attribution, DESIGN §14.7: q74 at 74.6 s
+      // with 67.4 s GC under 60% live-heap ballast vs 5.7 s clean) —
+      // allocation-heavy cells are GC-bound under the old-gen occupancy a
+      // long bench JVM accumulates, which was exactly the co-spiked-cells
+      // signature.
       System.gc()
       def hist = history.queryMedian(name)
       var samples = List(once(name, fn))

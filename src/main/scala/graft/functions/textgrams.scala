@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * slice(ws, i+1, n))), g => hash(g))`, which allocates O(tokens × n)
   * garbage per row: a `sequence` array, a sliced ArrayData + a
   * `concat_ws` UTF8String per gram, and (for the portable family) an md5
-  * HEX STRING plus `conv`'s parse per gram. The CacheProbe experiment
+  * HEX STRING plus `conv`'s parse per gram. The heap-ballast experiment
   * (DESIGN §14.7) measured the gram queries as the suite's most
   * GC-sensitive cells — q74-sf1 went 5.7 s → 74.6 s with 67.4 s of GC
   * under heap ballast — so the allocation, not the hashing, is the cost.

@@ -77,10 +77,9 @@ object Curate {
       capPerSource: Option[Int] = None,
       // token/shingle hash shared by the near-dup, DSIR and
       // trained-classifier stages — production default xxhash64; the q147
-      // end-to-end gate passes [[TextAnalysis.portableHash60]] so the
+      // end-to-end gate passes [[HashFamily.Portable60]] so the
       // WHOLE composed pipeline replays bit-for-bit in DuckDB
-      wordHash: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        c => org.apache.spark.sql.functions.xxhash64(c))
+      wordHash: HashFamily = HashFamily.Xx64)
 
   /** Curated documents plus before/after per-source reports. */
   case class Result(docs: DataFrame, reportBefore: DataFrame,

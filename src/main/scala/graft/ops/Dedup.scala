@@ -77,7 +77,7 @@ object Dedup {
   def minhashSignature(text: Column, shingleSize: Int = 3,
       numHashes: Int = 64, seed: Long = 42L): Column = {
     val hashed = transform(
-      TextAnalysis.hashedShingles(text, shingleSize, xxhash64(_)),
+      TextAnalysis.hashedShingles(text, shingleSize, HashFamily.Xx64),
       h => pmod(h, lit(P)))
     val (as, bs) = hashParams(numHashes, seed).unzip
     graft.functions.sketches.minhash_sig(hashed, as.toArray, bs.toArray)
@@ -88,7 +88,7 @@ object Dedup {
     * signature rows all collide — the classic S-curve knob.
     */
   def bandKeys(sig: Column, numBands: Int, rowsPerBand: Int,
-      hash64: Column => Column = xxhash64(_)): Column =
+      hash64: HashFamily = HashFamily.Xx64): Column =
     array((0 until numBands).map { b =>
       struct(lit(b).as("band"),
         hash64(concat_ws(",",
@@ -106,7 +106,7 @@ object Dedup {
     * 50× slower at sf0.1.
     *
     * `hash64` is the shingle/band hash family: `xxhash64` (default —
-    * cheapest) for production, [[TextAnalysis.portableHash60]] for the q54
+    * cheapest) for production, [[HashFamily.Portable60]] for the q54
     * exact cross-engine gate, where DuckDB replays the identical
     * signatures, band keys and verification sets (shared collision
     * behavior included — both engines hash the same strings with the same
@@ -115,7 +115,7 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, numBands: Int = 0,
       threshold: Double = 0.7, seed: Long = 42L,
-      hash64: Column => Column = xxhash64(_)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     // numBands = 0 (default): derive the banding from the threshold via
     // the S-curve rule, so the candidate volume tracks what the caller
     // actually asked for (a fixed 16-band split of 64 hashes has its
@@ -204,10 +204,10 @@ object Dedup {
     * ONCE; each new batch probes band keys (bounded batch side →
     * broadcast) and verifies exact Jaccard against only the matched
     * historical rows — never re-sketching 100 TB of history per batch.
-    * `hash64` is a function and cannot persist; the caller supplies the
-    * SAME family at probe time (the stored `params` row carries the rest
-    * and is enforced on load... the hash family mismatch shows up as
-    * zero recall, which the q54_planted-style recall tests catch).
+    * `hash64` is not stored; the caller supplies the SAME family at probe
+    * time (the stored `params` row carries the rest and is enforced on
+    * load... a hash family mismatch shows up as zero recall, which the
+    * q54_planted-style recall tests catch).
     */
   case class MinhashIndex(shingleSize: Int, numHashes: Int, numBands: Int,
       seed: Long, bands: DataFrame, shingles: DataFrame)
@@ -220,7 +220,7 @@ object Dedup {
   def saveMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3, numHashes: Int = 64,
       numBands: Int = 0, threshold: Double = 0.7, seed: Long = 42L,
-      hash64: Column => Column = xxhash64(_), numFiles: Int = 32): Unit = {
+      hash64: HashFamily = HashFamily.Xx64, numFiles: Int = 32): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
@@ -279,7 +279,7 @@ object Dedup {
     */
   def minhashNearDupsIndexed(index: MinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      hash64: Column => Column = xxhash64(_),
+      hash64: HashFamily = HashFamily.Xx64,
       maxBroadcastBandRows: Long = 4000000L): DataFrame = {
     val rBase = shinglePrep(batch, idCol, textCol, index.shingleSize, hash64)
     val rBands = bandRows(rBase, index.numHashes, index.numBands,
@@ -324,7 +324,7 @@ object Dedup {
     * (which would silently drop verified pairs).
     */
   def appendToMinhashIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String, hash64: Column => Column = xxhash64(_),
+      path: String, hash64: HashFamily = HashFamily.Xx64,
       numFiles: Int = 8): Unit = {
     val spark = batch.sparkSession
     val idx = loadMinhashIndex(spark, path)
@@ -344,7 +344,7 @@ object Dedup {
     */
   def novelAgainstMinhashIndex(index: MinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      hash64: Column => Column = xxhash64(_)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     val dups = minhashNearDupsIndexed(index, batch, idCol, textCol,
       threshold, hash64).select(col("right_id").as("__dup_id"))
     batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
@@ -354,7 +354,7 @@ object Dedup {
     * index/across path builds from exactly this.
     */
   private def shinglePrep(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, hash64: Column => Column): DataFrame =
+      shingleSize: Int, hash64: HashFamily): DataFrame =
     Spread.toCores(df).select(col(idCol).as("id"),
         TextAnalysis.hashedShingles(col(textCol), shingleSize, hash64)
           .as("xxh"))
@@ -362,7 +362,7 @@ object Dedup {
 
   /** Shared band-key rows: (id, band, bandHash) from a prepped frame. */
   private def bandRows(base: DataFrame, numHashes: Int, bands: Int,
-      seed: Long, hash64: Column => Column): DataFrame = {
+      seed: Long, hash64: HashFamily): DataFrame = {
     val rowsPerBand = numHashes / bands
     val (as, bs) = hashParams(numHashes, seed).unzip
     val sig = graft.functions.sketches.minhash_sig(
@@ -377,7 +377,7 @@ object Dedup {
       idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, numBands: Int = 0,
       threshold: Double = 0.7, seed: Long = 42L,
-      hash64: Column => Column = xxhash64(_)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
     val lBase = shinglePrep(left, idCol, textCol, shingleSize, hash64)
     val rBase = shinglePrep(right, idCol, textCol, shingleSize, hash64)
@@ -451,7 +451,7 @@ object Dedup {
     * the (≤ eval-sized) matched-gram table back, also broadcast.
     *
     * `gramHash` defaults to `xxhash64`; the q131 gate passes
-    * [[TextAnalysis.portableHash60]] so DuckDB replays every gram key
+    * [[HashFamily.Portable60]] so DuckDB replays every gram key
     * bit-for-bit (64-bit collisions are ~n²/2⁶⁴ — irrelevant for
     * flagging, and the ORACLE uses the same keys so the gate is exact
     * regardless).
@@ -459,19 +459,11 @@ object Dedup {
   def gramContamination(train: DataFrame, trainId: String, trainText: String,
       eval: DataFrame, evalId: String, evalText: String,
       n: Int = 13,
-      gramHash: Column => Column = xxhash64(_)): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
     def gramsOf(df: DataFrame, id: String, text: String, out: String) = {
-      val ws = TextAnalysis.words(col(text))
-      // fused gram hashing (GC-bound declaratively — DESIGN §14.7);
-      // array_distinct stays outside either way
-      val gh = TextAnalysis.fusedGramHashes(ws, n, gramHash, shortDocWhole = false)
-        .map(g => array_distinct(g))
-        .getOrElse(
-          when(size(ws) >= n, array_distinct(transform(
-              transform(sequence(lit(0), size(ws) - n),
-                i => concat_ws(" ", slice(ws, i + 1, lit(n)))),
-              g => gramHash(g))))
-            .otherwise(array().cast("array<long>")))
+      // fused gram hashing (GC-bound declaratively — DESIGN §14.7)
+      val gh = array_distinct(TextAnalysis.fusedGramHashes(
+        TextAnalysis.words(col(text)), n, gramHash, shortDocWhole = false))
       df.select(col(id).cast("long").as(out), gh.as("gh"))
     }
     val ev = gramsOf(eval, evalId, evalText, "eval_id")
@@ -547,53 +539,24 @@ object Dedup {
     * with the explode+window formulation instead). Output: (idCol,
     * chunk_idx, n_words, chunk_hash) — hash of the space-joined chunk,
     * `hash64`-parametric like every sketch here (gates pass
-    * [[TextAnalysis.portableHash60]]).
+    * [[HashFamily.Portable60]]).
     */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
       modulus: Int = 16,
-      hash64: Column => Column = c => xxhash64(c)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     require(modulus >= 1, s"modulus=$modulus must be >= 1")
     val ws = TextAnalysis.words(col(textCol))
-    // Fused kernel for the known hash families ([[graft.functions
-    // .CdcChunkStats]], round 20): the declarative fold below appends each
-    // word to an array<string> accumulator and each closed chunk to an
-    // array<array<string>> accumulator — every append COPIES the whole
-    // accumulator at the ArrayData level (quadratic cell copies per doc) —
-    // and then posexplodes whole chunk word-arrays only to hash and count
-    // them. The expression computes (n_words, chunk_hash) structs in one
-    // pass over one reused buffer; bit-identity to the fold is
-    // property-tested in FunctionsSpec. Unknown families keep the fold.
-    TextAnalysis.knownHashFamily(hash64) match {
-      case Some(portable) =>
-        val cc = graft.functions.textgrams.cdc_chunk_stats(ws, modulus, portable)
-        return Spread.toCores(df)
-          .select(col(idCol), posexplode(cc).as(Seq("chunk_idx", "__c")))
-          .select(col(idCol), col("chunk_idx").cast("long").as("chunk_idx"),
-            col("__c.n_words").as("n_words"),
-            col("__c.chunk_hash").as("chunk_hash"))
-      case None => ()
-    }
-    def emptyChunks = array().cast("array<array<string>>")
-    def emptyCur = array().cast("array<string>")
-    val folded = aggregate(
-      ws,
-      struct(emptyChunks.as("done"), emptyCur.as("cur")),
-      (acc, w) => when(pmod(hash64(w), lit(modulus.toLong)) === 0,
-          struct(
-            concat(acc.getField("done"),
-              array(concat(acc.getField("cur"), array(w)))).as("done"),
-            emptyCur.as("cur")))
-        .otherwise(struct(
-          acc.getField("done").as("done"),
-          concat(acc.getField("cur"), array(w)).as("cur"))),
-      acc => when(size(acc.getField("cur")) > 0,
-          concat(acc.getField("done"), array(acc.getField("cur"))))
-        .otherwise(acc.getField("done")))
+    // Fused kernel ([[graft.functions.CdcChunkStats]]): (n_words,
+    // chunk_hash) structs in one pass over one reused buffer. A
+    // declarative `aggregate` fold copies its whole accumulator on every
+    // appended word (quadratic cell copies per doc); FunctionsSpec keeps
+    // that fold as the reference the kernel is bit-identical to.
+    val cc = graft.functions.textgrams.cdc_chunk_stats(ws, modulus, hash64.portable)
     Spread.toCores(df)
-      .select(col(idCol), posexplode(folded).as(Seq("chunk_idx", "__chunk")))
+      .select(col(idCol), posexplode(cc).as(Seq("chunk_idx", "__c")))
       .select(col(idCol), col("chunk_idx").cast("long").as("chunk_idx"),
-        size(col("__chunk")).cast("long").as("n_words"),
-        hash64(concat_ws(" ", col("__chunk"))).as("chunk_hash"))
+        col("__c.n_words").as("n_words"),
+        col("__c.chunk_hash").as("chunk_hash"))
   }
 
   /** Cross-document shared-chunk statistics over [[cdcChunks]] — the
@@ -609,7 +572,7 @@ object Dedup {
     */
   def cdcSharedChunkStats(df: DataFrame, idCol: String, textCol: String,
       modulus: Int = 16, minDocs: Int = 2,
-      hash64: Column => Column = c => xxhash64(c)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     val chunks = cdcChunks(df, idCol, textCol, modulus, hash64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shared = chunks.select(col("chunk_hash"), col(idCol))
@@ -644,33 +607,19 @@ object Dedup {
     * docs shorter than `k` words emit nothing.
     *
     * `hash64`: production = xxhash64; gates pass
-    * [[TextAnalysis.portableHash60]] so every fingerprint replays in SQL.
+    * [[HashFamily.Portable60]] so every fingerprint replays in SQL.
     * Output: (idCol, fp) — exploded, distinct per doc.
     */
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 4,
-      hash64: Column => Column = c => xxhash64(c)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     require(k >= 1 && w >= 1, s"k=$k, w=$w must be >= 1")
-    val ws = TextAnalysis.words(col(textCol))
-    val fused = TextAnalysis.fusedGramHashes(ws, k, hash64, shortDocWhole = false)
-    val gh = fused
-      .getOrElse(when(size(ws) >= k,
-          transform(sequence(lit(0), size(ws) - k),
-            i => hash64(concat_ws(" ", slice(ws, i + lit(1), lit(k))))))
-        .otherwise(array().cast("array<long>")))
-    // Fused sliding-window minima when the gram hashes are fused (known
-    // family ⇒ non-null long array): the declarative chain below allocates
-    // a sequence array + a sliced w-element copy per window and scans w
-    // elements per position — O(len·w) work per row; [[graft.functions
-    // .WinnowMins]] is the monotonic-deque O(len) pass with first-
-    // occurrence dedupe, element-identical (FunctionsSpec property test).
-    val fps =
-      if (fused.isDefined) graft.functions.textgrams.winnow_mins(col("__gh"), w)
-      else when(size(col("__gh")) >= w,
-          array_distinct(transform(sequence(lit(1), size(col("__gh")) - (w - 1)),
-            j => array_min(slice(col("__gh"), j, lit(w))))))
-        .when(size(col("__gh")) >= 1, array(array_min(col("__gh"))))
-        .otherwise(array().cast("array<long>"))
+    val gh = TextAnalysis.fusedGramHashes(TextAnalysis.words(col(textCol)), k,
+      hash64, shortDocWhole = false)
+    // [[graft.functions.WinnowMins]]: the monotonic-deque O(len) pass
+    // with first-occurrence dedupe, element-identical to the declarative
+    // O(len·w) window-min chain (FunctionsSpec property test).
+    val fps = graft.functions.textgrams.winnow_mins(col("__gh"), w)
     Spread.toCores(df)
       .select(col(idCol), gh.as("__gh"))
       .select(col(idCol), explode(fps).as("fp"))
@@ -690,7 +639,7 @@ object Dedup {
     */
   def winnowNearDups(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 4, minShared: Int = 2, maxDf: Int = 256,
-      hash64: Column => Column = c => xxhash64(c)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     // Cached (the minhashNearDups `base` pattern): the fingerprint scan
     // feeds the df count AND both sides of the pair join — uncached, the
     // gram-hash pass re-runs up to 4× per action (measured 2.2× the whole
@@ -732,7 +681,7 @@ object Dedup {
     val t = Spread.toCores(df).select(col(idCol).cast("long").as("id"),
         blockCol.cast("string").as("blk"),
         array_sort(TextAnalysis.hashedShingles(col(textCol), shingleSize,
-          xxhash64(_))).as("sh"))
+          HashFamily.Xx64)).as("sh"))
     val counts = t.groupBy(col("blk")).agg(count(lit(1)).as("n"))
     val chunked = t.join(broadcast(counts), "blk")
       .select(col("blk"),
@@ -1226,7 +1175,7 @@ object Dedup {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
     fs.mkdirs(root)
-    val conf = org.apache.spark.sql.graft.bridge.serHadoopConf(
+    val conf = new graft.log.SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
     historical
       .select(xxhash64(TextAnalysis.fingerprint(col(textCol))).as("h"))
@@ -1293,7 +1242,7 @@ object Dedup {
     val schema = in.schema.add("__may", org.apache.spark.sql.types.BooleanType)
     val shardIdx = in.schema.fieldIndex("__shard")
     val hIdx = in.schema.fieldIndex("__h")
-    val conf = org.apache.spark.sql.graft.bridge.serHadoopConf(
+    val conf = new graft.log.SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
     val probed = in.repartition(shards, col("__shard"))
       .mapPartitions { rows =>
@@ -1365,7 +1314,7 @@ object Dedup {
     * birthday expectation is ~10^4 collided pairs out of 10^12 — a
     * duplicate-coverage signal perturbation of ~10^-8, far below the
     * thresholds any curation rule applies to `dup_coverage`. The q74 gate
-    * runs this with [[TextAnalysis.portableHash60]] and the DuckDB oracle
+    * runs this with [[HashFamily.Portable60]] and the DuckDB oracle
     * computes the SAME keys from the same gram strings, so the two engines
     * share collision behavior exactly — the gate is deterministic, not
     * probabilistic, while production keeps the cheaper xxhash64.
@@ -1378,7 +1327,7 @@ object Dedup {
     */
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3,
-      gramHash: Column => Column = xxhash64(_)): DataFrame =
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame =
     dupSpanStatsImpl(df, idCol, textCol, n, checkpoint = true, gramHash)
 
   /** [[dupSpanStats]] with the final eager localCheckpoint optional:
@@ -1388,18 +1337,11 @@ object Dedup {
     */
   private[graft] def dupSpanStatsImpl(df: DataFrame, idCol: String,
       textCol: String, n: Int, checkpoint: Boolean,
-      gramHash: Column => Column = xxhash64(_)): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
     val in = Spread.toCores(df)
     val ws = TextAnalysis.words(col(textCol))
-    // fused single-pass gram hashing for the known families (GC-bound
-    // otherwise — DESIGN §14.7); unknown families keep the declarative form
+    // fused single-pass gram hashing (GC-bound declaratively — DESIGN §14.7)
     val ghCol = TextAnalysis.fusedGramHashes(ws, n, gramHash, shortDocWhole = false)
-      .getOrElse(
-        when(size(ws) >= n, transform(
-            transform(sequence(lit(0), size(ws) - n),
-              i => concat_ws(" ", slice(ws, i + 1, lit(n)))),
-            g => gramHash(g)))
-          .otherwise(array().cast("array<long>")))
     val grams = in.select(col(idCol).cast("long").as("id"),
         size(ws).cast("long").as("n_tokens"),
         ghCol.as("gh"))
@@ -1503,19 +1445,14 @@ object Dedup {
     */
   def exciseDupSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minDocs: Int = 2,
-      gramHash: Column => Column = xxhash64(_)): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
     val in = Spread.toCores(df)
     val toks = in.select(col(idCol).cast("long").as("id"),
         TextAnalysis.words(col(textCol)).as("__ws"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def grams = toks.select(col("id"),
       TextAnalysis.fusedGramHashes(col("__ws"), n, gramHash, shortDocWhole = false)
-        .getOrElse(
-          when(size(col("__ws")) >= n, transform(
-              transform(sequence(lit(0), size(col("__ws")) - n),
-                i => concat_ws(" ", slice(col("__ws"), i + 1, lit(n)))),
-              g => gramHash(g)))
-            .otherwise(array().cast("array<long>"))).as("gh"))
+        .as("gh"))
     val dupGrams = grams
       .select(col("id"), explode(array_distinct(col("gh"))).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("ndocs"))
@@ -1569,7 +1506,7 @@ object Dedup {
     * (pigeonhole) — then verify the full distance.
     *
     * `wordHash` is the per-word hash family: `xxhash64` (default) for
-    * production, [[TextAnalysis.portableHash60]] for the q56 exact gate —
+    * production, [[HashFamily.Portable60]] for the q56 exact gate —
     * DuckDB then rebuilds every signature bit-for-bit (bits 60..63 vote
     * all-negative on both engines, so they are 0 on both sides of every
     * pair) and, banding being pigeonhole-complete for hamming <= 3, the
@@ -1577,7 +1514,7 @@ object Dedup {
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3,
-      wordHash: Column => Column = xxhash64(_)): DataFrame = {
+      wordHash: HashFamily = HashFamily.Xx64): DataFrame = {
     val t = Spread.toCores(df).select(col(idCol).as("id"),
         transform(TextAnalysis.words(col(textCol)), w => wordHash(w)).as("hs"))
       .select(col("id"), simhashFromHashes(col("hs")).as("sig"))
@@ -1777,14 +1714,14 @@ object Dedup {
     * collected on the driver.
     *
     * `lineKey` defaults to the cheap engine-internal `xxhash64`; the gate
-    * (q114) passes [[TextAnalysis.portableHash60]] so DuckDB replays the
+    * (q114) passes [[HashFamily.Portable60]] so DuckDB replays the
     * identical key family and hash collisions — astronomically rare but
     * semantics-bearing (a collision merges two lines' counts) — are
     * SHARED rather than divergent across engines.
     */
   def dedupLinesAcross(docs: DataFrame, idCol: String, textCol: String,
       minDocs: Int = 2, sep: String = "\n",
-      lineKey: Column => Column = xxhash64(_)): DataFrame = {
+      lineKey: HashFamily = HashFamily.Xx64): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val lines = Spread.toCores(docs).select(col(idCol).as("__did"),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))

@@ -50,14 +50,13 @@ object Learn {
 
   private def tokenStream(docs: DataFrame, idCol: String, textCol: String,
       isPositive: Column, buckets: Int,
-      wordHash: Column => Column): DataFrame = {
-    // words hashed INSIDE the array (fused n=1 gram hashes for the known
-    // families — no per-word string/md5-hex churn), only longs explode;
-    // identical (id, __y, __b) rows as the explode-then-hash chain
+      wordHash: HashFamily): DataFrame = {
+    // words hashed INSIDE the array (fused n=1 gram hashes — no per-word
+    // string/md5-hex churn), only longs explode; identical (id, __y, __b)
+    // rows as the explode-then-hash chain
     val ws = filter(TextAnalysis.words(col(textCol)), w => length(w) > 0)
     val hashed = TextAnalysis.fusedGramHashes(ws, 1, wordHash,
-        shortDocWhole = false)
-      .getOrElse(transform(ws, w => wordHash(w)))
+      shortDocWhole = false)
     Spread.toCores(docs)
       .select(col(idCol), when(isPositive, 1L).otherwise(-1L).as("__y"),
         explode(hashed).as("__h"))
@@ -85,7 +84,7 @@ object Learn {
     */
   def perceptronWeights(docs: DataFrame, idCol: String, textCol: String,
       isPositive: Column, epochs: Int = 3, buckets: Int = 65536,
-      wordHash: Column => Column = w => xxhash64(w)): Map[Long, Long] = {
+      wordHash: HashFamily = HashFamily.Xx64): Map[Long, Long] = {
     val toks = tokenStream(docs, idCol, textCol, isPositive, buckets, wordHash)
       .materialized()
     val w = weightsFromToks(toks, idCol, epochs, buckets)
@@ -127,7 +126,7 @@ object Learn {
     */
   def perceptronApply(docs: DataFrame, idCol: String, textCol: String,
       weights: Map[Long, Long], buckets: Int = 65536,
-      wordHash: Column => Column = w => xxhash64(w)): DataFrame =
+      wordHash: HashFamily = HashFamily.Xx64): DataFrame =
     margins(tokenStream(docs, idCol, textCol, lit(true), buckets, wordHash),
         idCol, weights)
       .select(col(idCol), col("__m").cast("long").as("margin"),
@@ -140,7 +139,7 @@ object Learn {
     */
   def perceptronClassify(docs: DataFrame, idCol: String, textCol: String,
       isPositive: Column, epochs: Int = 3, buckets: Int = 65536,
-      wordHash: Column => Column = w => xxhash64(w)): DataFrame = {
+      wordHash: HashFamily = HashFamily.Xx64): DataFrame = {
     // ONE pinned feature stream shared by the epoch loop AND the final
     // scoring pass (guide §2.4): the old shape trained on a checkpointed
     // stream, threw it away, and re-tokenized the whole corpus for the

@@ -348,16 +348,15 @@ object Sampling {
     */
   def importanceWeights(df: DataFrame, idCol: String, textCol: String,
       isTarget: Column, buckets: Int = 65536,
-      wordHash: Column => Column = w => xxhash64(w)): DataFrame = {
+      wordHash: HashFamily = HashFamily.Xx64): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // words are hashed INSIDE the array (fused n=1 gram hashes when the
-    // family is a known one — no per-word string/md5-hex churn) and only
-    // the long hash explodes; same (id, __tgt, __b) rows as the
-    // explode-then-hash chain this replaces, both passes cheaper
+    // words are hashed INSIDE the array (fused n=1 gram hashes — no
+    // per-word string/md5-hex churn) and only the long hash explodes;
+    // same (id, __tgt, __b) rows as the explode-then-hash chain this
+    // replaces, both passes cheaper
     val ws = filter(TextAnalysis.words(col(textCol)), w => length(w) > 0)
     val hashed = TextAnalysis.fusedGramHashes(ws, 1, wordHash,
-        shortDocWhole = false)
-      .getOrElse(transform(ws, w => wordHash(w)))
+      shortDocWhole = false)
     val toks = Spread.toCores(df)
       .select(col(idCol), isTarget.as("__tgt"), explode(hashed).as("__h"))
       .select(col(idCol), col("__tgt"),

@@ -3,6 +3,35 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** The 64-bit hash family every hash-parametric operator takes (shingle,
+  * gram, word, band, line and chunk keys). Two cases, so every fused text
+  * kernel covers every caller:
+  *   - [[HashFamily.Xx64]]: `xxhash64` — the production default (one hash
+  *     per element);
+  *   - [[HashFamily.Portable60]]: [[TextAnalysis.portableHash60]] of the
+  *     input cast to string — the family the exact cross-engine gates run
+  *     on (DuckDB computes the identical longs from md5).
+  * `portable` selects the matching family inside the fused kernels
+  * ([[graft.functions.GramHashes]], [[graft.functions.CdcChunkStats]]).
+  */
+sealed trait HashFamily {
+  def apply(c: Column): Column
+  def portable: Boolean
+}
+
+object HashFamily {
+  case object Xx64 extends HashFamily {
+    def apply(c: Column): Column = xxhash64(c)
+    def portable: Boolean = false
+  }
+  case object Portable60 extends HashFamily {
+    // md5 takes bytes: the string cast lets non-string keys (long ids)
+    // hash through their decimal rendering, and is a no-op on strings
+    def apply(c: Column): Column = TextAnalysis.portableHash60(c.cast("string"))
+    def portable: Boolean = true
+  }
+}
+
 /** Text-analysis operators for large-scale training-data pipelines
   * (SURVEY §7 step 6). All hot-path expressions are Spark built-ins /
   * higher-order functions — fully codegen'd, no UDFs, so they stay inside
@@ -28,39 +57,15 @@ object TextAnalysis {
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** The fused positional-gram-hash column ([[graft.functions.GramHashes]])
-    * when the caller's hash family is one of the two known ones, None
-    * otherwise (the caller keeps its declarative `transform` chain). The
-    * family is detected STRUCTURALLY: apply it to a literal probe and
-    * compare expression trees — a caller-supplied custom family can never
-    * be silently mis-fused. Fusion matters because the declarative chain's
-    * per-gram allocations (slice + concat_ws + md5-hex + conv strings)
-    * make the gram ops the suite's most GC-sensitive cells (DESIGN §14.7,
-    * measured 13× under heap ballast).
+    * of the words array under `family`. Fusion matters because the
+    * declarative `sequence→slice→concat_ws→hash` chain's per-gram
+    * allocations (slice + concat_ws + md5-hex + conv strings) make the
+    * gram ops the suite's most GC-sensitive cells (DESIGN §14.7, measured
+    * 13× under heap ballast).
     */
-  private[graft] def fusedGramHashes(ws: Column, n: Int,
-      gramHash: Column => Column, shortDocWhole: Boolean): Option[Column] =
-    knownHashFamily(gramHash).map(portable =>
-      graft.functions.textgrams.gram_hashes(ws, n, portable, shortDocWhole))
-
-  /** Which fused hash family (Some(portable?)) a caller-supplied
-    * `Column => Column` is, or None for an unknown family (callers keep
-    * their declarative chains — a custom family can never be silently
-    * mis-fused). Detected STRUCTURALLY: apply it to a literal probe and
-    * compare the rendered trees. Column.toString renders the applied tree
-    * ("xxhash64('probe')") — stable and argument-discriminating (a custom
-    * seed renders its extra literal). Catalyst semanticEquals can't be
-    * used here: the classic Column API wraps lazy UNRESOLVED nodes whose
-    * per-construction Origin defeats structural equality. Shared by every
-    * fused text kernel (gram hashes, CDC chunking).
-    */
-  private[graft] def knownHashFamily(
-      gramHash: Column => Column): Option[Boolean] = {
-    val probe = lit("graft-gram-probe")
-    val applied = gramHash(probe).toString
-    if (applied == xxhash64(probe).toString) Some(false)
-    else if (applied == portableHash60(probe).toString) Some(true)
-    else None
-  }
+  private[graft] def fusedGramHashes(ws: Column, n: Int, family: HashFamily,
+      shortDocWhole: Boolean): Column =
+    graft.functions.textgrams.gram_hashes(ws, n, family.portable, shortDocWhole)
 
   /** C4-style quality thresholds — the ONE definition the q71 filter and
     * the corpus report both build from, so the published pass-rate can
@@ -275,7 +280,7 @@ object TextAnalysis {
     * (values stay < 2^36, legal under ANSI arithmetic).
     */
   def rollingHash(text: Column,
-      wordHash: Column => Column = w => xxhash64(w)): Column = {
+      wordHash: HashFamily = HashFamily.Xx64): Column = {
     val m = lit(2147483647L)
     aggregate(words(text), lit(0L),
       (acc, w) => pmod(acc * lit(31L) + pmod(wordHash(w), m), m))
@@ -293,23 +298,19 @@ object TextAnalysis {
   }
 
   /** Distinct shingle HASHES — `transform(shingles(text, n), hash64)`
-    * with the per-gram string churn fused away when the hash family is a
-    * known one: [[graft.functions.GramHashes]] emits the positional gram
-    * hashes straight from the words array (one reused byte buffer, no
-    * sliced arrays / concat_ws strings / md5-hex parses per gram), and
+    * with the per-gram string churn fused away:
+    * [[graft.functions.GramHashes]] emits the positional gram hashes
+    * straight from the words array (one reused byte buffer, no sliced
+    * arrays / concat_ws strings / md5-hex parses per gram), and
     * `array_distinct` over longs keeps first occurrences exactly like the
     * string-side distinct did — element-wise identical output (the two
-    * paths differ only if two distinct grams of one document collide in
-    * the 60/64-bit hash, which both engines of every gate would share
+    * differ only if two distinct grams of one document collide in the
+    * 60/64-bit hash, which both engines of every gate would share
     * anyway). `shortDocWhole = true` is the [[shingles]] short-doc branch
-    * (< n words → one gram over the whole text). Unknown hash families
-    * keep the declarative chain.
+    * (< n words → one gram over the whole text).
     */
-  def hashedShingles(text: Column, n: Int,
-      hash64: Column => Column): Column =
-    fusedGramHashes(words(text), n, hash64, shortDocWhole = true)
-      .map(array_distinct)
-      .getOrElse(transform(shingles(text, n), s => hash64(s)))
+  def hashedShingles(text: Column, n: Int, hash64: HashFamily): Column =
+    array_distinct(fusedGramHashes(words(text), n, hash64, shortDocWhole = true))
 
   /** Character n-gram profile language ID — tiny per-language marker-word
     * profiles scored by hit count; deterministic and cheap. A real system
@@ -583,13 +584,13 @@ object TextAnalysis {
     * `subGroups = 1` is exactly [[shardBalanceLPT]] (identity-tested).
     * `subHash` maps the id column to the long the sub-group assignment
     * mods — `xxhash64` by default (one hash per row); the oracle gate
-    * passes [[portableHash60]] so the whole two-level construction
+    * passes [[HashFamily.Portable60]] so the whole two-level construction
     * replays bit-for-bit in DuckDB SQL.
     */
   def shardBalanceLPTHierarchical(df: org.apache.spark.sql.DataFrame,
       idCol: String, tokensCol: String, groupCol: Column, numShards: Int,
       subGroups: Int = 256,
-      subHash: Column => Column = xxhash64(_),
+      subHash: HashFamily = HashFamily.Xx64,
       maxSuperItems: Int = 1 << 18): org.apache.spark.sql.DataFrame = {
     require(numShards >= 1, s"numShards=$numShards must be >= 1")
     require(subGroups >= 1, s"subGroups=$subGroups must be >= 1")
@@ -699,12 +700,12 @@ object TextAnalysis {
     * sequential RNG.
     *
     * Per-row: one flags pass + one higher-order fold, zero shuffle.
-    * `hash64` parametric as everywhere ([[portableHash60]] for the gate).
+    * `hash64` parametric as everywhere ([[HashFamily.Portable60]] for the gate).
     * Output: (idCol, n_words, n_masked, n_spans, corrupted, target).
     */
   def spanCorrupt(df: DataFrame, idCol: String, textCol: String,
       denom: Int = 7, seed: String = "sc0",
-      hash64: Column => Column = c => xxhash64(c)): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
     require(denom >= 2, s"denom=$denom must be >= 2")
     val ws = words(col(textCol))
     val flagged = transform(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Bpe, Dedup, Embeddings, Graph, LangModel, Learn, Multimodal, Report, Retrieval, Sampling, Similarity, TextAnalysis, WebText}
+import graft.ops.{Bpe, Dedup, Embeddings, Graph, HashFamily, LangModel, Learn, Multimodal, Report, Retrieval, Sampling, Similarity, TextAnalysis, WebText}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,7 +94,7 @@ object OpsQueries {
     ensureBuilt(path, d, force) {
       Dedup.saveMinhashIndex(docs(s, d).select(col("doc_id"), col("text")),
         "doc_id", "text", path, threshold = 0.5,
-        hash64 = TextAnalysis.portableHash60, numFiles = 8)
+        hash64 = HashFamily.Portable60, numFiles = 8)
     }
   }
 
@@ -238,8 +238,7 @@ object OpsQueries {
       docs(s, d).select(col("doc_id"),
         TextAnalysis.qualityScore(col("text")).as("quality"),
         TextAnalysis.langId(col("text")).as("lang_pred"),
-        TextAnalysis.rollingHash(col("text"),
-          w => conv(substring(md5(w), 1, 15), 16, 10).cast("long"))
+        TextAnalysis.rollingHash(col("text"), HashFamily.Portable60)
           .as("rhash"))),
     // ---- dedup ----------------------------------------------------------
     "q53_dedup_exact" -> ((s, d) => {
@@ -256,7 +255,7 @@ object OpsQueries {
     // LSH pipeline output is hash-compared, not just planted recall.
     "q54_dedup_minhash" -> ((s, d) =>
       Dedup.minhashNearDups(docsWithPlantedDups(s, d), "doc_id", "text",
-        threshold = 0.5, hash64 = TextAnalysis.portableHash60)
+        threshold = 0.5, hash64 = HashFamily.Portable60)
         .select(col("id_a"), col("id_b"))), // jaccard value checked in q55
     "q55_ngram_jaccard" -> ((s, d) =>
       Dedup.ngramJaccardNearDups(docsWithPlantedDups(s, d), "doc_id", "text",
@@ -273,7 +272,7 @@ object OpsQueries {
         .select(col("doc_id"),
           concat_ws(" ", slice(ws, lit(1), greatest(size(ws) - 3, lit(1)))).as("text"))
       Dedup.minhashNearDupsAcross(base, bench, "doc_id", "text",
-        threshold = 0.5, hash64 = TextAnalysis.portableHash60)
+        threshold = 0.5, hash64 = HashFamily.Portable60)
     }),
     // Exact distributed covariance of the embedding matrix — the
     // corpus-sized half of PCA/whitening (the d×d eigensolve is driver-
@@ -316,7 +315,7 @@ object OpsQueries {
     "q136_winnow_neardup" -> ((s, d) =>
       Dedup.winnowNearDups(docsWithPlantedDups(s, d), "doc_id", "text",
         k = 4, w = 4, minShared = 2, maxDf = 256,
-        hash64 = TextAnalysis.portableHash60)),
+        hash64 = HashFamily.Portable60)),
     // Contrastive triples: planted near-dup pairs as positives, ring
     // negatives — anchor/positive/negative all replayed exactly.
     "q142_contrastive" -> ((s, d) => {
@@ -331,7 +330,7 @@ object OpsQueries {
     // output strings exactly.
     "q141_span_corrupt" -> ((s, d) =>
       TextAnalysis.spanCorrupt(docs(s, d), "doc_id", "text",
-        denom = 7, hash64 = TextAnalysis.portableHash60)),
+        denom = 7, hash64 = HashFamily.Portable60)),
     // Bigram top-k continuations (the LM suggestion table): pure integer
     // (count DESC, word ASC) ranking — every row replays exactly.
     "q140_continuations" -> ((s, d) =>
@@ -350,7 +349,7 @@ object OpsQueries {
     // boundary decision, chunk hash and distinct-doc count in SQL.
     "q138_cdc_chunks" -> ((s, d) =>
       Dedup.cdcSharedChunkStats(docsWithPlantedDups(s, d), "doc_id", "text",
-        modulus = 16, minDocs = 2, hash64 = TextAnalysis.portableHash60)),
+        modulus = 16, minDocs = 2, hash64 = HashFamily.Portable60)),
     // Corpus snapshot diff (dataset versioning): v2 drops every 7th doc,
     // rewrites every 5th survivor, adds copies of every 3rd under new
     // ids — each id must classify added/removed/changed/same exactly.
@@ -382,7 +381,7 @@ object OpsQueries {
           .select((col("doc_id") + 3000000L).as("eval_id"),
             concat_ws(" ", transform(ws, w => concat(w, lit("qq")))).as("text")))
       Dedup.gramContamination(t, "doc_id", "text", evalDf, "eval_id", "text",
-        n = 13, gramHash = TextAnalysis.portableHash60)
+        n = 13, gramHash = HashFamily.Portable60)
     }),
     // q110 driven through the PERSISTED LSH index: history sketched once
     // to disk (band keys clustered for file skipping + shingle sets),
@@ -397,7 +396,7 @@ object OpsQueries {
           concat_ws(" ", slice(ws, lit(1), greatest(size(ws) - 3, lit(1)))).as("text"))
       Dedup.minhashNearDupsIndexed(Dedup.loadMinhashIndex(s, path), bench,
         "doc_id", "text", threshold = 0.5,
-        hash64 = TextAnalysis.portableHash60)
+        hash64 = HashFamily.Portable60)
     }),
     // FULL oracle since round 6 (same portable-family move as q54): the
     // oracle packs the 60 replayed signature bits into a BIGINT and
@@ -405,7 +404,7 @@ object OpsQueries {
     // because 4x16 banding is pigeonhole-complete for hamming <= 3.
     "q56_dedup_simhash" -> ((s, d) =>
       Dedup.simhashNearDups(docsWithPlantedDups(s, d), "doc_id", "text",
-        maxHamming = 3, wordHash = TextAnalysis.portableHash60)
+        maxHamming = 3, wordHash = HashFamily.Portable60)
         .select(col("id_a"), col("id_b"), col("hamming"))),
     // FULL oracle since round 8: md5-seeded portable hyperplanes
     // (planeOverride) + md5-derived planted perturbation make every band
@@ -820,7 +819,7 @@ object OpsQueries {
     "q122_dsir_weights" -> ((s, d) =>
       Sampling.importanceWeights(docs(s, d), "doc_id", "text",
         col("source").isin("src0", "src1", "src2"),
-        wordHash = TextAnalysis.portableHash60)),
+        wordHash = HashFamily.Portable60)),
     // in-engine classifier TRAINING (batch perceptron over hashed
     // unigrams, weak source labels — q122's framing upgraded from a fixed
     // discriminant to a learned margin): integer-exact updates, so the
@@ -828,7 +827,7 @@ object OpsQueries {
     "q144_perceptron_quality" -> ((s, d) =>
       Learn.perceptronClassify(docs(s, d), "doc_id", "text",
         col("source").isin("src0", "src1", "src2"),
-        wordHash = TextAnalysis.portableHash60)),
+        wordHash = HashFamily.Portable60)),
     // the COMPOSED curation pipeline (Curate.run), end-to-end: quality
     // filter → exact dedup keep-first → MinHash near-dup keep-reps →
     // DSIR selection → per-source cap, all over the portable md5 hash
@@ -889,7 +888,7 @@ object OpsQueries {
         nearDupThreshold = Some(0.5),
         dsirTargetSources = Seq("src0", "src1", "src2"),
         capPerSource = Some(15),
-        wordHash = c => TextAnalysis.portableHash60(c))
+        wordHash = HashFamily.Portable60)
       graft.ops.Curate.run(docs(s, d), "doc_id", "text", "source", cfg).docs
         .select(col("doc_id"), col("source"), md5(col("text")).as("text_md5"))
     }),
@@ -1054,7 +1053,7 @@ object OpsQueries {
       TextAnalysis.shardBalanceLPTHierarchical(
         docs(s, d).withColumn("nt", TextAnalysis.tokenCount(col("text"))),
         "doc_id", "nt", col("source"), numShards = 4, subGroups = 4,
-        subHash = c => TextAnalysis.portableHash60(c.cast("string")))),
+        subHash = HashFamily.Portable60)),
     // best-fit-decreasing packing (q73's bin-packing upgrade): the oracle
     // replays the FULL BFD walk in DuckDB — a recursive CTE whose state
     // carries the open-bin fill/count LISTS, placing docs in (tokens DESC,
@@ -1077,12 +1076,12 @@ object OpsQueries {
     // so collision behavior is shared with the oracle.
     "q126_excise_spans" -> ((s, d) =>
       Dedup.exciseDupSpans(docsWithPlantedDups(s, d), "doc_id", "text",
-          gramHash = TextAnalysis.portableHash60)
+          gramHash = HashFamily.Portable60)
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_removed"),
           md5(col("clean_text")).as("clean_md5"))),
     "q74_dup_spans" -> ((s, d) =>
       Dedup.dupSpanStats(docsWithPlantedDups(s, d), "doc_id", "text", n = 3,
-        gramHash = TextAnalysis.portableHash60)),
+        gramHash = HashFamily.Portable60)),
     // deterministic stratified sampling: per-source hash-sample fractions
     // (full src0, half src1, quarter src2, 10% elsewhere) — reproducible
     // and join-stable, unlike rand()
@@ -1232,7 +1231,7 @@ object OpsQueries {
         concat(lit("K"), (col("doc_id") % 1000).cast("string")))
       Dedup.dedupLinesAcross(
         docs(s, d).select(col("doc_id"), doc.as("t")), "doc_id", "t",
-        minDocs = 2, lineKey = TextAnalysis.portableHash60)
+        minDocs = 2, lineKey = HashFamily.Portable60)
     }),
     // intra-document paragraph dedup: planted repeated paragraph (p1 p2 p1
     // p3) must collapse to first occurrences, order preserved

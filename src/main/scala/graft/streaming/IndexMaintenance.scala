@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.ops.{Dedup, Retrieval, Similarity}
+import graft.ops.{Dedup, HashFamily, Retrieval, Similarity}
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming maintenance of the persisted retrieval/near-dup indexes: keep
@@ -72,7 +72,7 @@ object IndexMaintenance {
     * [[Dedup.novelAgainstMinhashIndex]] first.
     */
   def minhashAppendSink(path: String, idCol: String, textCol: String,
-      hash64: Column => Column = xxhash64(_), numFiles: Int = 8)
+      hash64: HashFamily = HashFamily.Xx64, numFiles: Int = 8)
       : (DataFrame, Long) => Unit = (batch, epochId) =>
     applyEpoch(batch, path, epochId)(
       append = Dedup.appendToMinhashIndex(batch, idCol, textCol, path,
@@ -153,7 +153,7 @@ object IndexMaintenance {
     */
   def minhashAdmitSink(path: String, idCol: String, textCol: String,
       threshold: Double, sink: (DataFrame, Long) => Unit,
-      hash64: Column => Column = xxhash64(_), numFiles: Int = 8,
+      hash64: HashFamily = HashFamily.Xx64, numFiles: Int = 8,
       dropIntraBatchNearDups: Boolean = false)
       : (DataFrame, Long) => Unit = (batch, epochId) =>
     applyEpoch(batch, path, epochId)(

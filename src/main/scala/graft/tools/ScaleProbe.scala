@@ -152,7 +152,7 @@ object ScaleProbe {
         .select(col("doc_id").as("eval_id"), col("text"))
       graft.ops.Dedup.gramContamination(t, "doc_id", "text",
         evalDf, "eval_id", "text",
-        n = 13, gramHash = graft.ops.TextAnalysis.portableHash60)
+        n = 13, gramHash = graft.ops.HashFamily.Portable60)
     })) :+
     // q133 probes with numClusters scaled 10× (constant CLUSTER SIZE —
     // the q91 regime override): D4 deployments grow the cluster count
@@ -429,8 +429,8 @@ object ScaleProbe {
     probed(sf1).foreach { case (name, fn) =>
       if (System.nanoTime() > deadline) skipped += 1
       else {
-        // Heap hygiene before each (mostly n=1) cell: the CacheProbe
-        // experiment (round 12) measured q74-sf1 at 74.6 s with 67.4 s of
+        // Heap hygiene before each (mostly n=1) cell: the heap-ballast
+        // experiment (round 12, DESIGN §14.7) measured q74-sf1 at 74.6 s with 67.4 s of
         // GC under 60% live-heap ballast vs 5.7 s clean — allocation-heavy
         // cells are GC-BOUND under the old-gen occupancy a long bench JVM
         // accumulates, which is exactly the committed 2-3×-of-history

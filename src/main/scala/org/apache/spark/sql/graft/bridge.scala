@@ -38,17 +38,4 @@ object bridge {
       new java.io.File(org.apache.spark.util.Utils.getLocalDir(env.conf))
     }.filter(_.isDirectory)
     catch { case _: Throwable => None }
-
-  /** Serializable Hadoop Configuration for executor-side filesystem access
-    * (Spark's own `SerializableConfiguration` is `private[spark]`; this is
-    * the same wrapper, reachable from graft code through the bridge).
-    */
-  def serHadoopConf(conf: org.apache.hadoop.conf.Configuration): SerHadoopConf =
-    new SerHadoopConf(new org.apache.spark.util.SerializableConfiguration(conf))
-}
-
-class SerHadoopConf private[graft](
-    private val inner: org.apache.spark.util.SerializableConfiguration)
-    extends Serializable {
-  def value: org.apache.hadoop.conf.Configuration = inner.value
 }

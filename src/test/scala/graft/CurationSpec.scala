@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Bpe, LangModel, Sampling, WebText}
+import graft.ops.{Bpe, HashFamily, LangModel, Sampling, WebText}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -448,7 +448,7 @@ class CurationSpec extends AnyFunSuite {
     val keptD = Curate.run(docs, "doc_id", "text", "source", cfgD)
       .docs.select("doc_id").collect().map(_.getLong(0)).toSet
     val expectD = Sampling.importanceWeights(docs, "doc_id", "text",
-        col("source").isin(tgt: _*), wordHash = w => xxhash64(w))
+        col("source").isin(tgt: _*), wordHash = HashFamily.Xx64)
       .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptD == expectD && keptD.nonEmpty && keptD.size < docs.count())
     // language filter keeps exactly the argmax-en docs

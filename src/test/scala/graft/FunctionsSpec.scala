@@ -126,7 +126,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("GramHashes ≡ the declarative transform chain, both families, randomized") {
     import spark.implicits._
     import graft.functions.textgrams.gram_hashes
-    import graft.ops.TextAnalysis
+    import graft.ops.HashFamily
     // randomized texts incl. unicode, repeats, punctuation, single-token
     // and sub-n docs (the shortDocWhole branches), plus the empty string
     val rnd = new scala.util.Random(4242)
@@ -137,9 +137,7 @@ class FunctionsSpec extends AnyFunSuite {
       (0 until t).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
     } :+ "" :+ "one" :+ "one two"
     val df = texts.toDF("text").withColumn("ws", split(trim(col("text")), "\\s+"))
-    for (n <- Seq(2, 3, 13); portable <- Seq(false, true)) {
-      val family: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        if (portable) TextAnalysis.portableHash60 else xxhash64(_)
+    for (n <- Seq(2, 3, 13); family <- Seq(HashFamily.Xx64, HashFamily.Portable60)) {
       val declarativePos =
         when(size(col("ws")) >= n, transform(
             transform(sequence(lit(0), size(col("ws")) - n),
@@ -153,28 +151,21 @@ class FunctionsSpec extends AnyFunSuite {
               i => concat_ws(" ", slice(col("ws"), i + 1, lit(n)))),
             g => family(g)))
       val diff = df.select(
-          gram_hashes(col("ws"), n, portable, shortDocWhole = false).as("fused"),
+          gram_hashes(col("ws"), n, family.portable, shortDocWhole = false).as("fused"),
           declarativePos.as("decl"),
-          gram_hashes(col("ws"), n, portable, shortDocWhole = true).as("fusedW"),
+          gram_hashes(col("ws"), n, family.portable, shortDocWhole = true).as("fusedW"),
           declarativeWhole.as("declW"))
         .filter(col("fused") =!= col("decl") || col("fusedW") =!= col("declW"))
       assert(diff.count() == 0,
-        s"n=$n portable=$portable: fused gram hashes diverge:\n" +
+        s"n=$n family=$family: fused gram hashes diverge:\n" +
           diff.limit(3).collect().mkString("\n"))
     }
-    // the detection helper fuses exactly the two known families
-    assert(TextAnalysis.fusedGramHashes(col("ws"), 3, xxhash64(_), false).isDefined)
-    assert(TextAnalysis.fusedGramHashes(col("ws"), 3,
-      TextAnalysis.portableHash60, false).isDefined)
-    assert(TextAnalysis.fusedGramHashes(col("ws"), 3,
-      c => xxhash64(c, lit(7)), false).isEmpty,
-      "a custom-seed family must NOT silently fuse")
   }
 
   test("CdcChunkStats ≡ the declarative aggregate fold, both families, randomized") {
     import spark.implicits._
     import graft.functions.textgrams.cdc_chunk_stats
-    import graft.ops.TextAnalysis
+    import graft.ops.HashFamily
     val rnd = new scala.util.Random(777)
     val vocab = Vector("alpha", "beta", "γράμμα", "préfix", "x", "tok", "7",
       "句子", "q!", "__", "word", "ümlaut", "zz", "m")
@@ -183,9 +174,7 @@ class FunctionsSpec extends AnyFunSuite {
       (0 until t).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
     } :+ "" :+ "one" :+ "one two three"
     val df = texts.toDF("text").withColumn("ws", split(trim(col("text")), "\\s+"))
-    for (modulus <- Seq(1, 4, 16); portable <- Seq(false, true)) {
-      val family: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        if (portable) TextAnalysis.portableHash60 else xxhash64(_)
+    for (modulus <- Seq(1, 4, 16); family <- Seq(HashFamily.Xx64, HashFamily.Portable60)) {
       // the exact declarative fold cdcChunks used before round 20
       def emptyChunks = array().cast("array<array<string>>")
       def emptyCur = array().cast("array<string>")
@@ -207,12 +196,42 @@ class FunctionsSpec extends AnyFunSuite {
         size(c).cast("long").as("n_words"),
         family(concat_ws(" ", c)).as("chunk_hash")))
       val diff = df.select(
-          cdc_chunk_stats(col("ws"), modulus, portable).as("fused"),
+          cdc_chunk_stats(col("ws"), modulus, family.portable).as("fused"),
           decl.as("decl"))
         .filter(col("fused") =!= col("decl"))
       assert(diff.count() == 0,
-        s"modulus=$modulus portable=$portable: fused CDC chunks diverge:\n" +
+        s"modulus=$modulus family=$family: fused CDC chunks diverge:\n" +
           diff.limit(3).collect().mkString("\n"))
+    }
+  }
+
+  test("HashFamily.Portable60 ≡ the JVM replica portableHash60Jvm, randomized") {
+    import spark.implicits._
+    import graft.ops.{HashFamily, TextAnalysis}
+    // the replica builds the classifier's plan-constant weight table, so
+    // it must match the Column formulation on every string: unicode
+    // (multi-byte UTF-8, astral-plane code points), empty, long
+    val rnd = new scala.util.Random(6060)
+    val alphabet = "abcXYZ09 _-!γράμμαéü句子\u0000\t" + "\uD83D\uDE00"
+    def randomString(len: Int): String = {
+      val sb = new StringBuilder
+      while (sb.length < len) {
+        // never index the emoji's low half; its high half takes both
+        val i = rnd.nextInt(alphabet.length - 1)
+        if (alphabet.charAt(i).isHighSurrogate) sb.append(alphabet, i, i + 2)
+        else sb.append(alphabet.charAt(i))
+      }
+      sb.toString
+    }
+    val strings = (0 until 300).map(_ => randomString(rnd.nextInt(40))) ++
+      Seq("", " ", "qw:0", "qw:4095", randomString(5000), "x" * 100000)
+    val got = strings.toDF("s")
+      .select(col("s"), HashFamily.Portable60(col("s")).as("h"))
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(got.length == strings.length)
+    got.foreach { case (s, h) =>
+      assert(h == TextAnalysis.portableHash60Jvm(s),
+        s"Portable60 diverges from the JVM replica on a ${s.length}-char string")
     }
   }
 

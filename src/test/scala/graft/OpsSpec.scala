@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, HashFamily, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -615,7 +615,7 @@ class OpsSpec extends AnyFunSuite {
     assert(loose(4L) == "FOOTER")
     // portable-hash gate family and production xxhash64 family agree
     val portable = Dedup.dedupLinesAcross(fixture, "id", "t", minDocs = 2,
-        lineKey = TextAnalysis.portableHash60)
+        lineKey = HashFamily.Portable60)
       .collect().map(r => (r.getLong(0), r.getString(3))).toMap
     assert(portable == out.map { case (k, v) => (k, v._3) })
     intercept[IllegalArgumentException] {
@@ -1589,7 +1589,7 @@ class OpsSpec extends AnyFunSuite {
       (3L, "bb bb cc", false), (4L, "bb cc cc", false),
       (5L, "cc cc cc", false)).toDF("doc_id", "text", "tgt")
     val out = graft.ops.Sampling.importanceWeights(df, "doc_id", "text",
-        col("tgt"), wordHash = TextAnalysis.portableHash60)
+        col("tgt"), wordHash = HashFamily.Portable60)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getBoolean(3))).toMap
     assert(out.size == 5)
