@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -128,7 +127,7 @@ object Curate {
     if (cfg.nearDupThreshold.isDefined || cfg.dsirTargetSources.nonEmpty ||
         cfg.targetShares.nonEmpty || cfg.tokenBudgets.nonEmpty ||
         cfg.perplexityBands.nonEmpty || cfg.trainedClassifierSources.nonEmpty)
-      t = phase("scan_filters")(t.materialized(true))
+      t = phase("scan_filters")(Materialize(t))
     // CCNet's LM stage: per-source equal-depth perplexity bands over the
     // SURVIVING corpus (train = score = t, the self-perplexity recipe),
     // keep only the configured bands ("head", "middle" is the classic
@@ -137,42 +136,46 @@ object Curate {
     // to score (< 2 tokens) have no band and are dropped; the default
     // quality filter already removes them earlier.
     // Each selection stage below pins its (id-only, narrow) keep/drop set
-    // eagerly: left lazy, every later action re-derives the whole stage —
-    // the DSIR scoring pass alone re-ran its token explode per consume,
+    // eagerly, in a scope that releases the pins its callees took. Left
+    // lazy, every later action re-derives the whole stage — the DSIR
+    // scoring pass alone re-ran its token explode per consume,
     // and the caller's final materialization re-executed the anti/semi
     // join CHAIN once per lazy subtree (3× at sf1, measured 16.7 s of a
     // 26 s pipeline). Pinning the decision sets makes the final pass one
     // scan of the materialized row stage + bounded joins (guide §2.4).
     if (cfg.perplexityBands.nonEmpty) phase("ppl_band") {
-      val keep = LangModel.perplexityBuckets(t, idCol, textCol, sourceCol)
-        .filter(col("band").isin(cfg.perplexityBands: _*))
-        .select(col(idCol).as("__graft_ppl_id"))
-        .materialized(true)
+      val keep = Materialize.scoped {
+        Materialize(LangModel.perplexityBuckets(t, idCol, textCol, sourceCol)
+          .filter(col("band").isin(cfg.perplexityBands: _*))
+          .select(col(idCol).as("__graft_ppl_id")))
+      }
       t = t.join(keep, col(idCol) === col("__graft_ppl_id"), "left_semi")
     }
     for (thr <- cfg.nearDupThreshold) phase("near_dup") {
-      val pairs = Dedup.minhashNearDups(t, idCol, textCol, threshold = thr,
-          hash64 = cfg.wordHash)
-        .select(col("id_a"), col("id_b"))
       // drop every clustered doc that is not its cluster's representative —
       // a plain (shuffled) anti join: the drop set is id-only narrow but
       // can be a large fraction of the corpus, so no broadcast hint. The
       // join column gets a collision-proof name (idCol = "id" is common).
-      val drop = Dedup.dupClusters(pairs)
-        .filter(col("id") =!= col("cluster"))
-        .select(col("id").as("__graft_dup_id"))
-        .materialized(true)
+      val drop = Materialize.scoped {
+        val pairs = Dedup.minhashNearDups(t, idCol, textCol, threshold = thr,
+            hash64 = cfg.wordHash)
+          .select(col("id_a"), col("id_b"))
+        Materialize(Dedup.dupClusters(pairs)
+          .filter(col("id") =!= col("cluster"))
+          .select(col("id").as("__graft_dup_id")))
+      }
       t = t.join(drop, col(idCol) === col("__graft_dup_id"), "left_anti")
     }
     // DSIR selection: keep docs whose hashed-unigram mass is target-like
     // (q122's integer discriminant > 0) — a narrow id semi-join against
     // the per-doc scores, count table bounded at 2^16 rows
     if (cfg.dsirTargetSources.nonEmpty) phase("dsir") {
-      val keepIds = Sampling.importanceWeights(t, idCol, textCol,
-          col(sourceCol).isin(cfg.dsirTargetSources: _*),
-          wordHash = cfg.wordHash)
-        .filter(col("keep")).select(col(idCol).as("__graft_dsir_id"))
-        .materialized(true)
+      val keepIds = Materialize.scoped {
+        Materialize(Sampling.importanceWeights(t, idCol, textCol,
+            col(sourceCol).isin(cfg.dsirTargetSources: _*),
+            wordHash = cfg.wordHash)
+          .filter(col("keep")).select(col(idCol).as("__graft_dsir_id")))
+      }
       t = t.join(keepIds, col(idCol) === col("__graft_dsir_id"), "left_semi")
     }
     // TRAINED model-based selection: learn the quality model on THIS
@@ -185,20 +188,21 @@ object Curate {
     // to one class, and a silent full-corpus drop (or a no-op filter that
     // LOOKS like curation) must not masquerade as selection.
     if (cfg.trainedClassifierSources.nonEmpty) phase("trained_classifier") {
-      // perceptronClassify returns an eagerly-materialized frame since
-      // round 20 (shared pinned feature stream) — no second checkpoint
-      val scored = Learn.perceptronClassify(t, idCol, textCol,
-        col(sourceCol).isin(cfg.trainedClassifierSources: _*),
-        epochs = cfg.trainedClassifierEpochs,
-        wordHash = cfg.wordHash)
-      val nPos = scored.filter(col("predicted") === 1L).count()
-      require(nPos > 0 && nPos < scored.count(),
-        "trained classifier predicted a single class — the weak source " +
-          "labels carry no learnable textual signal on this corpus; " +
-          "use the heuristic classifierFilter or DSIR instead")
-      val keepIds = scored.filter(col("predicted") === 1L)
-        .select(col(idCol).as("__graft_tc_id"))
-        .materialized(true)
+      val keepIds = Materialize.scoped {
+        // perceptronClassify returns an eagerly pinned frame (shared
+        // pinned feature stream) — no second pin before the count probes
+        val scored = Learn.perceptronClassify(t, idCol, textCol,
+          col(sourceCol).isin(cfg.trainedClassifierSources: _*),
+          epochs = cfg.trainedClassifierEpochs,
+          wordHash = cfg.wordHash)
+        val nPos = scored.filter(col("predicted") === 1L).count()
+        require(nPos > 0 && nPos < scored.count(),
+          "trained classifier predicted a single class — the weak source " +
+            "labels carry no learnable textual signal on this corpus; " +
+            "use the heuristic classifierFilter or DSIR instead")
+        Materialize(scored.filter(col("predicted") === 1L)
+          .select(col(idCol).as("__graft_tc_id")))
+      }
       t = t.join(keepIds, col(idCol) === col("__graft_tc_id"), "left_semi")
     }
     if (cfg.targetShares.nonEmpty)

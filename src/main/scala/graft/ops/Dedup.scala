@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -115,7 +114,7 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, numBands: Int = 0,
       threshold: Double = 0.7, seed: Long = 42L,
-      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     // numBands = 0 (default): derive the banding from the threshold via
     // the S-curve rule, so the candidate volume tracks what the caller
     // actually asked for (a fixed 16-band split of 64 hashes has its
@@ -144,10 +143,9 @@ object Dedup {
     // footprint and its MEMORY_AND_DISK spill). Both downstream hash
     // domains derive from xxh = hash64(shingle): the 31-bit minhash input
     // is pmod(xxh, P) and the verification sets are array_sort(xxh).
-    val base = in.select(col(idCol).as("id"),
+    val base = Materialize.cache(in.select(col(idCol).as("id"),
         TextAnalysis.hashedShingles(col(textCol), shingleSize, hash64)
-          .as("xxh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("xxh")))
     val hashed = transform(col("xxh"), h => pmod(h, lit(P)))
     val sig = graft.functions.sketches.minhash_sig(hashed, as.toArray, bs.toArray)
 
@@ -172,12 +170,9 @@ object Dedup {
         graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    // Eagerly materialize the (small — near-dup pairs only) result, then
-    // release the cache: round 1 leaked it for the session lifetime, which
-    // squatted on executor memory for every later query in the bench.
-    val out = result.materialized(eager = true)
-    base.unpersist(blocking = false)
-    out
+    // Eagerly pin the (small — near-dup pairs only) result, so the scope
+    // can release the shingle cache before the operator returns.
+    Materialize(result)
   }
 
   /** Near-duplicate pairs ACROSS two corpora — the train-vs-eval
@@ -220,7 +215,8 @@ object Dedup {
   def saveMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3, numHashes: Int = 64,
       numBands: Int = 0, threshold: Double = 0.7, seed: Long = 42L,
-      hash64: HashFamily = HashFamily.Xx64, numFiles: Int = 32): Unit = {
+      hash64: HashFamily = HashFamily.Xx64,
+      numFiles: Int = 32): Unit = Materialize.scoped {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
@@ -233,7 +229,6 @@ object Dedup {
     Seq((shingleSize, numHashes, bands, seed))
       .toDF("shingle_size", "num_hashes", "num_bands", "seed")
       .write.mode("overwrite").parquet(s"$path/params")
-    base.unpersist(blocking = false)
   }
 
   /** Delete documents from a persisted MinHash-LSH index — the removal
@@ -251,9 +246,9 @@ object Dedup {
     * no-ops.
     */
   def deleteFromMinhashIndex(ids: DataFrame, idCol: String, path: String,
-      numFiles: Int = 32): Unit = {
+      numFiles: Int = 32): Unit = Materialize.scoped {
     val spark = ids.sparkSession
-    val del = ids.select(col(idCol).as("id")).distinct().materialized()
+    val del = Materialize(ids.select(col(idCol).as("id")).distinct())
     Layout.rewriteClustered(spark, s"$path/bands",
       Seq(col("band"), col("bandHash")), numFiles)(
       _.join(del, Seq("id"), "left_anti"))
@@ -280,12 +275,12 @@ object Dedup {
   def minhashNearDupsIndexed(index: MinhashIndex, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       hash64: HashFamily = HashFamily.Xx64,
-      maxBroadcastBandRows: Long = 4000000L): DataFrame = {
+      maxBroadcastBandRows: Long = 4000000L): DataFrame = Materialize.scoped {
     val rBase = shinglePrep(batch, idCol, textCol, index.shingleSize, hash64)
     val rBands = bandRows(rBase, index.numHashes, index.numBands,
       index.seed, hash64)
     // The "batch is the small side" assumption is measured, not assumed:
-    // rBase is persisted anyway, so counting it is free, and the band-row
+    // rBase is cached anyway, so counting it is free, and the band-row
     // count is exactly batchRows × numBands. Under the cap (default 4M
     // band rows ≈ low hundreds of MB serialized) the probe broadcasts;
     // over it — a "batch" that is really a corpus — fall back to a
@@ -307,9 +302,7 @@ object Dedup {
         graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("left_id"), col("right_id"), col("jaccard"))
-    val out = result.materialized(eager = true)
-    rBase.unpersist(blocking = false)
-    out
+    Materialize(result)
   }
 
   /** Append a (new-id) batch's bands + shingles to the index — the daily
@@ -325,7 +318,7 @@ object Dedup {
     */
   def appendToMinhashIndex(batch: DataFrame, idCol: String, textCol: String,
       path: String, hash64: HashFamily = HashFamily.Xx64,
-      numFiles: Int = 8): Unit = {
+      numFiles: Int = 8): Unit = Materialize.scoped {
     val spark = batch.sparkSession
     val idx = loadMinhashIndex(spark, path)
     val base = shinglePrep(batch, idCol, textCol, idx.shingleSize, hash64)
@@ -335,7 +328,6 @@ object Dedup {
       bandRows(base, idx.numHashes, idx.numBands, idx.seed, hash64),
       s"$path/bands", Seq(col("band"), col("bandHash")), numFiles,
       mode = "append")
-    base.unpersist(blocking = false)
   }
 
   /** Batch rows with NO verified near-dup in the index: the keep-set of
@@ -350,15 +342,14 @@ object Dedup {
     batch.join(dups, col(idCol) === col("__dup_id"), "left_anti")
   }
 
-  /** Shared shingle-hash prep: (id, xxh array<long>), persisted — every
+  /** Shared shingle-hash prep: (id, xxh array<long>), cached — every
     * index/across path builds from exactly this.
     */
   private def shinglePrep(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, hash64: HashFamily): DataFrame =
-    Spread.toCores(df).select(col(idCol).as("id"),
+    Materialize.cache(Spread.toCores(df).select(col(idCol).as("id"),
         TextAnalysis.hashedShingles(col(textCol), shingleSize, hash64)
-          .as("xxh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("xxh")))
 
   /** Shared band-key rows: (id, band, bandHash) from a prepped frame. */
   private def bandRows(base: DataFrame, numHashes: Int, bands: Int,
@@ -377,7 +368,7 @@ object Dedup {
       idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, numBands: Int = 0,
       threshold: Double = 0.7, seed: Long = 42L,
-      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
     val lBase = shinglePrep(left, idCol, textCol, shingleSize, hash64)
     val rBase = shinglePrep(right, idCol, textCol, shingleSize, hash64)
@@ -396,10 +387,7 @@ object Dedup {
         graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("left_id"), col("right_id"), col("jaccard"))
-    val out = result.materialized(eager = true)
-    lBase.unpersist(blocking = false)
-    rBase.unpersist(blocking = false)
-    out
+    Materialize(result)
   }
 
   /** Exact Jaccard similarity of two (distinct-element) string arrays —
@@ -459,15 +447,14 @@ object Dedup {
   def gramContamination(train: DataFrame, trainId: String, trainText: String,
       eval: DataFrame, evalId: String, evalText: String,
       n: Int = 13,
-      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     def gramsOf(df: DataFrame, id: String, text: String, out: String) = {
       // fused gram hashing (GC-bound declaratively — DESIGN §14.7)
       val gh = array_distinct(TextAnalysis.fusedGramHashes(
         TextAnalysis.words(col(text)), n, gramHash, shortDocWhole = false))
       df.select(col(id).cast("long").as(out), gh.as("gh"))
     }
-    val ev = gramsOf(eval, evalId, evalText, "eval_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ev = Materialize.cache(gramsOf(eval, evalId, evalText, "eval_id"))
     val evalGramSet = ev.select(explode(col("gh")).as("gram")).distinct()
     // grams present in BOTH corpora: broadcast-filter the train scan down
     // to eval-set hits first, distinct only the survivors
@@ -478,14 +465,11 @@ object Dedup {
     val counts = ev.select(col("eval_id"), explode(col("gh")).as("gram"))
       .join(broadcast(matched), Seq("gram"), "left_semi")
       .groupBy(col("eval_id")).agg(count(lit(1)).as("n_matched"))
-    val out = ev.select(col("eval_id"), size(col("gh")).cast("long").as("n_grams"))
+    Materialize(ev.select(col("eval_id"), size(col("gh")).cast("long").as("n_grams"))
       .join(counts, Seq("eval_id"), "left")
       .select(col("eval_id"), col("n_grams"),
         coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-        (coalesce(col("n_matched"), lit(0L)) > 0).as("contaminated"))
-      .materialized(eager = true)
-    ev.unpersist(blocking = false)
-    out
+        (coalesce(col("n_matched"), lit(0L)) > 0).as("contaminated")))
   }
 
   /** Duplicate-aware soft dedup: instead of DROPPING near-duplicates,
@@ -510,8 +494,8 @@ object Dedup {
     * weights replay bit-for-bit in any engine.
     */
   def softDedupWeights(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20, checkpointEvery: Int = 0): DataFrame = {
-    val cl = dupClusters(pairs, maxIter, checkpointEvery)
+      maxIter: Int = 20): DataFrame = {
+    val cl = dupClusters(pairs, maxIter)
       .join(docs.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
     val sizes = cl.groupBy(col("cluster")).agg(count(lit(1)).as("__cs"))
     val labeled = cl.join(sizes, Seq("cluster"))
@@ -572,25 +556,21 @@ object Dedup {
     */
   def cdcSharedChunkStats(df: DataFrame, idCol: String, textCol: String,
       modulus: Int = 16, minDocs: Int = 2,
-      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
-    val chunks = cdcChunks(df, idCol, textCol, modulus, hash64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
+    val chunks = Materialize.cache(cdcChunks(df, idCol, textCol, modulus, hash64))
     val shared = chunks.select(col("chunk_hash"), col(idCol))
       .distinct()
       .groupBy(col("chunk_hash")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select(col("chunk_hash"))
-    val out = chunks
+    Materialize(chunks
       .join(shared.withColumn("__shared", lit(1L)), Seq("chunk_hash"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("n_words")).as("n_words"),
         sum(when(col("__shared").isNotNull, 1L).otherwise(0L)).as("n_shared_chunks"),
         sum(when(col("__shared").isNotNull, col("n_words")).otherwise(0L))
-          .as("shared_words"))
-      .materialized(eager = true)
-    chunks.unpersist(blocking = false)
-    out
+          .as("shared_words")))
   }
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
@@ -639,14 +619,13 @@ object Dedup {
     */
   def winnowNearDups(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 4, minShared: Int = 2, maxDf: Int = 256,
-      hash64: HashFamily = HashFamily.Xx64): DataFrame = {
+      hash64: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     // Cached (the minhashNearDups `base` pattern): the fingerprint scan
     // feeds the df count AND both sides of the pair join — uncached, the
     // gram-hash pass re-runs up to 4× per action (measured 2.2× the whole
     // op's cost at sf1 with the md5 gate family). Only the narrow
     // (id, fp) longs are cached; gram strings never leave the scan.
-    val fps = winnowFingerprints(df, idCol, textCol, k, w, hash64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = Materialize.cache(winnowFingerprints(df, idCol, textCol, k, w, hash64))
     // fingerprints in [2, maxDf] docs: singletons can't form a pair,
     // ultra-common ones would explode the pair space quadratically
     val joinable = fps.groupBy(col("fp"))
@@ -656,15 +635,12 @@ object Dedup {
     val pruned = fps.join(joinable, Seq("fp"))
     val l = pruned.select(col("fp"), col(idCol).as("id_a"))
     val r = pruned.select(col("fp"), col(idCol).as("id_b"))
-    val result = l.join(r, Seq("fp"))
+    // eagerly pin the (near-dup-bounded) pairs; the scope drops the cache
+    Materialize(l.join(r, Seq("fp"))
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-    // eager-materialize the (near-dup-bounded) pairs, release the cache
-    val out = result.materialized(eager = true)
-    fps.unpersist(blocking = false)
-    out
+      .filter(col("shared") >= minShared))
   }
 
   def ngramJaccardNearDups(df: DataFrame, idCol: String, textCol: String,
@@ -930,22 +906,16 @@ object Dedup {
     * is a convergence PROBE (does any label still shrink?), not data
     * collection. Near-dup components are overwhelmingly tiny (pairs/small
     * chains), so rounds ≈ 2-3 in practice; maxIter bounds adversarial
-    * chains.
-    *
-    * `checkpointEvery`: every Nth round the label table goes to the
-    * RELIABLE checkpoint dir (`setCheckpointDir` required) instead of
-    * executor-local storage — same preemption rationale as
-    * [[Graph.pageRank]]; 0 (default) keeps localCheckpoint-only.
+    * chains. Each round's labels are released once the next round is
+    * pinned, so at most two rounds are held.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-      checkpointEvery: Int = 0): DataFrame = {
+  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = Materialize.scoped {
     val edges = pairs.select(col("id_a").cast("long").as("src"),
       col("id_b").cast("long").as("dst"))
     // materialize the (narrow) edge set ONCE: every round's actions would
     // otherwise re-run the whole upstream pair-generation pipeline
-    val sym = edges.unionAll(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-      .materialized(true)
+    val sym = Materialize(edges.unionAll(
+        edges.select(col("dst").as("src"), col("src").as("dst"))))
     // Seed labels with min(id, direct-neighbor min) instead of id: the
     // same single aggregation the old distinct() paid (groupBy IS the
     // distinct), but components of diameter <= 2 — pairs and stars, the
@@ -953,10 +923,9 @@ object Dedup {
     // one full round earlier: one fewer label-table join + shuffle +
     // checkpoint at corpus scale. Final labels are identical (min-label
     // CC has a unique fixpoint; seeding is exactly one propagation step).
-    var labels = sym.groupBy(col("src"))
+    var labels = Materialize(sym.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .materialized(true)
+      .select(col("src").as("id"), col("label")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -975,13 +944,11 @@ object Dedup {
         if (newL < oldL) shrinks.add(1L)
         newL
       }).asNondeterministic()
-      val joinedPlan = labels.withColumnRenamed("label", "oldLabel")
+      val joined = Materialize(labels.withColumnRenamed("label", "oldLabel")
         .join(updated, "id")
-        .withColumn("newLabel", countShrink(col("oldLabel"), col("newLabel")))
-      val joined = if (checkpointEvery > 0 && (iter + 1) % checkpointEvery == 0)
-        joinedPlan.checkpoint(true)
-      else joinedPlan.materialized(true)
+        .withColumn("newLabel", countShrink(col("oldLabel"), col("newLabel"))))
       converged = shrinks.value == 0L
+      Materialize.release(labels)
       labels = joined.select(col("id"), col("newLabel").as("label"))
       iter += 1
     }
@@ -1005,11 +972,10 @@ object Dedup {
     * that scale — instead of the accumulator ride-along the long-id path
     * uses to stay count-free at corpus scale.
     */
-  def dupClustersAny(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def dupClustersAny(pairs: DataFrame, maxIter: Int = 20): DataFrame = Materialize.scoped {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val sym = edges.unionAll(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-      .materialized(true)
+    val sym = Materialize(edges.unionAll(
+        edges.select(col("dst").as("src"), col("src").as("dst"))))
     // Seed labels with min(id, direct-neighbor min) instead of id: the
     // same single aggregation the old distinct() paid (groupBy IS the
     // distinct), but components of diameter <= 2 — pairs and stars, the
@@ -1017,10 +983,9 @@ object Dedup {
     // one full round earlier: one fewer label-table join + shuffle +
     // checkpoint at corpus scale. Final labels are identical (min-label
     // CC has a unique fixpoint; seeding is exactly one propagation step).
-    var labels = sym.groupBy(col("src"))
+    var labels = Materialize(sym.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
-      .select(col("src").as("id"), col("label"))
-      .materialized(true)
+      .select(col("src").as("id"), col("label")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -1028,10 +993,10 @@ object Dedup {
         .select(sym("src").as("id"), col("label"))
       val updated = labels.unionAll(neighborMin)
         .groupBy("id").agg(min(col("label")).as("newLabel"))
-      val joined = labels.withColumnRenamed("label", "oldLabel")
-        .join(updated, "id")
-        .materialized(true)
+      val joined = Materialize(labels.withColumnRenamed("label", "oldLabel")
+        .join(updated, "id"))
       converged = joined.filter(col("newLabel") < col("oldLabel")).limit(1).count() == 0L
+      Materialize.release(labels)
       labels = joined.select(col("id"), col("newLabel").as("label"))
       iter += 1
     }
@@ -1337,15 +1302,14 @@ object Dedup {
     */
   private[graft] def dupSpanStatsImpl(df: DataFrame, idCol: String,
       textCol: String, n: Int, checkpoint: Boolean,
-      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     val in = Spread.toCores(df)
     val ws = TextAnalysis.words(col(textCol))
     // fused single-pass gram hashing (GC-bound declaratively — DESIGN §14.7)
     val ghCol = TextAnalysis.fusedGramHashes(ws, n, gramHash, shortDocWhole = false)
-    val grams = in.select(col(idCol).cast("long").as("id"),
+    val grams = Materialize.cache(in.select(col(idCol).cast("long").as("id"),
         size(ws).cast("long").as("n_tokens"),
-        ghCol.as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        ghCol.as("gh")))
     val pos = grams.select(col("id"), col("n_tokens"),
       posexplode_outer(col("gh")).as(Seq("pos", "gram")))
     // grams occurring in >= 2 distinct documents. Per-doc dedup happens
@@ -1413,14 +1377,9 @@ object Dedup {
         coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"),
         (coalesce(col("covered_tokens"), lit(0L)).cast("double") /
           col("n_tokens").cast("double")).as("dup_coverage"))
-    // eagerly materialize the per-doc (small) output, then release the
+    // eagerly pin the per-doc (small) output; the scope then releases the
     // cache — same lifetime discipline as minhashNearDups
-    if (!checkpoint) result
-    else {
-      val out = result.materialized(eager = true)
-      grams.unpersist(blocking = false)
-      out
-    }
+    if (checkpoint) Materialize(result) else result
   }
 
   /** Duplicated-span EXCISION — the removal mode of [[dupSpanStats]]
@@ -1445,11 +1404,10 @@ object Dedup {
     */
   def exciseDupSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, minDocs: Int = 2,
-      gramHash: HashFamily = HashFamily.Xx64): DataFrame = {
+      gramHash: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     val in = Spread.toCores(df)
-    val toks = in.select(col(idCol).cast("long").as("id"),
-        TextAnalysis.words(col(textCol)).as("__ws"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Materialize.cache(in.select(col(idCol).cast("long").as("id"),
+        TextAnalysis.words(col(textCol)).as("__ws")))
     def grams = toks.select(col("id"),
       TextAnalysis.fusedGramHashes(col("__ws"), n, gramHash, shortDocWhole = false)
         .as("gh"))
@@ -1471,15 +1429,12 @@ object Dedup {
       transform(sequence(lit(0), size(col("__ws")) - 1),
         i => struct(i.as("p"), element_at(col("__ws"), i + 1).as("w"))),
       s => !array_contains(cov, s.getField("p")))
-    val result = toks.join(covered, Seq("id"), "left")
+    Materialize(toks.join(covered, Seq("id"), "left")
       .select(col("id"),
         size(col("__ws")).cast("long").as("n_tokens"),
         size(cov).cast("long").as("n_removed"),
         concat_ws(" ", transform(keptToks, s => s.getField("w")))
-          .as("clean_text"))
-    val out = result.materialized(eager = true)
-    toks.unpersist(blocking = false)
-    out
+          .as("clean_text")))
   }
 
   // ---- SimHash -------------------------------------------------------
@@ -1673,9 +1628,8 @@ object Dedup {
     * label set instead. Per-cluster state is bounded by dup-group size.
     */
   def keepBestPerCluster(docs: DataFrame, pairs: DataFrame, idCol: String,
-      scoreCol: Column, maxIter: Int = 20,
-      checkpointEvery: Int = 0): DataFrame = {
-    val clusters = dupClusters(pairs, maxIter, checkpointEvery)
+      scoreCol: Column, maxIter: Int = 20): DataFrame = {
+    val clusters = dupClusters(pairs, maxIter)
     val scored = docs.select(col(idCol).cast("long").as("id"),
       scoreCol.as("score"))
     val labeled = scored.join(clusters, Seq("id"), "left")
@@ -1796,13 +1750,10 @@ object Dedup {
     * Output: (id_l, id_r, dist), dist ∈ [0, k].
     */
   def editDistanceJoin(left: DataFrame, right: DataFrame,
-      idCol: String, strCol: String, k: Int): DataFrame = {
-    val l = edPrep(left, idCol, strCol, k).cache()
-    val r = edPrep(right, idCol, strCol, k).cache()
-    val out = edJoinCore(l, r, k).materialized(eager = true)
-    l.unpersist(blocking = false)
-    r.unpersist(blocking = false)
-    out
+      idCol: String, strCol: String, k: Int): DataFrame = Materialize.scoped {
+    val l = Materialize.cache(edPrep(left, idCol, strCol, k))
+    val r = Materialize.cache(edPrep(right, idCol, strCol, k))
+    Materialize(edJoinCore(l, r, k))
   }
 
   /** Self-join form of [[editDistanceJoin]]: unordered pairs
@@ -1811,16 +1762,13 @@ object Dedup {
     * ordering + distinct collapses the two discovery directions.
     */
   def editDistanceNearDups(df: DataFrame, idCol: String, strCol: String,
-      k: Int): DataFrame = {
-    val base = edPrep(df, idCol, strCol, k).cache()
-    val out = edJoinCore(base, base, k)
+      k: Int): DataFrame = Materialize.scoped {
+    val base = Materialize.cache(edPrep(df, idCol, strCol, k))
+    Materialize(edJoinCore(base, base, k)
       .filter(col("id_l") =!= col("id_r"))
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"), col("dist"))
-      .distinct()
-      .materialized(eager = true)
-    base.unpersist(blocking = false)
-    out
+      .distinct())
   }
 
   private def edPrep(df: DataFrame, idCol: String, strCol: String,

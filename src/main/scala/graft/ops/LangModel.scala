@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -55,8 +54,7 @@ object LangModel {
     */
   def train(corpus: DataFrame, idCol: String, textCol: String): BigramModel = {
     val pairs = pairStream(corpus, idCol, textCol)
-    val bigrams = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .materialized()
+    val bigrams = Materialize(pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
     val unigrams = bigrams.groupBy("w1").agg(sum(col("c2")).as("c1"))
     val vocab = corpus
       .select(explode(TextAnalysis.words(col(textCol))).as("w"))
@@ -184,7 +182,7 @@ object LangModel {
       // stratum-count gate) read the scored table up to three times — as
       // raw lineage each pass would re-run the whole bigram-scoring
       // subtree; the single-pass window path skips the pin entirely
-      if (pin) s.materialized() else s
+      if (pin) Materialize(s) else s
     }
     val labels = if (numBuckets == 3) Seq("head", "middle", "tail")
       else (0 until numBuckets).map(i => s"b$i")

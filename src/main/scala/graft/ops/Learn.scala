@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -84,12 +83,10 @@ object Learn {
     */
   def perceptronWeights(docs: DataFrame, idCol: String, textCol: String,
       isPositive: Column, epochs: Int = 3, buckets: Int = 65536,
-      wordHash: HashFamily = HashFamily.Xx64): Map[Long, Long] = {
-    val toks = tokenStream(docs, idCol, textCol, isPositive, buckets, wordHash)
-      .materialized()
-    val w = weightsFromToks(toks, idCol, epochs, buckets)
-    toks.unpersist(blocking = false)
-    w
+      wordHash: HashFamily = HashFamily.Xx64): Map[Long, Long] = Materialize.scoped {
+    val toks = Materialize(tokenStream(docs, idCol, textCol, isPositive,
+      buckets, wordHash))
+    weightsFromToks(toks, idCol, epochs, buckets)
   }
 
   /** The epoch loop over an already-pinned feature stream — shared by
@@ -139,7 +136,7 @@ object Learn {
     */
   def perceptronClassify(docs: DataFrame, idCol: String, textCol: String,
       isPositive: Column, epochs: Int = 3, buckets: Int = 65536,
-      wordHash: HashFamily = HashFamily.Xx64): DataFrame = {
+      wordHash: HashFamily = HashFamily.Xx64): DataFrame = Materialize.scoped {
     // ONE pinned feature stream shared by the epoch loop AND the final
     // scoring pass (guide §2.4): the old shape trained on a checkpointed
     // stream, threw it away, and re-tokenized the whole corpus for the
@@ -148,18 +145,13 @@ object Learn {
     // a lineage-keeping persist re-plans the full upstream tree per
     // action — measured as a q144 regression before this was switched to
     // the same truncated pin perceptronWeights always used.
-    val toks = tokenStream(docs, idCol, textCol, isPositive, buckets, wordHash)
-      .materialized()
+    val toks = Materialize(tokenStream(docs, idCol, textCol, isPositive,
+      buckets, wordHash))
     val w = weightsFromToks(toks, idCol, epochs, buckets)
-    val out = margins(toks, idCol, w)
+    Materialize(margins(toks, idCol, w)
       .select(col(idCol), col("__y").as("y"),
         col("__m").cast("long").as("margin"),
         when(col("__m") > 0, 1L).otherwise(-1L).as("predicted"))
-      .withColumn("correct", col("predicted") === col("y"))
-      .materialized(eager = true)
-    // out is materialized independently; the truncated toks pin can go
-    // (same release discipline as perceptronWeights)
-    toks.unpersist(blocking = false)
-    out
+      .withColumn("correct", col("predicted") === col("y")))
   }
 }

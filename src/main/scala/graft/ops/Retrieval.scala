@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,10 +46,9 @@ object Retrieval {
     // and the postings pass below would otherwise EACH re-execute the
     // caller's lineage (including the toCores repartition) — this pins the
     // prepared (doc_id, text, dl) frame so the corpus is computed once
-    val d = Spread.toCores(docs).select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).as("text"))
-      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double"))
-      .materialized()
+    val d = Materialize(Spread.toCores(docs)
+      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double")))
     val statsRow = d.agg(count(lit(1)), avg(col("dl"))).head()
     val nDocs = statsRow.getLong(0).toDouble
     // empty corpus: no postings can match anyway; 1.0 keeps the (dead)
@@ -83,7 +81,9 @@ object Retrieval {
       .filter(col("token") =!= "")
       .join(broadcast(termSet), Seq("token"))
       .groupBy(col("doc_id"), col("dl"), col("token"))
-      .agg(count(lit(1)).cast("double").as("tf")), eager = true)
+      .agg(count(lit(1)).cast("double").as("tf")))
+    // every later pass reads `matched`; the prepared corpus can go
+    Materialize.release(d)
     scoreMatched(matched, qterms, nDocs, avgdl, k, k1, b)
   }
 
@@ -148,10 +148,9 @@ object Retrieval {
     */
   private def bm25BatchParts(docs: DataFrame, idCol: String,
       textCol: String): (DataFrame, Long, Long) = {
-    val d = Spread.toCores(docs).select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).as("text"))
-      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double"))
-      .materialized()
+    val d = Materialize(Spread.toCores(docs)
+      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double")))
     val statsRow = d.agg(count(lit(1)),
       sum(col("dl").cast("long"))).head()
     val nDocs = statsRow.getLong(0)
@@ -255,8 +254,7 @@ object Retrieval {
   def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String,
       numFiles: Int = 32): Unit = {
     val spark = ids.sparkSession
-    val del = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .materialized()
+    val del = Materialize(ids.select(col(idCol).cast("long").as("doc_id")).distinct())
     // stats delta BEFORE the rewrite (the rows are about to disappear)
     val r = spark.read.parquet(s"$path/postings")
       .join(del, Seq("doc_id"), "left_semi")

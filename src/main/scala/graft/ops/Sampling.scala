@@ -370,7 +370,7 @@ object Sampling {
     // nothing and halves the corpus passes per action (guide §2.4).
     val counts = Materialize(toks.groupBy(col("__b")).agg(
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"),
-      sum(when(col("__tgt"), 0L).otherwise(1L)).as("__cs")), eager = true)
+      sum(when(col("__tgt"), 0L).otherwise(1L)).as("__cs")))
     val Seq(nt, ns) = counts.agg(sum(col("__ct")), sum(col("__cs")))
       .collect()(0).toSeq.map(v => Option(v).fold(0L)(_.asInstanceOf[Long]))
     // degenerate splits score every doc exactly 0 → keep=false for ALL
@@ -517,8 +517,8 @@ object Sampling {
     * Output: (idCol, cluster, split) — one row per input doc.
     */
   def leakFreeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20, checkpointEvery: Int = 0): DataFrame = {
-    val cl = Dedup.dupClusters(pairs, maxIter, checkpointEvery)
+      maxIter: Int = 20): DataFrame = {
+    val cl = Dedup.dupClusters(pairs, maxIter)
       .select(col("id").as(idCol), col("cluster"))
     docs.select(col(idCol))
       .join(cl, Seq(idCol), "left")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -366,7 +365,8 @@ object Similarity {
   def pqTrainCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int = 8, ksub: Int = 16, iters: Int = 2,
       trainFraction: Double = 1.0,
-      meanQuantizeInv: Option[Double] = None): Array[Array[Array[Double]]] = {
+      meanQuantizeInv: Option[Double] = None): Array[Array[Array[Double]]] =
+      Materialize.scoped {
     val sampled =
       if (trainFraction >= 1.0) corpus
       else Sampling.hashSample(corpus, col(idCol), trainFraction)
@@ -379,7 +379,7 @@ object Similarity {
         vecCol, "v")
       .select(col("id"), col("v"))
     val train = if (trainFraction >= 1.0) normalized
-      else normalized.materialized(true)
+      else Materialize(normalized)
     pqTrainLloyd(train, dim, m, ksub, iters, meanQuantizeInv)
   }
 
@@ -574,9 +574,8 @@ object Similarity {
       nProbe: Int = 4): DataFrame = {
     // Pin the (bounded) query batch once for the probed-cid collect AND
     // the probe tail — same §2.4 reuse as ivfPqTopKWithIndex.
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .materialized(true)
+    val q = Materialize(queries.select(col(idCol).as("query_id"),
+        col(vecCol).cast("array<double>").as("qv")))
     val probedCids = q
       .select(explode(graft.functions.sketches.top_centroids(
         col("qv"), index.cm, index.cids, nProbe)).as("cid"))
@@ -743,8 +742,11 @@ object Similarity {
       if (trainFraction >= 1.0) res
       else Sampling.hashSample(res, col("vec_id"), trainFraction)
     val train0 = sampled.select(col("vec_id").as("id"), col("r").as("v"))
-    val train = if (trainFraction >= 1.0) train0 else train0.materialized(true)
-    val cb = pqTrainLloyd(train, dim, m, ksub, iters, meanQuantizeInv)
+    // the sample pin lives only as long as the Lloyd passes that scan it
+    val cb = Materialize.scoped {
+      val train = if (trainFraction >= 1.0) train0 else Materialize(train0)
+      pqTrainLloyd(train, dim, m, ksub, iters, meanQuantizeInv)
+    }
 
     val codes = res.select(col("vec_id"), col("cid"),
       graft.functions.sketches.pq_encode(col("r"), cb).as("codes"))
@@ -953,9 +955,8 @@ object Similarity {
     // the same unit-vector frame, each re-scanning the query source
     // (guide §2.4 — measured as repeated query-side scan jobs in the
     // q123i per-job profile).
-    val uq = withUnitVec(queries, vecCol, "__v")
-      .select(col(idCol).as("query_id"), col("__v"))
-      .materialized(true)
+    val uq = Materialize(withUnitVec(queries, vecCol, "__v")
+      .select(col(idCol).as("query_id"), col("__v")))
     val probedCids = uq
       .select(explode(graft.functions.sketches.top_centroids(col("__v"),
         index.cm, index.cids, nProbe)).as("cid"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Dedup, HashFamily, Retrieval, Similarity}
+import graft.ops.{Dedup, HashFamily, Materialize, Retrieval, Similarity}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
@@ -325,27 +325,30 @@ object IndexMaintenance {
             "IndexMaintenance.resetEpochMarkers(path) and restart.")
       return // committed epoch replayed by its own query: no-op
     }
-    readMarker(intentP).foreach { case (intentEpoch, intentOwner) =>
-      if (intentEpoch == epochId) {
-        // The scrub deletes this batch's ids from the index — only safe
-        // when the intent really is OUR crashed attempt. A leftover intent
-        // from a DIFFERENT query (it crashed before its first commit, so
-        // the committed-range check above cannot catch it) colliding with
-        // our epoch number would scrub ids that legitimately exist in the
-        // index; same rationale, same loud failure.
-        for (o <- owner; io <- intentOwner; if o != io)
-          throw new IllegalStateException(
-            s"index at $path: live _epoch_intent for epoch $epochId belongs " +
-              s"to streaming query $io, but query $o is maintaining the " +
-              "index. Scrubbing another query's crashed attempt would " +
-              "delete ids this batch never wrote. Heal or abandon the old " +
-              "query's attempt first (resetEpochMarkers after arranging " +
-              "re-delivery), then restart.")
-        scrub // crashed attempt: heal
+    // one scope per epoch: it releases every pin the scrub and append take
+    Materialize.scoped {
+      readMarker(intentP).foreach { case (intentEpoch, intentOwner) =>
+        if (intentEpoch == epochId) {
+          // The scrub deletes this batch's ids from the index — only safe
+          // when the intent really is OUR crashed attempt. A leftover intent
+          // from a DIFFERENT query (it crashed before its first commit, so
+          // the committed-range check above cannot catch it) colliding with
+          // our epoch number would scrub ids that legitimately exist in the
+          // index; same rationale, same loud failure.
+          for (o <- owner; io <- intentOwner; if o != io)
+            throw new IllegalStateException(
+              s"index at $path: live _epoch_intent for epoch $epochId belongs " +
+                s"to streaming query $io, but query $o is maintaining the " +
+                "index. Scrubbing another query's crashed attempt would " +
+                "delete ids this batch never wrote. Heal or abandon the old " +
+                "query's attempt first (resetEpochMarkers after arranging " +
+                "re-delivery), then restart.")
+          scrub // crashed attempt: heal
+        }
       }
+      writeAtomic(intentP, epochId)
+      append
     }
-    writeAtomic(intentP, epochId)
-    append
     writeAtomic(lastP, epochId)
     try fs.delete(intentP, false) catch { case _: java.io.IOException => () }
   }

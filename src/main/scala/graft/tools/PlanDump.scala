@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
   * (no list = every declared query). Building a query's DataFrame executes
-  * any in-body eager stages (topic writes, materialized() kernels) exactly
+  * any in-body eager stages (topic writes, Materialize pins) exactly
   * like Verify does; the dumped plan is the plan of the RETURNED frame —
   * for kernels that end in an eager localCheckpoint the interesting
   * upstream plan is captured by the ops' own explain blocks committed

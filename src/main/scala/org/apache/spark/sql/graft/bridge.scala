@@ -33,6 +33,15 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `plan` with its cached fragments substituted, computed now — a
+    * frame's own `withCachedData` misses persists taken after it planned.
+    */
+  def useCachedData(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.useCachedData(plan.clone())
+
   def sparkLocalDir(): Option[java.io.File] =
     try Option(org.apache.spark.SparkEnv.get).map { env =>
       new java.io.File(org.apache.spark.util.Utils.getLocalDir(env.conf))

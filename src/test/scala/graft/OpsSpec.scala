@@ -1356,33 +1356,40 @@ class OpsSpec extends AnyFunSuite {
     assert(ranks(0) == ranks(7), "ranks must not depend on partitioning")
   }
 
-  test("reliable checkpointEvery: identical results, survives 10 iterations") {
-    import graft.ops.Graph
+  test("reliable materialize mode: identical results, survives 10 iterations") {
+    import graft.ops.{Graph, Materialize}
+    val conf = spark.conf
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
     val n = docs.count()
     val nodes = docs.select(col("doc_id").as("id"))
     val edges = docs.select(col("doc_id").as("src"),
         ((col("doc_id") * 7 + 1) % n).as("dst"))
       .filter(col("src") =!= col("dst"))
-    // the reliable-checkpoint path must be a pure durability change: ranks
-    // bit-identical to the localCheckpoint-only run
-    val local = Graph.pageRank(edges, nodes, iterations = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val reliable = Graph.pageRank(edges, nodes, iterations = 10, checkpointEvery = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(local == reliable, "checkpointEvery changed pageRank results")
-    // and checkpoint files were actually written to the reliable dir
-    val wrote = new java.io.File(ckpt).listFiles()
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")
-    // dupClusters: same contract through the label-propagation loop
     val pairs = Dedup.ngramJaccardNearDups(planted, "doc_id", "text",
       blockCol = col("source"), threshold = 0.5)
-    val plain = Dedup.dupClusters(pairs)
+    def ranks() = Graph.pageRank(edges, nodes, iterations = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    def clusters() = Dedup.dupClusters(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ckpted = Dedup.dupClusters(pairs, checkpointEvery = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(plain == ckpted, "checkpointEvery changed dupClusters results")
+    def ckptFiles(): Set[String] = spark.sparkContext.getCheckpointDir.toSeq
+      .flatMap(d => Option(new java.io.File(new java.net.URI(d)).list()).toSeq.flatten)
+      .toSet
+    val local = ranks()
+    val plain = clusters()
+    val filesBefore = ckptFiles()
+    try {
+      conf.set(Materialize.ModeKey, "reliable")
+      conf.set(Materialize.DirKey, ckpt)
+      // durable pins must be a pure durability change: results
+      // bit-identical to the localCheckpoint run, through both loops
+      assert(ranks() == local, "reliable mode changed pageRank results")
+      assert(clusters() == plain, "reliable mode changed dupClusters results")
+    } finally {
+      conf.set(Materialize.ModeKey, "local")
+      conf.unset(Materialize.DirKey)
+    }
+    // and checkpoint files were actually written to the reliable dir
+    assert((ckptFiles() -- filesBefore).nonEmpty, "no reliable checkpoint written")
   }
 
   test("IVF index hygiene: compact after appends restores few files, probes intact") {
@@ -2706,30 +2713,114 @@ class OpsSpec extends AnyFunSuite {
       s"train-side membership probe must be a broadcast semi join:\n$plan")
   }
 
+  /** Persistent RDD ids of the pins `df` reads: the memory-held pinned
+    * leaves of its cache-substituted plan (a reliable checkpoint holds
+    * none — its blocks are files).
+    */
+  private def pinIds(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    org.apache.spark.sql.graft.bridge.useCachedData(spark, df.queryExecution.analyzed)
+      .collectWithSubqueries {
+        case l: LogicalRDD => l.rdd
+        case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+          m.cacheBuilder.cachedColumnBuffers
+      }
+      .filter(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      .map(_.id).toSet
+  }
+
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("materialize modes (local/reliable/persist) yield identical operator results") {
-    import graft.ops.Materialize
-    def run(): Set[(Long, Long)] =
-      Dedup.minhashNearDups(planted, "doc_id", "text", threshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    import graft.ops.{Graph, Learn, Materialize}
     val conf = spark.conf
     val ckpt = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
+    val n = docs.count()
+    val edges = docs.select(col("doc_id").as("src"),
+        ((col("doc_id") * 7 + 1) % n).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    val pairs = Dedup.ngramJaccardNearDups(planted, "doc_id", "text",
+      blockCol = col("source"), threshold = 0.5)
+    val names = docs.select(col("doc_id"), substring(trim(col("text")), 1, 24).as("nm"))
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "minhashNearDups" -> (() =>
+        Dedup.minhashNearDups(planted, "doc_id", "text", threshold = 0.5)),
+      "winnowNearDups" -> (() => Dedup.winnowNearDups(planted, "doc_id", "text")),
+      "editDistanceNearDups" -> (() =>
+        Dedup.editDistanceNearDups(names, "doc_id", "nm", k = 2)),
+      "dupClusters" -> (() => Dedup.dupClusters(pairs)),
+      "pageRank" -> (() => Graph.pageRank(edges, docs.select(col("doc_id").as("id")),
+        iterations = 10)),
+      "perceptronClassify" -> (() => Learn.perceptronClassify(docs, "doc_id", "text",
+        col("source") === "src0")))
+    // Pin accounting compares SETS of persistent RDD ids: a concurrent GC
+    // can only drop older pins, never add or remove this call's.
+    def checkedRun(mode: String): Map[String, Set[String]] = {
+      val results = ops.map { case (name, op) =>
+        val before = persistentIds
+        val out = op()
+        val added = persistentIds -- before
+        assert(added == pinIds(out),
+          s"$mode $name: left pins $added, returned frame reads ${pinIds(out)}")
+        if (mode != "reliable") assert(added.size == 1, s"$mode $name: pins $added")
+        val rows = out.collect().map(_.toString).toSet
+        Materialize.release(out)
+        assert((persistentIds -- before).isEmpty, s"$mode $name: release left pins")
+        name -> rows
+      }.toMap
+      val before = persistentIds
+      Dedup.saveMinhashIndex(docs, "doc_id", "text",
+        java.nio.file.Files.createTempDirectory("graft-pin-idx").toString,
+        numFiles = 2)
+      assert((persistentIds -- before).isEmpty, s"$mode saveMinhashIndex left pins")
+      Learn.perceptronWeights(docs, "doc_id", "text", col("source") === "src0")
+      assert((persistentIds -- before).isEmpty, s"$mode perceptronWeights left pins")
+      // a throwing body still releases what it pinned
+      intercept[IllegalStateException] {
+        Materialize.scoped {
+          val c = Materialize.cache(docs.select(col("doc_id")))
+          c.count()
+          Materialize(c.select((col("doc_id") + 1).as("x")))
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert((persistentIds -- before).isEmpty, s"$mode: a throwing scope left pins")
+      // a pin returned from a nested scope survives it; the outer releases it
+      Materialize.scoped {
+        val inner = Materialize.scoped {
+          val c = Materialize.cache(docs.select((col("doc_id") * 3).as("y")))
+          c.count()
+          c
+        }
+        assert(pinIds(inner).size == 1 && pinIds(inner).subsetOf(persistentIds),
+          s"$mode: the nested scope released the pin it returned")
+        assert(inner.count() == n)
+      }
+      assert((persistentIds -- before).isEmpty, s"$mode: the outer scope kept a pin")
+      results
+    }
     try {
-      val local = run() // default mode
+      val local = checkedRun("local") // default mode
       conf.set(Materialize.ModeKey, "reliable")
       // no checkpoint dir set anywhere -> must THROW, not silently degrade
       // (guarded: another suite in this JVM may have set one on the shared context)
       val hadDir = spark.sparkContext.getCheckpointDir.isDefined
-      if (!hadDir) assertThrows[IllegalStateException] { run() }
+      if (!hadDir) assertThrows[IllegalStateException] {
+        Dedup.minhashNearDups(planted, "doc_id", "text", threshold = 0.5)
+      }
       conf.set(Materialize.DirKey, ckpt)
-      val reliable = run()
+      val reliable = checkedRun("reliable")
       // reliable blocks must actually be on the durable dir, not executor-local
       if (!hadDir)
         assert(java.nio.file.Files.list(java.nio.file.Paths.get(ckpt)).count() > 0,
           "reliable mode wrote nothing to the checkpoint dir")
       conf.set(Materialize.ModeKey, "persist")
-      val persisted = run()
-      assert(reliable == local && persisted == local,
-        "materialize mode changed operator output")
+      val persisted = checkedRun("persist")
+      for ((name, rows) <- local)
+        assert(reliable(name) == rows && persisted(name) == rows,
+          s"materialize mode changed $name output")
     } finally {
       conf.set(Materialize.ModeKey, "local")
       conf.unset(Materialize.DirKey)

@@ -29,11 +29,40 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("all queries run and are non-degenerate on sf0.001") {
+    import graft.ops.Materialize
     val empties = Set("q06_anti_join", "q22_except") // legitimately empty
+    def pins: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      // every pin a query takes is released by its scope or by the
+      // release of its result: no persistent RDD outlives the query
+      val before = pins
+      val df = Materialize.scoped(fn(spark, sf))
+      val n = df.count()
+      Materialize.release(df)
+      assert((pins -- before).isEmpty, s"$name left pins ${pins -- before}")
       if (!empties(name)) assert(n > 0, s"$name returned 0 rows")
     }
+  }
+
+  test("operators and sinks pin only through Materialize (source lint)") {
+    // a direct pin or release outside Materialize.scala escapes the scope
+    // lifecycle: it is never released, or released while still read
+    // (`Materialize.cache(` is the lifecycle's own lazy pin)
+    val pin = raw"(?<!Materialize)\.(persist|cache|localCheckpoint|checkpoint|unpersist)\(".r
+    val hits = Seq("src/main/scala/graft/ops", "src/main/scala/graft/streaming")
+      .flatMap { d =>
+        val files = java.nio.file.Files.list(java.nio.file.Paths.get(d))
+        try files.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally files.close()
+      }
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Materialize.scala")
+      .flatMap { p =>
+        val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if pin.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }.toList finally src.close()
+      }
+    assert(hits.isEmpty, s"direct pins outside Materialize:\n${hits.mkString("\n")}")
   }
 
   test("asofMerged == join+window as-of on adversarial random timelines") {

@@ -477,6 +477,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(kept.sorted.toList == List(10L, 12L), s"admitted $kept")
   }
 
+  test("admission sink: per-epoch pins are released, the pinned set stops growing") {
+    import spark.implicits._
+    import graft.streaming.IndexMaintenance
+    val dir = tmp()
+    graft.ops.Dedup.saveMinhashIndex(
+      Seq((1L, "pack my box with five dozen quality liquor jugs today"))
+        .toDF("doc_id", "text"),
+      "doc_id", "text", dir, threshold = 0.5, numFiles = 2)
+    var admitted = 0L
+    val admit = IndexMaintenance.minhashAdmitSink(dir, "doc_id", "text",
+      threshold = 0.5, sink = (df, _) => admitted += df.count(),
+      numFiles = 2, dropIntraBatchNearDups = true)
+    // every epoch pins MinHash pairs, cluster labels and probe results;
+    // compare SETS of persistent RDD ids so a concurrent GC cannot flake it
+    def pins: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val after = (0 until 6).map { ep =>
+      // epoch-private vocabularies: each epoch has its own near-pair and
+      // one distinct doc, never a near-dup of an earlier epoch's
+      def words(tag: String, n: Int) = (0 until n).map(i => s"$tag$ep$i").mkString(" ")
+      admit(Seq(
+        (100L * ep + 10, words("a", 10)),
+        (100L * ep + 11, words("a", 9)),
+        (100L * ep + 12, words("b", 10)))
+        .toDF("doc_id", "text"), ep.toLong)
+      pins
+    }
+    assert(admitted == 12, s"admitted $admitted docs over 6 epochs, expected 2 each")
+    for (ep <- 2 until 6)
+      assert((after(ep) -- after(1)).isEmpty,
+        s"epoch $ep left pins ${after(ep) -- after(1)}")
+  }
+
   test("admission sink: representative itself near-dup to the INDEX drops the whole cluster") {
     import spark.implicits._
     import graft.streaming.IndexMaintenance
