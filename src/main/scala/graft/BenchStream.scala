@@ -37,7 +37,7 @@ object BenchStream {
     * EPOCH-COST DIAGNOSIS (round 6, SPARK_GRAFT_STREAM_DEBUG=1 profile):
     * per-epoch `durationMs` at 32 shuffle partitions — latestOffset 1 ms,
     * getBatch 0.3 ms, walCommit 41 ms, commitOffsets 48 ms, addBatch
-    * ~730 ms. The connector's polling (manifest reads in `sizes()` /
+    * ~730 ms. The connector's polling (commit-log reads in `sizes()` /
     * segment listing in `planInputPartitions`) is the 1 ms — NOT the
     * bottleneck; addBatch is, and inside it the stateful window agg's 32
     * HDFS-backed state-store instances pay ~200 ms of update+commit EACH
@@ -138,7 +138,7 @@ object BenchStream {
 
   /** Segment-compaction cell (round-11 verdict #2): a streaming sink at
     * high trigger rates publishes ~10^4 tiny segments per bucket per hour;
-    * planning stays cheap via the manifest but the SCAN pays one input
+    * planning stays cheap via the commit log but the SCAN pays one input
     * partition (one task, one open/close) per tiny file. Measure a real
     * scan over a 2000-tiny-segment bucket before and after in-place
     * compaction, plus the compaction cost itself. Failure degrades to
@@ -152,15 +152,14 @@ object BenchStream {
     val nSegs = 2000
     val rowsPer = 5
     val now = System.currentTimeMillis()
-    (0 until nSegs).foreach { i =>
-      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-        graft.log.SegmentCodec.segmentName(i.toLong * rowsPer, rowsPer.toLong))
+    log.publishStaged(tb, (0 until nSegs).map { i =>
+      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
       graft.log.SegmentCodec.write(log.fs, p,
         // one distinct ts per segment so the seek cell below has a real
         // 2000-step time axis (compaction/scan cells ignore ts)
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), now + i)))
-    }
-    log.refreshManifest(tb)
+      (i.toLong * rowsPer, rowsPer.toLong, p)
+    })
     // Timestamp-seek cell (round 12): COLD pays the one-time .tsidx
     // backfill (a frame pass over all 2000 tiny segments); WARM reads the
     // cache and walks ONE boundary segment — the amortization claim of

@@ -295,7 +295,7 @@ case class ShowTopicsCommand(root: Option[String]) extends LeafRunnableCommand {
 }
 
 /** `DESCRIBE TOPIC t [IN '<root>']` — one row per bucket, topic-level
-  * fields (protocol, schema, consumers) repeated; the SQL rendering of
+  * fields (schema, consumers) repeated; the SQL rendering of
   * [[graft.api.Ripple.describeTopic]].
   */
 case class DescribeTopicCommand(topic: String, root: Option[String])
@@ -306,7 +306,6 @@ case class DescribeTopicCommand(topic: String, root: Option[String])
     attr("floor", LongType), attr("end_offset", LongType),
     attr("rows", LongType), attr("segments", IntegerType),
     attr("bytes", LongType), attr("latest_ts", LongType, nullable = true),
-    attr("commit_protocol", StringType),
     attr("schema", StringType, nullable = true),
     attr("schema_version", IntegerType, nullable = true),
     attr("consumers", StringType),
@@ -323,7 +322,7 @@ case class DescribeTopicCommand(topic: String, root: Option[String])
     val views = "envelope,table,headers,committed"
     d.buckets.toSeq.sortBy(_._1).map { case (b, st) =>
       Row(d.topic, b, st.floor, st.end, st.rows, st.segments, st.bytes,
-        st.latestTs.map(Long.box).orNull, d.commitProtocol,
+        st.latestTs.map(Long.box).orNull,
         d.schema.orNull, d.schemaVersion.map(Int.box).orNull, consumers,
         config, views)
     }
@@ -670,8 +669,8 @@ case class TruncateTopicCommand(topic: String, kvText: String,
   * ([[graft.api.Ripple.compactSegments]]). `KEYED`: latest-record-per-id
   * key compaction ([[graft.api.Ripple.compactKeyed]] — topic-config
   * codec/key-budget/tombstone-horizon all apply; live pins clamp). Both
-  * run the DISTRIBUTED byte path (executors move bytes, the driver swaps
-  * manifests) — this is the statement an operator points at a 100 TB
+  * run the DISTRIBUTED byte path (executors move bytes, the driver
+  * commits metadata) — this is the statement an operator points at a 100 TB
   * topic. Returns (topic, keyed, segmentsCompacted).
   */
 case class CompactTopicCommand(topic: String, keyed: Boolean,

@@ -83,7 +83,7 @@ object Ripple {
   }
 
   /** Delete a topic — data, metadata (schema + versions, `.tsidx`,
-    * manifests/commit logs, snapshots' substrate) and consumer state —
+    * commit logs, snapshots' substrate) and consumer state —
     * irreversibly (Kafka `--delete`; the reference can only leak its
     * in-memory queues). REGISTERED CONSUMERS make the delete refuse
     * loudly unless `force = true`: their checkpoints and cursors die
@@ -406,14 +406,14 @@ object Ripple {
       * segments whose spans exceed their records, so `sparseRows`
       * carries the per-segment retained sum from the segment names —
       * DESCRIBE must not over-report a compacted changelog's size. A
-      * flag-only sparse name (manifest mode records no count) falls back
+      * flag-only sparse name (object stores record no count) falls back
       * to its span: conservative over-report, never under.
       */
     def rows: Long = sparseRows.getOrElse(end - floor)
   }
 
   /** One-call ops summary of a topic: per-bucket floors/ends/segment
-    * counts/bytes/freshness, the commit protocol in force, the registered
+    * counts/bytes/freshness, the registered
     * payload schema (if any), and the consumers with committed cursors —
     * the `kafka-topics --describe` of this log, assembled from the same
     * metadata reads the planners use (no frames opened; freshness comes
@@ -440,7 +440,6 @@ object Ripple {
           }.sum))
     }.toMap
     TopicDescription(topic,
-      commitProtocol = if (log.manifestCommitMode) "manifest" else "rename",
       buckets = buckets,
       schema = graft.connector.TopicSchemas.get(log, topic).map(_.simpleString),
       consumers = consumerOffsets(root, topic).keySet.toSeq.sorted,
@@ -448,7 +447,7 @@ object Ripple {
       config = graft.connector.TopicConfig.read(log, topic))
   }
 
-  case class TopicDescription(topic: String, commitProtocol: String,
+  case class TopicDescription(topic: String,
       buckets: Map[String, BucketState], schema: Option[String],
       consumers: Seq[String], schemaVersion: Option[Int] = None,
       config: graft.connector.TopicConfig = graft.connector.TopicConfig()) {
@@ -951,7 +950,7 @@ object Ripple {
       tsCol.cast("timestamp").as("ts"))
 
   /** Storage hygiene: delete crash-orphaned invisible files (uncommitted
-    * manifest-mode data files, staging leftovers, superseded epoch
+    * data files, staging leftovers, superseded epoch
     * markers) older than `graceMs`. Committed data is never touched —
     * see [[graft.log.FileTopicLog.vacuum]]. Returns files deleted.
     */
@@ -975,7 +974,7 @@ object Ripple {
   /** [[compactSegments]] with the byte movement DISTRIBUTED: merges at or
     * above `distributeMinBytes` run as one Spark job (one task per merge
     * — executors read members and write the merged file), the driver
-    * performs only the lock/manifest protocol. This is the form to run
+    * performs only the commit-log commit. This is the form to run
     * against a large topic: the driver-local default re-copies every
     * merged byte through the calling JVM, which is fine for an admin
     * box compacting megabytes and wrong for terabytes.
@@ -1028,7 +1027,7 @@ object Ripple {
   }
 
   private def compactKeyedWith(root: String, topic: String,
-      rewrite: Seq[graft.log.KeyedTask] => Unit): Int = {
+      rewrite: Seq[graft.log.KeyedTask] => Map[String, String]): Int = {
     val log = FileTopicLog.cached(root, LogFs.activeHadoopConf)
     require(log.buckets(topic).nonEmpty,
       s"ripple: topic '$topic' does not exist")

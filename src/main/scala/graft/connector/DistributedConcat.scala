@@ -17,38 +17,34 @@ import org.apache.spark.sql.SparkSession
   * above `minBytes` run as ONE Spark job with one task per merge —
   * executors stream member segments into the merged file (they already
   * write segments in the epoch path, so the filesystem stack is in
-  * place) — while the driver does only the manifest swap under the
-  * existing lock/commit protocol. Merges below `minBytes` stay
+  * place) — while the driver does only the commit-log commit. Merges
+  * below `minBytes` stay
   * driver-local: a Spark job costs scheduling latency that exceeds the
   * copy for tiny merges.
   *
-  * Crash safety is unchanged from the local path: rename mode
-  * concatenates into `.tmp-*` staging names (vacuumed if orphaned),
-  * manifest mode into unique `data-*` names invisible until their
-  * put-if-absent commit. A task failure fails the job and the compaction
+  * Crash safety is unchanged from the local path: merges land under
+  * unique `data-*` names invisible until their put-if-absent commit (and
+  * vacuumed if orphaned). A task failure fails the job and the compaction
   * call; nothing partial ever becomes visible.
   *
   * Two task-level disciplines (round 15):
   *
-  *   - '''Attempt-unique staging (rename mode).''' A retried task whose
-  *     original attempt is still running (zombie), or a speculative
-  *     duplicate, must not interleave stream writes into ONE staging
-  *     file — on a posix/HDFS substrate that can tear it, and the commit
-  *     phase trusts staging content (the standard output-committer
-  *     hazard). Each attempt writes `<out>.attempt-<taskAttemptId>` and
-  *     renames into `<out>` at task end; the merge is deterministic, so
-  *     whichever attempt's rename lands, the bytes are identical. In
-  *     manifest mode `out` is already a unique invisible `data-*` name
-  *     whose whole-object PUT is atomic-visible at close — duplicate
-  *     attempts just overwrite with identical bytes, and an extra
-  *     stage+rename there would double the object-store request count
-  *     (and break the one-PUT-per-merge contract the spec pins).
+  *   - '''Attempt-unique output.''' A retried task whose original attempt
+  *     is still running (zombie), or a speculative duplicate, must not
+  *     interleave stream writes into ONE output file — on a posix/HDFS
+  *     substrate that can tear it, even after the driver committed it
+  *     (the standard output-committer hazard). Each attempt writes its own
+  *     `data-*` sibling of the planned name and returns that path; the
+  *     driver commits the path Spark's collect returned (one successful
+  *     attempt per task) and vacuum sweeps the others, which no commit
+  *     names. No file is renamed, so an object store moves each merged
+  *     byte once: one PUT per merge, no server-side copy.
   *   - '''Member-vanished tolerance.''' The concat phase holds no bucket
   *     lock, so retention can delete a member mid-copy; that merge is
-  *     DROPPED (its staging output removed) and the commit phase's
-  *     membership/length validation discards the group — one racing
-  *     truncate must not fail every other bucket's merge, or via the
-  *     `autoCompactSegments` sink path the whole streaming query.
+  *     DROPPED (its output removed, its task absent from the result) and
+  *     the commit phase discards the group — one racing truncate must not
+  *     fail every other bucket's merge, or via the `autoCompactSegments`
+  *     sink path the whole streaming query.
   */
 object DistributedConcat {
 
@@ -64,118 +60,93 @@ object DistributedConcat {
     * the rest through `log.localConcat`.
     */
   def runner(spark: SparkSession, log: FileTopicLog,
-      minBytes: Long = DefaultMinBytes): Seq[ConcatTask] => Unit = { tasks =>
+      minBytes: Long = DefaultMinBytes): Seq[ConcatTask] => Map[String, String] = { tasks =>
     val (big, small) = tasks.partition(_.bytes >= minBytes)
-    if (small.nonEmpty) log.localConcat(small)
-    if (big.nonEmpty) {
+    val local = if (small.nonEmpty) log.localConcat(small) else Map.empty[String, String]
+    if (big.isEmpty) local
+    else {
       val ser = new graft.log.SerializableHadoopConf(log.fs.getConf)
-      val stageAttempts = !log.manifestCommitMode // see object doc
-      spark.sparkContext
+      local ++ spark.sparkContext
         .makeRDD(big, big.size)
         .setName(s"ripple segment compaction: ${big.size} merges, " +
           s"${big.map(_.bytes).sum >> 20} MB")
-        .foreach { t =>
-          val out = new HPath(t.out)
-          val fs = LogFs.get(out, ser.value)
-          val dest =
-            if (!stageAttempts) out
-            else {
-              val id = Option(org.apache.spark.TaskContext.get())
-                .map(_.taskAttemptId()).getOrElse(0L)
-              new HPath(s"${t.out}.attempt-$id")
-            }
-          val copied =
-            try {
-              val o = fs.create(dest, true)
-              try {
-                t.members.foreach { m =>
-                  val in = fs.open(new HPath(m))
-                  try org.apache.hadoop.io.IOUtils.copyBytes(in, o, 1 << 16, false)
-                  finally in.close()
-                }
-                true
-              } finally o.close()
-            } catch {
-              case _: java.io.FileNotFoundException =>
-                // member vanished (racing retention, no lock held): drop
-                // this merge — the driver's commit-phase validation
-                // discards the group; other merges proceed
-                try fs.delete(dest, false)
-                catch { case _: java.io.IOException => () }
-                false
-            }
-          if (copied && stageAttempts && !fs.rename(dest, out)) {
-            // rename refused: a sibling attempt already published `out`
-            // with identical (deterministic) bytes — drop ours; anything
-            // else is a real failure the commit validation must not trust
-            try fs.delete(dest, false)
-            catch { case _: java.io.IOException => () }
-            if (!fs.exists(out)) throw new java.io.IOException(
-              s"compaction staging rename $dest -> $out failed with no " +
-                "sibling attempt's output present")
+        .flatMap { t =>
+          val fs = LogFs.get(new HPath(t.out), ser.value)
+          val dest = attemptPath(t.out)
+          try {
+            val o = fs.create(dest, true)
+            try t.members.foreach { m =>
+              val in = fs.open(new HPath(m))
+              try org.apache.hadoop.io.IOUtils.copyBytes(in, o, 1 << 16, false)
+              finally in.close()
+            } finally o.close()
+            Some(t.out -> dest.toString)
+          } catch {
+            case _: java.io.FileNotFoundException =>
+              // member vanished (racing retention, no lock held): drop
+              // this merge — the driver's commit phase discards the
+              // group; other merges proceed
+              try fs.delete(dest, false)
+              catch { case _: java.io.IOException => () }
+              None
           }
         }
+        .collect().toMap
     }
   }
 
   /** The distributed REWRITE strategy for key-based compaction
     * ([[graft.log.FileTopicLog.compactKeyed]]): one Spark task per bucket
     * rewrite at or above `minBytes`, the rest driver-local. Same
-    * disciplines as [[runner]] — attempt-unique staging in rename mode
-    * (the rewrite is deterministic, so whichever attempt's rename lands
-    * the bytes are identical; manifest mode writes a unique invisible
-    * `data-*` name whose PUT is atomic at close), member-vanished merges
-    * dropped for the commit phase's validation to discard. The id→offset
-    * map lives in the TASK (executor heap), never the driver — the 100 TB
-    * contract: the driver plans and swaps manifests, executors own every
-    * data byte and every per-key state.
+    * disciplines as [[runner]] — attempt-unique output (the stats sidecar
+    * is keyed to the attempt's file), member-vanished rewrites dropped.
+    * The id→offset map lives in the TASK (executor heap), never the
+    * driver — the 100 TB contract: the driver plans and commits metadata,
+    * executors own every data byte and every per-key state.
     */
   def keyedRunner(spark: SparkSession, log: FileTopicLog,
-      minBytes: Long = DefaultMinBytes): Seq[KeyedTask] => Unit = { tasks =>
+      minBytes: Long = DefaultMinBytes): Seq[KeyedTask] => Map[String, String] = { tasks =>
     val (big, small) = tasks.partition(_.bytes >= minBytes)
-    if (small.nonEmpty) log.localKeyed(small)
-    if (big.nonEmpty) {
+    val local = if (small.nonEmpty) log.localKeyed(small) else Map.empty[String, String]
+    if (big.isEmpty) local
+    else {
       val ser = new graft.log.SerializableHadoopConf(log.fs.getConf)
-      val stageAttempts = !log.manifestCommitMode
-      spark.sparkContext
+      local ++ spark.sparkContext
         .makeRDD(big, big.size)
         .setName(s"ripple keyed compaction: ${big.size} buckets, " +
           s"${big.map(_.bytes).sum >> 20} MB in")
-        .foreach { t =>
-          val out = new HPath(t.out)
-          val fs = LogFs.get(out, ser.value)
-          val dest =
-            if (!stageAttempts) out
-            else {
-              val id = Option(org.apache.spark.TaskContext.get())
-                .map(_.taskAttemptId()).getOrElse(0L)
-              new HPath(s"${t.out}.attempt-$id")
-            }
-          val written =
-            try {
-              val r = SegmentCodec.rewriteLatestPerKey(fs,
-                t.members.map { case (p, s) => (new HPath(p), s) }, dest,
-                t.codec, t.maxKeys, t.tombstoneFloorMs)
-              // stats sidecar keyed to the FINAL name: the driver's commit
-              // reads it instead of header-walking the product (duplicate
-              // attempts overwrite with identical, deterministic content)
-              SegmentCodec.writeStatSidecar(fs, out, r.rows, r.minTs, r.maxTs)
-              true
-            } catch {
-              case _: java.io.FileNotFoundException =>
-                try fs.delete(dest, false)
-                catch { case _: java.io.IOException => () }
-                false
-            }
-          if (written && stageAttempts && !fs.rename(dest, out)) {
-            try fs.delete(dest, false)
-            catch { case _: java.io.IOException => () }
-            if (!fs.exists(out)) throw new java.io.IOException(
-              s"keyed-compaction staging rename $dest -> $out failed with " +
-                "no sibling attempt's output present")
+        .flatMap { t =>
+          val fs = LogFs.get(new HPath(t.out), ser.value)
+          val dest = attemptPath(t.out)
+          try {
+            val r = SegmentCodec.rewriteLatestPerKey(fs,
+              t.members.map { case (p, s) => (new HPath(p), s) }, dest,
+              t.codec, t.maxKeys, t.tombstoneFloorMs)
+            // stats sidecar: the driver's commit reads it instead of
+            // header-walking the product
+            SegmentCodec.writeStatSidecar(fs, dest, r.rows, r.minTs, r.maxTs)
+            Some(t.out -> dest.toString)
+          } catch {
+            case _: java.io.FileNotFoundException =>
+              try fs.delete(dest, false)
+              catch { case _: java.io.IOException => () }
+              None
           }
         }
+        .collect().toMap
     }
+  }
+
+  /** This task attempt's own output path for the task planned at `out`:
+    * the attempt id goes in as one more name field before the `.log`
+    * suffix, so the path keeps the `data-<start>-<count>-…` fields and
+    * the sparse flag that planners parse from names.
+    */
+  private def attemptPath(out: String): HPath = {
+    val id = Option(org.apache.spark.TaskContext.get())
+      .map(_.taskAttemptId()).getOrElse(0L)
+    val suffix = SegmentCodec.SegmentSuffix
+    new HPath(s"${out.stripSuffix(suffix)}-a$id$suffix")
   }
 
   /** The session to distribute through from a driver-side commit path

@@ -132,7 +132,7 @@ import scala.jdk.CollectionConverters._
   *     proliferation, amortized to one merge pass every N epochs
   *   - `compactDistributeMinBytes` (write, default 16 MB): merges at or
   *     above this size run as a Spark job (executors move the bytes, the
-  *     driver swaps manifests only — [[DistributedConcat]]); smaller
+  *     driver commits metadata only — [[DistributedConcat]]); smaller
   *     merges stay driver-local where job latency would exceed the copy.
   *     0 distributes everything (test/ops hook); `Long.MaxValue`
   *     restores the round-13 driver-side copy

@@ -324,7 +324,7 @@ class RippleMetaAggScan(conf: RippleConf, lo: Long, hi: Long,
         // the retained count from the publish-time name, zero I/O. The
         // payload-skip header walk (O(retained keys) header bytes — still
         // far cheaper than the row scan this replaced) runs only for a
-        // partially-overlapped product, a flag-only manifest-mode name
+        // partially-overlapped product, a flag-only (object-store) name
         // (retained count unknown), or when offset EXTREMA are requested
         // (retained records sit at arbitrary positions inside the span —
         // only the frames know).

@@ -330,20 +330,20 @@ class RippleDataWriter(conf: RippleConf, shape: WriteShape,
 }
 
 /** Driver-side publish: assign offsets per bucket and publish staged files
-  * as offset-ranged segments. Pure metadata on rename-capable filesystems
-  * (a rename within one Hadoop filesystem relinks, it does not copy);
-  * object-store roots publish through the sequenced put-if-absent commit
-  * log instead (manifest mode, [[graft.log.CommitLog]]) — both behind
-  * [[graft.log.FileTopicLog.publishStaged]].
+  * as offset-ranged segments — one commit to each touched bucket's
+  * [[graft.log.CommitLog]] per epoch, through
+  * [[graft.log.FileTopicLog.publishStaged]]. Pure metadata on
+  * rename-capable filesystems (a rename within one Hadoop filesystem
+  * relinks, it does not copy).
   */
 object RipplePublish {
 
   /** The `min.cleanable.dirty.ratio` decision for one bucket: keyed-
     * compact now (true) or byte-concat and wait (false). ROW counts when
-    * every sparse name carries its retained count (rename-mode
-    * `k<rows>` names) — codec-independent, so a compressed sparse
-    * product never makes the gate fire 3-5x early the way raw-vs-
-    * compressed BYTES would. Manifest-mode sparse names are flag-only
+    * every sparse name carries its retained count (`k<rows>` names,
+    * wherever rename is atomic) — codec-independent, so a compressed
+    * sparse product never makes the gate fire 3-5x early the way raw-vs-
+    * compressed BYTES would. Object-store sparse names are flag-only
     * (`-k-<uuid>`, the count unknowable before the rewrite), and falling
     * back to their SPAN would defer against the bucket's ALL-TIME offset
     * count — unbounded deferral on a hot changelog — so unknown-rows
@@ -369,11 +369,11 @@ object RipplePublish {
       case head +: tail => log.withBucketLock(head)(withLocks(log, tail)(body))
     }
 
-  /** Streaming exactly-once across the crash window between segment rename
+  /** Streaming exactly-once across the crash window between segment commit
     * and epoch marker: offsets are assigned ONCE and recorded in a
     * write-ahead INTENT file before any segment lands. A replayed epoch
-    * whose intent exists re-publishes at the SAME offsets — the
-    * exists-check + frame-identity make that a no-op — instead of
+    * whose intent exists re-publishes at the SAME offsets — the committed
+    * range's frame identity makes that a no-op — instead of
     * re-assigning fresh offsets past its own earlier segments (which would
     * duplicate the data). The plan keys on (bucket, partitionId): a replay
     * stages new file names, but a deterministic batch produces the same
@@ -382,10 +382,11 @@ object RipplePublish {
     *   1. final marker exists            → committed; drop staged, done
     *   2. acquire all touched bucket locks (sorted order)
     *   3. intent exists (crashed attempt) → reuse its plan
-    *      else assign offsets from the authoritative listing and write the
-    *      intent atomically BEFORE any segment rename
-    *   4. rename every staged file to its planned offset name (idempotent:
-    *      an existing same-name segment is frame-compared, not replaced)
+    *      else assign offsets from the committed end offsets and write
+    *      the intent atomically BEFORE any segment lands
+    *   4. commit each bucket's staged files at their planned offsets in
+    *      ONE commit-log commit (idempotent: an already-committed range is
+    *      frame-compared, never replaced)
     *   5. write final marker, drop intent
     *
     * Batch writes (no epoch identity) skip the intent: a crash mid-publish
@@ -603,7 +604,6 @@ object RipplePublish {
             val assigned = byBucket.flatMap { case (bucket, files) =>
               val tb = TopicBucket(conf.topic, bucket)
               var next = log.endOffsetListed(tb)
-              log.touchBucketLock(tb) // listing may be slow at scale
               files.map { f =>
                 val entry = (bucket, f.partitionId) -> (next, f.count)
                 next += f.count
@@ -640,12 +640,10 @@ object RipplePublish {
         // outcome is a loud, diagnosable failure BEFORE publishing anything,
         // not an overlapping segment that bricks the bucket.
         val existing = log.segmentsRaw(tb)
-        log.touchBucketLock(tb)
         files.foreach { f =>
           plan.get((bucket, f.partitionId)).foreach { case (start, count) =>
-            val myName = SegmentCodec.segmentName(start, count)
             existing.foreach { case (p, s, c) =>
-              if (s < start + count && s + c > start && p.getName != myName)
+              if (s < start + count && s + c > start && !(s == start && c == count))
                 throw new IllegalStateException(
                   s"intent range [$start,+$count) for ($bucket, p${f.partitionId}) " +
                     s"overlaps existing segment $p — another writer took these " +
@@ -654,8 +652,7 @@ object RipplePublish {
             }
           }
         }
-        val tsEntries = Map.newBuilder[String, (Long, Long)]
-        files.foreach { f =>
+        val ranges = files.map { f =>
           val (start, count) = plan.getOrElse((bucket, f.partitionId),
             throw new IllegalStateException(
               s"replayed epoch staged ($bucket, p${f.partitionId}) absent from " +
@@ -663,25 +660,19 @@ object RipplePublish {
           if (count != f.count) throw new IllegalStateException(
             s"replayed epoch count mismatch for ($bucket, p${f.partitionId}): " +
               s"intent $count vs staged ${f.count} — the batch is not deterministic")
-          // Mode-dispatched publish (TopicLog.publishStaged): rename mode
-          // does exists-check + atomic no-replace under the bucket lock —
-          // an existing same-offset segment is frame-compared (idempotent
-          // epoch replay no-ops, a foreign writer fails loudly), and even
-          // the two-live-holders corner of the stale-steal lock protocol
-          // surfaces as a loud refusal, never a silent overwrite. Manifest
-          // mode (object stores) gets the same replay/foreign semantics
-          // from the sequenced put-if-absent commit log instead of file
-          // names, with no dependence on rename atomicity or the lock.
-          val published = log.publishStaged(tb, start, count, new HPath(f.path))
-          // publish-time ts stats (the writer tracked min/max while
-          // framing): the read side's `.tsidx` never pays a backfill
-          // scan for connector-written segments. Older/replayed commit
-          // messages without stats (sentinel bounds) are skipped.
-          if (f.minTs <= f.maxTs)
-            published.foreach(n => tsEntries += (n -> (f.minTs, f.maxTs)))
+          (start, count, new HPath(f.path))
         }
-        log.recordTsStats(tb, tsEntries.result())
-        log.refreshManifest(tb)
+        // ONE commit for all of this bucket's files: a range already
+        // committed with the same frames (epoch replay) is a no-op, a
+        // foreign writer's different frames fail loudly
+        val published = log.publishStaged(tb, ranges)
+        // publish-time ts stats (the writer tracked min/max while
+        // framing): the read side's `.tsidx` never pays a backfill
+        // scan for connector-written segments. Older/replayed commit
+        // messages without stats (sentinel bounds) are skipped.
+        log.recordTsStats(tb, files.zip(published).collect {
+          case (f, Some(n)) if f.minTs <= f.maxTs => n -> (f.minTs, f.maxTs)
+        }.toMap)
       }
     }
     marker.foreach { m => log.writeFileAtomic(m, Array.emptyByteArray) }
@@ -717,10 +708,10 @@ object RipplePublish {
     // alternative is an external compaction job every operator forgets
     // to run). The probe is restricted to the epoch's TOUCHED buckets:
     // an untouched bucket's count didn't change, and a full-topic probe
-    // would be 10^4 manifest reads per epoch on a wide topic. The BYTES
+    // would be 10^4 commit-log reads per epoch on a wide topic. The BYTES
     // do not run here (round 14): merges >= compactDistributeMinBytes go
-    // through a Spark job — executors copy, this commit path swaps
-    // manifests only — so the driver never becomes the stream's byte
+    // through a Spark job — executors copy, this commit path commits
+    // metadata only — so the driver never becomes the stream's byte
     // relay and the trigger-loop stall is one job's wall time across all
     // crossing buckets, not a sequential per-bucket driver copy.
     if (conf.autoCompactSegments > 0) {
@@ -744,9 +735,9 @@ object RipplePublish {
           // below the ratio the dense suffix byte-concats instead (cheap,
           // keeps the segment count bounded) and the keys reclaim on a
           // later pass. Total rewrite cost stays O(2x data), Kafka's
-          // bound. ROW counts where the names carry them (rename mode:
-          // `k<rows>`), file BYTES where they don't (manifest mode's
-          // flag-only `-k-` names) — see [[keyedDirtyReady]].
+          // bound. ROW counts where the names carry them (`k<rows>`,
+          // wherever rename is atomic), file BYTES where they don't
+          // (object stores' flag-only `-k-` names) — see [[keyedDirtyReady]].
           val (ready, defer) = crossed.partition(tb =>
             keyedDirtyReady(log.segments(tb), p => log.fileLen(p)))
           if (ready.nonEmpty) {

@@ -1,7 +1,7 @@
 package graft.connector
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.log.FileTopicLog
+import graft.log.{FileTopicLog, LogFs}
 import org.apache.hadoop.fs.{Path => HPath}
 
 /** Registered snapshot pins — the durable half of the corpus-pinning
@@ -76,53 +76,13 @@ object SnapshotPins {
     log.fs.mkdirs(p.getParent)
     val bytes = mapper.writeValueAsString(root)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def alreadyExists(): Nothing = throw new IllegalStateException(
+    // put-if-absent is create-exclusive AND atomic-visible on every
+    // scheme: list() is loud on torn documents, so a pin save racing an
+    // unrelated retention pass must never show an empty or partial file
+    if (!LogFs.putIfAbsent(log.fs, p, bytes)) throw new IllegalStateException(
       s"ripple: snapshot pin '$name' already exists on topic " +
         s"'$topic' — pins are immutable; dropSnapshot first or pick " +
         "a new name.")
-    if (log.manifestCommitMode) {
-      // object stores: a conditional PUT is BOTH create-exclusive and
-      // atomic-visible at close (an object never appears torn), so the
-      // direct exclusive create is the whole protocol
-      val out =
-        try log.fs.create(p, false)
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-               _: java.nio.file.FileAlreadyExistsException => alreadyExists()
-        }
-      try { out.write(bytes); out.close() }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          try out.close() catch { case _: Throwable => () }
-          alreadyExists()
-        case e: Throwable =>
-          try out.close() catch { case _: Throwable => () }
-          try log.fs.delete(p, false) catch { case _: Throwable => () }
-          throw e
-      }
-    } else {
-      // local/HDFS: create(p, false) makes an EMPTY file visible before
-      // the JSON lands, and list() is loud on torn documents — a pin save
-      // racing an unrelated retention pass would fail it spuriously. So
-      // stage to a dot-temp (invisible to list(), which skips dot-prefixed
-      // names — pin names cannot start with '.') and publish with the
-      // atomic no-replace primitive: create-exclusivity AND atomic
-      // visibility in one step.
-      val tmp = new HPath(p.getParent, s".tmp-pin-${java.util.UUID.randomUUID()}")
-      val out = log.fs.create(tmp, true)
-      try { out.write(bytes); out.close() }
-      catch {
-        case e: Throwable =>
-          try out.close() catch { case _: Throwable => () }
-          try log.fs.delete(tmp, false) catch { case _: Throwable => () }
-          throw e
-      }
-      if (!log.publishNoReplace(tmp, p)) {
-        try log.fs.delete(tmp, false) catch { case _: Throwable => () }
-        alreadyExists()
-      }
-    }
     pin
   }
 

@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.log.FileTopicLog
+import graft.log.{FileTopicLog, LogFs}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
@@ -186,38 +186,6 @@ object TopicSchemas {
         "schema explicitly (TopicSchemas.dropSchema) after draining " +
         "consumers.")
 
-  /** Put-if-absent write of the schema pointer — closes the first-registration
-    * check-then-act race: two first-time producers racing different shapes
-    * must resolve to ONE winner and a loud drift error, never a silent
-    * overwrite. Uses `create(path, overwrite = false)` (conditional PUT on
-    * object stores, exists-checked create elsewhere); an untyped refusal
-    * is classified like [[graft.log.CommitLog]] does — typed first, message
-    * sniff only with the target observably present.
-    */
-  private def createExclusive(log: FileTopicLog, p: HPath,
-      bytes: Array[Byte]): Boolean = {
-    log.fs.mkdirs(p.getParent)
-    val out =
-      try log.fs.create(p, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-        case _: java.nio.file.FileAlreadyExistsException => return false
-        case e: java.io.IOException if e.getMessage != null &&
-          e.getMessage.contains("already exists") &&
-          (try log.fs.exists(p) catch { case _: java.io.IOException => false }) =>
-          return false
-      }
-    try { out.write(bytes); out.close(); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case e: Throwable =>
-        try out.close() catch { case _: Throwable => () }
-        try log.fs.delete(p, false) catch { case _: Throwable => () }
-        throw e
-    }
-  }
-
   /** Register `schema` for `topic`; idempotent for a schema that satisfies
     * the registered one, LOUD on drift (see class doc). Field ORDER is
     * part of the contract — lifted column order is user-visible. First
@@ -233,7 +201,7 @@ object TopicSchemas {
       case None =>
         raceSeam()
         val bytes = schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        if (createExclusive(log, path(log, topic), bytes)) {
+        if (LogFs.putIfAbsent(log.fs, path(log, topic), bytes)) {
           // we own this registration: clear any version files a crashed
           // dropSchema left behind (it deletes the pointer first, then
           // the history — a crash between the two must not let the OLD
@@ -315,7 +283,7 @@ object TopicSchemas {
       else if (!listVersions(log, topic).exists { w =>
         try DataType.fromJson(log.readFileUtf8(versionPath(log, topic, w))) == existing
         catch { case _: java.io.FileNotFoundException => false }
-      }) createExclusive(log,
+      }) LogFs.putIfAbsent(log.fs,
         versionPath(log, topic, listVersions(log, topic).max + 1),
         existing.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // allocate past EVERY claimed number, including a crashed evolve's
@@ -327,7 +295,7 @@ object TopicSchemas {
       // file (harmless — the next evolve takes v+1), never a current
       // schema whose version is unrecorded; a LOST claim means a
       // concurrent evolve advanced the base — loop and re-validate
-      if (createExclusive(log, versionPath(log, topic, v),
+      if (LogFs.putIfAbsent(log.fs, versionPath(log, topic, v),
           schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))) {
         log.writeFileAtomic(path(log, topic),
           schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))

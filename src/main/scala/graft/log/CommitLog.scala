@@ -3,6 +3,7 @@ package graft.log
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicReference
 
 /** One committed segment: `name` is the data file (unique, never reused)
   * inside the bucket directory; `[start, start+count)` is its offset range.
@@ -22,31 +23,34 @@ case class CommitState(version: Long, segs: Vector[SegMeta]) {
       !(s.start == start && s.count == count))
 }
 
-/** Sequenced put-if-absent commit log — the storage-plane protocol for
-  * filesystems WITHOUT atomic rename (S3A, GCS, ABFS, …), where the
-  * rename-based segment publish of [[FileTopicLog]] would be torn-write
-  * unsafe. This is the public Delta-Lake/Iceberg commit-log pattern
+/** Sequenced put-if-absent commit log: the authoritative segment list of
+  * one bucket, and the only way a segment becomes live, on every
+  * filesystem. This is the public Delta-Lake/Iceberg commit-log pattern
   * re-expressed for the topic log:
   *
   *   - Data files are written under UNIQUE names directly in the bucket
-  *     directory. An object store PUT is atomic-visible (the object appears
-  *     whole at close or not at all), and an uncommitted data file is
-  *     invisible to readers — so data writes need no staging or rename.
-  *   - The bucket's authoritative segment list lives in `.commitlog/`:
-  *     version-numbered delta files `c-<v>` committed with CREATE-EXCLUSIVE
-  *     (put-if-absent — S3 conditional PUT `If-None-Match`, GCS
-  *     `ifGenerationMatch(0)`, ABFS conditional create; surfaced through
-  *     `FileSystem.create(path, overwrite = false)`). Exactly one writer
-  *     wins each version; losers re-read and retry with fresh state, so
-  *     two drivers can never commit overlapping offsets — the mutual
-  *     exclusion the rename protocol gets from the bucket lock comes from
-  *     the commit sequence itself here, and the lock degrades to a
-  *     contention throttle.
-  *   - Every `checkpointInterval`-th version also writes a full-state
-  *     checkpoint `k-<v>`; reading is one directory listing plus the latest
-  *     checkpoint and its delta suffix, never an unbounded replay.
-  *     Versions more than one interval behind the newest checkpoint are
-  *     garbage-collected, so the listing stays O(interval).
+  *     directory. An uncommitted data file is invisible to readers, so a
+  *     data write needs no staging, no rename and no lock.
+  *   - The bucket's segment list lives in `.commitlog/`: version-numbered
+  *     delta files `c-<v>`, each written with [[LogFs.putIfAbsent]] — a
+  *     hard link on local disks, a refusing rename on HDFS, a conditional
+  *     PUT on object stores. Exactly one writer wins each version, and a
+  *     reader never sees a version file without its lines. Losers re-read
+  *     and retry with fresh state, so two drivers can never commit
+  *     overlapping offsets: mutual exclusion comes from the commit
+  *     sequence itself, and the bucket lock is only a contention throttle.
+  *   - Every [[CommitLog.CheckpointInterval]]-th version also writes a
+  *     full-state checkpoint `k-<v>`; a cold read is one directory listing
+  *     plus the latest checkpoint and its delta suffix, never an unbounded
+  *     replay. Versions more than one interval behind the newest
+  *     checkpoint are garbage-collected in ascending order, so the listing
+  *     stays O(interval).
+  *   - A warm [[read]] costs two file stats: the last state this instance
+  *     saw is reused while `c-<v+1>` is absent and `c-<v>` still carries
+  *     the stamp it had. Ascending GC makes that sound: a GC that removed
+  *     `c-<v+1>` removed `c-<v>` first, so a reader that fell more than a
+  *     GC floor behind always re-reads from the newest checkpoint. A
+  *     present `c-<v+1>` reads only the new deltas.
   *
   * The reference keeps all of this in ZooKeeper znodes + RAM
   * (`internal/lighthouse/io/io.go:55-156`,
@@ -56,8 +60,11 @@ case class CommitState(version: Long, segs: Vector[SegMeta]) {
   * Delta file format (UTF-8 lines): `A <start> <count> <name>` adds a
   * segment, `D <name>` drops one. Checkpoints carry only `A` lines.
   */
-final class CommitLog(fs: FileSystem, dir: HPath, checkpointInterval: Int = 64) {
+final class CommitLog private[graft] (fs: FileSystem, dir: HPath,
+    checkpointInterval: Int) {
   require(checkpointInterval > 0, "checkpointInterval must be positive")
+
+  def this(fs: FileSystem, dir: HPath) = this(fs, dir, CommitLog.CheckpointInterval)
 
   private def cPath(v: Long) = new HPath(dir, f"c-$v%020d")
   private def kPath(v: Long) = new HPath(dir, f"k-$v%020d")
@@ -96,16 +103,71 @@ final class CommitLog(fs: FileSystem, dir: HPath, checkpointInterval: Int = 64) 
     cur
   }
 
-  /** Current committed state: latest checkpoint + delta suffix. Retries on
-    * the bounded race where a concurrent checkpoint GC deletes a just-listed
-    * version file (re-listing always converges — GC only removes versions
-    * a full interval behind the newest checkpoint).
+  /** The last state this instance read or committed, anchored by the
+    * (mtime, length) stamp of its own version file.
+    */
+  private final case class Seen(state: CommitState, stamp: (Long, Long))
+  private val seen = new AtomicReference[Seen](null)
+
+  private def stampOf(v: Long): Option[(Long, Long)] = LogFs.stamp(fs, cPath(v))
+
+  private def remember(state: CommitState, always: Boolean): Unit =
+    stampOf(state.version).foreach { stamp =>
+      val next = Seen(state, stamp)
+      var cur = seen.get
+      while ((always || cur == null || cur.state.version < state.version) &&
+          !seen.compareAndSet(cur, next))
+        cur = seen.get
+    }
+
+  /** Current committed state (see the class doc for what a warm read
+    * costs). The result is always a state that was committed at some point
+    * during the call.
     */
   def read(): CommitState = {
+    val s = seen.get
+    if (s != null) {
+      val v = s.state.version
+      if (stampOf(v + 1).isEmpty) {
+        if (stampOf(v).contains(s.stamp)) return s.state
+      } else if (stampOf(v).contains(s.stamp)) {
+        return readAhead(s.state)
+      }
+    }
+    readFull()
+  }
+
+  /** Apply the deltas after `from` until the first absent version. That
+    * absence proves `v` current only while `c-<v>` is still present (GC
+    * runs oldest first); if GC passed this reader mid-walk, newer versions
+    * may exist, so it re-reads from the newest checkpoint.
+    */
+  private def readAhead(from: CommitState): CommitState = {
+    var segs = from.segs
+    var v = from.version
+    try {
+      while (true) {
+        val p = cPath(v + 1)
+        segs = applyLines(segs, readLines(p), p)
+        v += 1
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    if (stampOf(v).isEmpty) return readFull()
+    val state = CommitState(v, segs.sortBy(_.start))
+    remember(state, always = false)
+    state
+  }
+
+  /** Latest checkpoint + delta suffix. Retries on the bounded race where a
+    * concurrent checkpoint GC deletes a just-listed version file
+    * (re-listing always converges — GC only removes versions a full
+    * interval behind the newest checkpoint).
+    */
+  private def readFull(): CommitState = {
     var attempt = 0
     while (true) {
       val vs = listVersions()
-      if (vs.isEmpty) return CommitState(-1L, Vector.empty)
+      if (vs.isEmpty) { seen.set(null); return CommitLog.Empty }
       val latest = vs.iterator.map(_._2).max
       val base = vs.iterator.filter(v => v._1 == 'k' && v._2 <= latest)
         .map(_._2).foldLeft(-1L)(math.max)
@@ -118,7 +180,9 @@ final class CommitLog(fs: FileSystem, dir: HPath, checkpointInterval: Int = 64) 
           segs = applyLines(segs, readLines(cPath(v)), cPath(v))
           v += 1
         }
-        return CommitState(latest, segs.sortBy(_.start))
+        val state = CommitState(latest, segs.sortBy(_.start))
+        remember(state, always = true)
+        return state
       } catch {
         case _: java.io.FileNotFoundException if attempt < 5 =>
           attempt += 1 // listed a version GC'd underneath us; converges
@@ -126,6 +190,8 @@ final class CommitLog(fs: FileSystem, dir: HPath, checkpointInterval: Int = 64) 
     }
     throw new IllegalStateException("unreachable")
   }
+
+  @volatile private var dirMade = false
 
   /** Attempt to commit `adds`/`removes` as version `state.version + 1` via
     * put-if-absent. Returns the new state on the win, `None` when another
@@ -139,95 +205,56 @@ final class CommitLog(fs: FileSystem, dir: HPath, checkpointInterval: Int = 64) 
     val lines =
       removes.toSeq.sorted.map(n => s"D $n") ++
         adds.map(a => s"A ${a.start} ${a.count} ${a.name}")
-    if (!createExclusive(cPath(v), lines.mkString("\n").getBytes(UTF_8))) return None
-    // Resurrection guard: a writer stalled long enough that version v was
-    // committed by others AND already GC'd can "win" create-exclusive on a
-    // version readers ignore (read() applies only versions above the newest
-    // checkpoint's base) — its rows would silently never become visible.
-    // Detect it right after the win: a checkpoint more than one interval
-    // ahead proves v was inside the GC floor; drop the file and retry. A
-    // false positive would need >= interval further commits between the
-    // create and this listing and still only costs a retry, never a loss.
-    val newestCk = listVersions().iterator.filter(_._1 == 'k').map(_._2).foldLeft(-1L)(math.max)
-    if (newestCk - checkpointInterval > v) {
-      try fs.delete(cPath(v), false) catch { case _: java.io.IOException => () }
+    if (!dirMade) { fs.mkdirs(dir); dirMade = true }
+    if (!LogFs.putIfAbsent(fs, cPath(v), lines.mkString("\n").getBytes(UTF_8)))
       return None
+    // Resurrection guard: a writer stalled long enough that version v was
+    // committed by others AND already GC'd can "win" put-if-absent on a
+    // version readers ignore (they apply only versions above the newest
+    // checkpoint) — its rows would silently never become visible. GC runs
+    // in ascending order, so a present c-<v-1> proves c-<v> was never
+    // GC'd; otherwise a checkpoint more than one interval ahead proves v
+    // was inside the GC floor: drop the file and retry. A false positive
+    // would need >= interval further commits between the create and the
+    // listing and still only costs a retry, never a loss.
+    if (v == 0 || stampOf(v - 1).isEmpty) {
+      val newestCk = listVersions().iterator.filter(_._1 == 'k').map(_._2).foldLeft(-1L)(math.max)
+      if (newestCk - checkpointInterval > v) {
+        try fs.delete(cPath(v), false) catch { case _: java.io.IOException => () }
+        return None
+      }
     }
     val next = CommitState(v,
       (state.segs.filterNot(s => removes.contains(s.name)) ++ adds).sortBy(_.start))
     if (v > 0 && v % checkpointInterval == 0) checkpointAndGc(v, next)
+    remember(next, always = false)
     Some(next)
   }
 
-  /** Full-state checkpoint at `v` + GC of versions a full interval behind.
-    * Two committers racing the same checkpoint write identical content
-    * (state after v is deterministic from the log), so the loser's
-    * create-exclusive refusal is ignored.
+  /** Full-state checkpoint at `v` + GC of versions a full interval behind,
+    * oldest first (the warm read relies on that order). Two committers
+    * racing the same checkpoint write identical content (state after v is
+    * deterministic from the log), so the loser's refusal is ignored.
     */
   private def checkpointAndGc(v: Long, state: CommitState): Unit = {
     val lines = state.segs.map(s => s"A ${s.start} ${s.count} ${s.name}")
-    createExclusive(kPath(v), lines.mkString("\n").getBytes(UTF_8))
+    LogFs.putIfAbsent(fs, kPath(v), lines.mkString("\n").getBytes(UTF_8))
     // readers that listed within the last interval of commits still resolve;
-    // older in-flight reads retry via read()'s FNF loop
+    // older in-flight reads retry via readFull's FNF loop
     val floor = v - checkpointInterval
-    listVersions().filter(_._2 < floor).foreach { case (kind, old) =>
+    listVersions().filter(_._2 < floor).sortBy(_._2).foreach { case (kind, old) =>
       val p = if (kind == 'k') kPath(old) else cPath(old)
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** Typed-first classification of a put-if-absent refusal at `p`. The
-    * typed exceptions cover every tested scheme — Hadoop's local/RawLocal
-    * family and the conditional-PUT rig raise
-    * `o.a.h.fs.FileAlreadyExistsException` (at create() on HDFS-like
-    * stores, at close() on conditional-PUT stores), `PathExistsException`
-    * is the Hadoop path-API spelling, and `java.nio` surfaces from direct
-    * `Files` shortcuts. An UNTYPED IOException counts as a refusal only as
-    * a logged last resort: its message must say the target exists AND the
-    * target must be observably present — a message like "Parent path does
-    * not exist" is a storage fault that must surface as itself, not burn
-    * the caller's bounded retries into a misleading contention error.
-    */
-  private def isRefusal(e: Throwable, p: HPath): Boolean = e match {
-    case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-    case _: java.nio.file.FileAlreadyExistsException => true
-    case _: org.apache.hadoop.fs.PathExistsException => true
-    case io: java.io.IOException =>
-      val m = io.getMessage
-      val sniff = m != null && (m.contains("already exists") ||
-        m.toLowerCase.contains("precondition") || m.contains("If-None-Match"))
-      sniff && (try fs.exists(p)
-        catch { case _: java.io.IOException => false }) && {
-        CommitLog.log.warn(s"CommitLog: classifying untyped refusal at $p " +
-          s"by message + target-exists probe ($io); the store should raise " +
-          "a typed FileAlreadyExistsException")
-        true
-      }
-    case _ => false
-  }
-
-  /** Write `bytes` at `p` atomically and only if absent. True on the win;
-    * false when the target exists (put-if-absent refusal, [[isRefusal]]).
-    */
-  private def createExclusive(p: HPath, bytes: Array[Byte]): Boolean = {
-    fs.mkdirs(dir)
-    val out =
-      try fs.create(p, false)
-      catch { case e: java.io.IOException if isRefusal(e, p) => return false }
-    try { out.write(bytes); out.close(); true }
-    catch {
-      case e: java.io.IOException if isRefusal(e, p) => false
-      case e: Throwable =>
-        // a non-exclusivity failure may have left a torn visible file on a
-        // NON-object store (object stores materialize at close, so there is
-        // nothing to tear); best-effort removal keeps the version readable
-        try { out.close() } catch { case _: Throwable => () }
-        try fs.delete(p, false) catch { case _: Throwable => () }
-        throw e
     }
   }
 }
 
 object CommitLog {
-  private[log] lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[CommitLog])
+  /** Versions between full-state checkpoints. */
+  val CheckpointInterval = 64
+
+  /** The state of a never-committed bucket (one shared instance, so
+    * callers caching on the returned state see it unchanged).
+    */
+  val Empty: CommitState = CommitState(-1L, Vector.empty)
 }

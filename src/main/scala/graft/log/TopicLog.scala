@@ -81,9 +81,10 @@ final class InMemoryLog extends TopicLog {
 
 /** Segment file layout + frame codec for the durable log.
   *
-  * A segment file `seg-<start20>-<count10>.log` holds `count` records
-  * beginning at offset `start`. Frames are length-prefixed, the same wire
-  * discipline as the reference's transport
+  * A segment is a data file `data-<start20>-<count10>-<uuid>.log` holding
+  * `count` records beginning at offset `start`; it is live once the
+  * bucket's [[CommitLog]] lists it ([[FileTopicLog]]). Frames are
+  * length-prefixed, the same wire discipline as the reference's transport
   * (`pkg/server/asynctcp/transport.go:114-145` — 4-byte big-endian length
   * prefix), but with a fixed header instead of GOB (which the reference
   * itself flags as non-portable, `internal/broker/consumer/server/core.go:14`):
@@ -98,22 +99,31 @@ final class InMemoryLog extends TopicLog {
   * concatenation, and a topic whose `compression` config changes mid-life
   * keeps reading correctly.
   *
-  * Segments are immutable once published (write-temp + atomic rename), so a
-  * retried epoch that re-appends the same segment name is a no-op — this is
-  * what makes the streaming sink idempotent/exactly-once, replacing the
-  * reference's ack-counting (`internal/broker/ack/ack.go:68-117`).
+  * Segments are immutable once committed, and a retried epoch that
+  * re-publishes the same offset range with the same records is a no-op —
+  * this is what makes the streaming sink idempotent/exactly-once,
+  * replacing the reference's ack-counting (`internal/broker/ack/ack.go:68-117`).
   *
   * All I/O is stream-based so segments read/write identically through
   * `org.apache.hadoop.fs.FileSystem` (the storage plane, [[LogFs]]) and
   * plain `java.nio` (unit tests).
   */
 object SegmentCodec {
-  val SegmentPrefix = "seg-"
+  val DataPrefix = "data-"
   val SegmentSuffix = ".log"
-  val ManifestName = ".manifest"
+  /** File-name prefix of the retired rename-published layout; a bucket
+    * holding such files is refused, never read as empty.
+    */
+  val LegacyPrefix = "seg-"
 
-  def segmentName(start: Long, count: Long): String =
-    f"$SegmentPrefix$start%020d-$count%010d$SegmentSuffix"
+  /** Unique data-file name for a DENSE segment `[start, start+count)`.
+    * The embedded offsets are advisory — the commit log carries them
+    * authoritatively — and the FULL UUID is deliberate: two appenders
+    * racing the same start must never collide on a name, or the commit
+    * winner would publish a segment whose bytes are the loser's rows.
+    */
+  def dataName(start: Long, count: Long): String =
+    f"$DataPrefix$start%020d-$count%010d-${java.util.UUID.randomUUID()}$SegmentSuffix"
 
   /** Name of a SPARSE segment — the product of key-based compaction
     * ([[FileTopicLog.compactKeyed]]): it covers the offset SPAN
@@ -123,31 +133,33 @@ object SegmentCodec {
     * checks) working unchanged; the `k<rows>` field carries the EXACT
     * retained count for planners that otherwise assume count == rows
     * (LIMIT planning, statistics, the metadata COUNT(*) pushdown guard).
+    * `rows = None` writes the flag-only `k` field, used where the count is
+    * not known yet (the rewrite's output name) and on object stores,
+    * whose rename is a copy.
     */
-  def segmentNameSparse(start: Long, span: Long, rows: Long): String =
-    f"$SegmentPrefix$start%020d-$span%010d-k$rows%010d$SegmentSuffix"
+  def sparseName(start: Long, span: Long, rows: Option[Long]): String =
+    f"$DataPrefix$start%020d-$span%010d-k${rows.fold("")(r => f"$r%010d")}-" +
+      s"${java.util.UUID.randomUUID()}$SegmentSuffix"
 
-  /** (startOffset, span) parsed from a segment file name. For a dense
+  /** (startOffset, span) parsed from a data-file name. For a dense
     * segment span == record count; a sparse one holds [[sparseRows]]
-    * records inside the span.
+    * records inside the span. The commit log carries both values
+    * authoritatively; the name is for planners holding only a path.
     */
   def parse(name: String): Option[(Long, Long)] =
-    if (!name.startsWith(SegmentPrefix) || !name.endsWith(SegmentSuffix)) None
-    else name.stripPrefix(SegmentPrefix).stripSuffix(SegmentSuffix).split('-') match {
-      case Array(s, c)                  => Some((s.toLong, c.toLong))
-      case Array(s, c, k) if isKField(k) => Some((s.toLong, c.toLong))
-      case _                            => None
+    if (!name.startsWith(DataPrefix) || !name.endsWith(SegmentSuffix)) None
+    else name.split('-') match {
+      case Array(_, s, c, _*) =>
+        try Some((s.toLong, c.toLong)) catch { case _: NumberFormatException => None }
+      case _ => None
     }
 
   private def isKField(f: String): Boolean =
     f.length > 1 && f.charAt(0) == 'k' && f.drop(1).forall(_.isDigit)
 
-  /** Retained-record count of a SPARSE segment, None when unrecorded (a
-    * manifest-mode sparse data file carries the flag only — its name is
-    * fixed before the rewrite knows the count) or dense. Works on both
-    * name families: rename-mode `seg-…-k<rows>.log` and manifest-mode
-    * `data-…-k[<rows>]-<uuid>.log` (the `k` marker cannot collide with a
-    * UUID field — hex has no 'k').
+  /** Retained-record count of a SPARSE segment, None when unrecorded
+    * (flag-only `-k-` name) or dense. The `k` marker cannot collide with
+    * a UUID field — hex has no 'k'.
     */
   def sparseRows(name: String): Option[Long] =
     name.stripSuffix(SegmentSuffix).split('-').collectFirst {
@@ -1134,52 +1146,19 @@ object SegmentCodec {
     } finally { ia.close(); ib.close() }
 }
 
-/** Durable file-backed log: one directory per topic/bucket containing
-  * immutable offset-named segment files. Directory layout doubles as the
-  * metadata registry the reference keeps in ZooKeeper
-  * (`/<topic>/<bucket>/...` znode tree, `internal/lighthouse/io/io.go:55-156`).
-  *
-  * The `root` is a Hadoop filesystem URI (`file:/...`, `hdfs://nn/...`,
-  * a bare POSIX path resolving against `fs.defaultFS`, …) — every metadata
-  * and data operation goes through [[LogFs]], so a 1000-executor cluster
-  * addresses one shared log over HDFS exactly as `local[32]` addresses a
-  * temp directory. Per-filesystem semantics the protocol depends on:
-  *
-  *   - '''Atomic single-file rename''' — segment publish, manifest swap,
-  *     intent/marker writes in RENAME mode. Real filesystems (local POSIX,
-  *     HDFS) have it. Object stores that implement rename as copy+delete
-  *     (S3A, GCS, …) do NOT — those schemes automatically run MANIFEST
-  *     mode instead (see `manifestCommitMode`): data files land under
-  *     unique names (an object PUT is atomic-visible at close, never torn)
-  *     and become live only via a sequenced put-if-absent commit in the
-  *     bucket's [[CommitLog]] — the public Delta/Iceberg commit pattern —
-  *     so nothing there depends on rename atomicity.
-  *   - '''Create-exclusive''' (the bucket `.lock`; every manifest-mode
-  *     commit) — atomic on local (`O_EXCL` via `java.nio`, used whenever
-  *     the scheme is `file`), on HDFS (namenode-serialized create), and on
-  *     modern object stores (S3 conditional PUT `If-None-Match`, GCS
-  *     generation preconditions, ABFS conditional create — all surfaced
-  *     through `FileSystem.create(path, overwrite = false)`, refusing at
-  *     create or at close). Manifest mode rests exclusion on the COMMIT
-  *     create-exclusive, so the `.lock` there is only a contention
-  *     throttle.
-  *   - '''Rename-onto-existing''' — HDFS `rename` FAILS when the target
-  *     exists, POSIX rename REPLACES it. Rename-mode segment publishes
-  *     therefore go through [[FileTopicLog.publishNoReplace]], which is
-  *     atomic fail-if-exists on BOTH (local: `java.nio` hard link; HDFS:
-  *     the rename refusal itself) — never check-then-act. Replace-semantics
-  *     writes (manifest, cursor, marker) go through [[renameOverwrite]],
-  *     whose transient missing-target window is safe at every call site
-  *     (a missing manifest/cursor only falls back to the authoritative
-  *     listing / an earlier lower bound); manifest mode writes them as
-  *     direct overwriting PUTs, which are already atomic-visible.
-  */
 /** One planned compaction merge, in plain strings so a distributed
   * strategy can ship it to an executor task: stream-concatenate `members`
   * (absolute segment paths, offset order) into `out`. `bytes` is the
   * total member payload — the routing input for a local-vs-distributed
   * threshold. Frames are length-prefixed with no file header/footer, so
   * the merge is a plain byte concatenation wherever it runs.
+  *
+  * A strategy returns, for each task it finished, `out` -> the path it
+  * wrote: `out` itself, or an attempt-unique sibling of it (a distributed
+  * strategy whose task attempts must not share one file). A task missing
+  * from the result was dropped (a member vanished under it). The product
+  * is committed under the returned name; it stays a `data-*` name in the
+  * bucket directory, so an unreturned attempt's file is swept by vacuum.
   */
 case class ConcatTask(members: Seq[String], out: String, bytes: Long)
 
@@ -1187,7 +1166,8 @@ case class ConcatTask(members: Seq[String], out: String, bytes: Long)
   * decode `members` ((absolute path, start offset), offset order), keep
   * the latest record per key, write the sparse product to `out` under
   * `codec` ([[SegmentCodec.rewriteLatestPerKey]]). `bytes` is total member
-  * bytes — the local-vs-distributed routing input, same as [[ConcatTask]].
+  * bytes — the local-vs-distributed routing input; the strategy's result
+  * is the same `out` -> written path map as for [[ConcatTask]].
   */
 case class KeyedTask(members: Seq[(String, Long)], out: String, bytes: Long,
   codec: Int, maxKeys: Int = SegmentCodec.DefaultKeyHeapEntries,
@@ -1244,7 +1224,7 @@ object FileTopicLog {
     * here, so a spec — and an operator reading driver metrics — can
     * assert a large merge moved ZERO data bytes through the driver (the
     * 100 TB contract for the `autoCompactSegments` sink option: the
-    * driver owns manifests, never the byte relay).
+    * driver owns the commit log, never the byte relay).
     */
   val localConcatBytes = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -1285,9 +1265,47 @@ object FileTopicLog {
   }
 }
 
-// not final: tests subclass the nioCreateLink seam to drive the
-// link-unsupported fallback (no FAT/exFAT mount exists in CI)
-class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog {
+/** Durable file-backed log: one directory per topic/bucket holding
+  * immutable data files and the bucket's [[CommitLog]] (`.commitlog/`),
+  * the authoritative list of which data files are live segments and at
+  * which offsets. This is the metadata registry the reference keeps in
+  * ZooKeeper (`/<topic>/<bucket>/...` znode tree,
+  * `internal/lighthouse/io/io.go:55-156`).
+  *
+  * The `root` is a Hadoop filesystem URI (`file:/...`, `hdfs://nn/...`,
+  * a bare POSIX path resolving against `fs.defaultFS`, …) — every metadata
+  * and data operation goes through [[LogFs]], so a 1000-executor cluster
+  * addresses one shared log over HDFS exactly as `local[32]` addresses a
+  * temp directory.
+  *
+  * One commit protocol runs on every scheme. A data file is written under
+  * a unique name (invisible until committed), then made live — or
+  * dropped, compacted, truncated — by one sequenced put-if-absent commit
+  * to the bucket's commit log. Exactly one writer wins each commit
+  * version, so two drivers can never commit overlapping offsets, and no
+  * step depends on rename atomicity or on the bucket lock (which only
+  * throttles contention). The one primitive that differs per filesystem
+  * is [[LogFs.putIfAbsent]]:
+  *
+  *   - '''local''' (`file:`): temp file + hard link (`Files.createLink`
+  *     refuses an existing target atomically);
+  *   - '''HDFS-like''' (atomic rename): temp file + `rename`, which
+  *     refuses an existing target;
+  *   - '''object stores''' (schemes in `graft.log.nonAtomicRenameSchemes`,
+  *     rename = copy+delete): `create(path, overwrite = false)`, a
+  *     conditional PUT that is atomic-visible at close.
+  *
+  * Where rename is atomic, replace-style metadata writes (consumer
+  * cursors, markers, `.tsidx`) go through temp + rename, and key-compacted
+  * products are renamed to carry their exact row count before their
+  * commit; object stores write those documents as direct overwriting PUTs
+  * (already atomic-visible) and keep flag-only sparse names.
+  */
+class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
+    checkpointInterval: Int) extends TopicLog {
+
+  def this(rootUri: String, hadoopConf: Configuration) =
+    this(rootUri, hadoopConf, CommitLog.CheckpointInterval)
 
   /** Local-path constructor (tests, single-node tools). */
   def this(root: java.nio.file.Path) = this(root.toString, new Configuration())
@@ -1297,68 +1315,18 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     Option(u.getScheme).getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
   }
 
-  /** Commit-protocol selection. Filesystems with atomic single-file rename
-    * (local POSIX, HDFS) publish segments by rename under the bucket lock
-    * ("rename" mode — the historical protocol below). Object stores that
-    * rename by copy+delete (S3A, GCS, OSS, Azure blob drivers) instead run
-    * "manifest" mode: data files land under unique names (atomic-visible
-    * at close — an object PUT never appears torn) and become live only via
-    * a sequenced put-if-absent commit in the bucket's [[CommitLog]], so no
-    * step ever depends on rename atomicity or on lock soundness. Override
-    * auto-detection with `graft.log.commitProtocol` = `rename` | `manifest`
-    * (forcing `rename` onto an object store re-accepts the torn-write risk
-    * the removed `graft.log.allowNonAtomicRename` flag used to label).
-    */
-  val manifestCommitMode: Boolean =
-    hadoopConf.get("graft.log.commitProtocol", "auto") match {
-      case "manifest" => true
-      case "rename"   => false
-      case "auto" =>
-        // Azure included: wasb/wasbs rename is not atomic, and abfs/abfss
-        // only on hierarchical-namespace accounts — HNS operators who want
-        // rename mode set graft.log.commitProtocol=rename explicitly.
-        hadoopConf.getTrimmedStrings(
-          "graft.log.nonAtomicRenameSchemes", "s3", "s3a", "s3n", "gs", "oss",
-          "cos", "swift", "wasb", "wasbs", "abfs", "abfss").contains(scheme)
-      case other => throw new IllegalArgumentException(
-        s"graft.log.commitProtocol must be auto|rename|manifest, got '$other'")
-    }
-
   val fs: FileSystem = LogFs.get(new HPath(rootUri), hadoopConf)
   val root: HPath = fs.makeQualified(new HPath(rootUri))
   private val isLocal = scheme == "file"
+  /** Whether this filesystem renames a single file atomically — picks the
+    * overwrite style of metadata writes and the sparse product's name.
+    */
+  private val renameAtomic = LogFs.atomicRename(fs)
   fs.mkdirs(root)
 
   private def toNio(p: HPath): java.nio.file.Path = java.nio.file.Paths.get(p.toUri)
 
   def bucketDir(tb: TopicBucket): HPath = new HPath(new HPath(root, tb.topic), tb.bucket)
-
-  private def manifestPath(tb: TopicBucket): HPath =
-    new HPath(bucketDir(tb), SegmentCodec.ManifestName)
-
-  /** Manifest mode: the bucket's sequenced commit log (authoritative
-    * segment view). Instances are stateless beyond config; cached to avoid
-    * re-allocating per planning call.
-    */
-  private val commitLogs = scala.collection.concurrent.TrieMap.empty[TopicBucket, CommitLog]
-  private val ckInterval = hadoopConf.getInt("graft.log.commitCheckpointInterval", 64)
-  private[graft] def commitLog(tb: TopicBucket): CommitLog =
-    commitLogs.getOrElseUpdate(tb,
-      new CommitLog(fs, new HPath(bucketDir(tb), ".commitlog"), ckInterval))
-
-  /** Unique data-file name for a manifest-mode segment: self-describing for
-    * operators, but NOT `seg-`-parsable — uncommitted files must stay
-    * invisible to any listing-based view (a misconfigured rename-mode
-    * reader on the same root would otherwise double-count). The embedded
-    * start offset is ADVISORY only — [[SegMeta]] carries (start, count)
-    * authoritatively, which is what lets a lost commit race re-commit the
-    * already-written file under a fresh start instead of rewriting it
-    * ([[append]]). The FULL UUID is deliberate: two appenders racing the
-    * same start must never collide on the name, or the commit winner would
-    * publish a segment whose bytes are the loser's rows.
-    */
-  private def uniqueDataName(start: Long, count: Long): String =
-    f"data-$start%020d-$count%010d-${java.util.UUID.randomUUID()}.log"
 
   def fileLen(p: HPath): Long =
     try fs.getFileStatus(p).getLen catch { case _: java.io.IOException => 0L }
@@ -1366,7 +1334,8 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   /** tmp + rename with replace semantics on every filesystem: POSIX rename
     * replaces natively; HDFS rename refuses an existing target, so the
     * target is deleted first — a transient not-there window each call site
-    * explicitly tolerates (see class scaladoc).
+    * tolerates (a missing cursor, marker or `.tsidx` only falls back to an
+    * earlier lower bound or a re-scan).
     */
   private def renameOverwrite(src: HPath, dst: HPath): Unit =
     if (!fs.rename(src, dst)) {
@@ -1380,7 +1349,7 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   private[graft] def writeFileAtomic(path: HPath, bytes: Array[Byte]): Unit = {
     val parent = path.getParent
     fs.mkdirs(parent)
-    if (manifestCommitMode) {
+    if (!renameAtomic) {
       // object-store PUT is atomic-visible at close (never torn), so a
       // direct overwrite IS the atomic replace — tmp+rename would add a
       // copy+delete and a non-atomic window
@@ -1414,40 +1383,23 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     } finally in.close()
   }
 
-  private def readLines(path: HPath): Seq[String] =
-    new String(readFileBytes(path), java.nio.charset.StandardCharsets.UTF_8)
-      .split('\n').toSeq
-
-  /** Parsed-metadata cache (round-14): the warm timestamp seek — and every
-    * other metadata read on a hot planning path — was O(segments) PARSE
-    * per call, because each call re-read and re-split the manifest and
-    * `.tsidx` lines (the q154w probe honestly measured ~10× at 10×
-    * segments). Both files are replaced ATOMICALLY by every mutation
-    * (tmp+rename, or whole-object PUT in manifest mode), so
-    * (modificationTime, length) identifies a snapshot: a matching stat
-    * serves the parsed form, any mismatch re-reads and re-parses — one
-    * getFileStatus per call instead of a full read+parse. The cache is
-    * correctness-neutral: it only skips re-parsing byte-identical
-    * content; missing/torn-file read-repair takes the uncached path
-    * exactly as before, and a parse failure is never cached.
+  /** Parsed-metadata caches. Two, both BOUNDED by weight = parsed entries
+    * held (one per segment), capped at [[metaCacheMaxWeight]] with LRU
+    * eviction, so a long-lived driver planning over 10^4 buckets × 10^3+
+    * segments never holds the parsed metadata plane of the whole
+    * deployment. Eviction is correctness-free by construction: a miss
+    * re-reads exactly like a cold call. Entries for a deleted topic are
+    * dropped eagerly via [[invalidateTopicCaches]].
     *
-    * BOUNDED (round-15): weight = parsed entries held (one per segment
-    * line), capped at [[metaCacheMaxWeight]] with LRU eviction — a
-    * long-lived driver planning over 10^4 buckets × 10^3+ segments must
-    * not accumulate the parsed metadata plane of the whole deployment on
-    * its heap. Eviction is correctness-free by construction: a miss
-    * re-reads and re-parses exactly like a cold call. Entries for a
-    * deleted topic are dropped eagerly via [[invalidateTopicCaches]].
-    *
-    * Stamp identity assumption: (mtime, length) distinguishes rewrites
-    * only down to the filesystem's mtime granularity (1 s on ext3/some
-    * object stores, 1 ms through Hadoop's RawLocalFileSystem, ns on
-    * ext4/XFS native). Two atomic same-length rewrites inside one tick
-    * could alias; the post-read re-stat below narrows the torn window to
-    * exactly that granularity, and every cached file here is a derived
-    * cache (.tsidx) or carries a same-content invariant (manifest rewrites
-    * under the bucket lock), so an alias serves bytes one tick stale at
-    * worst — never an uncommitted view.
+    *   - `bucketMeta`: per bucket, the [[CommitLog]] (whose warm read
+    *     costs two stats, see its doc), the `(path, start, count)` view of
+    *     the state it last returned, and the timestamp-seek index built on
+    *     that state.
+    *   - `parsedMetaCache`: the parsed `.tsidx`, keyed by path and served
+    *     while its (modificationTime, length) stamp is unchanged. The file
+    *     is replaced atomically by every rewrite; two same-length rewrites
+    *     inside one mtime tick could alias, which serves a derived cache
+    *     one tick stale at worst — never an uncommitted view.
     */
   private[graft] def metaCacheMaxWeight: Long = 1L << 20 // def: test seam
   private val parsedMetaCache =
@@ -1457,21 +1409,33 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
       case _                            => 1L
     })
 
-  /** Drop every cached parse and seek index belonging to `topic` — called
-    * by topic deletion so a long-lived driver does not pin dead metadata
-    * until LRU pressure happens to reach it.
+  /** One bucket's cached commit-log view: `segs` is the start-sorted
+    * `(path, start, count)` form of `state`, `overlap` the message of its
+    * first overlap (a contract violation, thrown by [[segments]]), and
+    * `seek` the timestamp-seek index once built on this state.
+    */
+  private final class BucketMeta(val log: CommitLog, val state: CommitState,
+      val segs: Seq[(HPath, Long, Long)], val overlap: Option[String]) {
+    @volatile var seek: SeekIndex = null
+  }
+  private val bucketMeta =
+    new BoundedLru[BucketMeta](metaCacheMaxWeight, _.segs.size.toLong)
+
+  /** Drop every cached parse, commit-log view and seek index belonging to
+    * `topic` — called by topic deletion so a long-lived driver does not
+    * pin dead metadata until LRU pressure happens to reach it.
     */
   def invalidateTopicCaches(topic: String): Unit = {
     val prefix = new HPath(root, topic).toString + "/"
     parsedMetaCache.removeIf(_.startsWith(prefix))
-    seekIndexCache.removeIf(_.startsWith(topic + "/"))
+    bucketMeta.removeIf(_.startsWith(topic + "/"))
   }
 
   /** Cache introspection for specs: (entries, weight) over both caches. */
   private[graft] def metaCacheEntries: Int =
-    parsedMetaCache.size + seekIndexCache.size
+    parsedMetaCache.size + bucketMeta.size
   private[graft] def metaCacheWeight: Long =
-    parsedMetaCache.weight + seekIndexCache.weight
+    parsedMetaCache.weight + bucketMeta.weight
 
   /** None when `path` does not exist (callers keep their fallback);
     * parse failures propagate uncached.
@@ -1510,89 +1474,69 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     try fs.listStatus(dir)
     catch { case _: java.io.FileNotFoundException => Array.empty }
 
-  private def checkNoOverlap(tb: TopicBucket, segs: Seq[(HPath, Long, Long)]): Seq[(HPath, Long, Long)] = {
-    segs.sliding(2).foreach {
-      case Seq((_, s1, c1), (p2, s2, _)) if s1 + c1 > s2 =>
-        throw new IllegalStateException(
-          s"overlapping segments in ${tb.path}: [$s1,+$c1) overlaps $p2 " +
-            "(single-writer-per-bucket contract violated)")
+  /** The bucket's sequenced commit log — the authoritative segment list. */
+  private[graft] def commitLog(tb: TopicBucket): CommitLog =
+    bucketMeta.get(tb.path).map(_.log).getOrElse(meta(tb).log)
+
+  /** The cached view of `tb`'s current committed state, rebuilt only when
+    * the commit log returns a different state.
+    */
+  private def meta(tb: TopicBucket): BucketMeta = {
+    val cached = bucketMeta.get(tb.path)
+    val cl = cached.map(_.log).getOrElse(
+      new CommitLog(fs, new HPath(bucketDir(tb), ".commitlog"), checkpointInterval))
+    val st = cl.read()
+    cached match {
+      case Some(m) if m.state eq st => m
       case _ =>
+        if (st.version < 0) refuseLegacyLayout(tb)
+        val dir = bucketDir(tb)
+        val segs = st.segs.map(s => (new HPath(dir, s.name), s.start, s.count))
+        val overlap = segs.sliding(2).collectFirst {
+          case Seq((_, s1, c1), (p2, s2, _)) if s1 + c1 > s2 =>
+            s"overlapping segments in ${tb.path}: [$s1,+$c1) overlaps $p2 " +
+              "(single-writer-per-bucket contract violated)"
+        }
+        val m = new BucketMeta(cl, st, segs, overlap)
+        bucketMeta.put(tb.path, m)
+        m
     }
-    segs
   }
 
-  /** AUTHORITATIVE segment view: a directory listing. The write path (offset
-    * assignment) and manifest refresh use this; the read-planning path goes
-    * through [[segments]], which prefers the per-bucket manifest — at 100 TB
-    * a bucket holds millions of segment files and listing it per micro-batch
-    * trigger is the planning bottleneck (the reference keeps this metadata
-    * in its ZK tree, `internal/lighthouse/io/io.go:55-156`, for the same
-    * reason).
+  /** A bucket directory with `seg-*` files and no commit log holds the
+    * retired rename-published layout. Reading it as empty would silently
+    * lose its data, so it is refused.
     */
-  def segmentsListed(tb: TopicBucket): Seq[(HPath, Long, Long)] =
-    checkNoOverlap(tb, segmentsRaw(tb))
+  private def refuseLegacyLayout(tb: TopicBucket): Unit =
+    if (listStatus(bucketDir(tb)).exists { st =>
+        val n = st.getPath.getName
+        n.startsWith(SegmentCodec.LegacyPrefix) && n.endsWith(SegmentCodec.SegmentSuffix)
+      })
+      throw new IllegalStateException(
+        s"bucket ${tb.path} under $root holds seg-*.log files but no " +
+          ".commitlog/: that is the retired rename-published layout, which " +
+          "this log does not read; rewrite the topic through a current writer")
 
-  /** Authoritative segment view WITHOUT the overlap check — for the publish
-    * path's overlap arbitration, which must be able to observe a transient
-    * overlap in order to resolve it (the checked views throw on one).
-    * Rename mode: a directory listing. Manifest mode: the committed state
-    * (the listing would see uncommitted data files, which are by definition
-    * not part of the log).
+  /** Committed segments WITHOUT the overlap check — for the publish path's
+    * overlap arbitration, which must be able to observe an overlap in
+    * order to report it (the checked view throws on one).
     */
-  def segmentsRaw(tb: TopicBucket): Seq[(HPath, Long, Long)] =
-    if (manifestCommitMode) {
-      val dir = bucketDir(tb)
-      commitLog(tb).read().segs.map(s => (new HPath(dir, s.name), s.start, s.count))
-    } else segmentStatusRaw(tb).map { case (st, s, c) => (st.getPath, s, c) }
+  def segmentsRaw(tb: TopicBucket): Seq[(HPath, Long, Long)] = meta(tb).segs
 
-  private def segmentStatusRaw(tb: TopicBucket): Seq[(FileStatus, Long, Long)] =
-    listStatus(bucketDir(tb)).iterator.flatMap { st =>
-      SegmentCodec.parse(st.getPath.getName).map { case (s, c) => (st, s, c) }
-    }.toSeq.sortBy(_._2)
-
-  /** Published segments, sorted by start offset: (path, start, count).
+  /** Committed segments, sorted by start offset: (path, start, count).
     * Gaps are legal (retention); OVERLAPS are not — they mean the
     * single-writer-per-bucket contract was violated and reads would
     * double-count, so fail loudly instead.
-    *
-    * Reads the bucket manifest when present (one small-file read instead of
-    * a directory listing); every publish/retention path rewrites the
-    * manifest atomically, so a missing or torn manifest only ever falls
-    * back to the authoritative listing.
     */
   def segments(tb: TopicBucket): Seq[(HPath, Long, Long)] = {
-    if (manifestCommitMode) return segmentsListed(tb) // commit log IS the manifest
-    val m = manifestPath(tb)
-    val dir = bucketDir(tb)
-    try {
-      // parsed + overlap-checked form cached by (mtime, length) — a hot
-      // planner (seek per trigger, describe, pruning) stops re-splitting
-      // O(segments) lines per call; any manifest rewrite re-parses
-      cachedParse[Seq[(HPath, Long, Long)]](m) { bytes =>
-        val names = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split('\n').toSeq
-        val segs = new mutable.ArrayBuffer[(HPath, Long, Long)](names.size)
-        names.foreach { name =>
-          if (name.nonEmpty) SegmentCodec.parse(name) match {
-            case Some((s, c)) => segs += ((new HPath(dir, name), s, c))
-            case None         => // torn/garbage line → distrust the whole file
-              throw new java.io.IOException(s"bad manifest line: $name")
-          }
-        }
-        checkNoOverlap(tb, segs.sortBy(_._2).toSeq)
-      }.getOrElse(segmentsListed(tb))
-    } catch {
-      // any read/parse failure (missing manifest, torn write, bit rot,
-      // NumberFormatException from a seg-prefixed-but-garbled name) →
-      // authoritative listing; overlap violations must still propagate
-      case e: IllegalStateException => throw e
-      case scala.util.control.NonFatal(_) => segmentsListed(tb)
-    }
+    val m = meta(tb)
+    m.overlap.foreach(msg => throw new IllegalStateException(msg))
+    m.segs
   }
 
   /** Crashed-holder takeover threshold. Bucket critical sections are
-    * metadata-only (directory listing + renames); the bound must cover the
-    * slowest listing, not typical cost. A section that somehow outlives
+    * metadata-only (commit-log reads and commits); the bound must cover the
+    * slowest section, not typical cost. A section that somehow outlives
     * this loses exclusion — the owner-token release below at least keeps a
     * late finisher from unlocking the NEW holder.
     */
@@ -1631,17 +1575,15 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
       }
     }
 
-  /** Exclusive cross-driver mutation lock for one bucket: atomic
-    * create-exclusive of `.lock` in the bucket directory, stolen if the
-    * holder crashed (mtime older than `LockStaleMs`). The filesystem
-    * rendering of the reference's per-bucket single-writer election
+  /** Cross-driver mutation lock for one bucket: atomic create-exclusive of
+    * `.lock` in the bucket directory, stolen if the holder crashed (mtime
+    * older than `LockStaleMs`). The filesystem rendering of the
+    * reference's per-bucket single-writer election
     * (`internal/lighthouse/election/election.go:50-79`, ZK ephemeral
-    * nodes): offset assignment + segment rename (publish) and
-    * manifest-rewrite + delete (retention) must each be one critical
-    * section per bucket — a check-after-publish arbitration has an
-    * unfixable hole, because a writer that verified-then-returned cannot
-    * yield retroactively when a second writer publishes an overlapping
-    * segment a moment later.
+    * nodes). Correctness never rests on it — the commit log refuses every
+    * overlapping commit — so it serves as a contention throttle and as
+    * the serialization point of multi-step connector protocols (an
+    * epoch's offset assignment, intent and publish; transaction aborts).
     *
     * Steal is ATOMIC: the stale lock is renamed to a unique name first, so
     * of N waiters that all observed staleness exactly one wins the rename;
@@ -1686,34 +1628,13 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   }
 
   /** Heartbeat for a held bucket lock: refresh its staleness clock. Call
-    * between the sub-steps of a long critical section (directory listings
+    * between the sub-steps of a long critical section (commit-log reads
     * at large segment counts) so a live holder is not mistaken for a
     * crashed one.
     */
   def touchBucketLock(tb: TopicBucket): Unit =
     try fs.setTimes(new HPath(bucketDir(tb), ".lock"), System.currentTimeMillis(), -1L)
     catch { case _: java.io.IOException => () }
-
-  /** Atomically rewrite the bucket manifest from the directory listing.
-    * Called after every publish/retention mutation; concurrent refreshes
-    * are safe (each writes a full self-consistent snapshot via tmp +
-    * atomic rename, and a lost update is re-healed by the next mutation).
-    */
-  def refreshManifest(tb: TopicBucket): Unit = {
-    if (manifestCommitMode) return // the commit log is authoritative; no snapshot file
-    if (!dirExists(bucketDir(tb))) return
-    // raw listing: a transient overlap (another writer mid-arbitration) must
-    // not abort THIS writer's refresh; readers still get the checked view.
-    val names = segmentsRaw(tb).map(_._1.getName)
-    // best-effort: a lost refresh is re-healed by the next mutation, and
-    // readers fall back to the authoritative listing on a missing manifest
-    try writeFileAtomic(manifestPath(tb),
-      names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  private def dirExists(p: HPath): Boolean =
-    try fs.getFileStatus(p).isDirectory catch { case _: java.io.FileNotFoundException => false }
 
   override def size(tb: TopicBucket): Long = {
     val segs = segments(tb)
@@ -1730,9 +1651,8 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   def firstOffset(tb: TopicBucket): Long =
     segments(tb).headOption.map(_._2).getOrElse(0L)
 
-  /** End offset from the authoritative listing — what offset assignment on
-    * the write path must use (a lagging manifest must never cause a writer
-    * to hand out overlapping offsets).
+  /** End offset of the committed state without the overlap check — what
+    * offset assignment on the write path uses.
     */
   def endOffsetListed(tb: TopicBucket): Long = {
     val segs = segmentsRaw(tb) // max() needs no overlap check
@@ -1856,69 +1776,53 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * segments the cache has not seen — amortized O(new segments)).
     */
   /** Derived seek structure: the bucket's sorted segments plus the running
-    * max of per-segment max timestamps, cached against the (mtime, length)
-    * stamps of the manifest and `.tsidx` — any mutation replaces one of
-    * the two files atomically, so a matching pair of stamps means the
-    * index is current. Makes the WARM seek O(log segments) + one boundary
-    * segment walk (two getFileStatus calls, a binary search, no O(N)
-    * re-parse or map build per call) — the round-13 q154w probe measured
-    * the previous per-call O(segments) parse at ~10× cost per 10×
-    * segments, real planner overhead under a seek-per-trigger pattern at
-    * 10^5 segments.
+    * max of per-segment max timestamps. Cached on the bucket's commit-log
+    * view (so keyed to the commit state it was built from) together with
+    * the `.tsidx` (mtime, length) stamp: any mutation commits a new state,
+    * and a `.tsidx` repair replaces that file, so a matching pair means
+    * the index is current. Makes the WARM seek O(log segments) + one
+    * boundary segment walk (a warm commit-log read, one getFileStatus, a
+    * binary search, no O(N) re-parse or map build per call) — the round-13
+    * q154w probe measured the previous per-call O(segments) parse at ~10×
+    * cost per 10× segments, real planner overhead under a
+    * seek-per-trigger pattern at 10^5 segments.
     */
-  private case class SeekIndex(manifestStamp: (Long, Long),
-      tsidxStamp: (Long, Long), segs: Seq[(HPath, Long, Long)],
-      runMax: Array[Long])
+  private case class SeekIndex(tsidxStamp: (Long, Long),
+      segs: Seq[(HPath, Long, Long)], runMax: Array[Long])
 
-  private val seekIndexCache =
-    new BoundedLru[SeekIndex](metaCacheMaxWeight, _.segs.size.toLong)
-
-  private def metaStamp(p: HPath): (Long, Long) =
-    try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-    catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
+  private def metaStamp(p: HPath): (Long, Long) = LogFs.stamp(fs, p).getOrElse((-1L, -1L))
 
   def offsetForTimestamp(tb: TopicBucket, tsMillis: Long): Long =
     offsetForTimestamp(tb, tsMillis, retriesLeft = 3)
 
   private def offsetForTimestamp(tb: TopicBucket, tsMillis: Long,
       retriesLeft: Int): Long = {
-    // stamps taken BEFORE any data is read: a mutation landing between
-    // these stats and the reads below makes the built entry look stale on
-    // its next lookup (the stamp predates the mutation) instead of
-    // freshly-stamping a stale segment list over it
-    val mStamp = metaStamp(manifestPath(tb))
+    val m = meta(tb)
     val tStamp = metaStamp(tsIndexPath(tb))
-    val idx = seekIndexCache.get(tb.path) match {
-      // cache only when BOTH stamps are live (a rename-mode bucket with a
-      // manifest and a populated .tsidx — the steady state; manifest mode
-      // and legacy listing-backed buckets rebuild per call as before)
-      case Some(i) if mStamp._1 >= 0 && tStamp._1 >= 0 &&
-          i.manifestStamp == mStamp && i.tsidxStamp == tStamp => i
-      case _ =>
-        val segs = segments(tb)
+    val cachedSeek = m.seek
+    val idx =
+      if (cachedSeek != null && tStamp._1 >= 0 && cachedSeek.tsidxStamp == tStamp) cachedSeek
+      else {
+        m.overlap.foreach(msg => throw new IllegalStateException(msg))
+        val segs = m.segs
         if (segs.isEmpty) return 0L
         val stats = tsStats(tb, segs) // may backfill + rewrite .tsidx
         val runMax = new Array[Long](segs.size)
         var mx = Long.MinValue
         var i = 0
         segs.foreach { case (p, _, _) =>
-          val m = stats(p.getName)._2
-          if (m > mx) mx = m
+          val mxp = stats(p.getName)._2
+          if (mxp > mx) mx = mxp
           runMax(i) = mx
           i += 1
         }
-        // the .tsidx alone is re-statted (tsStats' repair path legitimately
-        // rewrote it just now); the MANIFEST stamp must still equal the
-        // pre-read one — if it moved, a concurrent append/compaction/
-        // retention mutated the segment list mid-build, so serve the built
-        // index once but do NOT cache it
-        val tStamp2 = metaStamp(tsIndexPath(tb))
-        val built = SeekIndex(mStamp, tStamp2, segs, runMax)
-        if (mStamp._1 >= 0 && tStamp2._1 >= 0 &&
-            metaStamp(manifestPath(tb)) == mStamp)
-          seekIndexCache.put(tb.path, built)
+        // the .tsidx is re-statted (tsStats' repair path legitimately
+        // rewrote it just now); the segment list is the commit state `m`
+        // was built from, so the index belongs to exactly that state
+        val built = SeekIndex(metaStamp(tsIndexPath(tb)), segs, runMax)
+        if (built.tsidxStamp._1 >= 0) m.seek = built
         built
-    }
+      }
     // Binary search the running max (monotone by construction): the first
     // segment where it reaches tsMillis holds the globally-first frame
     // with ts >= tsMillis, whatever the record-timestamp ordering
@@ -1937,10 +1841,10 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
       try SegmentCodec.readHeaders(fs, p)
       catch {
         case e: java.io.FileNotFoundException =>
-          // the boundary segment vanished under a stale cached index
-          // (compaction/retention replaced it after the entry was built):
-          // invalidate and re-resolve from fresh metadata
-          seekIndexCache.remove(tb.path)
+          // the boundary segment vanished under the index (compaction/
+          // retention committed after the state was read): drop it and
+          // re-resolve from fresh metadata
+          m.seek = null
           if (retriesLeft <= 0) throw new java.io.IOException(
             s"seek in ${tb.path} kept resolving to vanished segments — " +
               "metadata churn outran 3 retries", e)
@@ -1960,7 +1864,7 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     // vanished promise means the stats lied (torn cache) — re-repair
     if (answer >= 0) answer
     else {
-      seekIndexCache.remove(tb.path)
+      m.seek = null
       val segs = segments(tb)
       val stats = tsStats(tb, segs.filter(_._1.getName == p.getName))
       if (stats.get(p.getName).exists(_._2 >= tsMillis))
@@ -2002,100 +1906,65 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
         } finally it.close()
       }
 
+  /** Tail append by optimistic commit: read the end offset, write the data
+    * file once under a unique name, and commit it at that offset. Losing
+    * the commit race just means re-reading the new end offset and
+    * re-committing the SAME file under the fresh start — the name's
+    * embedded start is advisory ([[SegmentCodec.dataName]]) while
+    * [[SegMeta]] carries (start, count) authoritatively — so contention
+    * costs a small metadata commit per retry, never a segment rewrite. No
+    * lock is taken: the commit sequence is the exclusion.
+    */
   override def append(tb: TopicBucket, rows: Seq[Payload]): Long = {
     val now = System.currentTimeMillis()
-    val stamped = rows.map(p => (p, now))
+    val cl = commitLog(tb)
+    if (rows.isEmpty) return cl.read().endOffset
     fs.mkdirs(bucketDir(tb))
-    if (manifestCommitMode) {
-      // tail append by optimistic commit: losing the put-if-absent race
-      // just means re-reading the new end offset and retrying — no lock
-      // needed (and none trusted: object-store locks are advisory). The
-      // data file is PUT exactly once: its name's embedded start offset is
-      // advisory ([[uniqueDataName]]) while SegMeta carries (start, count)
-      // authoritatively, so a lost race costs one small manifest PUT — a
-      // metadata-only re-commit under the fresh start — never a segment
-      // DELETE + rewrite (which under the multi-appender pattern would
-      // make contention cost O(segment bytes) per retry).
-      if (rows.isEmpty) return commitLog(tb).read().endOffset
-      val cl = commitLog(tb)
-      var attempt = 0
-      var data: HPath = null
-      while (true) {
-        val st = cl.read()
-        val start = st.endOffset
-        if (data == null) {
-          data = new HPath(bucketDir(tb), uniqueDataName(start, rows.size.toLong))
-          SegmentCodec.write(fs, data, stamped)
-        }
-        if (cl.tryCommit(st, Seq(SegMeta(data.getName, start, rows.size.toLong)), Set.empty).isDefined) {
-          recordTsStats(tb, Map(data.getName -> (now, now)))
-          return start
-        }
-        attempt += 1
-        if (attempt > 200) {
-          // giving up: remove the never-committed data file (vacuum would
-          // sweep it eventually, but a loud failure should not leak)
-          try fs.delete(data, false) catch { case _: java.io.IOException => () }
-          throw new java.io.IOException(
-            s"append to ${tb.path} lost the commit race $attempt times — " +
-              "pathological contention; shard the topic or batch the writes")
-        }
-        Thread.sleep(scala.util.Random.nextInt(1 << math.min(attempt, 6)).toLong)
+    var attempt = 0
+    var data: HPath = null
+    while (true) {
+      val st = cl.read()
+      val start = st.endOffset
+      if (data == null) {
+        data = new HPath(bucketDir(tb), SegmentCodec.dataName(start, rows.size.toLong))
+        SegmentCodec.write(fs, data, rows.map(p => (p, now)))
       }
-      throw new IllegalStateException("unreachable")
-    } else withBucketLock(tb) {
-      // lock: two concurrent appenders must not read the same end offset
-      appendAt(tb, endOffsetListed(tb), stamped)
+      if (cl.tryCommit(st, Seq(SegMeta(data.getName, start, rows.size.toLong)), Set.empty).isDefined) {
+        recordTsStats(tb, Map(data.getName -> (now, now)))
+        return start
+      }
+      attempt += 1
+      if (attempt > 200) {
+        // giving up: remove the never-committed data file (vacuum would
+        // sweep it eventually, but a loud failure should not leak)
+        try fs.delete(data, false) catch { case _: java.io.IOException => () }
+        throw new java.io.IOException(
+          s"append to ${tb.path} lost the commit race $attempt times — " +
+            "pathological contention; shard the topic or batch the writes")
+      }
+      Thread.sleep(scala.util.Random.nextInt(1 << math.min(attempt, 6)).toLong)
     }
+    throw new IllegalStateException("unreachable")
   }
 
-  /** Idempotent positional append: publish a segment starting at `start`.
-    * If that segment already exists WITH THE SAME RECORDS (epoch retry),
-    * the call is a no-op; an existing segment with DIFFERENT content means
-    * the single-writer contract was violated (two holders assigned the
-    * same offsets — e.g. a stalled holder resuming after a stale-lock
-    * steal) and fails loudly — a silent no-op there would VANISH this
-    * call's rows. The identity check is frame-level and
+  /** Idempotent positional append: commit a segment `[start, start+n)`.
+    * If that range is already committed WITH THE SAME RECORDS (epoch
+    * retry), the call is a no-op; a committed range with DIFFERENT content
+    * means the single-writer contract was violated (two holders assigned
+    * the same offsets) and fails loudly — a silent no-op there would
+    * VANISH this call's rows. The identity check is frame-level and
     * timestamp-insensitive ([[SegmentCodec.sameFrames]] semantics) and
-    * costs a segment read only on the exists path (crash retries and
-    * violations), never on the publish fast path. Returns `start`.
+    * costs a segment read only on the replay path. Returns `start`.
     */
   def appendAt(tb: TopicBucket, start: Long, rows: Seq[(Payload, Long)]): Long = {
     if (rows.isEmpty) return start
-    val dir = bucketDir(tb)
-    fs.mkdirs(dir)
+    fs.mkdirs(bucketDir(tb))
+    val published = commitRanges(tb, Seq(Pending(start, rows.size.toLong,
+      q => SegmentCodec.write(fs, q, rows), committed => sameAsRows(committed, rows))))
     // publish-time ts stats: the rows are in hand, so the read side never
     // pays the .tsidx backfill scan for this segment
-    def stamp(name: String): Unit =
-      recordTsStats(tb, Map(name -> (rows.iterator.map(_._2).min,
-        rows.iterator.map(_._2).max)))
-    if (manifestCommitMode) {
-      var published: Option[String] = None
-      val used = manifestPublish(tb, start, rows.size.toLong)(
-        materialize = q => {
-          SegmentCodec.write(fs, q, rows); published = Some(q.getName) })(
-        sameAs = committed => sameAsRows(committed, rows))
-      if (used) published.foreach(stamp)
-      return start
-    }
-    val target = new HPath(dir, SegmentCodec.segmentName(start, rows.size.toLong))
-    def requireSameContent(): Unit =
-      if (!sameAsRows(target, rows))
-        throw new IllegalStateException(
-          s"segment $target already exists with DIFFERENT records — two " +
-            "writers assigned the same offsets (single-writer-per-bucket " +
-            "contract violated); refusing the silent row loss")
-    if (!fs.exists(target)) {
-      val tmp = new HPath(dir, s".tmp-${java.util.UUID.randomUUID()}")
-      SegmentCodec.write(fs, tmp, rows)
-      // no-replace publish on EVERY scheme (see publishNoReplace); a
-      // refusal means a concurrent winner holds the name — benign only
-      // when it carries the same records.
-      if (!publishNoReplace(tmp, target)) {
-        try requireSameContent() finally fs.delete(tmp, false)
-      } else stamp(target.getName)
-    } else requireSameContent()
-    refreshManifest(tb)
+    published.head.foreach(n => recordTsStats(tb, Map(n ->
+      (rows.iterator.map(_._2).min, rows.iterator.map(_._2).max))))
     start
   }
 
@@ -2120,210 +1989,117 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
       } finally it.close()
     } catch { case _: java.io.IOException => false }
 
-  /** Manifest-mode positional publish: make a segment covering
-    * `[start, start+count)` live via a sequenced put-if-absent commit.
-    * `materialize(p)` must produce the frame file at the unique path `p`
-    * (direct write or a move of a staged file — the path is invisible to
-    * readers until committed, so neither needs atomicity); `sameAs(c)`
-    * frame-compares the candidate content against an already-committed
-    * segment file `c`. Returns true when OUR file became the segment,
-    * false when a committed twin already carried the same records (epoch
-    * replay — the materialized file, if any, is cleaned up). Same-range
-    * different-content and overlap violations fail loudly, exactly as the
-    * rename protocol's `appendAt`.
+  /** One offset range to make live: `materialize(p)` must produce the frame
+    * file at the unique bucket path `p` (a direct write or a move of a
+    * staged file — `p` is invisible until committed, so neither needs
+    * atomicity); `sameAs(c)` frame-compares the candidate content with an
+    * already-committed segment file `c`.
     */
-  private def manifestPublish(tb: TopicBucket, start: Long, count: Long)(
-      materialize: HPath => Unit)(sameAs: HPath => Boolean): Boolean = {
+  private case class Pending(start: Long, count: Long,
+      materialize: HPath => Unit, sameAs: HPath => Boolean)
+
+  /** Positional publish of several ranges of one bucket in ONE commit.
+    * Per range: an already-committed twin with the same records is an
+    * epoch replay (the candidate is dropped); same-range different-content
+    * and overlaps fail loudly, before anything is committed. Returns, per
+    * range, the data-file name it committed (None for a replayed twin).
+    * A lost commit race re-reads and re-checks, re-committing the files
+    * already materialized.
+    */
+  private def commitRanges(tb: TopicBucket, ranges: Seq[Pending]): Seq[Option[String]] = {
     val cl = commitLog(tb)
     val dir = bucketDir(tb)
-    var data: Option[HPath] = None
-    def dropData(): Unit =
-      data.foreach(p => try fs.delete(p, false) catch { case _: java.io.IOException => () })
+    val data = new Array[HPath](ranges.size)
+    def dropData(): Unit = data.foreach(p =>
+      if (p != null) try fs.delete(p, false) catch { case _: java.io.IOException => () })
     var attempt = 0
     while (true) {
       val st = cl.read()
-      st.at(start, count) match {
-        case Some(seg) =>
-          val committed = new HPath(dir, seg.name)
-          if (!sameAs(committed)) {
+      val twins = ranges.map { r =>
+        st.at(r.start, r.count).map { seg =>
+          if (!r.sameAs(new HPath(dir, seg.name))) {
             dropData()
             throw new IllegalStateException(
-              s"segment [$start,+$count) in ${tb.path} is committed with " +
+              s"segment [${r.start},+${r.count}) in ${tb.path} is committed with " +
                 "DIFFERENT records — two writers assigned the same offsets " +
                 "(single-writer contract violated); refusing the silent row loss")
           }
-          dropData() // replayed epoch: the committed twin wins
-          return false
-        case None =>
-          st.overlapping(start, count).foreach { seg =>
-            dropData()
-            throw new IllegalStateException(
-              s"range [$start,+$count) for ${tb.path} overlaps committed " +
-                s"segment ${seg.name} [${seg.start},+${seg.count}) — another " +
-                "writer took these offsets; refusing the overlap")
-          }
-          val p = data.getOrElse {
-            val q = new HPath(dir, uniqueDataName(start, count))
-            materialize(q)
-            data = Some(q)
-            q
-          }
-          if (cl.tryCommit(st, Seq(SegMeta(p.getName, start, count)), Set.empty).isDefined)
-            return true
-          attempt += 1
-          if (attempt > 200) {
-            dropData()
-            throw new java.io.IOException(
-              s"publish [$start,+$count) to ${tb.path} lost the commit race " +
-                s"$attempt times — pathological contention")
-          }
-          Thread.sleep(scala.util.Random.nextInt(1 << math.min(attempt, 6)).toLong)
+          seg
+        }
       }
+      ranges.zip(twins).foreach { case (r, twin) =>
+        if (twin.isEmpty) st.overlapping(r.start, r.count).foreach { seg =>
+          dropData()
+          throw new IllegalStateException(
+            s"range [${r.start},+${r.count}) for ${tb.path} overlaps committed " +
+              s"segment ${seg.name} [${seg.start},+${seg.count}) — another " +
+              "writer took these offsets; refusing the overlap")
+        }
+      }
+      val adds = ranges.indices.filter(i => twins(i).isEmpty).map { i =>
+        val r = ranges(i)
+        if (data(i) == null) {
+          val q = new HPath(dir, SegmentCodec.dataName(r.start, r.count))
+          r.materialize(q)
+          data(i) = q
+        }
+        SegMeta(data(i).getName, r.start, r.count)
+      }
+      if (adds.isEmpty || cl.tryCommit(st, adds, Set.empty).isDefined) {
+        // a replayed twin's candidate (materialized on an earlier attempt
+        // of this loop) is not part of the log
+        ranges.indices.foreach { i =>
+          if (twins(i).isDefined && data(i) != null)
+            try fs.delete(data(i), false) catch { case _: java.io.IOException => () }
+        }
+        return ranges.indices.map(i =>
+          if (twins(i).isEmpty) Some(data(i).getName) else None)
+      }
+      attempt += 1
+      if (attempt > 200) {
+        dropData()
+        throw new java.io.IOException(
+          s"publish of ${ranges.size} range(s) to ${tb.path} lost the commit " +
+            s"race $attempt times — pathological contention")
+      }
+      Thread.sleep(scala.util.Random.nextInt(1 << math.min(attempt, 6)).toLong)
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** Publish a staged frame file as the segment `[start, start+count)` of
-    * `tb` — the connector's driver-side commit step, mode-dispatched:
-    *
-    *   - '''rename mode''': exists-check + atomic no-replace publish under
-    *     the caller-held bucket lock (the historical protocol: an existing
-    *     same-name segment is frame-compared — idempotent epoch replay is a
-    *     no-op, a foreign writer fails loudly).
-    *   - '''manifest mode''': the staged file is moved (copy-rename is fine;
-    *     the unique name is invisible until committed) into the bucket and
-    *     made live by a put-if-absent [[CommitLog]] commit; replay identity
-    *     and foreign-writer refusal come from the committed state instead
-    *     of file names.
-    *
-    * The staged file is always consumed: linked/renamed into the log,
-    * or deleted when a committed twin already carries the records.
+  /** Publish staged frame files as segments of `tb` — the connector's
+    * driver-side commit step. Each `(start, count, staged)` is moved into
+    * the bucket under a unique name (a rename within one filesystem; the
+    * name is invisible until committed, so a copy-rename is fine too),
+    * and ALL of them become live in ONE commit. Replay identity and
+    * foreign-writer refusal follow [[appendAt]]: a range already committed
+    * with the same frames consumes its staged file as a no-op; different
+    * frames or an overlap fail loudly. Returns, per file, the committed
+    * data-file name (None for a replayed twin). Every staged file is
+    * consumed: moved into the log, or deleted.
     */
-  def publishStaged(tb: TopicBucket, start: Long, count: Long,
-      staged: HPath): Option[String] = {
-    if (manifestCommitMode) {
-      var src = staged
-      var moved = false
-      var published: Option[String] = None
-      val used = manifestPublish(tb, start, count)(
+  def publishStaged(tb: TopicBucket,
+      files: Seq[(Long, Long, HPath)]): Seq[Option[String]] = {
+    if (files.isEmpty) return Seq.empty
+    fs.mkdirs(bucketDir(tb))
+    val current = files.map(_._3).toArray
+    val published = commitRanges(tb, files.indices.map { i =>
+      val (start, count, _) = files(i)
+      Pending(start, count,
         materialize = q => {
-          if (!fs.rename(src, q))
-            throw new java.io.IOException(s"stage move $src -> $q failed")
-          src = q; moved = true; published = Some(q.getName)
-        })(
-        sameAs = committed => SegmentCodec.sameFrames(fs, committed, src))
-      if (!used && !moved) // never materialized: original staged file remains
-        try fs.delete(staged, false) catch { case _: java.io.IOException => () }
-      return if (used) published else None
+          if (!fs.rename(current(i), q))
+            throw new java.io.IOException(s"stage move ${current(i)} -> $q failed")
+          current(i) = q
+        },
+        sameAs = committed => SegmentCodec.sameFrames(fs, committed, current(i)))
+    })
+    // a replayed twin never moved its staged file: drop the original
+    files.indices.foreach { i =>
+      if (published(i).isEmpty && current(i) == files(i)._3)
+        try fs.delete(files(i)._3, false) catch { case _: java.io.IOException => () }
     }
-    val target = new HPath(bucketDir(tb), SegmentCodec.segmentName(start, count))
-    // Exists-check + ATOMIC no-replace publish under the bucket lock. An
-    // existing target is either this epoch's own earlier (crashed) publish
-    // — frame identity proves it, no-op — or a foreign writer outside the
-    // lock protocol: fail loudly. The publish itself refuses an existing
-    // target on EVERY rename-mode scheme (local: fail-if-exists hard link;
-    // HDFS: namenode-serialized rename refusal), so even the
-    // two-live-holders corner the stale-steal lock protocol admits
-    // surfaces as a loud refusal, never a silent overwrite.
-    if (fs.exists(target)) {
-      if (SegmentCodec.sameFrames(fs, target, staged))
-        fs.delete(staged, false) // idempotent re-publish
-      else throw new IllegalStateException(
-        s"segment $target exists with different content — " +
-          "a writer is publishing outside the bucket lock")
-    } else if (!publishNoReplace(staged, target)) {
-      // no-replace refusal: target appeared between check and publish
-      if (fs.exists(target) && SegmentCodec.sameFrames(fs, target, staged))
-        fs.delete(staged, false)
-      else throw new IllegalStateException(
-        s"publish $staged -> $target refused — " +
-          "a writer is publishing outside the bucket lock")
-    }
-    Some(target.getName)
+    published
   }
-
-  /** Publish `staged` at `target` with ATOMIC NO-REPLACE semantics on every
-    * filesystem. Local goes through `java.nio` `Files.createLink` — an
-    * atomic fail-if-exists hard link (POSIX `rename` REPLACES an existing
-    * target, which would let the one unavoidable two-live-holders corner of
-    * the stale-steal lock protocol — a holder stalled past LockStaleMs
-    * resuming after its lock was stolen — silently overwrite the new
-    * holder's already-committed segment; the link instead refuses, and the
-    * caller fails loudly or no-ops on frame identity). HDFS relies on
-    * rename's namenode-serialized refusal of an existing target. Mirrors
-    * the local/nio split of [[createLockExclusive]].
-    *
-    * Returns false when the target already exists (or appeared
-    * concurrently) — the CALLER decides, via frame identity, whether that
-    * is an idempotent re-publish or a foreign writer.
-    *
-    * Portability: local mounts WITHOUT hard-link support (FAT/exFAT, some
-    * network/container mounts) fall back to exists-check + rename — the
-    * pre-hard-link protocol, whose check-then-act window is covered by the
-    * bucket lock everywhere except the stale-steal two-holders corner (see
-    * above). The fallback decision is sticky per log instance (the mount
-    * doesn't change under us) so the failed-link probe costs once.
-    */
-  @volatile private var localLinksUnsupported = false
-
-  /** The raw hard-link syscall — a seam so tests can inject the
-    * link-unsupported failures real FAT/exFAT/CIFS mounts produce.
-    */
-  protected def nioCreateLink(target: java.nio.file.Path,
-      source: java.nio.file.Path): Unit =
-    java.nio.file.Files.createLink(target, source)
-
-  /** Does this failure mean "the mount cannot hard-link" (FAT/exFAT/CIFS)?
-    * The JDK surfaces that as `UnsupportedOperationException` only when the
-    * PROVIDER lacks links; a POSIX provider over a link-less mount throws
-    * `FileSystemException` with the errno text (EPERM / EOPNOTSUPP /
-    * ENOTSUP) instead — both must trip the sticky rename fallback, or the
-    * documented target mounts would fail every publish forever.
-    */
-  private def linkUnsupported(e: Throwable): Boolean = e match {
-    case _: UnsupportedOperationException => true
-    case fse: java.nio.file.FileSystemException =>
-      val reason = (Option(fse.getReason) ++ Option(fse.getMessage))
-        .mkString(" ").toLowerCase(java.util.Locale.ROOT)
-      reason.contains("not permitted") || reason.contains("not supported") ||
-        reason.contains("unsupported") || reason.contains("eperm") ||
-        reason.contains("eopnotsupp") || reason.contains("enotsup")
-    case _ => false
-  }
-  def publishNoReplace(staged: HPath, target: HPath): Boolean =
-    if (isLocal) {
-      // qualify first: connector-staged paths arrive as bare strings
-      val s = toNio(fs.makeQualified(staged))
-      val t = toNio(fs.makeQualified(target))
-      def renameFallback(): Boolean =
-        if (java.nio.file.Files.exists(t)) false
-        else
-          try { java.nio.file.Files.move(s, t); true } // no REPLACE_EXISTING
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      if (localLinksUnsupported) renameFallback()
-      else try {
-        nioCreateLink(t, s)
-        // staged copy is now redundant; a failed cleanup must not fail the
-        // already-atomic publish (dot-prefixed leftovers are invisible to
-        // segment listing)
-        try java.nio.file.Files.deleteIfExists(s)
-        catch { case _: java.io.IOException => () }
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case e @ (_: UnsupportedOperationException | _: java.nio.file.FileSystemException)
-            if linkUnsupported(e) =>
-          localLinksUnsupported = true
-          log.warn("hard links unsupported on this local mount " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}); segment " +
-            "publish degrades to exists-check + rename (the stale-steal " +
-            "two-live-holders corner loses its atomic refusal — see " +
-            "publishNoReplace scaladoc)")
-          renameFallback()
-      }
-    } else fs.rename(staged, target)
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   override def range(tb: TopicBucket, from: Long, until: Long): Seq[LogRecord] = {
     val hi = math.min(until, size(tb))
@@ -2431,43 +2207,14 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   }
 
   /** Shared retention walk: drop segments matching `expired`, never the
-    * newest segment of a bucket (size() derives from segment names, so an
-    * empty bucket would restart offsets at 0 and break monotonicity). The
-    * manifest is rewritten WITHOUT the expired segments before any file is
-    * deleted, so manifest-backed readers never plan a ghost segment.
+    * newest segment of a bucket (an emptied bucket would restart offsets at
+    * 0 and break monotonicity). The removal is committed first — sequenced
+    * put-if-absent, so it can never race a publish into a lost update —
+    * THEN the data files are deleted: readers resolve the committed state
+    * and never plan a ghost segment. No lock is needed; a lost commit race
+    * (a concurrent publish advanced the version) re-reads and retries.
     */
   private def truncateWhere(topic: String)(
-      expired: (TopicBucket, (FileStatus, Long, Long)) => Boolean): Int = {
-    if (manifestCommitMode) return truncateWhereManifest(topic)(expired)
-    var deleted = 0
-    // Per-bucket lock: serializes with publishes, whose refreshManifest
-    // would otherwise snapshot the directory between our manifest rewrite
-    // and the deletes and reinstate ghost entries.
-    buckets(topic).foreach { tb =>
-      withBucketLock(tb) {
-        val segs = segmentStatusRaw(tb)
-        checkNoOverlap(tb, segs.map { case (st, s, c) => (st.getPath, s, c) })
-        val toDelete = segs.dropRight(1).filter(expired(tb, _))
-        if (toDelete.nonEmpty) {
-          val keep = segs.filterNot(toDelete.contains)
-          writeFileAtomic(manifestPath(tb), keep.map(_._1.getPath.getName)
-            .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          toDelete.foreach { case (st, _, _) =>
-            if (fs.delete(st.getPath, false)) deleted += 1
-          }
-        }
-      }
-    }
-    deleted
-  }
-
-  /** Manifest-mode retention: commit the removal (put-if-absent sequenced,
-    * so it can never race a publish into a lost update), THEN delete the
-    * data files — readers resolve the committed state first and never plan
-    * a ghost segment. No lock is needed or trusted; a lost commit race
-    * (concurrent publish advanced the version) re-reads and retries.
-    */
-  private def truncateWhereManifest(topic: String)(
       expired: (TopicBucket, (FileStatus, Long, Long)) => Boolean): Int = {
     var deleted = 0
     buckets(topic).foreach { tb =>
@@ -2483,8 +2230,7 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
             val withStatus = st.segs.map { s =>
               (s, (fs.getFileStatus(new HPath(dir, s.name)), s.start, s.count))
             }
-            // never the newest segment: an emptied bucket would restart
-            // offsets at 0 and break monotonicity (same rule as rename mode)
+            // never the newest segment (see above)
             val toDelete = withStatus.dropRight(1).filter { case (_, view) => expired(tb, view) }
             if (toDelete.isEmpty) done = true
             else if (cl.tryCommit(st, Seq.empty, toDelete.map(_._1.name).toSet).isDefined) {
@@ -2515,7 +2261,7 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * leaving offsets, the retention floor, and consumer cursors untouched —
     * the cure for streaming-sink segment proliferation (one segment per
     * epoch per bucket ≈ 10^4 tiny files/bucket/hour at high trigger rates,
-    * which keeps PLANNING cheap via the manifest but proliferates one
+    * which keeps PLANNING cheap via the commit log but proliferates one
     * input partition per tiny segment). Returns the number of segments
     * merged away.
     *
@@ -2523,35 +2269,26 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * segment is the plain byte concatenation of its members — the merge
     * streams bytes, never decoding frames or holding a segment in memory.
     *
-    * Protocol per bucket:
-    *   - '''rename mode''' (under the bucket lock): heal any crashed prior
-    *     compaction (a segment fully covered by a larger one is a
-    *     pre-merge member — drop it from the manifest, then delete);
-    *     stage each merged file, publish it no-replace (an existing
-    *     same-name target from a crashed attempt is byte-identical by
-    *     construction), rewrite the manifest atomically WITHOUT the
-    *     members, then delete the member files. Readers plan from the
-    *     manifest, so they see either the old set or the new set, never a
-    *     mix; the listing's transient overlap is confined to the window
-    *     before the manifest swap and healed on the next pass.
-    *   - '''manifest mode''': write merged data files under unique names
-    *     (invisible until committed), then ONE put-if-absent commit swaps
-    *     members for merged atomically; member files are deleted after
-    *     the commit. A lost commit race retries on fresh state.
+    * Protocol per bucket: write merged data files under unique names
+    * (invisible until committed), then ONE put-if-absent commit swaps
+    * members for merged atomically; member files are deleted after the
+    * commit. Readers see either the old set or the new set, never a mix,
+    * and a crash before the commit leaves only unreferenced files for
+    * [[vacuum]]. A lost commit race retries on fresh state.
     *
     * A reader that planned input partitions against the OLD segment files
     * re-resolves by OFFSET RANGE when the planned file is gone
     * ([[graft.connector.RipplePartitionReader]]) — offsets are the stable
     * identity; file names are not.
     *
-    * '''Where the bytes move''' (round 14): both modes are split into
-    * plan (metadata, locked) → concat (data, UNLOCKED) → commit
-    * (metadata, locked/put-if-absent), and the concat step is a strategy:
+    * '''Where the bytes move''' (round 14): compaction is split into
+    * plan (metadata) → concat (data) → commit (metadata, put-if-absent),
+    * and the concat step is a strategy:
     * the default [[localConcat]] streams in the calling JVM (counted in
     * [[FileTopicLog.localConcatBytes]]); the connector passes a runner
     * that executes every merge above a byte threshold as ONE Spark job —
     * tasks read members and write the merged file, the driver touches
-    * only manifests ([[graft.connector.DistributedConcat]]). At the
+    * only the commit log ([[graft.connector.DistributedConcat]]). At the
     * 100 TB design point this is the difference between a driver that
     * re-copies the stream's whole byte throughput once per merge
     * generation and one that does O(segments) metadata work.
@@ -2559,12 +2296,11 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
   def compactSegments(topic: String, targetBytes: Long = 128L << 20,
       minSegments: Int = 2,
       onlyBuckets: Option[Set[String]] = None,
-      concat: Seq[ConcatTask] => Unit = null): Int = {
+      concat: Seq[ConcatTask] => Map[String, String] = null): Int = {
     require(minSegments >= 2, "minSegments < 2 would rewrite single segments")
     val mover = if (concat == null) localConcat _ else concat
     val tbs = buckets(topic).filter(tb => onlyBuckets.forall(_.contains(tb.bucket)))
-    if (manifestCommitMode) compactManifestAll(tbs, targetBytes, minSegments, mover)
-    else compactRenameAll(tbs, targetBytes, minSegments, mover)
+    compactAll(tbs, targetBytes, minSegments, mover)
   }
 
   /** Default byte-mover for [[compactSegments]]: stream-concatenate in the
@@ -2573,10 +2309,12 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * prove a distributed compaction moved zero data bytes through the
     * driver.
     */
-  def localConcat(tasks: Seq[ConcatTask]): Unit = tasks.foreach { t =>
+  def localConcat(tasks: Seq[ConcatTask]): Map[String, String] = tasks.flatMap { t =>
     FileTopicLog.localConcatBytes.addAndGet(t.bytes)
-    try concatSegments(t.members.map(new HPath(_)), new HPath(t.out))
-    catch {
+    try {
+      concatSegments(t.members.map(new HPath(_)), new HPath(t.out))
+      Some(t.out -> t.out)
+    } catch {
       case _: java.io.FileNotFoundException =>
         // a member vanished mid-copy — the concat phase holds NO bucket
         // lock, so retention or a foreign compactor can legitimately
@@ -2585,8 +2323,9 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
         // every other bucket's merge with it.
         try fs.delete(new HPath(t.out), false)
         catch { case _: java.io.IOException => () }
+        None
     }
-  }
+  }.toMap
 
   /** Key-based log compaction — Kafka `cleanup.policy=compact` parity:
     * retain the LATEST record per `id` per bucket, at its ORIGINAL offset
@@ -2599,13 +2338,15 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * cannot express compaction at all (retention itself is an unimplemented
     * TODO, `internal/broker/consumer/server/core.go:45`).
     *
-    * Same 3-phase shape as [[compactSegments]] — plan under the bucket
-    * lock (metadata only), REWRITE the bytes with no lock held (`rewrite`
-    * strategy: driver-local default, or a Spark job via the connector's
-    * distributed runner), validate + publish + manifest-swap under the
-    * lock. A member vanishing mid-rewrite (racing retention) drops that
-    * bucket's plan; a crash after publish heals forward deterministically
-    * ([[healCovered]] keeps the sparse product).
+    * Same 3-phase shape as [[compactSegments]] — plan (metadata only),
+    * REWRITE the bytes (`rewrite` strategy: driver-local default, or a
+    * Spark job via the connector's distributed runner), then ONE commit
+    * swapping the members for the sparse product. Where rename is atomic
+    * the product is first renamed to carry its exact retained count
+    * (`k<rows>`, [[SegmentCodec.sparseName]]); object stores keep the
+    * flag-only name. A member vanishing mid-rewrite (racing retention)
+    * loses the commit and replans; a crash before the commit leaves only
+    * an unreferenced file.
     *
     * `minStartByBucket` clamps the compaction to offsets AT OR ABOVE the
     * given floor per bucket — the snapshot-pin composition: a live pin
@@ -2630,7 +2371,7 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * by sparse products + healed).
     */
   def compactKeyed(topic: String, onlyBuckets: Option[Set[String]] = None,
-      rewrite: Seq[KeyedTask] => Unit = null, codec: Int = Codecs.None,
+      rewrite: Seq[KeyedTask] => Map[String, String] = null, codec: Int = Codecs.None,
       minStartByBucket: Map[String, Long] = Map.empty,
       keyHeap: Int = SegmentCodec.DefaultKeyHeapEntries,
       tombstoneRetentionMs: Long = SegmentCodec.DefaultTombstoneRetentionMs): Int = {
@@ -2642,42 +2383,39 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     require(tombstoneRetentionMs >= 0,
       s"ripple: tombstoneRetentionMs must be >= 0, got $tombstoneRetentionMs")
     val floor = System.currentTimeMillis() - tombstoneRetentionMs
-    if (manifestCommitMode)
-      compactKeyedManifest(tbs, mover, codec, minStartByBucket, keyHeap, floor)
-    else compactKeyedRename(tbs, mover, codec, minStartByBucket, keyHeap, floor)
+    compactKeyedAll(tbs, mover, codec, minStartByBucket, keyHeap, floor)
   }
 
   /** Default rewrite strategy for [[compactKeyed]]: decode in the calling
     * JVM. Member-vanished tolerance mirrors [[localConcat]].
     */
-  def localKeyed(tasks: Seq[KeyedTask]): Unit = { localKeyedCounted(tasks); () }
+  def localKeyed(tasks: Seq[KeyedTask]): Map[String, String] = localKeyedCounted(tasks)._1
 
   /** [[localKeyed]], returning the number of spill runs the tasks wrote —
     * per-call proof for callers asserting the bounded path engaged for
     * THEIR rewrite (the probe cell, specs), exact even when concurrent
     * compactions share the JVM.
     */
-  def localKeyedCounted(tasks: Seq[KeyedTask]): Long = tasks.map { t =>
-    try {
-      val out = new HPath(t.out)
-      val r = SegmentCodec.rewriteLatestPerKey(fs,
-        t.members.map { case (p, s) => (new HPath(p), s) }, out, t.codec,
-        t.maxKeys, t.tombstoneFloorMs)
-      SegmentCodec.writeStatSidecar(fs, out, r.rows, r.minTs, r.maxTs)
-      r.spillRuns
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        try fs.delete(new HPath(t.out), false)
-        catch { case _: java.io.IOException => () }
-        0L
+  def localKeyedCounted(tasks: Seq[KeyedTask]): (Map[String, String], Long) = {
+    val done = tasks.flatMap { t =>
+      try {
+        val out = new HPath(t.out)
+        val r = SegmentCodec.rewriteLatestPerKey(fs,
+          t.members.map { case (p, s) => (new HPath(p), s) }, out, t.codec,
+          t.maxKeys, t.tombstoneFloorMs)
+        SegmentCodec.writeStatSidecar(fs, out, r.rows, r.minTs, r.maxTs)
+        Some((t.out, r.spillRuns))
+      } catch {
+        case _: java.io.FileNotFoundException =>
+          try fs.delete(new HPath(t.out), false)
+          catch { case _: java.io.IOException => () }
+          None
+      }
     }
-  }.sum
+    (done.map { case (out, _) => out -> out }.toMap, done.map(_._2).sum)
+  }
 
-  private case class KeyedPlan(tb: TopicBucket, healed: Int,
-      members: Seq[(HPath, Long, Long, Long)], staged: HPath,
-      start: Long, span: Long, agingOk: Boolean)
-
-  /** Eligible members of one bucket's keyed compaction: the healed,
+  /** Eligible members of one bucket's keyed compaction: the
     * clamp-filtered suffix. None when there is nothing to do (empty, or a
     * single already-sparse segment — its keys are unique by construction).
     */
@@ -2689,165 +2427,76 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     else Some(elig)
   }
 
-  private def compactKeyedRename(tbs: Seq[TopicBucket],
-      rewrite: Seq[KeyedTask] => Unit, codec: Int,
+  private def compactKeyedAll(tbs: Seq[TopicBucket],
+      rewrite: Seq[KeyedTask] => Map[String, String], codec: Int,
       clamps: Map[String, Long], keyHeap: Int, tombFloor: Long): Int = {
-    val plans = tbs.map { tb =>
-      withBucketLock(tb) {
-        val (raw, healed) = healCovered(tb)
-        val clamp = clamps.getOrElse(tb.bucket, Long.MinValue)
-        val members = keyedMembers(raw, clamp)
-        KeyedPlan(tb, healed, members.getOrElse(Seq.empty),
-          new HPath(bucketDir(tb), s".tmp-${java.util.UUID.randomUUID()}"),
-          members.map(_.head._2).getOrElse(0L),
-          members.map(m => m.last._2 + m.last._3 - m.head._2).getOrElse(0L),
-          agingOk = raw.forall(_._2 >= clamp))
+    case class KeyedPlan(tb: TopicBucket,
+        members: Seq[(HPath, Long, Long, Long)], add: SegMeta, agingOk: Boolean)
+    val plans = tbs.flatMap { tb =>
+      val dir = bucketDir(tb)
+      val segs = commitLog(tb).read().segs.map { s =>
+        val p = new HPath(dir, s.name)
+        (p, s.start, s.count,
+          try fs.getFileStatus(p).getLen
+          catch { case _: java.io.FileNotFoundException => -1L })
+      }
+      val clamp = clamps.getOrElse(tb.bucket, Long.MinValue)
+      // a member vanished under a racing retention: skip this pass
+      if (segs.exists(_._4 < 0)) None
+      else keyedMembers(segs, clamp).map { ms =>
+        val start = ms.head._2
+        val span = ms.last._2 + ms.last._3 - start
+        // flag-only sparse name: it is fixed before the rewrite knows the
+        // retained count; the commit below renames it where that is cheap
+        KeyedPlan(tb, ms, SegMeta(SegmentCodec.sparseName(start, span, None),
+          start, span), agingOk = segs.forall(_._2 >= clamp))
       }
     }
-    val work = plans.filter(_.members.nonEmpty)
     // tombstone aging only when the plan covers the bucket's WHOLE
     // retained range: a pin-clamped (suffix-only) compaction that aged a
     // delete out could expose a stale pre-pin value as latest-per-key
     // once the pin releases — the delete would be silently lost. Clamped
     // plans ship a disabled floor; the tombstone waits for a full pass.
-    rewrite(work.map(p => KeyedTask(
-      p.members.map(m => (m._1.toString, m._2)), p.staged.toString,
+    val written = rewrite(plans.map(p => KeyedTask(
+      p.members.map(m => (m._1.toString, m._2)),
+      new HPath(bucketDir(p.tb), p.add.name).toString,
       p.members.map(_._4).sum, codec, keyHeap,
       if (p.agingOk) tombFloor else Long.MinValue)))
     plans.map { p =>
-      if (p.members.isEmpty) p.healed else p.healed + commitKeyedRename(p)
+      val dir = bucketDir(p.tb)
+      val product = written.get(new HPath(dir, p.add.name).toString).map(new HPath(_))
+      // (rows, minTs, maxTs) of the product, None when the rewrite dropped
+      // it (a member vanished under it): the rewrite task ships them in a
+      // sidecar so the driver never header-walks the product; the walk is
+      // the fallback (the sidecar is never load-bearing)
+      val stats = product.flatMap { out =>
+        try {
+          fs.getFileStatus(out)
+          Some(SegmentCodec.readStatSidecar(fs, out)
+            .getOrElse(SegmentCodec.statFrames(fs, out)))
+        } catch { case _: java.io.IOException => None }
+      }
+      product.foreach { out =>
+        try fs.delete(SegmentCodec.statSidecar(out), false)
+        catch { case _: java.io.IOException => () }
+      }
+      // exact retained count in the name where a rename is atomic and cheap
+      // (DESCRIBE rows, the metadata COUNT(*), the dirty-ratio gate read
+      // it); object stores keep the flag-only name
+      val add = (product, stats) match {
+        case (Some(out), Some((rows, _, _))) if renameAtomic =>
+          val named = SegmentCodec.sparseName(p.add.start, p.add.count, Some(rows))
+          p.add.copy(name =
+            if (fs.rename(out, new HPath(dir, named))) named else out.getName)
+        case (Some(out), _) => p.add.copy(name = out.getName)
+        case _ => p.add
+      }
+      val done = commitSwaps(p.tb,
+        Seq((p.members.map(_._1.getName), add, stats.isDefined)))
+      for (_ <- done; (_, minTs, maxTs) <- stats if minTs <= maxTs)
+        recordTsStats(p.tb, Map(add.name -> (minTs, maxTs)))
+      done.map(_._1.size).sum
     }.sum
-  }
-
-  private def commitKeyedRename(plan: KeyedPlan): Int = withBucketLock(plan.tb) {
-    val dir = bucketDir(plan.tb)
-    def dropStaged(): Unit = {
-      try fs.delete(plan.staged, false) catch { case _: java.io.IOException => () }
-      try fs.delete(SegmentCodec.statSidecar(plan.staged), false)
-      catch { case _: java.io.IOException => () }
-    }
-    val currentNames = segmentStatusRaw(plan.tb).map(_._1.getPath.getName).toSet
-    // the unlocked rewrite drops its output when a member vanishes under
-    // it; a vanished member with output present means retention ran AFTER
-    // the rewrite finished — committing would resurrect truncated rows.
-    // The staged file itself must also exist: a sidecar without its
-    // product (partial crash cleanup) must discard, not publish a ghost.
-    if (!plan.members.forall(m => currentNames.contains(m._1.getName)) ||
-        !(try fs.exists(plan.staged) catch { case _: java.io.IOException => false })) {
-      dropStaged(); return 0
-    }
-    // the rewrite task shipped (rows, minTs, maxTs) in a sidecar so the
-    // driver never header-walks the compacted product; fall back to the
-    // walk when it is missing/torn (the sidecar is never load-bearing)
-    val (rows, minTs, maxTs) =
-      SegmentCodec.readStatSidecar(fs, plan.staged).getOrElse {
-        try SegmentCodec.statFrames(fs, plan.staged)
-        catch { case _: java.io.IOException => dropStaged(); return 0 }
-      }
-    try fs.delete(SegmentCodec.statSidecar(plan.staged), false)
-    catch { case _: java.io.IOException => () }
-    val target = new HPath(dir,
-      SegmentCodec.segmentNameSparse(plan.start, plan.span, rows))
-    if (!publishNoReplace(plan.staged, target)) {
-      // a crashed attempt already published this exact product: verify
-      if (!SegmentCodec.sameFrames(fs, target, plan.staged))
-        throw new IllegalStateException(
-          s"keyed-compaction target $target exists with foreign content")
-      dropStaged()
-    }
-    val memberNames = plan.members.map(_._1.getName).toSet
-    val names = (currentNames -- memberNames + target.getName).toSeq.sorted
-    writeFileAtomic(manifestPath(plan.tb),
-      names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (minTs <= maxTs)
-      recordTsStats(plan.tb, Map(target.getName -> (minTs, maxTs)))
-    memberNames.foreach { n =>
-      try fs.delete(new HPath(dir, n), false)
-      catch { case _: java.io.IOException => () } }
-    memberNames.size
-  }
-
-  private def compactKeyedManifest(tbs: Seq[TopicBucket],
-      rewrite: Seq[KeyedTask] => Unit, codec: Int,
-      clamps: Map[String, Long], keyHeap: Int, tombFloor: Long): Int = {
-    var total = 0
-    case class MPlan(tb: TopicBucket, st: CommitState,
-        members: Seq[(HPath, Long, Long, Long)], add: SegMeta,
-        agingOk: Boolean)
-    def plan(tb: TopicBucket): Option[MPlan] = {
-      val dir = bucketDir(tb)
-      val st = commitLog(tb).read()
-      val segs = st.segs.map { s =>
-        val p = new HPath(dir, s.name)
-        (p, s.start, s.count,
-          try fs.getFileStatus(p).getLen
-          catch { case _: java.io.FileNotFoundException => return None })
-      }
-      val clamp = clamps.getOrElse(tb.bucket, Long.MinValue)
-      keyedMembers(segs, clamp).map { ms =>
-        val start = ms.head._2
-        val span = ms.last._2 + ms.last._3 - start
-        // flag-only sparse marker: the data name is fixed before the
-        // rewrite knows the retained count (a rename would be an
-        // object-store copy); read planners treat unknown-rows sparse
-        // segments conservatively
-        MPlan(tb, st, ms, SegMeta(
-          f"data-$start%020d-$span%010d-k-${java.util.UUID.randomUUID()}.log",
-          start, span), agingOk = segs.forall(_._2 >= clamp))
-      }
-    }
-    var pending = tbs.flatMap(plan)
-    val attempts = mutable.Map.empty[String, Int].withDefaultValue(0)
-    while (pending.nonEmpty) {
-      // same aging guard as the rename mode: clamped (suffix-only) plans
-      // must not age deletes out while older generations survive below
-      rewrite(pending.map(p => KeyedTask(
-        p.members.map(m => (m._1.toString, m._2)),
-        new HPath(bucketDir(p.tb), p.add.name).toString,
-        p.members.map(_._4).sum, codec, keyHeap,
-        if (p.agingOk) tombFloor else Long.MinValue)))
-      val results = pending.map { p =>
-        val dir = bucketDir(p.tb)
-        val out = new HPath(dir, p.add.name)
-        val staged =
-          try { fs.getFileStatus(out); true }
-          catch { case _: java.io.FileNotFoundException => false }
-        val removes = p.members.map(_._1.getName).toSet
-        if (staged &&
-            commitLog(p.tb).tryCommit(p.st, Seq(p.add), removes).isDefined) {
-          val (_, minTs, maxTs) =
-            SegmentCodec.readStatSidecar(fs, out).getOrElse(
-              SegmentCodec.statFrames(fs, out))
-          try fs.delete(SegmentCodec.statSidecar(out), false)
-          catch { case _: java.io.IOException => () }
-          if (minTs <= maxTs)
-            recordTsStats(p.tb, Map(p.add.name -> (minTs, maxTs)))
-          removes.foreach { n =>
-            try fs.delete(new HPath(dir, n), false)
-            catch { case _: java.io.IOException => () } }
-          p -> Some(removes.size)
-        } else {
-          try fs.delete(out, false) catch { case _: java.io.IOException => () }
-          try fs.delete(SegmentCodec.statSidecar(out), false)
-          catch { case _: java.io.IOException => () }
-          p -> None
-        }
-      }
-      total += results.flatMap(_._2).sum
-      val lost = results.collect { case (p, None) => p.tb }
-      if (lost.isEmpty) pending = Seq.empty
-      else {
-        lost.foreach(tb => attempts(tb.path) += 1)
-        val over = lost.filter(tb => attempts(tb.path) > 20)
-        if (over.nonEmpty) throw new java.io.IOException(
-          s"keyed compaction on ${over.map(_.path).mkString(", ")} lost the " +
-            s"commit race ${over.map(tb => attempts(tb.path)).max} times")
-        val worst = lost.map(tb => attempts(tb.path)).max
-        Thread.sleep(scala.util.Random.nextInt(1 << math.min(worst, 6)).toLong)
-        pending = lost.flatMap(plan)
-      }
-    }
-    total
   }
 
   /** Contiguous runs of at least `minSegments` segments whose combined
@@ -2891,144 +2540,6 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     } finally o.close()
   }
 
-  /** A planned rename-mode bucket compaction: the metadata halves run
-    * under the bucket lock; the byte movement runs BETWEEN them with no
-    * lock held.
-    */
-  private case class RenamePlan(tb: TopicBucket, healed: Int,
-      groups: Seq[Seq[(HPath, Long, Long, Long)]], staged: Seq[HPath])
-
-  private def compactRenameAll(tbs: Seq[TopicBucket], targetBytes: Long,
-      minSegments: Int, concat: Seq[ConcatTask] => Unit): Int = {
-    // Phase 1 (per bucket, under its lock): heal + plan — metadata only.
-    val plans = tbs.map(planRename(_, targetBytes, minSegments))
-    // Phase 2 (NO lock held): move the data bytes — ALL buckets' merges in
-    // one call, so a distributed strategy runs them as one Spark job
-    // instead of a driver-sequential per-bucket loop. No lock is held, so
-    // a slow merge can never let the bucket lock's TTL lapse mid-
-    // critical-section (the old inline concat needed touchBucketLock for
-    // exactly that).
-    concat(plans.flatMap { p =>
-      p.groups.zip(p.staged).map { case (g, out) =>
-        ConcatTask(g.map(_._1.toString), out.toString, g.map(_._4).sum) }
-    })
-    // Phase 3 (per bucket, under its lock): validate against CURRENT
-    // state, publish, swap the manifest — metadata only.
-    plans.map(commitRename).sum
-  }
-
-  /** Heal a crashed prior compaction (caller holds the bucket lock): a
-    * segment whose range sits fully inside a LARGER one is a pre-merge
-    * member (only compaction creates covering segments — publishes refuse
-    * overlaps); byte identity over the shared range holds by construction
-    * for byte-concat merges, and a key-compacted covering segment is the
-    * compaction's intended result. Manifest first, then delete. Returns
-    * (surviving segments, healed count).
-    *
-    * One sorted sweep, not all-pairs: in (start asc, count desc) order a
-    * segment is covered iff some EARLIER-sorted segment's end reaches its
-    * end (earlier starts are <= its start, and strictly-larger follows).
-    * Identical ranges CAN coexist in exactly one shape since key
-    * compaction landed: a crashed single-member compactKeyed leaves the
-    * sparse product next to its dense member under a DIFFERENT name
-    * (same-name publish is still refused) — the tie-break keeps the
-    * SPARSE one, deterministically completing the crashed compaction
-    * (keeping the dense one would roll it back; both are consistent log
-    * states, but determinism beats listing-order luck). The all-pairs
-    * form was the probe-measured super-linear term of the
-    * 2×10^4-segment compaction cell (round 13): 4×10^8 predicate
-    * evaluations before a single byte moved.
-    */
-  private def healCovered(tb: TopicBucket): (Seq[(HPath, Long, Long, Long)], Int) = {
-    var raw = segmentStatusRaw(tb).map { case (st, s, c) => (st.getPath, s, c, st.getLen) }
-    val coveredSet = {
-      val b = Set.newBuilder[HPath]
-      var maxEnd = Long.MinValue
-      raw.sortBy { case (p, s, c, _) =>
-        (s, -c, if (SegmentCodec.isSparse(p.getName)) 0 else 1)
-      }.foreach { case (p, s, c, _) =>
-        val end = s + c
-        if (maxEnd >= end) b += p
-        else maxEnd = end
-      }
-      b.result()
-    }
-    var healed = 0
-    if (coveredSet.nonEmpty) {
-      val keep = raw.filterNot { case (p, _, _, _) => coveredSet.contains(p) }
-      writeFileAtomic(manifestPath(tb), keep.map(_._1.getName)
-        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      coveredSet.foreach { p =>
-        try fs.delete(p, false) catch { case _: java.io.IOException => () } }
-      raw = keep
-      healed = coveredSet.size
-    }
-    checkNoOverlap(tb, raw.map { case (p, s, c, _) => (p, s, c) })
-    (raw, healed)
-  }
-
-  private def planRename(tb: TopicBucket, targetBytes: Long,
-      minSegments: Int): RenamePlan = withBucketLock(tb) {
-    val dir = bucketDir(tb)
-    val (raw, healed) = healCovered(tb)
-    val groups = compactionGroups(raw, targetBytes, minSegments)
-    RenamePlan(tb, healed, groups,
-      groups.map(_ => new HPath(dir, s".tmp-${java.util.UUID.randomUUID()}")))
-  }
-
-  private def commitRename(plan: RenamePlan): Int = {
-    if (plan.groups.isEmpty) plan.healed
-    else withBucketLock(plan.tb) {
-      val dir = bucketDir(plan.tb)
-      // The concat ran without the lock, so the bucket may have moved:
-      // appends added segments (harmless), retention or a foreign
-      // compactor may have removed a member. A group is publishable only
-      // when EVERY member is still committed — segment names encode
-      // (start, count) and segments are immutable once published, so
-      // name-presence is range- and byte-identity.
-      val currentNames = segmentStatusRaw(plan.tb).map(_._1.getPath.getName).toSet
-      val valid = Seq.newBuilder[(Seq[(HPath, Long, Long, Long)], HPath)]
-      plan.groups.zip(plan.staged).foreach { case (g, staged) =>
-        // staged must exist with EXACTLY the members' combined bytes — the
-        // unlocked concat phase drops a merge whose member vanished under
-        // it (racing retention), leaving the staging name absent or short
-        val stagedOk =
-          try fs.getFileStatus(staged).getLen == g.map(_._4).sum
-          catch { case _: java.io.FileNotFoundException => false }
-        if (!stagedOk || !g.forall(m => currentNames.contains(m._1.getName))) {
-          try fs.delete(staged, false) catch { case _: java.io.IOException => () }
-        } else {
-          val target = new HPath(dir,
-            SegmentCodec.segmentName(g.head._2, g.map(_._3).sum))
-          if (!publishNoReplace(staged, target)) {
-            // a crashed attempt already published this exact merge: verify
-            if (!SegmentCodec.sameFrames(fs, target, staged))
-              throw new IllegalStateException(
-                s"compaction target $target exists with foreign content")
-            fs.delete(staged, false)
-          }
-          valid += ((g, target))
-        }
-      }
-      val validated = valid.result()
-      if (validated.isEmpty) plan.healed
-      else {
-        // atomic manifest swap: members out, merged in — the commit point
-        val memberNames = validated.flatMap(_._1.map(_._1.getName)).toSet
-        val names =
-          (currentNames -- memberNames ++ validated.map(_._2.getName)).toSeq.sorted
-        writeFileAtomic(manifestPath(plan.tb),
-          names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        carryTsStats(plan.tb, validated.map { case (g, target) =>
-          g.map(_._1.getName) -> target.getName })
-        memberNames.foreach { n =>
-          try fs.delete(new HPath(dir, n), false)
-          catch { case _: java.io.IOException => () } }
-        plan.healed + memberNames.size
-      }
-    }
-  }
-
   /** Carry `.tsidx` stats across a compaction: a merged segment's (min,
     * max) is the combine of its members' — but only when EVERY member had
     * a cached entry (a partial combine would understate the range);
@@ -3046,94 +2557,94 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     recordTsStats(tb, entries)
   }
 
-  /** A planned manifest-mode bucket compaction: merged files land under
-    * unique names (invisible until their commit), so the byte movement
-    * needs no lock at all — only the put-if-absent commit serializes.
+  /** A planned bucket compaction: merged files land under unique names
+    * (invisible until their commit), so the byte movement needs no lock at
+    * all — only the put-if-absent commit serializes.
     */
-  private case class ManifestPlan(tb: TopicBucket, st: CommitState,
+  private case class CompactPlan(tb: TopicBucket,
       groups: Seq[Seq[(HPath, Long, Long, Long)]], adds: Seq[SegMeta])
 
-  private def compactManifestAll(tbs: Seq[TopicBucket], targetBytes: Long,
-      minSegments: Int, concat: Seq[ConcatTask] => Unit): Int = {
-    var total = 0
-    var pending = tbs.flatMap(planManifest(_, targetBytes, minSegments))
-    // retry budget is PER BUCKET: one hot contended bucket must exhaust
-    // only its own 20 attempts, not starve every other bucket's (a global
-    // counter made a wide contended topic spuriously throw)
-    val attempts = mutable.Map.empty[String, Int].withDefaultValue(0)
-    while (pending.nonEmpty) {
-      // data plane: ALL buckets' merges in one call (one Spark job under a
-      // distributed strategy); files are invisible until committed
-      concat(pending.flatMap { p =>
-        p.groups.zip(p.adds).map { case (g, a) =>
-          ConcatTask(g.map(_._1.toString),
-            new HPath(bucketDir(p.tb), a.name).toString, g.map(_._4).sum) }
+  private def compactAll(tbs: Seq[TopicBucket], targetBytes: Long,
+      minSegments: Int, concat: Seq[ConcatTask] => Map[String, String]): Int = {
+    val plans = tbs.flatMap(planCompaction(_, targetBytes, minSegments))
+    // data plane: ALL buckets' merges in one call (one Spark job under a
+    // distributed strategy); files are invisible until committed
+    val written = concat(plans.flatMap { p =>
+      p.groups.zip(p.adds).map { case (g, a) =>
+        ConcatTask(g.map(_._1.toString),
+          new HPath(bucketDir(p.tb), a.name).toString, g.map(_._4).sum) }
+    })
+    plans.map { p =>
+      val dir = bucketDir(p.tb)
+      // every merge must exist with EXACTLY its members' combined bytes:
+      // the concat phase drops a merge whose member vanished under it
+      // (racing retention), and a short file must never be committed
+      val done = commitSwaps(p.tb, p.groups.zip(p.adds).map { case (g, a) =>
+        val product = written.get(new HPath(dir, a.name).toString).map(new HPath(_))
+        val ready = product.exists { f =>
+          try fs.getFileStatus(f).getLen == g.map(_._4).sum
+          catch { case _: java.io.FileNotFoundException => false }
+        }
+        (g.map(_._1.getName), product.fold(a)(f => a.copy(name = f.getName)), ready)
       })
-      val results = pending.map(p => p -> commitManifest(p))
-      total += results.flatMap(_._2).sum
-      val lost = results.collect { case (p, None) => p.tb }
-      if (lost.isEmpty) pending = Seq.empty
-      else {
-        lost.foreach(tb => attempts(tb.path) += 1)
-        val over = lost.filter(tb => attempts(tb.path) > 20)
-        if (over.nonEmpty) throw new java.io.IOException(
-          s"compaction on ${over.map(_.path).mkString(", ")} lost the " +
-            s"commit race ${over.map(tb => attempts(tb.path)).max} times")
-        val worst = lost.map(tb => attempts(tb.path)).max
-        Thread.sleep(scala.util.Random.nextInt(1 << math.min(worst, 6)).toLong)
-        pending = lost.flatMap(planManifest(_, targetBytes, minSegments))
-      }
-    }
-    total
+      carryTsStats(p.tb, done.map { case (members, a) => members -> a.name })
+      done.map(_._1.size).sum
+    }.sum
   }
 
-  private def planManifest(tb: TopicBucket, targetBytes: Long,
-      minSegments: Int): Option[ManifestPlan] = {
+  private def planCompaction(tb: TopicBucket, targetBytes: Long,
+      minSegments: Int): Option[CompactPlan] = {
     val dir = bucketDir(tb)
-    val st = commitLog(tb).read()
-    val segs = st.segs.map { s =>
+    val segs = commitLog(tb).read().segs.map { s =>
       val p = new HPath(dir, s.name)
       (p, s.start, s.count, try fs.getFileStatus(p).getLen
         catch { case _: java.io.FileNotFoundException => return None }) // racing retention: skip this pass
     }
     val groups = compactionGroups(segs, targetBytes, minSegments)
     if (groups.isEmpty) None
-    else Some(ManifestPlan(tb, st, groups, groups.map { g =>
-      SegMeta(uniqueDataName(g.head._2, g.map(_._3).sum), g.head._2,
+    else Some(CompactPlan(tb, groups, groups.map { g =>
+      SegMeta(SegmentCodec.dataName(g.head._2, g.map(_._3).sum), g.head._2,
         g.map(_._3).sum) }))
   }
 
-  /** Commit one planned merge: Some(segments merged away) on a won commit;
-    * None on a lost race — the staged merged files are deleted and the
-    * caller replans from fresh state.
+  /** The commit step of both compactions: in ONE commit against the
+    * bucket's CURRENT state, replace each swap's member segments with its
+    * product. Appends that landed since the plan are harmless; a swap
+    * whose product is not `ready`, or one of whose members is no longer
+    * committed (a racing retention or compaction removed it — names are
+    * unique and segments immutable, so name presence is range and byte
+    * identity), is dropped and its product deleted. A lost commit race
+    * re-reads and re-validates; the bytes are never moved again. Member
+    * files are deleted after the commit. Returns the committed
+    * (members, product) pairs.
     */
-  private def commitManifest(plan: ManifestPlan): Option[Int] = {
-    val dir = bucketDir(plan.tb)
-    val removes = plan.groups.flatten.map(_._1.getName).toSet
-    // every staged merge must exist with EXACTLY its members' combined
-    // bytes before the swap is committed: the unlocked concat phase drops
-    // a merge whose member vanished under it (racing retention), and an
-    // out-of-band member delete with no commit must never publish a short
-    // file. Treat like a lost race — clean the adds and replan from fresh
-    // state (a genuinely-vanished member makes the replanner skip it).
-    val allStaged = plan.groups.zip(plan.adds).forall { case (g, a) =>
-      try fs.getFileStatus(new HPath(dir, a.name)).getLen == g.map(_._4).sum
-      catch { case _: java.io.FileNotFoundException => false }
+  private def commitSwaps(tb: TopicBucket,
+      swaps: Seq[(Seq[String], SegMeta, Boolean)]): Seq[(Seq[String], SegMeta)] = {
+    val cl = commitLog(tb)
+    val dir = bucketDir(tb)
+    def rm(name: String): Unit =
+      try fs.delete(new HPath(dir, name), false) catch { case _: java.io.IOException => () }
+    var attempt = 0
+    while (true) {
+      val st = cl.read()
+      val live = st.segs.iterator.map(_.name).toSet
+      val (valid, invalid) = swaps.partition { case (members, _, ready) =>
+        ready && members.forall(live) }
+      if (valid.isEmpty ||
+          cl.tryCommit(st, valid.map(_._2), valid.flatMap(_._1).toSet).isDefined) {
+        invalid.foreach(s => rm(s._2.name))
+        valid.foreach(_._1.foreach(rm))
+        return valid.map(s => (s._1, s._2))
+      }
+      attempt += 1
+      if (attempt > 50) {
+        swaps.foreach(s => rm(s._2.name))
+        throw new java.io.IOException(
+          s"compaction of ${tb.path} lost the commit race $attempt times")
+      }
+      Thread.sleep(scala.util.Random.nextInt(1 << math.min(attempt, 6)).toLong)
     }
-    if (allStaged &&
-        commitLog(plan.tb).tryCommit(plan.st, plan.adds, removes).isDefined) {
-      carryTsStats(plan.tb, plan.groups.zip(plan.adds).map { case (g, a) =>
-        g.map(_._1.getName) -> a.name })
-      removes.foreach { n =>
-        try fs.delete(new HPath(dir, n), false)
-        catch { case _: java.io.IOException => () } }
-      Some(removes.size)
-    } else {
-      plan.adds.foreach { a =>
-        try fs.delete(new HPath(dir, a.name), false)
-        catch { case _: java.io.IOException => () } }
-      None
-    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Storage-hygiene sweep (the VACUUM analog of the public Delta/Iceberg
@@ -3143,17 +2654,18 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
     * `graceMs` (default 1 h — an in-flight writer's file is always
     * younger; it commits or fails within its publish attempt):
     *
-    *   - manifest mode: `data-*` files absent from the committed state
-    *     (crashed appends/compactions stage under unique names that only
-    *     a commit makes live);
-    *   - both modes: `.tmp-*` / `.staged-*` staging leftovers in bucket
-    *     dirs and the topic's `.staging/` workspace;
+    *   - `data-*` files absent from the committed state (crashed
+    *     appends/compactions write under unique names that only a commit
+    *     makes live);
+    *   - `.tmp-*` / `.staged-*` staging leftovers and `.claim-*` files of
+    *     a crashed put-if-absent in bucket dirs and their `.commitlog/`,
+    *     and the topic's `.staging/` workspace;
     *   - the epoch-marker namespace: non-newest `epoch-N` markers per
     *     query dir (only the newest can still no-op a replay — older
     *     epochs are behind every checkpoint); live `*.intent` files are
     *     KEPT (deleting one would break a crashed epoch's heal).
     *
-    * Never touches committed segments, manifests, commit logs, locks, or
+    * Never touches committed segments, commit versions, locks, or
     * consumer cursors. Returns the number of files deleted.
     */
   def vacuum(topic: String, graceMs: Long = 3600000L,
@@ -3165,12 +2677,13 @@ class FileTopicLog(rootUri: String, hadoopConf: Configuration) extends TopicLog 
         deleted += 1
     buckets(topic).foreach { tb =>
       val live = segments(tb).map(_._1.getName).toSet
-      listStatus(bucketDir(tb)).foreach { st =>
+      (listStatus(bucketDir(tb)) ++
+          listStatus(new HPath(bucketDir(tb), ".commitlog"))).foreach { st =>
         val name = st.getPath.getName
-        val orphanData = manifestCommitMode && st.isFile &&
-          name.startsWith("data-") && !live.contains(name)
-        val staging = st.isFile &&
-          (name.startsWith(".tmp-") || name.startsWith(".staged-"))
+        val orphanData = st.isFile &&
+          name.startsWith(SegmentCodec.DataPrefix) && !live.contains(name)
+        val staging = st.isFile && (name.startsWith(".tmp-") ||
+          name.startsWith(".staged-") || name.startsWith(".claim-"))
         if ((orphanData || staging) && st.getModificationTime < cutoff)
           rm(st.getPath)
       }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * bucket's offsets only occurs between separate driver processes — the
   * reference resolves it with ZooKeeper leader election
   * (`internal/lighthouse/election/election.go:50-79`); we resolve it with
-  * the per-bucket create-exclusive publish lock (`withBucketLock`) around
-  * offset assignment + segment rename, with the exists-check +
-  * frame-identity compare as the replay backstop.
+  * the bucket's sequenced commit log (exactly one driver wins each
+  * put-if-absent version; the other re-reads and retries), the
+  * per-bucket lock (`withBucketLock`) throttling contention, and the
+  * committed range's frame-identity compare as the replay backstop.
   *
   * Modes:
   *   `write <root> <topic> <n> <tag>` — append n single-partition rows
@@ -26,7 +27,7 @@ object RaceProbe {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       // object-store mode (`tools/race_probe.sh ostest`): roots under the
-      // ostest: scheme run the manifest commit protocol against the
+      // ostest: scheme run the commit log's conditional-PUT arm against the
       // S3-semantics rig (graft.ObjectStoreTestFs, on the test classpath);
       // inert for plain local roots
       .config("spark.hadoop.fs.ostest.impl", "graft.ObjectStoreTestFs")

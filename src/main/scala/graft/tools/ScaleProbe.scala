@@ -497,7 +497,7 @@ object ScaleProbe {
     * all-pairs, 22× at 10× segments, fixed to one sorted pass), q154c =
     * cold timestamp seek (one-time `.tsidx` backfill — linear), q154w =
     * warm seek (claim: O(one boundary segment) FRAME reads on top of the
-    * per-call O(segments) metadata parse — manifest + `.tsidx` lines —
+    * per-call O(segments) metadata parse — segment list + `.tsidx` lines —
     * so the RATIO tracks segment count at small absolute cost, ~0.1 s at
     * 2×10^4 segments, while a frame-linear implementation would sit at
     * seconds). Their ratios are the CLAIMS under test, so Bench excludes
@@ -513,13 +513,12 @@ object ScaleProbe {
     log.fs.mkdirs(log.bucketDir(tb))
     val rowsPer = 5
     val base = System.currentTimeMillis()
-    (0 until nSegs).foreach { i =>
-      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-        graft.log.SegmentCodec.segmentName(i.toLong * rowsPer, rowsPer.toLong))
+    log.publishStaged(tb, (0 until nSegs).map { i =>
+      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
       graft.log.SegmentCodec.write(log.fs, p,
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), base + i)))
-    }
-    log.refreshManifest(tb)
+      (i.toLong * rowsPer, rowsPer.toLong, p)
+    })
     (log, tb, base)
   }
 
@@ -622,20 +621,19 @@ object ScaleProbe {
       log.fs.mkdirs(log.bucketDir(tb))
       val base = System.currentTimeMillis()
       val one = Array[Byte](1)
-      (0 until 2).foreach { m =>
-        val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-          SegmentCodec.segmentName(m.toLong * k, k.toLong))
+      log.publishStaged(tb, (0 until 2).map { m =>
+        val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$m")
         val o = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
           log.fs.create(p, true), 1 << 16))
         var i = 0
         while (i < k) { SegmentCodec.writeFrame(o, i, base + i, one); i += 1 }
         o.close()
-      }
-      log.refreshManifest(tb)
+        (m.toLong * k, k.toLong, p)
+      })
       var spills = 0L
       val t = System.nanoTime()
       require(log.compactKeyed("kcap",
-          rewrite = ts => { spills += log.localKeyedCounted(ts); () },
+          rewrite = ts => { val (done, n) = log.localKeyedCounted(ts); spills += n; done },
           keyHeap = 1 << 17) == 2,
         "both segments must compact")
       val sec = (System.nanoTime() - t) / 1e9
@@ -679,7 +677,7 @@ object ScaleProbe {
     * against an n-segment single-bucket topic in its steady state
     * (`.tsidx` stamped at publish, as the connector's publish path does —
     * the cold backfill is q154c's claim). The cell's claim: the whole
-    * plane reads METADATA only — the parsed-manifest/.tsidx cache serves
+    * plane reads METADATA only — the commit-log/.tsidx caches serve
     * warm triggers at O(stat-check) + an O(segments) in-memory stats map
     * per metrics read, no frame IO; the ZERO-FRAMES half is asserted
     * mechanically in StreamingSpec's counting-FS test. Needs an active
@@ -693,9 +691,8 @@ object ScaleProbe {
     val triggers = 20
     def measure(n: Int): Double = {
       val (log, tb, base) = tinySegBucket(n)
-      log.recordTsStats(tb, (0 until n).map(i =>
-        graft.log.SegmentCodec.segmentName(i.toLong * rowsPer, rowsPer.toLong) ->
-          (base + i, base + i)).toMap)
+      log.recordTsStats(tb, log.segments(tb).zipWithIndex.map { case ((p, _, _), i) =>
+        p.getName -> (base + i, base + i) }.toMap)
       val conf = graft.connector.RippleConf(root = log.root.toString,
         topic = "tiny", bucket = None, numBuckets = 1, startingOffset = 0L,
         endingOffset = Long.MaxValue, maxOffsetsPerTrigger = 50L,

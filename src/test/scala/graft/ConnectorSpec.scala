@@ -426,22 +426,21 @@ class ConnectorSpec extends AnyFunSuite {
     assert(Ripple.read(spark, root, "uri").count() == 50)
   }
 
-  test("non-atomic-rename scheme auto-selects manifest mode and just works") {
-    // r8 refused these schemes outright; since r12 they run the sequenced
-    // put-if-absent commit protocol instead (VERDICT r11 task #1) — the
-    // rename-based protocol remains available only as an explicit override.
+  test("non-atomic-rename scheme takes the conditional-PUT commit arm and just works") {
+    // r8 refused these schemes outright; the commit log runs on them
+    // unchanged — the listed scheme only picks put-if-absent's
+    // create(overwrite = false) arm instead of temp + rename
     val conf = new org.apache.hadoop.conf.Configuration()
     conf.set("fs.natest.impl", classOf[NonAtomicTestFs].getName)
     conf.set("graft.log.nonAtomicRenameSchemes", "natest")
     val dir = tmp()
     val log = new graft.log.FileTopicLog("natest:" + dir, conf)
-    assert(log.manifestCommitMode, "listed scheme must get the commit protocol")
+    assert(!graft.log.LogFs.atomicRename(log.fs), "listed scheme must be non-atomic")
     val tb = graft.model.TopicBucket("nat", "b0000")
     log.append(tb, (0 until 3).map(i => graft.model.Payload(i, Array[Byte](i.toByte))))
-    assert(log.range(tb, 0, 10).map(_.id) == (0 until 3))
-    // the operator can still force rename mode explicitly (their risk)
-    conf.set("graft.log.commitProtocol", "rename")
-    assert(!new graft.log.FileTopicLog("natest:" + tmp(), conf).manifestCommitMode)
+    log.append(tb, (3 until 5).map(i => graft.model.Payload(i, Array[Byte](i.toByte))))
+    assert(log.range(tb, 0, 10).map(_.id) == (0 until 5))
+    assert(log.range(tb, 0, 10).map(_.offset) == (0L until 5L))
   }
 
   test("connector round-trip + epoch-replay exactly-once over the object-store rig") {
@@ -521,15 +520,16 @@ class ConnectorSpec extends AnyFunSuite {
     val root = tmp()
     Ripple.createTopic(root, "ov", numBuckets = 1)
     Ripple.write(samplePayloads(10).coalesce(1), root, "ov")
-    // forge an overlapping segment: starts inside the existing [0,10)
-    val dir = java.nio.file.Paths.get(root, "ov", "b0000")
-    graft.log.SegmentCodec.write(
-      dir.resolve(graft.log.SegmentCodec.segmentName(5L, 3L)),
+    // forge an overlapping segment: starts inside the existing [0,10),
+    // committed straight to the commit log (publish refuses overlaps, so
+    // only a writer outside the protocol can produce one)
+    val log = new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
+    val tb = graft.model.TopicBucket("ov", "b0000")
+    val forged = graft.log.SegmentCodec.dataName(5L, 3L)
+    graft.log.SegmentCodec.write(log.fs, new org.apache.hadoop.fs.Path(log.bucketDir(tb), forged),
       (0 until 3).map(i => (graft.model.Payload(i, Array[Byte]()), 0L)))
-    // surface the forged file in the manifest-backed view (out-of-band
-    // files are otherwise invisible to readers by design)
-    new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
-      .refreshManifest(graft.model.TopicBucket("ov", "b0000"))
+    val cl = log.commitLog(tb)
+    assert(cl.tryCommit(cl.read(), Seq(graft.log.SegMeta(forged, 5L, 3L)), Set.empty).isDefined)
     val e = intercept[Exception] { Ripple.read(spark, root, "ov").count() }
     assert(e.getMessage.contains("overlap") ||
       (e.getCause != null && e.getCause.getMessage.contains("overlap")), e.getMessage)
@@ -639,13 +639,12 @@ class ConnectorSpec extends AnyFunSuite {
     val commits = java.nio.file.Paths.get(root, "qr", ".commits", "qcrash")
     java.nio.file.Files.createDirectories(commits)
     java.nio.file.Files.write(commits.resolve("epoch-1.intent"), "b0000 0 5 5".getBytes)
-    val crashed = stage(epoch1)
-    java.nio.file.Files.copy(crashed,
-      hp(log.bucketDir(tb), graft.log.SegmentCodec.segmentName(5L, 5L)))
-    // the crashed link is on disk (authoritative) but not yet in the
-    // manifest — exactly the state a crash between link and marker leaves
+    // the crashed attempt's segment is committed at its planned offsets but
+    // no marker landed — exactly the state a crash between link and marker
+    // leaves
+    log.appendAt(tb, 5L, epoch1.map(r => (r, 0L)))
     assert(log.endOffsetListed(tb) == 10)
-    assert(log.size(tb) == 5)
+    assert(log.size(tb) == 10)
 
     // Replay of epoch 1: same bytes per (bucket, partitionId), new file name.
     RipplePublish.publish(conf, msg(stage(epoch1), 0), Some(1L), "qcrash")
@@ -674,9 +673,8 @@ class ConnectorSpec extends AnyFunSuite {
     val conf = RippleConf(root, "cc", None, 1, 0L, Long.MaxValue, Long.MaxValue)
     val tb = graft.model.TopicBucket("cc", "b0000")
     val log = new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
-    // a foreign writer already published [0,5) with content F
-    graft.log.SegmentCodec.write(
-      hp(log.bucketDir(tb), graft.log.SegmentCodec.segmentName(0L, 5L)),
+    // a foreign writer already committed [0,5) with content F
+    log.appendAt(tb, 0L,
       (0 until 5).map(i => (graft.model.Payload(i, Array[Byte](9, 9)), 0L)))
     // our writer computed the same start before the foreign publish landed
     val staging = java.nio.file.Paths.get(root, "cc", ".staging")
@@ -1044,6 +1042,29 @@ class ConnectorSpec extends AnyFunSuite {
     try graft.connector.TopicSchemas.register(log, "race2", winner)
     finally graft.connector.TopicSchemas.raceSeam = () => ()
     assert(graft.connector.TopicSchemas.get(log, "race2").contains(winner))
+    // two racing THREADS that both pass the check before either creates:
+    // the put-if-absent pointer write lets exactly one win, the other gets
+    // the drift error — never two winners, never a silent overwrite
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    graft.connector.TopicSchemas.raceSeam = () =>
+      barrier.await(10, java.util.concurrent.TimeUnit.SECONDS)
+    try (0 until 10).foreach { round =>
+      val topic = s"race3-$round"
+      val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[(StructType, Option[Throwable])]()
+      val racers = Seq(winner, drifted).map { schema =>
+        new Thread(() => outcomes.add((schema,
+          try { graft.connector.TopicSchemas.register(log, topic, schema); None }
+          catch { case e: Throwable => Some(e) })))
+      }
+      racers.foreach(_.start()); racers.foreach(_.join())
+      val all = outcomes.toArray(Array.empty[(StructType, Option[Throwable])]).toSeq
+      val won = all.filter(_._2.isEmpty).map(_._1)
+      assert(won.size == 1, s"round $round: exactly one registration wins, got $all")
+      assert(all.exists(_._2.exists(_.isInstanceOf[IllegalStateException])),
+        s"round $round: the loser hits the drift check: $all")
+      assert(graft.connector.TopicSchemas.get(log, topic).contains(won.head),
+        s"round $round: the pointer holds the winner's schema")
+    } finally graft.connector.TopicSchemas.raceSeam = () => ()
   }
 
   test("streaming sink over the object-store rig: exactly-once epochs end to end") {
@@ -1124,7 +1145,7 @@ class ConnectorSpec extends AnyFunSuite {
     val log = new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
     val tb = graft.model.TopicBucket("ret", "b0000")
     // age the existing segment beyond the policy
-    log.segmentsListed(tb).foreach { case (p, _, _) =>
+    log.segments(tb).foreach { case (p, _, _) =>
       java.nio.file.Files.setLastModifiedTime(nio(p),
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600_000L))
     }
@@ -1672,8 +1693,8 @@ class ConnectorSpec extends AnyFunSuite {
     // still writing must not interleave bytes into the same staging file.
     // Emulated by running the SAME ConcatTask through the distributed
     // runner from two threads at once (two Spark jobs = two task
-    // attempts); with attempt-unique staging the published bytes are
-    // intact whichever attempt's rename lands.
+    // attempts); each attempt writes and returns its own file, so either
+    // returned path is intact and nothing is renamed.
     val root = tmp()
     Ripple.createTopic(root, "dup", numBuckets = 1)
     (0 until 6).foreach(_ => Ripple.write(samplePayloads(100), root, "dup", numBuckets = 1))
@@ -1681,23 +1702,32 @@ class ConnectorSpec extends AnyFunSuite {
     val tb = graft.model.TopicBucket("dup", "b0000")
     val segs = log.segments(tb)
     val bytes = segs.map(s => log.fileLen(s._1)).sum
-    val out = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-dup-attempt-test")
+    val out = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
+      graft.log.SegmentCodec.dataName(0L, segs.map(_._3).sum))
     val task = graft.log.ConcatTask(segs.map(_._1.toString), out.toString, bytes)
     val runner = graft.connector.DistributedConcat.runner(spark, log, minBytes = 0L)
-    val t1 = new Thread(() => runner(Seq(task)))
-    val t2 = new Thread(() => runner(Seq(task)))
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+    val t1 = new Thread(() => results.add(runner(Seq(task))))
+    val t2 = new Thread(() => results.add(runner(Seq(task))))
     t1.start(); t2.start(); t1.join(); t2.join()
-    assert(log.fs.getFileStatus(out).getLen == bytes,
-      "published staging file is COMPLETE despite duplicate attempts")
-    // byte identity: the merged file is the member concatenation
+    val written = results.toArray(Array.empty[Map[String, String]]).toSeq.map(_(out.toString))
+    assert(written.size == 2 && written.distinct.size == 2,
+      s"each attempt writes its own file: $written")
+    assert(!log.fs.exists(out), "no attempt writes (or renames onto) the planned name")
+    // byte identity: each attempt's file is the member concatenation
     val expected = segs.flatMap(s =>
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s._1.toUri)).toSeq)
-    val got = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out.toUri)).toSeq
-    assert(got == expected, "duplicate attempts never interleave writes")
-    // no attempt-staging leftovers survive
-    val leftovers = log.fs.listStatus(log.bucketDir(tb))
-      .map(_.getPath.getName).filter(_.contains(".attempt-"))
-    assert(leftovers.isEmpty, s"attempt files cleaned: ${leftovers.mkString(",")}")
+    written.foreach { w =>
+      val p = new org.apache.hadoop.fs.Path(w)
+      assert(p.getParent == log.bucketDir(tb) &&
+        graft.log.SegmentCodec.parse(p.getName).contains((0L, segs.map(_._3).sum)),
+        s"an attempt's file keeps the planned data-name fields: $w")
+      val got = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri)).toSeq
+      assert(got == expected, "duplicate attempts never interleave writes")
+    }
+    // both are uncommitted data files: vacuum sweeps them once past grace
+    assert(log.vacuum("dup", graceMs = 0L, nowMillis = System.currentTimeMillis() + 1000L) >= 2)
+    written.foreach(w => assert(!log.fs.exists(new org.apache.hadoop.fs.Path(w))))
   }
 
   test("distributed compaction tolerates a member vanishing mid-concat (racing retention)") {
@@ -1715,7 +1745,7 @@ class ConnectorSpec extends AnyFunSuite {
     // distributed byte move (the unlocked phase-2 window) and truncates a
     // b0000 member away, then the real distributed runner executes
     val inner = graft.connector.DistributedConcat.runner(spark, log, minBytes = 0L)
-    val sandwiched: Seq[graft.log.ConcatTask] => Unit = { tasks =>
+    val sandwiched: Seq[graft.log.ConcatTask] => Map[String, String] = { tasks =>
       assert(log.truncateBefore("dvan",
         Map("b0000" -> (victim._2 + victim._3))) == 1)
       inner(tasks)
@@ -1747,9 +1777,12 @@ class ConnectorSpec extends AnyFunSuite {
       .map(b => logO.segments(graft.model.TopicBucket("dco", b)).size).sum
     val d0 = graft.log.FileTopicLog.localConcatBytes.get
     ObjectStoreTestFs.dataPuts.set(0)
+    ObjectStoreTestFs.dataCopies.set(0)
     assert(Ripple.compactSegments(spark, root, "dco", 128L << 20, 0L) == segsBeforeO)
     assert(ObjectStoreTestFs.dataPuts.get == 2,
       s"one data PUT per merged file (2 buckets), got ${ObjectStoreTestFs.dataPuts.get}")
+    assert(ObjectStoreTestFs.dataCopies.get == 0,
+      s"no server-side copy of a data object, got ${ObjectStoreTestFs.dataCopies.get}")
     assert(graft.log.FileTopicLog.localConcatBytes.get == d0,
       "zero data bytes may move through the driver when merges distribute")
     assert(Ripple.read(spark, root, "dco").select("bucket", "offset", "id")
@@ -2460,7 +2493,7 @@ class ConnectorSpec extends AnyFunSuite {
 
     // describeTopic: the one-call ops summary agrees with its parts
     val d = Ripple.describeTopic(root, "tlag")
-    assert(d.commitProtocol == "rename" && d.rows == 10L && d.bytes > 0L)
+    assert(d.rows == 10L && d.bytes > 0L)
     assert(d.buckets("b0000") ==
       Ripple.BucketState(0L, 10L, d.buckets("b0000").segments,
         d.buckets("b0000").bytes, Some(9000L)))

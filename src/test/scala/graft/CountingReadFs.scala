@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{Path => HPath}
 
 /** Test filesystem that COUNTS data-file opens — the instrumentation for
   * "the streaming trigger plane reads zero frames" (metrics + admission +
-  * planning must touch manifests/`.tsidx` only; frame IO belongs to row
+  * planning must touch the commit log/`.tsidx` only; frame IO belongs to row
   * consumption alone). Counts `open()` calls on segment data files
-  * (`seg-*` / `data-*`); metadata files pass through uncounted. Register
+  * (`data-*`); metadata files pass through uncounted. Register
   * under the `cntfs` scheme via `fs.cntfs.impl`.
   */
 class CountingReadFs extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -16,7 +16,7 @@ class CountingReadFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def open(f: HPath, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
     val n = f.getName
-    if (n.startsWith("seg-") || n.startsWith("data-"))
+    if (n.startsWith("data-"))
       CountingReadFs.dataOpens.incrementAndGet()
     super.open(f, bufferSize)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.Ripple
-import graft.log.{FileTopicLog, SegmentCodec}
+import graft.log.FileTopicLog
 import graft.model.{Payload, TopicBucket}
 
 import org.apache.hadoop.conf.Configuration
@@ -11,27 +11,42 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Test filesystem with HDFS rename semantics: local disk underneath, but
-  * `rename` REFUSES an existing target (HDFS's namenode behavior; POSIX
-  * rename would replace) and the scheme is non-`file`, so every NON-LOCAL
-  * branch of the storage plane runs for real — `createLockExclusive`'s
-  * `fs.create(lock, false)` arm, `publishNoReplace`'s rename-refusal arm,
-  * and `renameOverwrite`'s delete+retry window (which the `file:` scheme
-  * never enters because POSIX rename replaces in one step).
+  * a file `rename` REFUSES an existing target atomically (HDFS's namenode
+  * behavior; POSIX rename would replace) and the scheme is non-`file`, so
+  * every NON-LOCAL branch of the storage plane runs for real —
+  * `createLockExclusive`'s `fs.create(lock, false)` arm,
+  * `LogFs.putIfAbsent`'s temp + rename arm, and `renameOverwrite`'s
+  * delete+retry window (which the `file:` scheme never enters because
+  * POSIX rename replaces in one step).
   *
   * This substitutes for the MiniDFSCluster suite the round-9 verdict asked
   * for: `hadoop-minicluster` cannot resolve in this build (offline coursier
   * cache carries only scalatest/scalacheck; /opt/spark/jars has only the
   * shaded hadoop-client), so the strict-rename semantics are enforced here
-  * instead of by a namenode. The one HDFS property this cannot reproduce
-  * is namenode-side ATOMICITY of create/rename under concurrency across
-  * JVMs — documented in DESIGN.
+  * instead of by a namenode. A file rename is a hard link + unlink of the
+  * source, so the refusal is atomic among threads of one host, as the
+  * namenode's is; create(overwrite = false) stays RawLocal's
+  * check-then-act, the one HDFS property this rig does not reproduce.
   */
 class StrictHdfsTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "hdfstest"
   override def getUri: java.net.URI = java.net.URI.create("hdfstest:///")
-  override def rename(src: HPath, dst: HPath): Boolean =
-    if (exists(dst)) false // HDFS refuses an existing target
-    else super.rename(src, dst)
+  override def rename(src: HPath, dst: HPath): Boolean = {
+    val s = pathToFile(src).toPath
+    val d = pathToFile(dst).toPath
+    if (!java.nio.file.Files.isRegularFile(s)) {
+      if (exists(dst)) false else super.rename(src, dst)
+    } else {
+      try {
+        java.nio.file.Files.createLink(d, s) // HDFS refuses an existing target
+        java.nio.file.Files.delete(s)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case _: java.nio.file.NoSuchFileException => false
+      }
+    }
+  }
 }
 
 class HdfsSemanticsSpec extends AnyFunSuite {
@@ -55,8 +70,8 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     val all = log.range(tb, 0, Long.MaxValue)
     assert(all.map(_.offset) == (0L until 9L), "dense offsets over strict FS")
     assert(all.map(r => r.data(0)) == Seq[Byte](1, 1, 1, 1, 1, 2, 2, 2, 2))
-    // idempotent positional retry: second publish of the same segment name
-    // hits the exists-check, never a replacing rename
+    // idempotent positional retry: the second publish of the same range
+    // finds the committed twin and is a no-op
     val now = System.currentTimeMillis()
     log.appendAt(tb, 9L, payloads(3, 3).map(p => (p, now)))
     log.appendAt(tb, 9L, payloads(3, 3).map(p => (p, now)))
@@ -69,26 +84,25 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     val cl = new graft.log.CommitLog(log.fs, dir, 64)
     val st = cl.read()
     assert(cl.tryCommit(st, Seq(graft.log.SegMeta("data-a", 0L, 2L)), Set.empty).isDefined)
-    // a second writer at the same stale version: create(overwrite=false)
-    // refuses with the typed FileAlreadyExistsException, never the
-    // message-sniff last resort
+    // a second writer at the same stale version: the temp + rename arm's
+    // rename refuses the existing version file
     assert(cl.tryCommit(st, Seq(graft.log.SegMeta("data-b", 0L, 2L)), Set.empty).isEmpty)
     assert(cl.read().segs.map(_.name) == Vector("data-a"))
   }
 
-  test("publishNoReplace refuses an existing target via the rename-refusal arm") {
+  test("putIfAbsent refuses an existing segment via the rename-refusal arm") {
     val log = newLog()
     val now = System.currentTimeMillis()
     log.appendAt(tb, 0L, payloads(3, 1).map(p => (p, now)))
-    val target = log.segmentsListed(tb).head._1
+    assert(graft.log.LogFs.atomicRename(log.fs), "hdfstest takes the rename arm")
+    val target = log.segments(tb).head._1
     val before = log.range(tb, 0, 3).map(_.data(0))
-    val staged = new HPath(log.bucketDir(tb), ".tmp-usurper")
-    SegmentCodec.write(log.fs, staged, payloads(3, 9).map(p => (p, now)))
-    assert(!log.publishNoReplace(staged, target),
+    assert(!graft.log.LogFs.putIfAbsent(log.fs, target, Array[Byte](9, 9, 9)),
       "strict rename must refuse the existing segment")
     assert(log.range(tb, 0, 3).map(_.data(0)) == before,
       "committed segment untouched after the refusal")
-    log.fs.delete(staged, false)
+    assert(!log.fs.listStatus(log.bucketDir(tb)).exists(_.getPath.getName.startsWith(".tmp-")),
+      "the refused temp file is removed")
   }
 
   test("non-local create-exclusive lock arm + concurrent appenders stay dense") {
@@ -100,18 +114,12 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     out.write("holder".getBytes("UTF-8")); out.close()
     intercept[java.io.IOException] { log.fs.create(lock, false) }
     log.fs.delete(lock, false)
-    // Two concurrent appenders. RawLocal's create(overwrite=false) is
-    // check-then-act (NOT namenode-atomic — the one HDFS property this rig
-    // cannot reproduce), so both threads CAN occasionally take the lock
-    // and assign the same offsets. The contract under test is therefore
-    // the storage plane's own guarantee: every append either LANDS or
-    // fails LOUDLY — never a silent row loss — and the landed log stays
-    // dense. "Loudly" means ANY thrown exception: usually the typed
-    // same-name-different-content IllegalStateException, but the racing
-    // loser can also surface an IO-shaped failure from the torn window
-    // (counting only the ISE made this test flake ~1-in-3 while the
-    // invariant held — the silent-loss case is rows missing with NOTHING
-    // thrown, which the count below still catches exactly).
+    // Two concurrent appenders, no lock: each commit is a temp + refusing
+    // rename of the next version file, so exactly one wins each version
+    // and the loser retries at the new end offset. The contract: every
+    // append either LANDS or fails LOUDLY — never a silent row loss — and
+    // the landed log stays dense (the silent-loss case is rows missing
+    // with NOTHING thrown, which the count below catches exactly).
     val errors = new java.util.concurrent.atomic.AtomicInteger(0)
     val caught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 2).map { t =>
@@ -131,15 +139,19 @@ class HdfsSemanticsSpec extends AnyFunSuite {
       "landed offsets stay dense over strict FS")
   }
 
-  test("manifest rewrite exercises the delete+retry rename window; retention + floor work") {
+  test(".tsidx rewrite exercises the delete+retry rename window; retention + floor work") {
     val log = newLog()
     val now = System.currentTimeMillis()
-    log.appendAt(tb, 0L, payloads(5, 1).map(p => (p, now)))  // manifest v1
-    log.appendAt(tb, 5L, payloads(5, 2).map(p => (p, now)))  // rewrite: dst EXISTS
-    log.appendAt(tb, 10L, payloads(5, 3).map(p => (p, now))) // rewrite again
-    // every refreshManifest after the first took renameOverwrite's
-    // delete+retry arm (strict rename refuses the existing manifest);
-    // the manifest-backed view must still be complete and ordered
+    log.appendAt(tb, 0L, payloads(5, 1).map(p => (p, now)))       // .tsidx v1
+    log.appendAt(tb, 5L, payloads(5, 2).map(p => (p, now + 1)))   // rewrite: dst EXISTS
+    log.appendAt(tb, 10L, payloads(5, 3).map(p => (p, now + 2)))  // rewrite again
+    // every .tsidx write after the first took renameOverwrite's
+    // delete+retry arm (strict rename refuses the existing file); the
+    // cache must still hold one entry per segment
+    val idx = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      new HPath(log.bucketDir(tb), ".tsidx").toUri.getPath)), "UTF-8")
+    assert(log.segments(tb).forall(s => idx.contains(s._1.getName + " ")), idx)
+    assert(log.offsetForTimestamp(tb, now + 1) == 5L)
     assert(log.segments(TopicBucket("t", "b0")).map(_._2) == Seq(0L, 5L, 10L))
     assert(log.truncateBefore("t", 5L) == 1)
     assert(log.firstOffset(tb) == 5L)
@@ -165,7 +177,7 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     assert(back.agg(org.apache.spark.sql.functions.sum("id"))
       .collect().head.getLong(0) == (0 until 40).sum.toLong)
     // a second write re-runs the whole publish protocol (staging, intent,
-    // no-replace publish, manifest swap) over strict rename semantics
+    // stage move, commit) over strict rename semantics
     Ripple.write(df, root, "hs", numBuckets = 2)
     assert(Ripple.read(spark, root, "hs").count() == 80)
     assert(Ripple.endOffsets(root, "hs").values.sum == 80L)
@@ -193,7 +205,7 @@ class HdfsSemanticsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(back == (0 until 40).map(i => (i, new String(text(i)))).toSet)
     // the on-disk frames actually compressed under the strict-rename
-    // publish protocol (staging file → no-replace publish)
+    // publish protocol (staging file → stage move → commit)
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val onDisk = log.buckets("hz").flatMap(log.segments)
       .map { case (p, _, _) => log.fileLen(p) }.sum

@@ -85,42 +85,50 @@ class LogSpec extends AnyFunSuite {
       "committed records untouched by the refused append")
   }
 
-  test("publishNoReplace is atomic fail-if-exists: an existing segment is NEVER overwritten") {
+  test("a committed segment is NEVER overwritten: a foreign same-range publish is refused") {
     // the two-live-holders corner: a stalled holder resumes after its lock
     // was stolen and re-publishes the same offsets the new holder already
-    // committed — on POSIX a plain rename would silently REPLACE the
-    // committed segment; the hard-link publish must refuse instead
+    // committed — the commit log must refuse it, never replace the
+    // committed segment
     val log = fileLog()
     val now = System.currentTimeMillis()
     log.appendAt(tb, 0L, payloads(3, tag = 1).map(p => (p, now)))
-    val target = log.segmentsListed(tb).head._1
+    val target = log.segments(tb).head._1
     val before = Files.readAllBytes(nio(target)).toSeq
 
-    // a "resumed holder" staging DIFFERENT content for the same name
+    // a "resumed holder" staging DIFFERENT content for the same range
     val staged = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-usurped")
     SegmentCodec.write(log.fs, staged, payloads(3, tag = 9).map(p => (p, now)))
-    assert(!log.publishNoReplace(staged, target), "existing target must refuse")
+    val e = intercept[IllegalStateException] {
+      log.publishStaged(tb, Seq((0L, 3L, staged)))
+    }
+    assert(e.getMessage.contains("DIFFERENT records"), e.getMessage)
+    assert(log.segments(tb).map(_._1) == Seq(target))
     assert(Files.readAllBytes(nio(target)).toSeq == before,
       "committed segment bytes must be untouched")
-    assert(Files.exists(nio(staged)), "refused publish leaves the staged copy")
-    Files.delete(nio(staged))
+    Files.deleteIfExists(nio(staged))
 
-    // and a successful publish really removes the staged file (no leak)
-    val tgt2 = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-      SegmentCodec.segmentName(3L, 2L))
+    // and a successful publish consumes the staged file (no leak)
     val staged2 = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-fresh")
     SegmentCodec.write(log.fs, staged2, payloads(2, tag = 2).map(p => (p, now)))
-    assert(log.publishNoReplace(staged2, tgt2))
-    assert(!Files.exists(nio(staged2)) && Files.exists(nio(tgt2)))
-    log.refreshManifest(tb)
+    assert(log.publishStaged(tb, Seq((3L, 2L, staged2))).head.isDefined)
+    assert(!Files.exists(nio(staged2)))
     assert(log.size(tb) == 5)
   }
 
   test("segment name round-trip") {
-    val n = SegmentCodec.segmentName(42L, 7L)
+    val n = SegmentCodec.dataName(42L, 7L)
     assert(SegmentCodec.parse(n).contains((42L, 7L)))
+    assert(!SegmentCodec.isSparse(n) && SegmentCodec.sparseRows(n).isEmpty)
+    assert(SegmentCodec.dataName(42L, 7L) != n, "unique per call")
+    val k = SegmentCodec.sparseName(40L, 9L, Some(3L))
+    assert(SegmentCodec.parse(k).contains((40L, 9L)))
+    assert(SegmentCodec.isSparse(k) && SegmentCodec.sparseRows(k).contains(3L))
+    val flag = SegmentCodec.sparseName(40L, 9L, None)
+    assert(SegmentCodec.isSparse(flag) && SegmentCodec.sparseRows(flag).isEmpty)
     assert(SegmentCodec.parse("garbage.log").isEmpty)
-    assert(SegmentCodec.parse("seg-1-2-3.log").isEmpty)
+    assert(SegmentCodec.parse("data-x-y-z.log").isEmpty)
+    assert(SegmentCodec.parse("seg-00000000000000000001-0000000002.log").isEmpty)
   }
 
   test("property: range(i,j) == slice for arbitrary appends (seeded, 200 cases)") {
@@ -162,35 +170,12 @@ class LogSpec extends AnyFunSuite {
     assert(log.range(tb, 20, 100).map(_.offset) == (20L until 22L))
   }
 
-  test("manifest tracks the directory listing through appends and retention") {
-    val log = fileLog()
-    val now = System.currentTimeMillis()
-    (0 until 6).foreach { i => log.appendAt(tb, i * 4L, payloads(4).map(p => (p, now))) }
-    // manifest-backed view == authoritative listing
-    assert(log.segments(tb) == log.segmentsListed(tb))
-    assert(java.nio.file.Files.exists(nio(new org.apache.hadoop.fs.Path(
-      log.bucketDir(tb), graft.log.SegmentCodec.ManifestName))))
-    log.truncateBefore(tb.topic, 9L)
-    assert(log.segments(tb) == log.segmentsListed(tb))
-    // reads go through the manifest and still see exactly the retained rows
-    assert(log.range(tb, 0, 100).map(_.offset) == (8L until 24L))
-    // a deleted manifest only falls back to the listing
-    java.nio.file.Files.delete(nio(new org.apache.hadoop.fs.Path(
-      log.bucketDir(tb), graft.log.SegmentCodec.ManifestName)))
-    assert(log.segments(tb) == log.segmentsListed(tb))
-    // a corrupt manifest is distrusted, not half-applied
-    java.nio.file.Files.write(
-      nio(new org.apache.hadoop.fs.Path(log.bucketDir(tb), graft.log.SegmentCodec.ManifestName)),
-      "garbage-line\n".getBytes)
-    assert(log.segments(tb) == log.segmentsListed(tb))
-  }
-
   test("truncateOlderThan drops aged segments, replay from retained offset exact") {
     val log = fileLog()
     val now = System.currentTimeMillis()
     (0 until 4).foreach { i => log.appendAt(tb, i * 5L, payloads(5).map(p => (p, now))) }
     // age the first two segments' files by an hour
-    log.segmentsListed(tb).take(2).foreach { case (p, _, _) =>
+    log.segments(tb).take(2).foreach { case (p, _, _) =>
       java.nio.file.Files.setLastModifiedTime(nio(p),
         java.nio.file.attribute.FileTime.fromMillis(now - 3600 * 1000L))
     }
@@ -200,7 +185,7 @@ class LogSpec extends AnyFunSuite {
     assert(log.range(tb, 10, 100).map(_.offset) == (10L until 20L))
     assert(log.range(tb, 10, 100).map(_.id) == payloads(5).map(_.id) ++ payloads(5).map(_.id))
     // everything aged: newest segment survives regardless
-    log.segmentsListed(tb).foreach { case (p, _, _) =>
+    log.segments(tb).foreach { case (p, _, _) =>
       java.nio.file.Files.setLastModifiedTime(nio(p),
         java.nio.file.attribute.FileTime.fromMillis(now - 3600 * 1000L))
     }
@@ -262,44 +247,6 @@ class LogSpec extends AnyFunSuite {
     assert(tbs.size == 4)
     assert(log.buckets("orders").map(_.bucket) == Seq("b0000", "b0001", "b0002", "b0003"))
     assert(log.topics() == Seq("orders"))
-  }
-
-  test("hard-link-less mount: publish falls back to rename, stickily; refusal contract survives") {
-    // VERDICT r11 task #7 + ADVICE: FAT/exFAT/CIFS mounts fail createLink
-    // with FileSystemException (EPERM/EOPNOTSUPP), not
-    // UnsupportedOperationException — inject exactly that through the
-    // nioCreateLink seam and drive the sticky fallback branch for real.
-    val linkCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val log = new FileTopicLog(Files.createTempDirectory("linkless").toString,
-        new org.apache.hadoop.conf.Configuration()) {
-      override protected def nioCreateLink(target: java.nio.file.Path,
-          source: java.nio.file.Path): Unit = {
-        linkCalls.incrementAndGet()
-        throw new java.nio.file.FileSystemException(
-          target.toString, source.toString, "Operation not permitted")
-      }
-    }
-    val now = System.currentTimeMillis()
-    // first publish: link fails EPERM → warn once → rename fallback lands it
-    log.appendAt(tb, 0L, payloads(3, 1).map(p => (p, now)))
-    assert(log.range(tb, 0, 3).map(_.data(0)) == Seq[Byte](1, 1, 1))
-    assert(linkCalls.get == 1)
-    // the decision sticks: the second publish never re-probes the link
-    log.appendAt(tb, 3L, payloads(3, 2).map(p => (p, now)))
-    assert(linkCalls.get == 1, "fallback must be sticky per log instance")
-    assert(log.size(tb) == 6)
-    // the no-replace CONTRACT survives on the fallback path: a foreign
-    // same-name publish is refused by the exists-check, never overwrites
-    val target = log.segmentsListed(tb).head._1
-    val staged = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-foreign")
-    SegmentCodec.write(log.fs, staged, payloads(3, 9).map(p => (p, now)))
-    assert(!log.publishNoReplace(staged, target), "existing target must refuse")
-    assert(log.range(tb, 0, 3).map(_.data(0)) == Seq[Byte](1, 1, 1),
-      "committed segment untouched after the refusal")
-    // and appendAt's same-offset different-content path still fails loudly
-    intercept[IllegalStateException] {
-      log.appendAt(tb, 0L, payloads(3, 7).map(p => (p, now)))
-    }
   }
 
   test("vacuum sweeps staging leftovers and superseded epoch markers, keeps the newest + intents") {
@@ -365,25 +312,34 @@ class LogSpec extends AnyFunSuite {
   }
 
   test("compactSegments heals a crashed prior attempt (merged published, manifest not swapped)") {
+    // the crash window of the commit-log protocol: the merged data file is
+    // written but the commit log (the bucket's manifest) never swapped —
+    // the orphan stays invisible, the next pass compacts, vacuum sweeps it
     val log = fileLog()
     val now = System.currentTimeMillis()
     (0 until 4).foreach { e =>
       log.appendAt(tb, e * 2L, payloads(2, e.toByte).map(p => (p, now)))
     }
     val before = log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq))
-    // simulate the crash window: the merged segment file exists (byte
-    // concat of all four members) but the manifest still lists the members
+    // simulate the crash window: the merged data file exists (byte concat
+    // of all four members) but its commit never landed
     val members = log.segments(tb).map(_._1)
-    val mergedPath = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-      SegmentCodec.segmentName(0L, 8L))
-    val out = java.nio.file.Files.newOutputStream(nio(mergedPath))
+    val orphan = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
+      SegmentCodec.dataName(0L, 8L))
+    val out = java.nio.file.Files.newOutputStream(nio(orphan))
     members.foreach(m => out.write(java.nio.file.Files.readAllBytes(nio(m))))
     out.close()
-    // manifest-backed readers are unaffected by the orphan
+    // readers never see the uncommitted file
+    assert(log.segments(tb).map(_._1) == members)
     assert(log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq)) == before)
-    // the next compaction pass heals: members dropped, merged file live
+    // the next compaction pass merges the committed members as usual
     assert(log.compactSegments("t") == 4)
     assert(log.segments(tb).map(s => (s._2, s._3)) == Seq((0L, 8L)))
+    assert(log.segments(tb).head._1 != orphan)
+    assert(log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq)) == before)
+    // and vacuum sweeps the crashed attempt's file past its grace window
+    assert(log.vacuum("t", graceMs = 0L, nowMillis = now + 60000) == 1)
+    assert(!log.fs.exists(orphan))
     assert(log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq)) == before)
   }
 
@@ -413,9 +369,10 @@ class LogSpec extends AnyFunSuite {
     // re-scan + rewrite)
     val idx = dir.resolve("t").resolve("b0").resolve(".tsidx")
     assert(Files.exists(idx), ".tsidx cache stamped at publish")
-    Files.write(idx, "garbage\nseg-junk notanumber\n".getBytes("UTF-8"))
+    Files.write(idx, "garbage\ndata-junk notanumber\n".getBytes("UTF-8"))
     assert(seeks() == expect, "corrupt cache must self-heal")
-    assert(new String(Files.readAllBytes(idx), "UTF-8").contains("seg-"),
+    assert(log.segments(tb).forall(s =>
+      new String(Files.readAllBytes(idx), "UTF-8").contains(s._1.getName + " ")),
       "cache rewritten after repair")
 
     // in-place compaction carries the stats: the merged segment's entry
@@ -423,7 +380,7 @@ class LogSpec extends AnyFunSuite {
     assert(log.compactSegments("t") == 3)
     val carried = new String(Files.readAllBytes(idx), "UTF-8")
     assert(carried.contains(
-      s"${SegmentCodec.segmentName(0L, 8L)} 10 70"), carried)
+      s"${log.segments(tb).head._1.getName} 10 70"), carried)
     assert(seeks() == expect, "seek invariant under compaction")
 
     // retention: a timestamp predating every retained record resolves to
@@ -514,12 +471,14 @@ class LogSpec extends AnyFunSuite {
     // two groups of 3; a "retention job" deletes a member of group 1
     // between plan and concat — exactly the unlocked phase-2 window
     var sabotaged = false
-    val racingConcat: Seq[graft.log.ConcatTask] => Unit = { tasks =>
+    val racingConcat: Seq[graft.log.ConcatTask] => Map[String, String] = { tasks =>
       assert(tasks.size == 2, s"two planned merges, got ${tasks.size}")
       if (!sabotaged) {
         sabotaged = true
-        val victim = new org.apache.hadoop.fs.Path(tasks.head.members.head)
-        assert(log.fs.delete(victim, false))
+        // a real retention pass commits the removal of group 1's first
+        // member ([0,2)) and deletes its file
+        assert(tasks.head.members.head == log.segments(tb).head._1.toString)
+        assert(log.truncateBefore("t", 2L) == 1)
       }
       log.localConcat(tasks)
     }
@@ -643,23 +602,30 @@ class LogSpec extends AnyFunSuite {
     val got2 = log.range(tbk, 0, 10).map(r => (r.offset, r.id, new String(r.data)))
     assert(got2 == Seq((4L, 2, "b2"), (5L, 1, "a3"), (6L, 3, "c2"), (7L, 4, "d1")))
     assert(log.size(tbk) == 8L)
-    // crash heal: plant the sparse product of a crashed keyed compaction
-    // (published, manifest NOT swapped) — the next compaction pass keeps
-    // the SPARSE one deterministically and completes the swap
+    // crash: plant the sparse product of a crashed keyed compaction
+    // (written, never committed) — it stays invisible, the next pass
+    // completes the compaction, and vacuum sweeps the orphan
     log.createTopic("kh", 1)
     val tbh = TopicBucket("kh", "b0000")
     log.appendAt(tbh, 0L, Seq((Payload(1, "x1".getBytes), 10L),
       (Payload(1, "x2".getBytes), 20L)))
     val dir = log.bucketDir(tbh)
     val sparse = new org.apache.hadoop.fs.Path(dir,
-      SegmentCodec.segmentNameSparse(0L, 2L, 1L))
+      SegmentCodec.sparseName(0L, 2L, Some(1L)))
     val out = new java.io.DataOutputStream(log.fs.create(sparse, true))
     SegmentCodec.writeFrame(out, 1, 20L, "x2".getBytes, offset = 1L)
     out.close()
-    assert(log.compactKeyed("kh") == 1, "heal removes the covered dense member")
-    assert(log.segments(tbh).map(_._1.getName) == Seq(sparse.getName))
+    assert(log.range(tbh, 0, 2).map(r => (r.offset, new String(r.data))) ==
+      Seq((0L, "x1"), (1L, "x2")), "the uncommitted product is invisible")
+    assert(log.compactKeyed("kh") == 1, "the next pass compacts the dense member")
+    val healed = log.segments(tbh).map(_._1.getName)
+    assert(healed.size == 1 && healed.head != sparse.getName &&
+      SegmentCodec.sparseRows(healed.head).contains(1L), healed.toString)
     assert(log.range(tbh, 0, 2).map(r => (r.offset, new String(r.data))) ==
       Seq((1L, "x2")))
+    assert(log.vacuum("kh", graceMs = 0L,
+      nowMillis = System.currentTimeMillis() + 60000) == 1)
+    assert(!log.fs.exists(sparse))
     // clamp (the pin composition): only the suffix at/above the clamp
     // rewrites; pinned prefix segments stay byte-identical
     log.createTopic("kp", 1)
@@ -700,15 +666,16 @@ class LogSpec extends AnyFunSuite {
     log.createTopic("sparse", 1)
     // hand-build a sparse segment [0, 10) retaining offsets 2, 5, 9 —
     // exactly what key compaction produces — via the extended frame writer
-    val dir = log.bucketDir(TopicBucket("sparse", "b0000"))
+    val tbs = TopicBucket("sparse", "b0000")
+    val dir = log.bucketDir(tbs)
     log.fs.mkdirs(dir)
-    val seg = new org.apache.hadoop.fs.Path(dir, SegmentCodec.segmentName(0L, 10L))
+    val seg = new org.apache.hadoop.fs.Path(dir, ".staged-sparse")
     val out = new java.io.DataOutputStream(log.fs.create(seg, true))
     SegmentCodec.writeFrame(out, 2, 2000L, "v2".getBytes, Codecs.None, offset = 2L)
     SegmentCodec.writeFrame(out, 5, 5000L, ("v5" * 100).getBytes, Codecs.Zstd, offset = 5L)
     SegmentCodec.writeFrame(out, 9, 9000L, "v9".getBytes, Codecs.None, offset = 9L)
     out.close()
-    val tbs = TopicBucket("sparse", "b0000")
+    log.publishStaged(tbs, Seq((0L, 10L, seg)))
     // range: retained records surface at their ORIGINAL offsets; gaps skip
     val all = log.range(tbs, 0, 10)
     assert(all.map(r => (r.offset, r.id)) == Seq((2L, 2), (5L, 5), (9L, 9)))
@@ -743,7 +710,7 @@ class LogSpec extends AnyFunSuite {
     var off = 0L
     val memberPaths = (0 until 3).map { m =>
       val count = if (m == 2) 2000L else 1000L
-      val p = new org.apache.hadoop.fs.Path(dir, SegmentCodec.segmentName(off, count))
+      val p = new org.apache.hadoop.fs.Path(dir, SegmentCodec.dataName(off, count))
       val o = new java.io.DataOutputStream(log.fs.create(p, true))
       (0L until count).foreach { i =>
         SegmentCodec.writeFrame(o, keyAt(off + i), 1000L + off + i,
@@ -823,13 +790,13 @@ class LogSpec extends AnyFunSuite {
     // seg1 [0,3): values for keys 1,2,3; seg2 [3,5): tombstone key 2
     // (OLD ts), update key 3; an EMPTY payload for key 1 would be a
     // VALUE, not a delete — pin the distinction
-    val s1 = new org.apache.hadoop.fs.Path(dir, SegmentCodec.segmentName(0L, 3L))
+    val s1 = new org.apache.hadoop.fs.Path(dir, SegmentCodec.dataName(0L, 3L))
     val o1 = new java.io.DataOutputStream(log.fs.create(s1, true))
     SegmentCodec.writeFrame(o1, 1, 1000L, Array.emptyByteArray) // empty VALUE
     SegmentCodec.writeFrame(o1, 2, 1001L, "v2".getBytes)
     SegmentCodec.writeFrame(o1, 3, 1002L, "v3".getBytes)
     o1.close()
-    val s2 = new org.apache.hadoop.fs.Path(dir, SegmentCodec.segmentName(3L, 2L))
+    val s2 = new org.apache.hadoop.fs.Path(dir, SegmentCodec.dataName(3L, 2L))
     val o2 = new java.io.DataOutputStream(log.fs.create(s2, true))
     SegmentCodec.writeFrame(o2, 2, 2000L, null) // tombstone, ts 2000
     SegmentCodec.writeFrame(o2, 3, 2001L, "v3b".getBytes)
@@ -1070,7 +1037,7 @@ class LogSpec extends AnyFunSuite {
     log.createTopic("h", 1)
     val tbh = TopicBucket("h", "b0000")
     val bdir = log.bucketDir(tbh)
-    val member = new org.apache.hadoop.fs.Path(bdir, SegmentCodec.segmentName(0L, 4L))
+    val member = new org.apache.hadoop.fs.Path(bdir, SegmentCodec.dataName(0L, 4L))
     val mo = new java.io.DataOutputStream(log.fs.create(member, true))
     SegmentCodec.writeFrame(mo, 7, 1L, "old".getBytes("UTF-8"),
       headers = hs("v" -> "old".getBytes("UTF-8")))
@@ -1117,5 +1084,185 @@ class LogSpec extends AnyFunSuite {
     val e2 = intercept[java.io.IOException] { cit.next() }
     assert(e2.getMessage.contains("header count"), e2.getMessage)
     cit.close()
+  }
+
+  test("LogFs.putIfAbsent: racers on one path, exactly one wins, readers never see partial bytes (file, hdfstest, ostest)") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.hdfstest.impl", classOf[StrictHdfsTestFs].getName)
+    conf.set("fs.ostest.impl", classOf[ObjectStoreTestFs].getName)
+    conf.set("graft.log.nonAtomicRenameSchemes", "s3,s3a,gs,abfs,ostest")
+    val racers = 6
+    val size = 1 << 16
+    def raceRounds(fs: org.apache.hadoop.fs.FileSystem, dir: HPath, label: String): Unit = {
+      (0 until 15).foreach { round =>
+        val p = new HPath(dir, s"c-$round")
+        val barrier = new java.util.concurrent.CyclicBarrier(racers + 1)
+        val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+        val winner = new java.util.concurrent.atomic.AtomicInteger(-1)
+        val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+        val threads = (0 until racers).map { t =>
+          new Thread(() => {
+            barrier.await()
+            try if (graft.log.LogFs.putIfAbsent(fs, p, Array.fill(size)(t.toByte))) {
+              wins.incrementAndGet(); winner.set(t)
+            } catch { case e: Throwable => bad.add(s"racer $t: $e") }
+          })
+        }
+        // a concurrent reader: any visible file is whole and one writer's
+        val reader = new Thread(() => {
+          barrier.await()
+          while (!done.get) {
+            try {
+              val in = fs.open(p)
+              val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+              if (bytes.length != size || bytes.distinct.length != 1)
+                bad.add(s"reader saw ${bytes.length} bytes, ${bytes.distinct.length} distinct")
+            } catch { case _: java.io.FileNotFoundException => () }
+          }
+        })
+        (threads :+ reader).foreach(_.start())
+        threads.foreach(_.join()); done.set(true); reader.join()
+        assert(bad.isEmpty, s"$label round $round: ${bad.toArray.mkString("; ")}")
+        assert(wins.get == 1, s"$label round $round: ${wins.get} winners")
+        val in = fs.open(p)
+        val fin = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+        assert(fin.toSeq == Seq.fill(size)(winner.get.toByte), s"$label: winner's bytes")
+      }
+      assert(!fs.listStatus(dir).exists(_.getPath.getName.startsWith(".")),
+        s"$label: no temp or claim files left behind")
+    }
+    for ((scheme, atomicRename) <- Seq("file" -> true, "hdfstest" -> true, "ostest" -> false)) {
+      val dir = new HPath(s"$scheme:" + Files.createTempDirectory("pia"))
+      val fs = graft.log.LogFs.get(dir, conf)
+      assert(graft.log.LogFs.atomicRename(fs) == atomicRename, scheme)
+      raceRounds(fs, dir, scheme)
+    }
+    // a local mount without hard links (FAT/exFAT, some network mounts)
+    // raises EPERM-shaped FileSystemExceptions: the claim-file fallback
+    // must keep exactly one winner among the same racing threads
+    val dir = new HPath("file:" + Files.createTempDirectory("pia-linkless"))
+    val fs = graft.log.LogFs.get(dir, conf)
+    val seam = graft.log.LogFs.createLink
+    graft.log.LogFs.createLink = (link, existing) =>
+      throw new java.nio.file.FileSystemException(link.toString, existing.toString,
+        "Operation not permitted")
+    try {
+      raceRounds(fs, dir, "file without hard links")
+      val p = new HPath(dir, "pointer")
+      assert(graft.log.LogFs.putIfAbsent(fs, p, "first".getBytes("UTF-8")))
+      assert(!graft.log.LogFs.putIfAbsent(fs, p, "second".getBytes("UTF-8")))
+      assert(new String(Files.readAllBytes(nio(fs.makeQualified(p))), "UTF-8") == "first")
+      // a claim its crashed claimant left behind is stolen once stale
+      val q = new HPath(dir, "orphaned")
+      val claim = nio(fs.makeQualified(new HPath(dir, ".claim-orphaned")))
+      Files.createFile(claim)
+      Files.setLastModifiedTime(claim, java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3600000L))
+      assert(graft.log.LogFs.putIfAbsent(fs, q, "late".getBytes("UTF-8")))
+      assert(new String(Files.readAllBytes(nio(fs.makeQualified(q))), "UTF-8") == "late")
+      assert(!fs.listStatus(dir).exists(_.getPath.getName.startsWith(".")))
+    } finally graft.log.LogFs.createLink = seam
+  }
+
+  test("commit-log read cache: a planner looping segments()/offsetForTimestamp beside 300 appends sees dense offsets") {
+    val log = fileLog()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val planner = new Thread(() => while (!stop.get) {
+      try {
+        val segs = log.segments(tb) // throws on an overlap
+        segs.sliding(2).foreach {
+          case Seq(a, b) if a._2 + a._3 != b._2 =>
+            errors.add(s"not dense: [${a._2},+${a._3}) then ${b._2}")
+          case _ =>
+        }
+        log.offsetForTimestamp(tb, System.currentTimeMillis() - 5L)
+      } catch { case e: Throwable => errors.add(e.toString) }
+    })
+    planner.start()
+    val counts = (0 until 300).map(i => 1 + i % 3)
+    try counts.foreach(n => log.append(tb, payloads(n)))
+    finally { stop.set(true); planner.join() }
+    assert(errors.isEmpty, errors.toArray.take(5).mkString("; "))
+    val all = log.range(tb, 0, Long.MaxValue)
+    assert(all.size == counts.sum)
+    assert(all.map(_.offset) == (0L until counts.sum.toLong), "offsets dense")
+    assert(log.segments(tb).size == 300)
+  }
+
+  test("commit-log read cache: another instance committing past two checkpoint intervals + GC is fully seen") {
+    val dir = Files.createTempDirectory("graftgc").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val reader = new FileTopicLog(dir, conf, 4)
+    val writer = new FileTopicLog(dir, conf, 4) // stands in for another driver
+    (0 until 3).foreach(i => reader.append(tb, payloads(1, i.toByte)))
+    assert(reader.size(tb) == 3) // warm: reader caches version 2
+    val commitDir = new org.apache.hadoop.fs.Path(reader.bucketDir(tb), ".commitlog")
+    def versionFiles() = reader.fs.listStatus(commitDir).map(_.getPath.getName).toSet
+    assert(versionFiles().contains(f"c-${2L}%020d"))
+    (3 until 20).foreach(i => writer.append(tb, payloads(1, i.toByte)))
+    assert(!versionFiles().contains(f"c-${2L}%020d") &&
+      !versionFiles().contains(f"c-${3L}%020d"),
+      s"GC removed the reader's cached version and its successor: ${versionFiles()}")
+    assert(reader.size(tb) == 20, "every commit of the other instance is seen")
+    assert(reader.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.data(0))) ==
+      (0 until 20).map(i => (i.toLong, i.toByte)))
+    // and the reader's own next append lands after them, not on a GC'd slot
+    assert(reader.append(tb, payloads(1, 20.toByte)) == 20L)
+    assert(writer.size(tb) == 21 && writer.segments(tb).size == 21)
+  }
+
+  test("commit-log read cache: a GC that passes a reader mid read-ahead sends it to a full read") {
+    import graft.log.{CommitLog, SegMeta}
+    import org.apache.hadoop.fs.{Path => HPath}
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val dir = new HPath("file:" + Files.createTempDirectory("graftra"), ".commitlog")
+    val writer = new CommitLog(graft.log.LogFs.get(dir, conf), dir, 2)
+    // the reader's filesystem runs `hook` once, right after its next open
+    val hook = new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
+    val hooked = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def open(f: HPath, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+        val in = super.open(f, bufferSize)
+        hook.getAndSet(() => ())()
+        in
+      }
+    }
+    hooked.initialize(java.net.URI.create("file:///"), conf)
+    val reader = new CommitLog(hooked, dir, 2)
+    def commit(i: Int): Unit = {
+      val st = writer.read()
+      assert(writer.tryCommit(st, Seq(SegMeta(s"d$i", i, 1)), Set.empty).isDefined)
+    }
+    (0 until 3).foreach(commit)
+    assert(reader.read().version == 2) // warm at version 2
+    commit(3); commit(4) // the next read reads ahead from c-3
+    // while the reader holds c-3 open, the writer commits past GC floors
+    // that remove c-3 and c-4: c-4 is then absent but was committed, so
+    // the reader must not settle on version 3
+    hook.set(() => (5 until 12).foreach(commit))
+    val st = reader.read()
+    val names = hooked.listStatus(dir).map(_.getPath.getName).toSet
+    assert(!names.contains(f"c-${3L}%020d") && !names.contains(f"c-${4L}%020d"),
+      s"GC removed the versions behind the reader: $names")
+    assert(st.version == 11 && st.segs.map(_.name) == (0 until 12).map(i => s"d$i"),
+      s"reader saw version ${st.version}")
+  }
+
+  test("a bucket in the retired rename layout (seg-*.log, no .commitlog/) is refused loudly") {
+    val log = fileLog()
+    val dir = log.bucketDir(tb)
+    log.fs.mkdirs(dir)
+    SegmentCodec.write(log.fs,
+      new org.apache.hadoop.fs.Path(dir, "seg-00000000000000000000-0000000003.log"),
+      payloads(3).map(p => (p, 0L)))
+    for (op <- Seq[() => Any](() => log.segments(tb), () => log.size(tb),
+        () => log.range(tb, 0, 10), () => log.append(tb, payloads(1)))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("rename-published layout"), e.getMessage)
+    }
+    // an empty bucket still reads as empty
+    assert(log.size(TopicBucket("t", "b1")) == 0L)
   }
 }

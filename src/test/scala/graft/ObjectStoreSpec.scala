@@ -11,10 +11,10 @@ import java.nio.file.Files
 
 /** The LogSpec contract suite re-run over [[ObjectStoreTestFs]] (no atomic
   * rename, PUT-visibility at close, conditional-PUT create-exclusive):
-  * certifies the manifest-commit protocol that replaces the refused
-  * `allowNonAtomicRename` override — publish, replay idempotency,
-  * foreign-writer refusal, retention, checkpoint GC, and optimistic
-  * concurrency all without ever relying on a rename being atomic.
+  * certifies the commit-log protocol on its conditional-PUT arm — publish,
+  * replay idempotency, foreign-writer refusal, retention, checkpoint GC,
+  * and optimistic concurrency all without ever relying on a rename being
+  * atomic.
   */
 class ObjectStoreSpec extends AnyFunSuite {
 
@@ -22,7 +22,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val c = new Configuration()
     c.set("fs.ostest.impl", classOf[ObjectStoreTestFs].getName)
     // register the rig's scheme alongside the real object stores so the
-    // auto mode detection picks the manifest commit protocol for it
+    // commit log takes the conditional-PUT arm of put-if-absent for it
     c.set("graft.log.nonAtomicRenameSchemes", "s3,s3a,gs,abfs,ostest")
     extra.foreach { case (k, v) => c.set(k, v) }
     c
@@ -33,17 +33,6 @@ class ObjectStoreSpec extends AnyFunSuite {
   private def payloads(n: Int, tag: Byte = 0): Seq[Payload] =
     (0 until n).map(i => Payload(i, Array(tag, i.toByte)))
   private val tb = TopicBucket("t", "b0")
-
-  test("object-store scheme auto-selects manifest mode; rename mode must be forced") {
-    val dir = tmp()
-    assert(new FileTopicLog("ostest:" + dir, conf()).manifestCommitMode)
-    assert(!new FileTopicLog("ostest:" + dir,
-      conf("graft.log.commitProtocol" -> "rename")).manifestCommitMode)
-    val e = intercept[IllegalArgumentException] {
-      new FileTopicLog("ostest:" + dir, conf("graft.log.commitProtocol" -> "bogus"))
-    }
-    assert(e.getMessage.contains("commitProtocol"))
-  }
 
   test("append/range over the store: dense offsets, data invisible until committed") {
     val log = newLog()
@@ -91,17 +80,17 @@ class ObjectStoreSpec extends AnyFunSuite {
       p
     }
     val s1 = stage(1)
-    log.publishStaged(tb, 0L, 4L, s1)
+    log.publishStaged(tb, Seq((0L, 4L, s1)))
     assert(!fs.exists(s1), "staged file consumed by the publish")
     assert(log.size(tb) == 4)
     // epoch replay: same offsets, same records — consumed, no new segment
     val s2 = stage(1)
-    log.publishStaged(tb, 0L, 4L, s2)
+    log.publishStaged(tb, Seq((0L, 4L, s2)))
     assert(!fs.exists(s2))
     assert(log.segments(tb).size == 1)
     // foreign writer: same offsets, different records
     val s3 = stage(9)
-    val e = intercept[IllegalStateException] { log.publishStaged(tb, 0L, 4L, s3) }
+    val e = intercept[IllegalStateException] { log.publishStaged(tb, Seq((0L, 4L, s3))) }
     assert(e.getMessage.contains("DIFFERENT"))
     assert(log.range(tb, 0, 4).map(_.data(0)) == Seq[Byte](1, 1, 1, 1))
   }
@@ -144,7 +133,7 @@ class ObjectStoreSpec extends AnyFunSuite {
   }
 
   test("commit-log checkpoints bound the version directory; state survives GC") {
-    val log = newLog("graft.log.commitCheckpointInterval" -> "4")
+    val log = new FileTopicLog("ostest:" + tmp(), conf(), 4) // interval seam
     val now = System.currentTimeMillis()
     (0 until 20).foreach { i =>
       log.appendAt(tb, i.toLong, Seq((Payload(i, Array(i.toByte)), now)))
@@ -230,8 +219,7 @@ class ObjectStoreSpec extends AnyFunSuite {
   }
 
   test("CommitLog resurrection guard: a stale writer's GC'd version never silently vanishes") {
-    val root = tmp()
-    val log = newLog("graft.log.commitCheckpointInterval" -> "4")
+    val log = newLog()
     val fs = log.fs
     val dir = new HPath(new HPath(new HPath(log.root, "t"), "b0"), ".commitlog")
     val cl = new CommitLog(fs, dir, checkpointInterval = 4)
@@ -261,7 +249,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     assert(cl.tryCommit(st, Seq(SegMeta("data-b", 0L, 2L)), Set.empty).isEmpty,
       "stale writer refused through the typed conditional-PUT branch")
     assert(cl.read().segs.map(_.name) == Vector("data-a"))
-    // local: refusal surfaces at create() (exists-check) — same typed class
+    // local: the hard-link arm refuses through java.nio's typed class
     val lfs = org.apache.hadoop.fs.FileSystem.getLocal(conf())
     val ldir = new HPath(tmp(), ".commitlog")
     val lcl = new CommitLog(lfs, ldir, 64)
@@ -272,8 +260,11 @@ class ObjectStoreSpec extends AnyFunSuite {
   }
 
   test("untyped IOException classification: already-exists refuses, parent-missing rethrows") {
+    // listed as non-atomic-rename: the classifier belongs to the
+    // create(overwrite = false) arm of put-if-absent
     val fs = new UntypedFaultTestFs
-    fs.initialize(java.net.URI.create("untypedfault:///"), conf())
+    fs.initialize(java.net.URI.create("untypedfault:///"),
+      conf("graft.log.nonAtomicRenameSchemes" -> "untypedfault"))
     // a fault whose message merely CONTAINS "exist" ("Parent path does not
     // exist") must surface as the storage fault it is — the old
     // contains("exist") sniff classified it as a lost race and burned the
@@ -320,13 +311,13 @@ class ObjectStoreSpec extends AnyFunSuite {
       Seq(Long.MinValue, 25L, 31L, 45L, 51L).map(log.offsetForTimestamp(tb, _))
     val expect = Seq(0L, 2L, 3L, 5L, 6L)
     assert(seeks() == expect)
-    // the cache write is a direct overwrite PUT in manifest mode (no
-    // rename on the store); a second reader instance sees it and agrees
+    // the cache write is a direct overwrite PUT on the store (no rename);
+    // a second reader instance sees it and agrees
     val log2 = new FileTopicLog("ostest:" + log.root.toUri.getPath, conf())
     assert(Seq(Long.MinValue, 25L, 31L, 45L, 51L)
       .map(log2.offsetForTimestamp(tb, _)) == expect)
-    // manifest-mode compaction renames nothing but re-keys the segment
-    // list; stale cache entries stop matching and the seek recomputes
+    // compaction renames nothing but re-keys the segment list; stale
+    // cache entries stop matching and the seek recomputes
     assert(log.compactSegments("t") == 2)
     assert(seeks() == expect, "seek invariant under manifest-mode compaction")
   }
@@ -337,20 +328,20 @@ class ObjectStoreSpec extends AnyFunSuite {
     val text = (i: Int) => (s"doc-$i: " + ("lorem ipsum dolor " * 20)).getBytes("UTF-8")
     val stamped = (0 until 40).map(i => (Payload(i, text(i)), 100L + i))
     // stage a zstd-compressed frame file and publish it through the
-    // sequenced commit (the connector's manifest-mode publish path)
+    // sequenced commit (the connector's publish path)
     val staged = new HPath(log.root, s".staged-${java.util.UUID.randomUUID()}")
     SegmentCodec.write(log.fs, staged, stamped, Codecs.Zstd)
     val compressedLen = log.fileLen(staged)
     assert(compressedLen * 3 < stamped.map(_._1.data.length + 16L).sum,
       "zstd must shrink repetitive text >=3x on this rig too")
-    assert(log.publishStaged(tb, 0L, 40L, staged).isDefined)
+    assert(log.publishStaged(tb, Seq((0L, 40L, staged))).head.isDefined)
     // mixed bucket: a raw append lands after the compressed segment
     log.append(tb, (40 until 50).map(i => Payload(i, text(i))))
     def content() = log.range(tb, 0, 100).map(r => (r.offset, r.id, new String(r.data)))
     val before = content()
     assert(before.map(_._2) == (0 until 50))
     assert(before.forall { case (o, id, s) => o == id && s.startsWith(s"doc-$id:") })
-    // manifest-mode compaction byte-concats mixed raw+compressed members
+    // compaction byte-concats mixed raw+compressed members
     assert(log.compactSegments("t") > 0)
     assert(log.segments(tb).size == 1)
     assert(content() == before, "compaction over mixed frames is invisible")
@@ -386,7 +377,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val stamped = (0 until 600).map(i => (Payload(i, pay(i)), 100L + i))
     val staged = new HPath(log.root, s".staged-${java.util.UUID.randomUUID()}")
     SegmentCodec.write(log.fs, staged, stamped, graft.log.Codecs.ZstdDict)
-    assert(log.publishStaged(tb, 0L, 600L, staged).isDefined)
+    assert(log.publishStaged(tb, Seq((0L, 600L, staged))).head.isDefined)
     // raw tail after the dict segment (mixed bucket), then byte-concat:
     // the concatenated object is (dict, records...) ++ (raw records...)
     log.append(tb, (600 until 620).map(i => Payload(i, pay(i))))

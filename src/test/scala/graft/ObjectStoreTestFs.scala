@@ -8,7 +8,7 @@ import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStream}
 import java.nio.file.{Files, StandardCopyOption}
 
 /** Test filesystem with OBJECT-STORE semantics over local disk — the rig
-  * the manifest-commit protocol is certified against (the MiniDFSCluster
+  * the commit log's conditional-PUT arm is certified against (the MiniDFSCluster
   * trick of [[StrictHdfsTestFs]], aimed at S3 instead of HDFS):
   *
   *   - '''PUT visibility at close''': `create` buffers to a hidden inflight
@@ -22,11 +22,10 @@ import java.nio.file.{Files, StandardCopyOption}
   *     file — fail-if-exists at the filesystem layer), so the 2-JVM race
   *     probe exercises the real one-winner-per-version property.
   *   - '''Rename is copy+delete''': non-atomic, refuses an existing
-  *     destination (the S3A shape). Nothing in manifest mode may depend on
-  *     it for atomicity.
-  *   - No hard-link publish path is reachable from the log itself (the
-  *     scheme is non-`file`, so `FileTopicLog.publishNoReplace`'s local
-  *     arm never runs).
+  *     destination (the S3A shape). Nothing in the log may depend on it
+  *     for atomicity; renames of `data-` objects are counted.
+  *   - No hard-link path is reachable from the log itself (the scheme is
+  *     non-`file`, so `LogFs.putIfAbsent`'s local arm never runs).
   */
 object ObjectStoreTestFs {
   /** Segment-PUT instrumentation for the suite: counts every `create` of a
@@ -34,6 +33,11 @@ object ObjectStoreTestFs {
     * data PUT per logical append, however many commit races were lost).
     */
   val dataPuts = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Renames of a `data-` object: each is a server-side COPY of the whole
+    * object plus a DELETE on a real store.
+    */
+  val dataCopies = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 class ObjectStoreTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -95,11 +99,12 @@ class ObjectStoreTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
           "are a per-object loop on a real store and nothing in the log " +
           "protocol may rely on them")
     if (d.exists()) return false // S3A: rename refuses an existing file target
+    if (s.getName.startsWith("data-")) ObjectStoreTestFs.dataCopies.incrementAndGet()
     val parent = d.getParentFile
     if (parent != null && !parent.isDirectory && !parent.mkdirs() && !parent.isDirectory)
       return false
     // copy THEN delete — deliberately non-atomic (a crash between the two
-    // leaves both objects, which manifest mode must tolerate)
+    // leaves both objects, which the log must tolerate)
     Files.copy(s.toPath, d.toPath)
     s.delete()
   }

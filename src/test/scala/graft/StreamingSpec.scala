@@ -1121,19 +1121,17 @@ class StreamingSpec extends AnyFunSuite {
     val tb = graft.model.TopicBucket("zf", "b0000")
     log.fs.mkdirs(log.bucketDir(tb))
     // 500 published segments in their steady state: ts stats stamped at
-    // publish (the connector's publish path does this), manifest current
+    // publish (the connector's publish path does this), one commit
     val rowsPer = 5
     val base = 1700000000000L
-    (0 until 500).foreach { i =>
-      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
-        graft.log.SegmentCodec.segmentName(i.toLong * rowsPer, rowsPer.toLong))
+    val names = log.publishStaged(tb, (0 until 500).map { i =>
+      val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
       graft.log.SegmentCodec.write(log.fs, p,
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), base + i)))
-    }
-    log.refreshManifest(tb)
-    log.recordTsStats(tb, (0 until 500).map(i =>
-      graft.log.SegmentCodec.segmentName(i.toLong * rowsPer, rowsPer.toLong) ->
-        (base + i, base + i)).toMap)
+      (i.toLong * rowsPer, rowsPer.toLong, p)
+    }).flatten
+    log.recordTsStats(tb, names.zipWithIndex.map { case (n, i) =>
+      n -> (base + i, base + i) }.toMap)
     // one fresh segment past the backlog — the only rows the query consumes
     log.append(tb, (0 until 6).map(i => graft.model.Payload(100 + i, Array[Byte](2))))
     CountingReadFs.dataOpens.set(0L)

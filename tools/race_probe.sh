@@ -1,16 +1,18 @@
 #!/usr/bin/env bash
 # Cross-JVM publish race probe: two driver JVMs write the same topic
 # concurrently; a third verifies nothing was lost, duplicated, or
-# overlapped. Exercises the publish paths ConnectorSpec cannot reach
-# in-process (same-(start,count) createLink collision, different-count
-# overlap arbitration) because RipplePublish is synchronized per JVM.
+# overlapped. Exercises the commit race ConnectorSpec cannot reach
+# in-process (two drivers' put-if-absent on the same commit-log version,
+# the loser's re-read and retry) because RipplePublish is synchronized
+# per JVM.
 #
 # Usage: tools/race_probe.sh [iterations] [rows-per-writer] [mode]
-#   mode = local  (default) — rename-protocol over local disk
-#   mode = ostest           — manifest commit protocol over the
-#                             S3-semantics rig (no atomic rename,
-#                             conditional-PUT create-exclusive); needs
-#                             Test/compile for graft.ObjectStoreTestFs
+#   mode = local  (default) — the commit log over local disk (put-if-absent
+#                             by hard link)
+#   mode = ostest           — the commit log over the S3-semantics rig (no
+#                             atomic rename, put-if-absent by conditional
+#                             PUT); needs Test/compile for
+#                             graft.ObjectStoreTestFs
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
