@@ -196,9 +196,15 @@ class RippleDataSource extends TableProvider with DataSourceRegister {
     if (options.getBoolean("includeHeaders", false)) Schemas.envelopeWithHeaders
     else Schemas.envelope
 
+  /** Also names the `file:` checkpoint manager for the session's
+    * streaming queries ([[graft.streaming.LocalCheckpointFileManager]]),
+    * unless the session names one itself.
+    */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
+      properties: JMap[String, String]): Table = {
+    graft.streaming.LocalCheckpointFileManager.install()
     new RippleTable(new CaseInsensitiveStringMap(properties))
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }

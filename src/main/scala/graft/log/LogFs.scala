@@ -1,7 +1,8 @@
 package graft.log
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 
 import java.io.{ObjectInputStream, ObjectOutputStream}
 import scala.collection.concurrent.TrieMap
@@ -29,6 +30,46 @@ final class SerializableHadoopConf(@transient private var conf: Configuration)
   }
 }
 
+/** The raw local filesystem under the log's `file:` instance: Hadoop's,
+  * except that `setPermission` is one `chmod(2)` through `java.nio`.
+  * Without `libhadoop` (the Spark distribution ships none), Hadoop's
+  * `setPermission` starts a `chmod` child process, and `create` and
+  * `mkdirs` call it for every new file and directory — about 8 ms of
+  * process start each on a 4-vCPU host. The mode written is the one
+  * Hadoop would write; a mode that `PosixFilePermission` cannot express
+  * (the sticky bit) or a filesystem without a POSIX view keeps Hadoop's
+  * own path.
+  */
+private[graft] final class SpawnFreeLocalFs extends RawLocalFileSystem {
+  override def setPermission(p: HPath, permission: FsPermission): Unit = {
+    val mode = permission.toShort.toInt
+    if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
+    else
+      try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+        SpawnFreeLocalFs.posix(mode))
+      catch {
+        case _: UnsupportedOperationException => super.setPermission(p, permission)
+        case e: java.nio.file.NoSuchFileException =>
+          throw new java.io.FileNotFoundException(s"$p: ${e.getMessage}")
+      }
+  }
+}
+
+private[graft] object SpawnFreeLocalFs {
+  import java.nio.file.attribute.PosixFilePermission
+
+  /** The nine `rwxrwxrwx` bits of `mode` as a permission set
+    * (`PosixFilePermission` declares them from owner-read down).
+    */
+  def posix(mode: Int): java.util.Set[PosixFilePermission] = {
+    val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values().foreach { p =>
+      if ((mode & (1 << (8 - p.ordinal))) != 0) set.add(p)
+    }
+    set
+  }
+}
+
 /** Filesystem access for the topic-log storage plane.
   *
   * Every path the log touches (segments, commit logs, locks, staging,
@@ -42,13 +83,13 @@ final class SerializableHadoopConf(@transient private var conf: Configuration)
   * in ripple-mq/ripple-server) actually runnable off a shared cluster
   * filesystem instead of only a shared POSIX mount.
   *
-  * Instances are created with `FileSystem.newInstance` (NOT the global
-  * Hadoop FS cache) so that disabling checksums for the log's own I/O —
-  * segment frames carry length-prefixed records and segments become live
-  * only through whole-file commits, so the local-FS `.crc` side files
-  * would only double the metadata ops — cannot leak into Spark's shared `FileSystem`
+  * Instances are private (NOT the global Hadoop FS cache) so that
+  * disabling checksums for the log's own I/O — segment frames carry
+  * length-prefixed records and segments become live only through
+  * whole-file commits, so the local-FS `.crc` side files would only double
+  * the metadata ops — cannot leak into Spark's shared `FileSystem`
   * instances. One instance per (scheme, authority) for the JVM's lifetime,
-  * mirroring Hadoop's own cache discipline.
+  * mirroring Hadoop's own cache discipline; see [[get]].
   */
 object LogFs {
   private val cache = TrieMap.empty[String, FileSystem]
@@ -93,11 +134,17 @@ object LogFs {
   // same scheme/authority silently shares the first instance. Fingerprint
   // every distinct Configuration OBJECT once (weak identity memo — the
   // same broadcast conf arrives at every executor task) and warn loudly the
-  // first time a materially different conf hits a cached key.
+  // first time a materially different conf hits a cached key. Only the
+  // keys a Hadoop filesystem reads count (`fs.s3a.*`, `dfs.*`,
+  // `hadoop.security.*`, `ipc.*` timeouts, `io.file.buffer.size`): the
+  // confs the streaming checkpoint manager receives also carry the session's
+  // SQL conf, the warehouse location and the query's run id.
   private val cacheFp = TrieMap.empty[String, Int]
   private val warnedKeys = TrieMap.empty[String, Unit]
   private val fpMemo = new java.util.WeakHashMap[Configuration, Integer]()
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val FsKeyPrefixes = Seq("fs.", "dfs.", "hadoop.", "ipc.", "io.")
 
   private def fingerprint(conf: Configuration): Int = {
     val memo = fpMemo.synchronized(fpMemo.get(conf))
@@ -106,7 +153,8 @@ object LogFs {
     val it = conf.iterator()
     while (it.hasNext) {
       val e = it.next()
-      h ^= (e.getKey.hashCode * 31) ^ e.getValue.hashCode
+      if (FsKeyPrefixes.exists(e.getKey.startsWith))
+        h ^= (e.getKey.hashCode * 31) ^ e.getValue.hashCode
     }
     fpMemo.synchronized(fpMemo.put(conf, Integer.valueOf(h)))
     h
@@ -174,7 +222,7 @@ object LogFs {
     (link, existing) => java.nio.file.Files.createLink(link, existing)
 
   private def putIfAbsentLocal(fs: FileSystem, p: HPath, bytes: Array[Byte]): Boolean = {
-    import java.nio.file.{Files, FileAlreadyExistsException, NoSuchFileException}
+    import java.nio.file.{Files, NoSuchFileException}
     val target = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
     val tmp = target.resolveSibling(s".tmp-${java.util.UUID.randomUUID()}")
     try Files.write(tmp, bytes)
@@ -182,6 +230,17 @@ object LogFs {
       Files.createDirectories(target.getParent)
       Files.write(tmp, bytes)
     }
+    linkIfAbsent(tmp, target)
+  }
+
+  /** Publish the complete local file `tmp` at `target` unless `target`
+    * exists: true on the win, false when `target` already exists; `tmp`
+    * is gone afterwards either way. The `file:` arm of [[putIfAbsent]],
+    * and the refusing publish of the `file:` checkpoint manager.
+    */
+  private[graft] def linkIfAbsent(tmp: java.nio.file.Path,
+      target: java.nio.file.Path): Boolean = {
+    import java.nio.file.{Files, FileAlreadyExistsException}
     try {
       createLink(target, tmp)
       true
@@ -319,11 +378,21 @@ object LogFs {
     case _ => false
   }
 
-  /** Resolve `p`'s filesystem with log-plane settings (private instance,
-    * checksums off). Cached per (scheme, authority) for the JVM lifetime —
-    * first configuration wins; a later call with a materially different
-    * Configuration logs a one-shot warning naming the key (it cannot be
-    * honored without breaking the one-instance discipline).
+  /** The filesystem of `p` for every local-or-remote file the log, the
+    * connector, the streaming helpers and the operators write themselves.
+    *
+    *   - Private instance with checksums off: no `.crc` side files are
+    *     written or verified, and Spark's shared instances keep theirs.
+    *   - `file:` is Hadoop's `LocalFileSystem` over [[SpawnFreeLocalFs]],
+    *     so `create` and `mkdirs` start no `chmod` process. A
+    *     configuration that names its own `fs.file.impl` gets that class.
+    *   - Every other scheme is `FileSystem.newInstance` of its configured
+    *     class.
+    *
+    * Cached per (scheme, authority) for the JVM lifetime: the first
+    * configuration wins, and a later call with a materially different
+    * Configuration logs a one-shot warning (it cannot be honored without
+    * breaking the one-instance discipline).
     */
   def get(p: HPath, conf: Configuration): FileSystem = {
     val uri = p.toUri
@@ -353,8 +422,15 @@ object LogFs {
         // cache records the fingerprint — a loser must never overwrite the
         // winner's baseline or later warnings compare against the wrong
         // configuration.
-        val fs = FileSystem.newInstance(
-          if (uri.getScheme == null) defaultUri else uri, conf)
+        val fsUri = if (uri.getScheme == null) defaultUri else uri
+        val fs =
+          if (scheme == "file" && Option(conf.getTrimmed("fs.file.impl"))
+              .forall(c => c.isEmpty || c == classOf[LocalFileSystem].getName)) {
+            val local = new LocalFileSystem(new SpawnFreeLocalFs)
+            local.setConf(conf)
+            local.initialize(fsUri, conf)
+            local
+          } else FileSystem.newInstance(fsUri, conf)
         fs.setWriteChecksum(false)
         fs.setVerifyChecksum(false)
         cache.putIfAbsent(key, fs) match {

@@ -1137,7 +1137,7 @@ object Dedup {
     val bloomUdaf = org.apache.spark.sql.functions.udaf(
       new graft.functions.BloomBuildAggregator(numBits, k), Encoders.scalaLong)
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.log.LogFs.get(root, spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
     fs.mkdirs(root)
     val conf = new graft.log.SerializableHadoopConf(
@@ -1147,7 +1147,7 @@ object Dedup {
       .withColumn("__shard", graft.functions.bloom.shard_of(col("h"), shards))
       .groupBy(col("__shard")).agg(bloomUdaf(col("h")).as("bits"))
       .foreachPartition { (rows: Iterator[Row]) =>
-        val fsx = new Path(dir).getFileSystem(conf.value)
+        val fsx = graft.log.LogFs.get(new Path(dir), conf.value)
         rows.foreach { r =>
           val s = r.getInt(0)
           val bits = r.getSeq[Long](1)
@@ -1217,7 +1217,7 @@ object Dedup {
           val s = r.getInt(shardIdx)
           val bits = cache.getOrElseUpdate(s, {
             if (fs == null)
-              fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf.value)
+              fs = graft.log.LogFs.get(new org.apache.hadoop.fs.Path(dir), conf.value)
             loadShardBits(fs, dir, s, numBits)
           })
           val may = graft.functions.BloomParams.testBits(

@@ -146,8 +146,8 @@ object Layout {
       clusterCols: Seq[Column], numFiles: Int)(
       transform: DataFrame => DataFrame): Unit = {
     val p = path.replaceAll("/+$", "") // trailing slash would nest tmp INSIDE
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = graft.log.LogFs.get(new org.apache.hadoop.fs.Path(p),
+      spark.sparkContext.hadoopConfiguration)
     def hp(s: String) = new org.apache.hadoop.fs.Path(s)
     val (tmp, old) = (hp(p + ".compact.tmp"), hp(p + ".compact.old"))
     // self-heal a crash that died between the swap renames

@@ -179,7 +179,7 @@ object Retrieval {
     import org.apache.hadoop.fs.Path
     val staged = new Path(s"$path/stats__staged")
     val live = new Path(s"$path/stats")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.log.LogFs.get(live, spark.sparkContext.hadoopConfiguration)
     Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
       .write.mode("overwrite").parquet(staged.toString)
     if (fs.exists(live)) fs.delete(live, true)
@@ -274,7 +274,7 @@ object Retrieval {
       import org.apache.hadoop.fs.Path
       val staged = new Path(s"$path/stats__staged")
       val live = new Path(s"$path/stats")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.log.LogFs.get(live, spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(live) && fs.exists(staged)) fs.rename(staged, live)
     }
     val s = spark.read.parquet(s"$path/stats").head()

@@ -244,7 +244,7 @@ object IndexMaintenance {
   def resetEpochMarkers(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val dir = new HPath(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.log.LogFs.get(dir, spark.sparkContext.hadoopConfiguration)
     try fs.delete(new HPath(dir, "_last_epoch"), false)
     catch { case _: java.io.IOException => () }
     try fs.delete(new HPath(dir, "_epoch_intent"), false)
@@ -261,7 +261,7 @@ object IndexMaintenance {
       epochId: Long)(append: => Unit, scrub: => Unit): Unit = {
     val spark = batch.sparkSession
     val dir = new HPath(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.log.LogFs.get(dir, spark.sparkContext.hadoopConfiguration)
     val lastP = new HPath(dir, "_last_epoch")
     val intentP = new HPath(dir, "_epoch_intent")
     // The streaming queryId: set as a thread-local property on the stream

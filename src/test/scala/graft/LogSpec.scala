@@ -1265,4 +1265,47 @@ class LogSpec extends AnyFunSuite {
     // an empty bucket still reads as empty
     assert(log.size(TopicBucket("t", "b1")) == 0L)
   }
+
+  test("file: log instance writes Hadoop's default modes without a chmod process; the sticky bit keeps Hadoop's path") {
+    import org.apache.hadoop.fs.permission.FsPermission
+    def mode(f: java.io.File): Int =
+      Files.getAttribute(f.toPath, "unix:mode").asInstanceOf[Integer].intValue & 0xfff
+    // the log's own instance, through a real append: bucket directories
+    // and segment files
+    val log = fileLog()
+    assert(log.fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    val tb = log.createTopic("perm", 1).head
+    log.append(tb, Seq(Payload(1, Array[Byte](1))))
+    val conf = log.fs.getConf
+    val umask = FsPermission.getUMask(conf)
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    val bucket = nio(log.bucketDir(tb)).toFile
+    val segs = bucket.listFiles().filter(_.getName.startsWith("data-"))
+    assert(segs.nonEmpty)
+    segs.foreach(f => assert(mode(f) == fileMode, f"${f.getName} ${mode(f)}%o"))
+    assert(mode(bucket) == dirMode, f"${mode(bucket)}%o")
+    // a fresh instance under a stricter umask applies it exactly as
+    // Hadoop's FsPermission arithmetic does
+    val strict = new org.apache.hadoop.conf.Configuration(conf)
+    strict.set(FsPermission.UMASK_LABEL, "027")
+    val fs = new org.apache.hadoop.fs.LocalFileSystem(new graft.log.SpawnFreeLocalFs)
+    fs.initialize(java.net.URI.create("file:///"), strict)
+    val dir = Files.createTempDirectory("graftperm").resolve("a/b").toFile
+    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(dir.toURI)))
+    val file = new java.io.File(dir, "f")
+    fs.create(new org.apache.hadoop.fs.Path(file.toURI), true).close()
+    val u027 = new FsPermission("027")
+    assert(mode(dir) == FsPermission.getDirDefault.applyUMask(u027).toShort.toInt,
+      f"${mode(dir)}%o")
+    assert(mode(dir.getParentFile) == FsPermission.getDirDefault.applyUMask(u027).toShort.toInt)
+    assert(mode(file) == FsPermission.getFileDefault.applyUMask(u027).toShort.toInt,
+      f"${mode(file)}%o")
+    // a mode PosixFilePermission cannot express falls back to Hadoop
+    fs.setPermission(new org.apache.hadoop.fs.Path(dir.toURI), new FsPermission(0x3ff.toShort))
+    assert(mode(dir) == 0x3ff, f"sticky bit expected, got ${mode(dir)}%o")
+    fs.setPermission(new org.apache.hadoop.fs.Path(dir.toURI), new FsPermission(0x1c0.toShort))
+    assert(mode(dir) == 0x1c0, f"${mode(dir)}%o")
+    fs.close()
+  }
 }

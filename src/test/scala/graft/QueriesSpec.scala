@@ -65,6 +65,28 @@ class QueriesSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"direct pins outside Materialize:\n${hits.mkString("\n")}")
   }
 
+  test("the log, connector, streaming and operator layers get a filesystem only through LogFs (source lint)") {
+    // LogFs.get is the one place that builds a filesystem for files these
+    // layers write themselves: a private instance, checksums off, and a
+    // `file:` instance that starts no chmod process per create or mkdirs
+    val acquire = raw"(getFileSystem|FileSystem\.get|FileSystem\.newInstance)\(".r
+    val hits = Seq("log", "connector", "streaming", "ops")
+      .map(d => java.nio.file.Paths.get(s"src/main/scala/graft/$d"))
+      .flatMap { d =>
+        val files = java.nio.file.Files.list(d)
+        try files.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally files.close()
+      }
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "LogFs.scala")
+      .flatMap { p =>
+        val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if acquire.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }.toList finally src.close()
+      }
+    assert(hits.isEmpty, s"filesystems acquired outside LogFs.get:\n${hits.mkString("\n")}")
+  }
+
   test("asofMerged == join+window as-of on adversarial random timelines") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window

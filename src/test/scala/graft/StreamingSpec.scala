@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Event-time streaming semantics over topic data (SURVEY Table B
   * streaming rows): windows, sessions, watermark+dedup, stream-static and
@@ -1418,5 +1419,207 @@ class StreamingSpec extends AnyFunSuite {
         .option("consumerId", "cg").option("groupMembers", 2).load().count()
     }
     assert(chain(e3).exists(_.contains("set BOTH")), chain(e3).mkString("|"))
+  }
+
+
+  // ---- file: checkpoint manager and spawn-free local I/O ----
+
+  private val ManagerKey = graft.streaming.LocalCheckpointFileManager.Key
+  private val SparkDefaultManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileContextBasedCheckpointFileManager"
+  private val eventSchema = StructType(Seq(
+    StructField("user", StringType), StructField("value", DoubleType)))
+
+  private def localManager(dir: String): graft.streaming.LocalCheckpointFileManager =
+    new graft.streaming.LocalCheckpointFileManager(
+      new org.apache.hadoop.fs.Path(new java.io.File(dir).toURI),
+      spark.sparkContext.hadoopConfiguration)
+
+  private def writeVia(out: org.apache.hadoop.fs.FSDataOutputStream, s: String): Unit =
+    out.write(s.getBytes("UTF-8"))
+
+  private def listNames(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("file: log and checkpoint I/O start no Hadoop Shell process (JFR jdk.ProcessStart)") {
+    import spark.implicits._
+    val root = tmp()
+    val dump = Files.createTempFile("graft-spawns", ".jfr")
+    // Hadoop's Shell probes for `setsid` once per JVM, in its static
+    // initializer: load it first so only per-operation spawns count
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val epochs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    try {
+      Ripple.createTopic(root, "sp", numBuckets = 2)
+      val lg = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
+      (0 until 20).foreach { i =>
+        lg.append(graft.model.TopicBucket("sp", f"b${i % 2}%04d"), (0 until 5).map { j =>
+          graft.model.Payload(i * 5 + j, s"""{"user":"u$j","value":1.0}""".getBytes("UTF-8"))
+        })
+      }
+      Ripple.writePacked((0 until 30).map(i => (s"w$i", 2.0)).toDF("user", "value"),
+        root, "sp", col("user"), numBuckets = 2)
+      val agg = TopicStreams.windowedCounts(
+        TopicStreams.lift(Ripple.readStream(spark, root, "sp", maxOffsetsPerTrigger = 40L,
+          consumerId = Some("agg")), eventSchema), "_ts", "1 hour", "10 seconds")
+      val q = agg.writeStream.outputMode("update")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: DataFrame, e: Long) => b.count(); epochs.add(e); () }
+        .option("checkpointLocation", Ripple.consumerCheckpoint(root, "sp", "agg"))
+        .start()
+      assert(q.awaitTermination(120000), "the drain must finish")
+      assert(q.exception.isEmpty, q.exception.toString)
+    } finally {
+      rec.stop()
+      rec.dump(dump)
+      rec.close()
+    }
+    assert(epochs.size >= 3, s"130 rows at 40 per trigger run >= 3 epochs, got $epochs")
+    assert(Ripple.consumerOffsets(root, "sp")("agg").values.sum == 130L)
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+    Files.deleteIfExists(dump)
+    val viaShell = starts.filter(e => Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+    assert(viaShell.isEmpty, s"${viaShell.size} Hadoop Shell spawns, the first:\n" +
+      viaShell.headOption.fold("")(e => e.getString("command") + "\n" +
+        e.getStackTrace.getFrames.asScala.take(20)
+          .map(f => s"  ${f.getMethod.getType.getName}.${f.getMethod.getName}:${f.getLineNumber}")
+          .mkString("\n")))
+  }
+
+  test("checkpoint manager: a refused createAtomic throws FileAlreadyExistsException and leaves no temp file") {
+    val dir = tmp()
+    val fm = localManager(dir)
+    assert(fm.delegate.getClass.getSimpleName == "LocalCheckpointFiles")
+    assert(fm.isLocal)
+    val p = new org.apache.hadoop.fs.Path(new java.io.File(dir, "0").toURI)
+    val first = fm.createAtomic(p, overwriteIfPossible = false)
+    writeVia(first, "one")
+    first.close()
+    val second = fm.createAtomic(p, overwriteIfPossible = false)
+    writeVia(second, "two")
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](second.close())
+    second.cancel() // what Spark's metadata log does next; a no-op here
+    assert(new String(Files.readAllBytes(new java.io.File(dir, "0").toPath), "UTF-8") == "one")
+    assert(listNames(dir) == Set("0"), "no temp file and no .crc sidecar")
+  }
+
+  test("checkpoint manager: cancel() publishes nothing and leaves no temp file") {
+    val dir = tmp()
+    val fm = localManager(dir)
+    val p = new org.apache.hadoop.fs.Path(new java.io.File(dir, "state.delta").toURI)
+    val out = fm.createAtomic(p, overwriteIfPossible = true)
+    writeVia(out, "partial")
+    assert(listNames(dir).exists(_.endsWith(".tmp")), "the write goes to a temp file")
+    out.cancel()
+    out.close() // after cancel, close must not publish
+    assert(listNames(dir).isEmpty, listNames(dir).toString)
+    assert(!fm.exists(p))
+  }
+
+  test("checkpoint manager: a replace drops the stale .crc, so checksum-verifying readers see the new bytes") {
+    val dir = tmp()
+    val f = new java.io.File(dir, "1")
+    val p = new org.apache.hadoop.fs.Path(f.toURI)
+    // Spark's shared local filesystem keeps checksums, as Spark's default
+    // checkpoint manager does
+    val shared = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val old = shared.create(p, true)
+    old.write("old bytes".getBytes("UTF-8"))
+    old.close()
+    assert(listNames(dir) == Set("1", ".1.crc"))
+    val fm = localManager(dir)
+    val out = fm.createAtomic(p, overwriteIfPossible = true)
+    writeVia(out, "new bytes, longer than the old")
+    out.close()
+    assert(listNames(dir) == Set("1"), listNames(dir).toString)
+    val in = shared.open(p)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "new bytes, longer than the old")
+    finally in.close()
+  }
+
+  test("checkpoint manager: non-file: checkpoints keep Spark's default manager") {
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.hdfstest.impl", classOf[StrictHdfsTestFs].getName)
+    conf.set("fs.ostest.impl", classOf[ObjectStoreTestFs].getName)
+    conf.set(ManagerKey, classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    val vanilla = new org.apache.hadoop.conf.Configuration(conf)
+    vanilla.unset(ManagerKey)
+    for (scheme <- Seq("hdfstest", "ostest")) {
+      val p = new org.apache.hadoop.fs.Path(s"$scheme:${tmp()}")
+      val installed = org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(p, conf)
+      val fm = installed.asInstanceOf[graft.streaming.LocalCheckpointFileManager]
+      val spark0 = org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(p, vanilla)
+      assert(fm.delegate.getClass == spark0.getClass, s"$scheme: ${fm.delegate.getClass}")
+      assert(fm.delegate.getClass.getName.startsWith(
+        "org.apache.spark.sql.execution.streaming.checkpointing."))
+    }
+  }
+
+  test("checkpoint manager: the provider installs it only in a session that names none") {
+    val root = tmp()
+    Ripple.createTopic(root, "inst", numBuckets = 1)
+    def loadIn(s: SparkSession): Unit = {
+      SparkSession.setActiveSession(s)
+      try s.read.format("ripple").option("path", root).option("topic", "inst").load()
+      finally SparkSession.setActiveSession(spark)
+    }
+    val optedOut = spark.newSession()
+    optedOut.conf.set(ManagerKey, SparkDefaultManager)
+    loadIn(optedOut)
+    assert(optedOut.conf.get(ManagerKey) == SparkDefaultManager)
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(ManagerKey).isEmpty)
+    loadIn(fresh)
+    assert(fresh.conf.get(ManagerKey) == classOf[graft.streaming.LocalCheckpointFileManager].getName)
+  }
+
+  test("checkpoint manager: a query resumes exactly once from a checkpoint Spark's default manager wrote") {
+    import spark.implicits._
+    val root = tmp()
+    val ckpt = tmp()
+    Ripple.createTopic(root, "rs", numBuckets = 2)
+    Ripple.write((0 until 40).map(i => (i, s"a$i".getBytes("UTF-8"))).toDF("id", "data"),
+      root, "rs", numBuckets = 2)
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    def drain(s: SparkSession): Unit = {
+      SparkSession.setActiveSession(s)
+      try {
+        val q = Ripple.readStream(s, root, "rs", maxOffsetsPerTrigger = 15L)
+          .groupBy(col("bucket")).count()
+          .writeStream.outputMode("update")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            b.collect().foreach(r => counts.put(r.getString(0), r.getLong(1))); ()
+          }
+          .option("checkpointLocation", ckpt).start()
+        assert(q.awaitTermination(120000), "the drain must finish")
+        assert(q.exception.isEmpty, q.exception.toString)
+      } finally SparkSession.setActiveSession(spark)
+    }
+    val sparkManaged = spark.newSession()
+    sparkManaged.conf.set(ManagerKey, SparkDefaultManager)
+    drain(sparkManaged)
+    val crcs = Files.walk(java.nio.file.Paths.get(ckpt))
+    val crcCount = try crcs.iterator().asScala.count(_.toString.endsWith(".crc"))
+      finally crcs.close()
+    assert(crcCount > 0, "Spark's default manager writes .crc sidecars")
+    Ripple.write((40 until 70).map(i => (i, s"b$i".getBytes("UTF-8"))).toDF("id", "data"),
+      root, "rs", numBuckets = 2)
+    val resumed = spark.newSession()
+    drain(resumed)
+    assert(resumed.conf.get(ManagerKey) ==
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    // the running count per bucket is exactly that bucket's rows: no offset
+    // replayed from the older epochs, none skipped
+    val ends = Ripple.endOffsets(root, "rs")
+    assert(ends.values.sum == 70L)
+    assert(counts.asScala.toMap == ends, s"${counts.asScala} vs $ends")
   }
 }
