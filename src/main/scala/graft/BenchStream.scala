@@ -154,16 +154,18 @@ object BenchStream {
     val now = System.currentTimeMillis()
     log.publishStaged(tb, (0 until nSegs).map { i =>
       val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
-      graft.log.SegmentCodec.write(log.fs, p,
+      val bytes = graft.log.SegmentCodec.write(log.fs, p,
         // one distinct ts per segment so the seek cell below has a real
         // 2000-step time axis (compaction/scan cells ignore ts)
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), now + i)))
-      (i.toLong * rowsPer, rowsPer.toLong, p)
+      graft.log.SegMeta(p.toString, i.toLong * rowsPer, rowsPer.toLong, now + i, now + i,
+        bytes, rowsPer.toLong)
     })
-    // Timestamp-seek cell (round 12): COLD pays the one-time .tsidx
-    // backfill (a frame pass over all 2000 tiny segments); WARM reads the
-    // cache and walks ONE boundary segment — the amortization claim of
-    // DESIGN §14.7, measured.
+    // Timestamp-seek cell (round 12): COLD reads the commit log and builds
+    // the bucket's view and running-max index from the 2000 records'
+    // maxTs (no frame scan); WARM reuses that index and walks ONE boundary
+    // segment — the cold/warm split measures the commit-log read
+    // (DESIGN §14.7).
     val seekTarget = now + nSegs / 2
     def seekSec(): Double = {
       val t = System.nanoTime()

@@ -82,8 +82,8 @@ object Ripple {
     added
   }
 
-  /** Delete a topic — data, metadata (schema + versions, `.tsidx`,
-    * commit logs, snapshots' substrate) and consumer state —
+  /** Delete a topic — data, metadata (schema + versions, commit logs,
+    * snapshots' substrate) and consumer state —
     * irreversibly (Kafka `--delete`; the reference can only leak its
     * in-memory queues). REGISTERED CONSUMERS make the delete refuse
     * loudly unless `force = true`: their checkpoints and cursors die
@@ -397,47 +397,32 @@ object Ripple {
       tb.bucket -> log.offsetForTimestamp(tb, tsMillis)).toMap
   }
 
-  /** Per-bucket operational state in one call. */
+  /** Per-bucket operational state in one call. `rows` is the retained
+    * record count: after KEY compaction a bucket holds sparse segments
+    * whose spans exceed their records, so it is the sum of the commit
+    * records' rows, never offset arithmetic — DESCRIBE must not
+    * over-report a compacted changelog's size.
+    */
   case class BucketState(floor: Long, end: Long, segments: Int,
-      bytes: Long, latestTs: Option[Long],
-      sparseRows: Option[Long] = None) {
-    /** Retained record count. Dense buckets: offset arithmetic
-      * (end − floor). After KEY compaction the bucket holds sparse
-      * segments whose spans exceed their records, so `sparseRows`
-      * carries the per-segment retained sum from the segment names —
-      * DESCRIBE must not over-report a compacted changelog's size. A
-      * flag-only sparse name (object stores record no count) falls back
-      * to its span: conservative over-report, never under.
-      */
-    def rows: Long = sparseRows.getOrElse(end - floor)
-  }
+      bytes: Long, latestTs: Option[Long], rows: Long)
 
   /** One-call ops summary of a topic: per-bucket floors/ends/segment
-    * counts/bytes/freshness, the registered
+    * counts/bytes/rows/freshness, the registered
     * payload schema (if any), and the consumers with committed cursors —
-    * the `kafka-topics --describe` of this log, assembled from the same
-    * metadata reads the planners use (no frames opened; freshness comes
-    * from the `.tsidx` stats and may backfill once on legacy segments).
+    * the `kafka-topics --describe` of this log, assembled from the
+    * segments' commit records (no data file opened or statted).
     */
   def describeTopic(root: String, topic: String): TopicDescription = {
     val log = FileTopicLog.cached(root, LogFs.activeHadoopConf)
     val buckets = log.buckets(topic).map { tb =>
-      val segs = log.segments(tb)
-      val stats = if (segs.isEmpty) Map.empty[String, (Long, Long)]
-                  else log.tsStats(tb, segs)
+      val segs = log.segmentRecords(tb).map(_._2)
       tb.bucket -> BucketState(
-        floor = segs.headOption.map(_._2).getOrElse(0L),
-        end = if (segs.isEmpty) 0L else segs.map { case (_, s, c) => s + c }.max,
+        floor = segs.headOption.map(_.start).getOrElse(0L),
+        end = if (segs.isEmpty) 0L else segs.map(m => m.start + m.count).max,
         segments = segs.size,
-        bytes = segs.map { case (p, _, _) => log.fileLen(p) }.sum,
-        latestTs =
-          if (stats.isEmpty) None else Some(stats.valuesIterator.map(_._2).max),
-        sparseRows =
-          if (!segs.exists(s => graft.log.SegmentCodec.isSparse(s._1.getName)))
-            None
-          else Some(segs.map { case (p, _, c) =>
-            graft.log.SegmentCodec.sparseRows(p.getName).getOrElse(c)
-          }.sum))
+        bytes = segs.map(_.bytes).sum,
+        latestTs = segs.map(_.maxTs).filter(_ > Long.MinValue).maxOption,
+        rows = segs.map(_.rows).sum)
     }.toMap
     TopicDescription(topic,
       buckets = buckets,
@@ -644,9 +629,9 @@ object Ripple {
   def latestTimestamps(root: String, topic: String): Map[String, Long] = {
     val log = FileTopicLog.cached(root, LogFs.activeHadoopConf)
     log.buckets(topic).flatMap { tb =>
-      val segs = log.segments(tb)
+      val segs = log.segmentRecords(tb)
       if (segs.isEmpty) None
-      else Some(tb.bucket -> log.tsStats(tb, segs).valuesIterator.map(_._2).max)
+      else Some(tb.bucket -> segs.iterator.map(_._2.maxTs).max)
     }.toMap
   }
 
@@ -1027,7 +1012,7 @@ object Ripple {
   }
 
   private def compactKeyedWith(root: String, topic: String,
-      rewrite: Seq[graft.log.KeyedTask] => Map[String, String]): Int = {
+      rewrite: Seq[graft.log.KeyedTask] => Map[String, graft.log.SegmentCodec.KeyedRewrite]): Int = {
     val log = FileTopicLog.cached(root, LogFs.activeHadoopConf)
     require(log.buckets(topic).nonEmpty,
       s"ripple: topic '$topic' does not exist")

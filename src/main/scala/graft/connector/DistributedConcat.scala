@@ -98,16 +98,20 @@ object DistributedConcat {
   /** The distributed REWRITE strategy for key-based compaction
     * ([[graft.log.FileTopicLog.compactKeyed]]): one Spark task per bucket
     * rewrite at or above `minBytes`, the rest driver-local. Same
-    * disciplines as [[runner]] — attempt-unique output (the stats sidecar
-    * is keyed to the attempt's file), member-vanished rewrites dropped.
-    * The id→offset map lives in the TASK (executor heap), never the
-    * driver — the 100 TB contract: the driver plans and commits metadata,
-    * executors own every data byte and every per-key state.
+    * disciplines as [[runner]] — attempt-unique output, member-vanished
+    * rewrites dropped. Each task returns its product's path together with
+    * the rows, (minTs, maxTs) and bytes it wrote, which the driver commits
+    * as the product's record without reading the product back. The
+    * id→offset map lives in the TASK (executor heap), never the driver —
+    * the 100 TB contract: the driver plans and commits metadata, executors
+    * own every data byte and every per-key state.
     */
   def keyedRunner(spark: SparkSession, log: FileTopicLog,
-      minBytes: Long = DefaultMinBytes): Seq[KeyedTask] => Map[String, String] = { tasks =>
+      minBytes: Long = DefaultMinBytes)
+      : Seq[KeyedTask] => Map[String, SegmentCodec.KeyedRewrite] = { tasks =>
     val (big, small) = tasks.partition(_.bytes >= minBytes)
-    val local = if (small.nonEmpty) log.localKeyed(small) else Map.empty[String, String]
+    val local = if (small.nonEmpty) log.localKeyed(small)
+                else Map.empty[String, SegmentCodec.KeyedRewrite]
     if (big.isEmpty) local
     else {
       val ser = new graft.log.SerializableHadoopConf(log.fs.getConf)
@@ -119,13 +123,9 @@ object DistributedConcat {
           val fs = LogFs.get(new HPath(t.out), ser.value)
           val dest = attemptPath(t.out)
           try {
-            val r = SegmentCodec.rewriteLatestPerKey(fs,
+            Some(t.out -> SegmentCodec.rewriteLatestPerKey(fs,
               t.members.map { case (p, s) => (new HPath(p), s) }, dest,
-              t.codec, t.maxKeys, t.tombstoneFloorMs)
-            // stats sidecar: the driver's commit reads it instead of
-            // header-walking the product
-            SegmentCodec.writeStatSidecar(fs, dest, r.rows, r.minTs, r.maxTs)
-            Some(t.out -> dest.toString)
+              t.codec, t.maxKeys, t.tombstoneFloorMs))
           } catch {
             case _: java.io.FileNotFoundException =>
               try fs.delete(dest, false)
@@ -140,7 +140,7 @@ object DistributedConcat {
   /** This task attempt's own output path for the task planned at `out`:
     * the attempt id goes in as one more name field before the `.log`
     * suffix, so the path keeps the `data-<start>-<count>-…` fields and
-    * the sparse flag that planners parse from names.
+    * the sparse flag that readers take from names.
     */
   private def attemptPath(out: String): HPath = {
     val id = Option(org.apache.spark.TaskContext.get())

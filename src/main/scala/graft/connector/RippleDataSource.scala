@@ -93,8 +93,8 @@ import scala.jdk.CollectionConverters._
   *     each bucket's offset range by record timestamp — Kafka's
   *     `offsetsForTimes` seek ([[graft.log.FileTopicLog.offsetForTimestamp]]:
   *     earliest offset with `ts >= t`, correct for out-of-order stamps via
-  *     the running-max argument, O(one boundary segment) via the `.tsidx`
-  *     cache). `startingTimestamp` also seeds a FRESH streaming checkpoint
+  *     the running-max argument, O(one boundary segment) via the per-segment
+  *     maxTs in the commit records). `startingTimestamp` also seeds a FRESH streaming checkpoint
   *     (a managed `consumerId` cursor and a resumed checkpoint still win);
   *     `endingTimestamp` is batch-only. Exclusive with `startingOffset`
   *     and `snapshot` — two fixed starts have no defensible winner. A

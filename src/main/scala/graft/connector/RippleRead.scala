@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.log.{FileTopicLog, LogFs, SegmentCodec, SerializableHadoopConf}
+import graft.log.{FileTopicLog, LogFs, SegMeta, SegmentCodec, SerializableHadoopConf}
 import graft.model.TopicBucket
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -50,8 +50,8 @@ class RippleScanBuilder(conf: RippleConf) extends ScanBuilder
     * per-bucket offsets are dense by the log contract (LogSpec;
     * overlapping segments fail loudly), so count and offset extrema are
     * clamped-range arithmetic over the segment manifests, and ts extrema
-    * come from the `.tsidx` per-segment stats ([[graft.log.FileTopicLog
-    * .tsStats]]) — no frames opened beyond the one-time stats backfill.
+    * come from the per-segment stats in the commit records
+    * ([[graft.log.FileTopicLog.segmentRecords]]) — no frames opened.
     * Spark only offers the aggregation here when every filter was FULLY
     * pushed (offset/bucket bounds are; ts predicates are not — they are
     * re-evaluated, so their presence declines this path). The ts extrema
@@ -189,7 +189,7 @@ class RippleScanBuilder(conf: RippleConf) extends ScanBuilder
       case LessThanOrEqual(`offC`, v: Long) => hi = math.min(hi, v + 1)
       case EqualTo(`offC`, v: Long) => lo = math.max(lo, v); hi = math.min(hi, v + 1)
       case EqualTo(`bktCol`, v: String) => bucketEq = Some(v)
-      // ts predicates prune SEGMENTS by their `.tsidx` (min, max) stats —
+      // ts predicates prune SEGMENTS by their recorded (min, max) stats —
       // the parquet-footer trick for the topic log. Floored-millis bounds
       // are conservative in every case (`>`/`>=` keep any segment whose
       // max reaches the floor; `<`/`<=` keep any whose min doesn't exceed
@@ -270,10 +270,10 @@ object RippleDataLoss {
 }
 
 /** Metadata-only aggregate scan — COUNT(*) / MIN/MAX(offset) /
-  * MIN/MAX(ts): one partition, one row, zero frames read (beyond the
-  * one-time `.tsidx` stats backfill for the ts extrema). All values are
-  * computed on the DRIVER at plan time from segment manifests and stats;
-  * the single emitted row just carries them.
+  * MIN/MAX(ts): one partition, one row, zero frames read outside a
+  * partially covered sparse segment. All values are computed on the
+  * DRIVER at plan time from the segments' commit records; the single
+  * emitted row just carries them.
   */
 class RippleMetaAggScan(conf: RippleConf, lo: Long, hi: Long,
     aggs: Seq[MetaAgg]) extends Scan {
@@ -298,16 +298,16 @@ class RippleMetaAggScan(conf: RippleConf, lo: Long, hi: Long,
       var maxTs = Long.MinValue
       val needTs = aggs.contains(MetaAgg.MinTs) || aggs.contains(MetaAgg.MaxTs)
       conf.buckets.foreach { tb =>
-        val segs = log.segments(tb)
+        val segs = log.segmentRecords(tb)
         val logEnd =
-          if (segs.isEmpty) 0L else segs.map { case (_, s, c) => s + c }.max
+          if (segs.isEmpty) 0L else segs.map { case (_, m) => m.start + m.count }.max
         val end = math.min(hi, logEnd)
         // An EXPLICIT startingOffset below the retention floor would
         // silently under-count — same guard as the row scan (absent →
         // earliest). Sum per-SEGMENT overlap with [from, end) — NOT
         // size − lo: retention removes head segments, so live rows start
         // at the first surviving one, exactly what a real scan reads.
-        val floor = segs.headOption.map(_._2).getOrElse(0L)
+        val floor = segs.headOption.map(_._2.start).getOrElse(0L)
         val from =
           if (conf.startingOffsetSet)
             RippleDataLoss.check(conf, tb.topic, tb.bucket, lo, floor)
@@ -321,31 +321,26 @@ class RippleMetaAggScan(conf: RippleConf, lo: Long, hi: Long,
         // RE-DETECTED here and answered honestly — from METADATA when it
         // suffices: a window that covers the WHOLE segment (the common
         // case — compaction produces one bucket-spanning product) takes
-        // the retained count from the publish-time name, zero I/O. The
+        // the retained count from the commit record, zero I/O. The
         // payload-skip header walk (O(retained keys) header bytes — still
         // far cheaper than the row scan this replaced) runs only for a
-        // partially-overlapped product, a flag-only (object-store) name
-        // (retained count unknown), or when offset EXTREMA are requested
-        // (retained records sit at arbitrary positions inside the span —
-        // only the frames know).
+        // partially-overlapped product, or when offset EXTREMA are
+        // requested (retained records sit at arbitrary positions inside
+        // the span — only the frames know).
         val needOff =
           aggs.contains(MetaAgg.MinOff) || aggs.contains(MetaAgg.MaxOff)
         var rows = 0L
-        segs.foreach { case (p, start, count) =>
+        segs.foreach { case (p, m) =>
+          val start = m.start
           val ovlFrom = math.max(from, start)
-          val ovlEnd = math.min(end, start + count)
+          val ovlEnd = math.min(end, start + m.count)
           if (ovlEnd > ovlFrom) {
-            val nameRows =
-              if (graft.log.SegmentCodec.isSparse(p.getName))
-                graft.log.SegmentCodec.sparseRows(p.getName)
-              else None
-            if (!graft.log.SegmentCodec.isSparse(p.getName)) {
+            if (!graft.log.SegmentCodec.isSparse(m.name)) {
               rows += ovlEnd - ovlFrom
               minOff = math.min(minOff, ovlFrom)
               maxOff = math.max(maxOff, ovlEnd - 1)
-            } else if (!needOff && nameRows.isDefined &&
-                ovlFrom <= start && ovlEnd >= start + count) {
-              rows += nameRows.get
+            } else if (!needOff && ovlFrom <= start && ovlEnd >= start + m.count) {
+              rows += m.rows
             } else {
               val it = graft.log.SegmentCodec.readHeaders(log.fs, p)
               try {
@@ -364,13 +359,13 @@ class RippleMetaAggScan(conf: RippleConf, lo: Long, hi: Long,
           }
         }
         total += rows
-        if (needTs && segs.nonEmpty) {
+        if (needTs) {
           // the builder only offers ts extrema on an UNCUT range, so
           // every live segment contributes whole — per-segment stats
-          // are exact
-          log.tsStats(tb, segs).valuesIterator.foreach { case (mn, mx) =>
-            if (mn < minTs) minTs = mn
-            if (mx > maxTs) maxTs = mx
+          // are exact (an empty segment's sentinels change nothing)
+          segs.foreach { case (_, m) =>
+            if (m.minTs < minTs) minTs = m.minTs
+            if (m.maxTs > maxTs) maxTs = m.maxTs
           }
         }
       }
@@ -426,9 +421,9 @@ class RippleScan(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
 
   /** Per-bucket offset bounds resolved from `startingTimestamp` /
     * `endingTimestamp` — memoized on the scan instance so statistics and
-    * planning share one resolution (the first seek may backfill the
-    * `.tsidx` cache; repeats are metadata reads). A bucket that appears
-    * after resolution (concurrent create) resolves on demand.
+    * planning share one resolution (each seek walks one boundary
+    * segment's headers). A bucket that appears after resolution
+    * (concurrent create) resolves on demand.
     */
   private lazy val tsSeekBounds: Map[graft.model.TopicBucket, (Long, Long)] =
     if (conf.startingTimestamp.isEmpty && conf.endingTimestamp.isEmpty) Map.empty
@@ -454,14 +449,15 @@ class RippleScan(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
   private lazy val committedStats: Map[graft.model.TopicBucket, Long] =
     TxnStableEnds(conf)
 
-  /** Exact statistics from segment manifests — zero frames read. Without
-    * this, a DSv2 relation defaults to `spark.sql.defaultSizeInBytes`
-    * (Long.MaxValue), so a 1 KB topic joined against a 100 TB fact table
-    * could NEVER be auto-broadcast and every topic join would sort-merge.
-    * Rows are the clamped [lo, hi) overlap per segment (the same
-    * arithmetic the metadata COUNT(*) scan runs); bytes are the segment
-    * file sizes prorated by that overlap, capped by a pushed LIMIT. The
-    * numbers reflect pushdown, like a file source's post-pruning stats.
+  /** Statistics from the segments' commit records — no data file opened
+    * or statted. Without this, a DSv2 relation defaults to
+    * `spark.sql.defaultSizeInBytes` (Long.MaxValue), so a 1 KB topic joined
+    * against a 100 TB fact table could NEVER be auto-broadcast and every
+    * topic join would sort-merge. Rows and bytes are each segment's
+    * recorded rows and bytes prorated by its clamped [lo, hi) overlap
+    * (exact for dense segments, an estimate inside a sparse one), capped
+    * by a pushed LIMIT. The numbers reflect pushdown, like a file
+    * source's post-pruning stats.
     */
   override def estimateStatistics(): Statistics = memoizedStats
 
@@ -487,17 +483,11 @@ class RippleScan(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
       }
       val end = math.min(math.min(bhi, log.size(tb)),
         committedStats.getOrElse(tb, Long.MaxValue))
-      log.segments(tb).foreach { case (path, start, count) =>
-        val overlap = math.max(0L, math.min(end, start + count) - math.max(blo, start))
-        if (overlap > 0 && count > 0) {
-          // sparse (key-compacted) segments hold fewer rows than their
-          // span: prorate by the name-carried retained count (estimates —
-          // a flag-only name keeps the span, overestimating, which only
-          // errs against broadcasting)
-          rows += graft.log.SegmentCodec.sparseRows(path.getName)
-            .map(r => r * overlap / count).getOrElse(overlap)
-          val fileBytes = log.fileLen(path)
-          bytes += fileBytes * overlap / count
+      log.segmentRecords(tb).foreach { case (_, m) =>
+        val overlap = math.max(0L, math.min(end, m.start + m.count) - math.max(blo, m.start))
+        if (overlap > 0) {
+          rows += m.rows * overlap / m.count
+          bytes += m.bytes * overlap / m.count
         }
       }
     }
@@ -557,26 +547,20 @@ class RippleScan(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
   }
 }
 
-/** Segment pruning by `.tsidx` (min, max) stats against pushed timestamp
-  * predicate bounds — the parquet-footer trick for the topic log. Bounds
-  * are floored millis (conservative) and Spark re-evaluates the predicate
-  * row-wise, so a kept-but-useless segment costs I/O, never correctness;
-  * a segment is dropped only when its whole ts range misses the
-  * predicate. Stats come from the read-repair cache, so the steady-state
-  * cost is one small-file read per bucket.
+/** Segment pruning by the commit records' (minTs, maxTs) against pushed
+  * timestamp predicate bounds — the parquet-footer trick for the topic
+  * log. Bounds are floored millis (conservative) and Spark re-evaluates
+  * the predicate row-wise, so a kept-but-useless segment costs I/O, never
+  * correctness; a segment is dropped only when its whole ts range misses
+  * the predicate (an empty segment's sentinels miss every predicate).
+  * Pure metadata: the records come with the cached commit state.
   */
 object RippleTsPrune {
-  def apply(log: graft.log.FileTopicLog, tb: graft.model.TopicBucket,
-      segs: Seq[(org.apache.hadoop.fs.Path, Long, Long)],
-      tsLo: Option[Long], tsHi: Option[Long]): Seq[(org.apache.hadoop.fs.Path, Long, Long)] =
+  def apply(segs: Seq[(HPath, SegMeta)],
+      tsLo: Option[Long], tsHi: Option[Long]): Seq[(HPath, SegMeta)] =
     if (tsLo.isEmpty && tsHi.isEmpty) segs
-    else {
-      val stats = log.tsStats(tb, segs)
-      segs.filter { case (p, _, _) =>
-        stats.get(p.getName).forall { case (mn, mx) =>
-          tsLo.forall(l => mx >= l) && tsHi.forall(h => mn <= h)
-        }
-      }
+    else segs.filter { case (_, m) =>
+      tsLo.forall(l => m.maxTs >= l) && tsHi.forall(h => m.minTs <= h)
     }
 }
 
@@ -676,9 +660,8 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
     // to the (later) marker listing. Listing markers first would open a
     // window where an epoch pends AND publishes in between and its rows
     // sail past a cap that missed them.
-    val segsByTb: Map[graft.model.TopicBucket,
-        Seq[(org.apache.hadoop.fs.Path, Long, Long)]] =
-      live.map(tb => tb -> log.segments(tb)).toMap
+    val segsByTb: Map[graft.model.TopicBucket, Seq[(HPath, SegMeta)]] =
+      live.map(tb => tb -> log.segmentRecords(tb)).toMap
     val (txnCaps, txnAborted) = TxnReadState(conf)
     // Snapshot pin: a bucket the token names but the log no longer has
     // means the pinned corpus is partly GONE — fail loudly (checked against
@@ -706,7 +689,7 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
       }
       range.toSeq.flatMap { case (blo, bhi) =>
         val segs = segsByTb(tb)
-        val logEnd = if (segs.isEmpty) 0L else segs.map { case (_, s, c) => s + c }.max
+        val logEnd = if (segs.isEmpty) 0L else segs.map { case (_, m) => m.start + m.count }.max
         // The log is append-only, so a pinned end above the CURRENT end
         // means segments were deleted outside retention — never skip it.
         conf.snapshot.flatMap(_.get(tb.bucket)).foreach { case (_, sHi) =>
@@ -723,7 +706,7 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
         // under allowDataLoss). The absent default means "earliest
         // retained". A snapshot floor is always positional: retention past
         // it means pinned rows are gone.
-        val floor = segs.headOption.map(_._2).getOrElse(0L)
+        val floor = segs.headOption.map(_._2.start).getOrElse(0L)
         val from =
           if (conf.startingOffsetSet || conf.snapshot.isDefined)
             RippleDataLoss.check(conf, tb.topic, tb.bucket, blo, floor)
@@ -731,23 +714,23 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
         // ts-stat segment pruning runs LAST, on the raw listing: floor,
         // logEnd and the snapshot validation above must see every
         // surviving segment, pruned or not.
-        RippleTsPrune(log, tb, segs, tsPredLo, tsPredHi).flatMap {
-          case (path, start, count) if start < end && start + count > from =>
+        RippleTsPrune(segs, tsPredLo, tsPredHi).flatMap {
+          case (path, m) if m.start < end && m.start + m.count > from =>
             // a readCommitted read subtracts aborted-transaction ranges —
             // one partition per surviving sub-range (plain reads pass
             // through: no ranges, one slice)
-            TxnMarkers.subtract(math.max(from, start),
-              math.min(end, start + count),
+            TxnMarkers.subtract(math.max(from, m.start),
+              math.min(end, m.start + m.count),
               txnAborted.getOrElse(tb, Seq.empty)).map { case (a, b) =>
-              RippleInputPartition(conf.root, tb.topic, tb.bucket,
-                path.toString, start, a, b, conf.preferredHosts.toArray)
+              (RippleInputPartition(conf.root, tb.topic, tb.bucket,
+                path.toString, m.start, a, b, conf.preferredHosts.toArray), m)
             }
           case _ => Seq.empty
         }
       }
     }.toArray
     limit match {
-      case None => all.toArray[InputPartition]
+      case None => all.map(_._1).toArray[InputPartition]
       case Some(l) =>
         // LIMIT is order-free: take slices until they cover l rows, trim
         // the last one — the rest of the topic is never planned.
@@ -755,27 +738,19 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
         var need = l.toLong
         var i = 0
         while (need > 0 && i < all.length) {
-          val p = all(i)
-          val name = new HPath(p.segPath).getName
-          if (!graft.log.SegmentCodec.isSparse(name)) {
-            val rows = p.until - p.from
-            out += (if (rows <= need) p else p.copy(until = p.from + need))
-            need -= math.min(rows, need)
-          } else {
-            // SPARSE slice: offset arithmetic OVERSTATES rows (stopping
-            // early would silently under-deliver the limit), and an
-            // offset trim could cut retained records — plan the whole
-            // slice untrimmed and credit only the provable LOWER bound
-            // (name-carried rows minus the offsets outside the slice;
-            // flag-only names credit 0). Spark's own limit operator
-            // enforces exactness either way.
-            val span = graft.log.SegmentCodec.parse(name).map(_._2).getOrElse(0L)
-            val lb = graft.log.SegmentCodec.sparseRows(name)
-              .map(r => math.max(0L, r - (span - (p.until - p.from))))
-              .getOrElse(0L)
-            out += p
-            need -= math.min(lb, need)
-          }
+          val (p, m) = all(i)
+          // rows the slice provably holds: the record's rows minus the
+          // offsets outside the slice — exact for a dense segment, a
+          // LOWER bound for a sparse one, whose offset arithmetic
+          // OVERSTATES rows (stopping early would silently under-deliver
+          // the limit)
+          val rows = math.max(0L, m.rows - (m.count - (p.until - p.from)))
+          // an offset trim could cut a sparse slice's retained records, so
+          // only dense slices trim; Spark's own limit operator enforces
+          // exactness either way
+          out += (if (rows <= need || graft.log.SegmentCodec.isSparse(m.name)) p
+                  else p.copy(until = p.from + need))
+          need -= math.min(rows, need)
           i += 1
         }
         out.result()
@@ -1053,8 +1028,8 @@ class RippleMicroBatchStream(conf: RippleConf, schema: StructType,
     * operator watching a 100 TB ingest reads backlog from every
     * `StreamingQueryProgress.sources[i].metrics`, not from a separate
     * driver call ([[graft.api.Ripple.consumerStatus]] stays the
-    * out-of-band twin). All values come from segment manifests and
-    * `.tsidx` stats — zero frames read:
+    * out-of-band twin). All values come from the segments' commit
+    * records — zero frames read:
     *
     *   - `minOffsetsBehindLatest` / `maxOffsetsBehindLatest` /
     *     `avgOffsetsBehindLatest`: records between the last consumed
@@ -1099,16 +1074,11 @@ class RippleMicroBatchStream(conf: RippleConf, schema: StructType,
         if (b > 0) {
           val tb = conf.keyBucket(k)
           val from = consumed.getOrElse(k, conf.startingOffset)
-          val segs = log.segments(tb)
-          val stats = log.tsStats(tb, segs)
-          val unread = segs.filter { case (_, s, c) => s + c > from }
-          if (unread.nonEmpty) {
-            val latestTs = stats.valuesIterator.map(_._2).foldLeft(Long.MinValue)(math.max)
-            val firstUnreadMin = stats.get(unread.head._1.getName).map(_._1)
-            firstUnreadMin.foreach { t =>
-              if (latestTs > Long.MinValue)
-                maxLag = math.max(maxLag, math.max(0L, latestTs - t))
-            }
+          val segs = log.segmentRecords(tb).map(_._2)
+          segs.find(m => m.start + m.count > from).foreach { firstUnread =>
+            val latestTs = segs.iterator.map(_.maxTs).foldLeft(Long.MinValue)(math.max)
+            if (latestTs > Long.MinValue)
+              maxLag = math.max(maxLag, math.max(0L, latestTs - firstUnread.minTs))
           }
         }
       }
@@ -1306,23 +1276,23 @@ class RippleMicroBatchStream(conf: RippleConf, schema: StructType,
       if (until <= from0) Seq.empty
       else {
         val tb = conf.keyBucket(bucket)
-        val segs = log.segments(tb)
+        val segs = log.segmentRecords(tb)
         // Data-loss guard: a resumed checkpoint offset (or managed cursor,
         // or explicit startingOffset) below the bucket's first surviving
         // segment means retention truncated committed-but-unread rows.
         // Fail loudly by default; allowDataLoss=true skips to the floor.
-        val floor = segs.headOption.map(_._2).getOrElse(0L)
+        val floor = segs.headOption.map(_._2.start).getOrElse(0L)
         val from = RippleDataLoss.check(conf, tb.topic, tb.bucket, from0, floor)
         // readCommitted: aborted-transaction ranges below the stable end
         // (recorded by an admin abort since the last trigger) are
         // subtracted — the same index the batch scan applies
         val aborted = txnAborted.getOrElse(tb, Seq.empty)
-        RippleTsPrune(log, tb, segs, tsPredLo, tsPredHi).flatMap {
-          case (path, segStart, count) if segStart < until && segStart + count > from =>
-            TxnMarkers.subtract(math.max(from, segStart),
-              math.min(until, segStart + count), aborted).map { case (a, b) =>
+        RippleTsPrune(segs, tsPredLo, tsPredHi).flatMap {
+          case (path, m) if m.start < until && m.start + m.count > from =>
+            TxnMarkers.subtract(math.max(from, m.start),
+              math.min(until, m.start + m.count), aborted).map { case (a, b) =>
               RippleInputPartition(conf.root, tb.topic, tb.bucket,
-                path.toString, segStart, a, b, conf.preferredHosts.toArray)
+                path.toString, m.start, a, b, conf.preferredHosts.toArray)
             }
           case _ => Seq.empty
         }

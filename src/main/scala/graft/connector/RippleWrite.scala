@@ -104,16 +104,17 @@ object WriteShape {
   }
 }
 
-/** One staged frame file. `partitionId` is the replay-stable identity of
-  * the producing task: a replayed epoch stages new file names (UUIDs), but
-  * the same (bucket, partitionId) carries the same bytes when the batch is
-  * deterministic — which is what lets a crashed publish be completed
-  * idempotently from its intent record.
+/** One staged frame file and the facts its commit record will carry:
+  * `count` records stamped within (`minTs`, `maxTs`), `bytes` long — the
+  * writer task tracks all of them while framing. `partitionId` is the
+  * replay-stable identity of the producing task: a replayed epoch stages
+  * new file names (UUIDs), but the same (bucket, partitionId) carries the
+  * same bytes when the batch is deterministic — which is what lets a
+  * crashed publish be completed idempotently from its intent record.
   */
 case class StagedFile(bucket: String, path: String, count: Long,
-  partitionId: Int = -1,
-  minTs: Long = Long.MaxValue, maxTs: Long = Long.MinValue,
-  topic: String = "")
+  minTs: Long, maxTs: Long, bytes: Long,
+  partitionId: Int = -1, topic: String = "")
 case class RippleCommitMessage(staged: Seq[StagedFile]) extends WriterCommitMessage
 
 /** The topic's bucket count is registry metadata (the reference keeps it in
@@ -230,8 +231,8 @@ class RippleDataWriter(conf: RippleConf, shape: WriteShape,
       }
     })
 
-  private case class Open(path: HPath, out: DataOutputStream,
-    fw: SegmentCodec.FrameWriter, var count: Long,
+  private case class Open(path: HPath, raw: org.apache.hadoop.fs.FSDataOutputStream,
+    out: DataOutputStream, fw: SegmentCodec.FrameWriter, var count: Long,
     var minTs: Long = Long.MaxValue, var maxTs: Long = Long.MinValue)
   private val open = mutable.Map.empty[(String, String), Open]
   private val mkdirsDone = mutable.Set.empty[String]
@@ -261,9 +262,9 @@ class RippleDataWriter(conf: RippleConf, shape: WriteShape,
       if (mkdirsDone.add(topic)) fs.mkdirs(dir)
       val p = new HPath(dir,
         s"stage-$taskId-$partitionId-$bucket-${java.util.UUID.randomUUID()}")
-      val out = new DataOutputStream(new java.io.BufferedOutputStream(
-        fs.create(p, true), 1 << 16))
-      Open(p, out, new SegmentCodec.FrameWriter(out, ts.codec), 0L)
+      val raw = fs.create(p, true)
+      val out = new DataOutputStream(new java.io.BufferedOutputStream(raw, 1 << 16))
+      Open(p, raw, out, new SegmentCodec.FrameWriter(out, ts.codec), 0L)
     })
     val id = row.getInt(shape.idIdx)
     // Kafka null-value parity: a NULL data cell produces a TOMBSTONE
@@ -311,8 +312,8 @@ class RippleDataWriter(conf: RippleConf, shape: WriteShape,
     val staged = open.toSeq.sortBy(_._1).map { case ((topic, bucket), o) =>
       o.fw.finish()
       o.out.close()
-      StagedFile(bucket, o.path.toString, o.count, partitionId,
-        o.minTs, o.maxTs, topic = topic)
+      StagedFile(bucket, o.path.toString, o.count, o.minTs, o.maxTs,
+        o.raw.getPos, partitionId, topic)
     }
     RippleCommitMessage(staged)
   }
@@ -339,25 +340,15 @@ class RippleDataWriter(conf: RippleConf, shape: WriteShape,
 object RipplePublish {
 
   /** The `min.cleanable.dirty.ratio` decision for one bucket: keyed-
-    * compact now (true) or byte-concat and wait (false). ROW counts when
-    * every sparse name carries its retained count (`k<rows>` names,
-    * wherever rename is atomic) — codec-independent, so a compressed
+    * compact now (true) or byte-concat and wait (false), by ROW counts
+    * from the commit records — dirty (dense) rows against cleaned
+    * (sparse, retained) rows. Rows are codec-independent, so a compressed
     * sparse product never makes the gate fire 3-5x early the way raw-vs-
-    * compressed BYTES would. Object-store sparse names are flag-only
-    * (`-k-<uuid>`, the count unknowable before the rewrite), and falling
-    * back to their SPAN would defer against the bucket's ALL-TIME offset
-    * count — unbounded deferral on a hot changelog — so unknown-rows
-    * buckets gate on file BYTES instead (Kafka's own ratio; the codec
-    * skew is bounded and errs EARLY, reclaiming sooner, never never).
+    * compressed BYTES would, and they are exact on every scheme.
     */
-  private[connector] def keyedDirtyReady(
-      segs: Seq[(HPath, Long, Long)], fileLen: HPath => Long): Boolean = {
-    val (sparse, dense) = segs.partition(s => SegmentCodec.isSparse(s._1.getName))
-    val sparseRows = sparse.map(s => SegmentCodec.sparseRows(s._1.getName))
-    if (sparseRows.forall(_.isDefined))
-      dense.map(_._3).sum >= sparseRows.map(_.get).sum
-    else
-      dense.map(s => fileLen(s._1)).sum >= sparse.map(s => fileLen(s._1)).sum
+  private[connector] def keyedDirtyReady(segs: Seq[graft.log.SegMeta]): Boolean = {
+    val (sparse, dense) = segs.partition(s => SegmentCodec.isSparse(s.name))
+    dense.map(_.rows).sum >= sparse.map(_.rows).sum
   }
 
   /** Hold the locks of every bucket in `tbs` (pre-sorted — all publishers
@@ -660,19 +651,13 @@ object RipplePublish {
           if (count != f.count) throw new IllegalStateException(
             s"replayed epoch count mismatch for ($bucket, p${f.partitionId}): " +
               s"intent $count vs staged ${f.count} — the batch is not deterministic")
-          (start, count, new HPath(f.path))
+          graft.log.SegMeta(f.path, start, count, f.minTs, f.maxTs, f.bytes, count)
         }
-        // ONE commit for all of this bucket's files: a range already
-        // committed with the same frames (epoch replay) is a no-op, a
-        // foreign writer's different frames fail loudly
-        val published = log.publishStaged(tb, ranges)
-        // publish-time ts stats (the writer tracked min/max while
-        // framing): the read side's `.tsidx` never pays a backfill
-        // scan for connector-written segments. Older/replayed commit
-        // messages without stats (sentinel bounds) are skipped.
-        log.recordTsStats(tb, files.zip(published).collect {
-          case (f, Some(n)) if f.minTs <= f.maxTs => n -> (f.minTs, f.maxTs)
-        }.toMap)
+        // ONE commit for all of this bucket's files, each under the record
+        // the writer task stated: a range already committed with the same
+        // frames (epoch replay) is a no-op, a foreign writer's different
+        // frames fail loudly
+        log.publishStaged(tb, ranges)
       }
     }
     marker.foreach { m => log.writeFileAtomic(m, Array.emptyByteArray) }
@@ -735,11 +720,10 @@ object RipplePublish {
           // below the ratio the dense suffix byte-concats instead (cheap,
           // keeps the segment count bounded) and the keys reclaim on a
           // later pass. Total rewrite cost stays O(2x data), Kafka's
-          // bound. ROW counts where the names carry them (`k<rows>`,
-          // wherever rename is atomic), file BYTES where they don't
-          // (object stores' flag-only `-k-` names) — see [[keyedDirtyReady]].
+          // bound. The rows come from the commit records — see
+          // [[keyedDirtyReady]].
           val (ready, defer) = crossed.partition(tb =>
-            keyedDirtyReady(log.segments(tb), p => log.fileLen(p)))
+            keyedDirtyReady(log.segmentRecords(tb).map(_._2)))
           if (ready.nonEmpty) {
             val mover = DistributedConcat.activeSession match {
               case Some(s) =>

@@ -20,7 +20,7 @@ package graft.log
   *     index for offset seeks.
   *
   * Per-frame keeps every existing invariant for free: the header walk, the
-  * positional offset map, `.tsidx` stats, compaction-by-concatenation, and
+  * positional offset map, commit-record stats, compaction-by-concatenation, and
   * MIXED compressed/uncompressed segments (even frames) in one bucket. The
   * cost is a lower ratio on very small payloads — which the writer already
   * sidesteps by leaving payloads under [[Codecs.MinCompressBytes]] (and

@@ -7,8 +7,19 @@ import java.util.concurrent.atomic.AtomicReference
 
 /** One committed segment: `name` is the data file (unique, never reused)
   * inside the bucket directory; `[start, start+count)` is its offset range.
+  * The writer that commits it records the rest of its facts, so readers
+  * never open or stat the file to learn them: `rows` records held
+  * (`count` for a dense segment, the retained count for a key-compacted
+  * one), their (`minTs`, `maxTs`) frame timestamps in millis, and the
+  * file's length in `bytes`. A segment with no rows carries the
+  * (`Long.MaxValue`, `Long.MinValue`) sentinels, which every ts
+  * comparison prunes.
   */
-case class SegMeta(name: String, start: Long, count: Long)
+case class SegMeta(name: String, start: Long, count: Long,
+    minTs: Long, maxTs: Long, bytes: Long, rows: Long) {
+  private[log] def line: String =
+    s"A $start $count $name $minTs $maxTs $bytes $rows"
+}
 
 /** Committed bucket state at `version` (−1 = never committed / empty).
   * `segs` is sorted by start offset.
@@ -57,8 +68,11 @@ case class CommitState(version: Long, segs: Vector[SegMeta]) {
   * `pkg/utils/collection/concurrent_list.go:39-73` in
   * ripple-mq/ripple-server) and cannot run on an object store at all.
   *
-  * Delta file format (UTF-8 lines): `A <start> <count> <name>` adds a
-  * segment, `D <name>` drops one. Checkpoints carry only `A` lines.
+  * Delta file format (UTF-8 lines): `A <start> <count> <name> <minTs>
+  * <maxTs> <bytes> <rows>` adds a segment with its [[SegMeta]] facts,
+  * `D <name>` drops one. Checkpoints carry only `A` lines. Per-file stats
+  * in the add action follow Delta Lake and Iceberg. The retired
+  * four-field `A` line, which carried offsets only, is refused loudly.
   */
 final class CommitLog private[graft] (fs: FileSystem, dir: HPath,
     checkpointInterval: Int) {
@@ -95,8 +109,13 @@ final class CommitLog private[graft] (fs: FileSystem, dir: HPath,
     var cur = segs
     lines.foreach { line =>
       line.split(' ') match {
-        case Array("A", s, c, name) => cur = cur :+ SegMeta(name, s.toLong, c.toLong)
-        case Array("D", name)       => cur = cur.filterNot(_.name == name)
+        case Array("A", s, c, name, mn, mx, b, r) =>
+          cur = cur :+ SegMeta(name, s.toLong, c.toLong, mn.toLong, mx.toLong, b.toLong, r.toLong)
+        case Array("D", name) => cur = cur.filterNot(_.name == name)
+        case Array("A", _, _, _) => throw new IllegalStateException(
+          s"$src holds the retired four-field commit line `$line` (offsets " +
+            "without segment stats), which this log does not read; rewrite " +
+            "the topic through a current writer")
         case _ => throw new java.io.IOException(s"bad commit line in $src: $line")
       }
     }
@@ -204,7 +223,7 @@ final class CommitLog private[graft] (fs: FileSystem, dir: HPath,
     val v = state.version + 1
     val lines =
       removes.toSeq.sorted.map(n => s"D $n") ++
-        adds.map(a => s"A ${a.start} ${a.count} ${a.name}")
+        adds.map(_.line)
     if (!dirMade) { fs.mkdirs(dir); dirMade = true }
     if (!LogFs.putIfAbsent(fs, cPath(v), lines.mkString("\n").getBytes(UTF_8)))
       return None
@@ -237,8 +256,7 @@ final class CommitLog private[graft] (fs: FileSystem, dir: HPath,
     * deterministic from the log), so the loser's refusal is ignored.
     */
   private def checkpointAndGc(v: Long, state: CommitState): Unit = {
-    val lines = state.segs.map(s => s"A ${s.start} ${s.count} ${s.name}")
-    LogFs.putIfAbsent(fs, kPath(v), lines.mkString("\n").getBytes(UTF_8))
+    LogFs.putIfAbsent(fs, kPath(v), state.segs.map(_.line).mkString("\n").getBytes(UTF_8))
     // readers that listed within the last interval of commits still resolve;
     // older in-flight reads retry via readFull's FNF loop
     val floor = v - checkpointInterval

@@ -83,7 +83,10 @@ final class InMemoryLog extends TopicLog {
   *
   * A segment is a data file `data-<start20>-<count10>-<uuid>.log` holding
   * `count` records beginning at offset `start`; it is live once the
-  * bucket's [[CommitLog]] lists it ([[FileTopicLog]]). Frames are
+  * bucket's [[CommitLog]] lists it ([[FileTopicLog]]), under a record
+  * that also carries its rows, (minTs, maxTs) and byte length
+  * ([[SegMeta]]) — the format has no footer, and readers never need
+  * one for those facts. Frames are
   * length-prefixed, the same wire discipline as the reference's transport
   * (`pkg/server/asynctcp/transport.go:114-145` — 4-byte big-endian length
   * prefix), but with a fixed header instead of GOB (which the reference
@@ -118,60 +121,32 @@ object SegmentCodec {
 
   /** Unique data-file name for a DENSE segment `[start, start+count)`.
     * The embedded offsets are advisory — the commit log carries them
-    * authoritatively — and the FULL UUID is deliberate: two appenders
-    * racing the same start must never collide on a name, or the commit
-    * winner would publish a segment whose bytes are the loser's rows.
+    * authoritatively ([[SegMeta]]) — and the FULL UUID is deliberate: two
+    * appenders racing the same start must never collide on a name, or the
+    * commit winner would publish a segment whose bytes are the loser's
+    * rows.
     */
   def dataName(start: Long, count: Long): String =
     f"$DataPrefix$start%020d-$count%010d-${java.util.UUID.randomUUID()}$SegmentSuffix"
 
   /** Name of a SPARSE segment — the product of key-based compaction
     * ([[FileTopicLog.compactKeyed]]): it covers the offset SPAN
-    * `[start, start+span)` but holds only `rows` retained records, each
+    * `[start, start+span)` but holds only the retained records, each
     * frame carrying its original offset explicitly. The span keeps every
     * offset-arithmetic invariant (end offset, range pruning, overlap
-    * checks) working unchanged; the `k<rows>` field carries the EXACT
-    * retained count for planners that otherwise assume count == rows
-    * (LIMIT planning, statistics, the metadata COUNT(*) pushdown guard).
-    * `rows = None` writes the flag-only `k` field, used where the count is
-    * not known yet (the rewrite's output name) and on object stores,
-    * whose rename is a copy.
+    * checks) working unchanged; the retained count lives in the commit
+    * record's `rows` ([[SegMeta]]). The `-k-` field is a flag only: it
+    * tells readers that the frames carry explicit offsets.
     */
-  def sparseName(start: Long, span: Long, rows: Option[Long]): String =
-    f"$DataPrefix$start%020d-$span%010d-k${rows.fold("")(r => f"$r%010d")}-" +
-      s"${java.util.UUID.randomUUID()}$SegmentSuffix"
-
-  /** (startOffset, span) parsed from a data-file name. For a dense
-    * segment span == record count; a sparse one holds [[sparseRows]]
-    * records inside the span. The commit log carries both values
-    * authoritatively; the name is for planners holding only a path.
-    */
-  def parse(name: String): Option[(Long, Long)] =
-    if (!name.startsWith(DataPrefix) || !name.endsWith(SegmentSuffix)) None
-    else name.split('-') match {
-      case Array(_, s, c, _*) =>
-        try Some((s.toLong, c.toLong)) catch { case _: NumberFormatException => None }
-      case _ => None
-    }
-
-  private def isKField(f: String): Boolean =
-    f.length > 1 && f.charAt(0) == 'k' && f.drop(1).forall(_.isDigit)
-
-  /** Retained-record count of a SPARSE segment, None when unrecorded
-    * (flag-only `-k-` name) or dense. The `k` marker cannot collide with
-    * a UUID field — hex has no 'k'.
-    */
-  def sparseRows(name: String): Option[Long] =
-    name.stripSuffix(SegmentSuffix).split('-').collectFirst {
-      case f if isKField(f) => f.drop(1).toLong
-    }
+  def sparseName(start: Long, span: Long): String =
+    f"$DataPrefix$start%020d-$span%010d-k-${java.util.UUID.randomUUID()}$SegmentSuffix"
 
   /** Is this segment/data file SPARSE (key-compacted: frames carry
-    * explicit offsets; retained records <= the name's span)?
+    * explicit offsets; retained records <= the span)? The `k` field
+    * cannot collide with a UUID field — hex has no 'k'.
     */
   def isSparse(name: String): Boolean =
-    name.stripSuffix(SegmentSuffix).split('-')
-      .exists(f => f == "k" || isKField(f))
+    name.stripSuffix(SegmentSuffix).split('-').contains("k")
 
   /** Extended-frame flag bits (see the class doc's v2 layout). Bit 5
     * marks a DICT frame: a payload-less-RECORD frame whose body is a
@@ -458,9 +433,13 @@ object SegmentCodec {
   def write(file: java.nio.file.Path, rows: Seq[(Payload, Long)]): Unit =
     writeFrames(java.nio.file.Files.newOutputStream(file), rows)
 
+  /** Frame-encode `rows` into `file`; returns the file's length. */
   def write(fs: FileSystem, file: HPath, rows: Seq[(Payload, Long)],
-      codec: Int = Codecs.None): Unit =
-    writeFrames(fs.create(file, true), rows, codec)
+      codec: Int = Codecs.None): Long = {
+    val out = fs.create(file, true)
+    writeFrames(out, rows, codec)
+    out.getPos
+  }
 
   /** Frame iterator with an explicit `close()`: an offset-pruned read that
     * stops mid-segment releases the stream WITHOUT decoding the remaining
@@ -694,15 +673,18 @@ object SegmentCodec {
     */
   val DefaultKeyHeapEntries: Int = 4 << 20
 
-  /** Result of one [[rewriteLatestPerKey]] call. `spillRuns` counts the
-    * sorted runs THIS call wrote on its budget fallover (0 = the in-heap
-    * path carried it) — per-call observability for specs and the bench's
-    * high-cardinality probe cell (proof the bounded path actually
+  /** Result of one [[rewriteLatestPerKey]] call: the product's `path`
+    * and the facts its commit record carries — retained `rows`, their
+    * (`minTs`, `maxTs`) (the (MaxValue, MinValue) sentinels when nothing
+    * was retained) and the file's length in `bytes`. `spillRuns` counts
+    * the sorted runs THIS call wrote on its budget fallover (0 = the
+    * in-heap path carried it) — per-call observability for specs and the
+    * bench's high-cardinality probe cell (proof the bounded path actually
     * engaged for the rewrite under test, not merely that some concurrent
     * compaction in the JVM spilled).
     */
-  final case class KeyedRewrite(rows: Long, minTs: Long, maxTs: Long,
-      spillRuns: Long)
+  final case class KeyedRewrite(path: String, rows: Long, minTs: Long,
+      maxTs: Long, bytes: Long, spillRuns: Long)
 
   /** Scratch file for a keyed-compaction spill run: Spark's provisioned
     * local dirs when running inside a Spark JVM (driver or executor),
@@ -735,7 +717,7 @@ object SegmentCodec {
     * REGARDLESS of key cardinality; the output is byte-identical to the
     * in-heap path (same retained set, same offset-order emission), so
     * crashed-attempt republish verification ([[sameFrames]]) and the
-    * deterministic-sidecar discipline hold across the fallover.
+    * deterministic-product discipline hold across the fallover.
     */
   /** Default tombstone horizon for key compaction — Kafka's
     * `delete.retention.ms` default (24 h): a latest-per-key tombstone
@@ -872,7 +854,8 @@ object SegmentCodec {
       // RETAINS dictionary compression (trained on the retained rows —
       // deterministic given the retained sequence, so duplicate attempts
       // stay byte-identical); other codecs pass straight through.
-      val o = new DataOutputStream(new BufferedOutputStream(fs.create(out, true), 1 << 16))
+      val raw = fs.create(out, true)
+      val o = new DataOutputStream(new BufferedOutputStream(raw, 1 << 16))
       val fw = new FrameWriter(o, codec)
       var rows = 0L
       var minTs = Long.MaxValue
@@ -917,7 +900,7 @@ object SegmentCodec {
           try o.close() catch { case _: Throwable => () }
           throw e
       } finally { fw.dispose(); retained.close() }
-      KeyedRewrite(rows, minTs, maxTs, spillRuns)
+      KeyedRewrite(out.toString, rows, minTs, maxTs, raw.getPos, spillRuns)
     } finally runs.foreach(f => { f.delete(); () })
   }
 
@@ -1038,67 +1021,6 @@ object SegmentCodec {
     }
   }
 
-  /** The keyed rewrite's stats sidecar: the TASK that produced a compacted
-    * segment already knows (rows, minTs, maxTs); shipping them in a tiny
-    * dot-temp next to the output spares the commit phase a DRIVER-side
-    * header walk over the whole product — O(live keys) driver I/O per
-    * bucket at changelog scale, exactly the byte-relay class the driver
-    * must not own. Deterministic rewrites make duplicate attempts'
-    * sidecars identical (overwrite-safe); the `.tmp-` prefix keeps
-    * orphans invisible to readers and inside vacuum's sweep; a missing
-    * or torn sidecar falls back to [[statFrames]] — the sidecar is an
-    * optimization, never a correctness dependency.
-    */
-  def statSidecar(out: HPath): HPath =
-    new HPath(out.getParent, ".tmp-stat-" + out.getName)
-
-  def writeStatSidecar(fs: FileSystem, out: HPath, rows: Long,
-      minTs: Long, maxTs: Long): Unit = {
-    val o = fs.create(statSidecar(out), true)
-    try { o.write(s"$rows $minTs $maxTs".getBytes("UTF-8")); o.close() }
-    catch { case e: Throwable =>
-      try o.close() catch { case _: Throwable => () }
-      throw e }
-  }
-
-  def readStatSidecar(fs: FileSystem, out: HPath): Option[(Long, Long, Long)] =
-    try {
-      val in = fs.open(statSidecar(out))
-      val text = try {
-        val buf = new Array[Byte](128)
-        val n = in.read(buf)
-        if (n <= 0) return None
-        new String(buf, 0, n, "UTF-8")
-      } finally in.close()
-      text.trim.split(' ') match {
-        case Array(r, mn, mx) => Some((r.toLong, mn.toLong, mx.toLong))
-        case _ => None
-      }
-    } catch {
-      case _: java.io.IOException => None
-      case _: NumberFormatException => None
-    }
-
-  /** One header-only pass over a frame file: (rows, minTs, maxTs) —
-    * what the keyed-compaction commit needs to name and stat the sparse
-    * product. (MaxValue, MinValue) ts sentinels when empty.
-    */
-  def statFrames(fs: FileSystem, p: HPath): (Long, Long, Long) = {
-    val it = readHeaders(fs, p)
-    try {
-      var rows = 0L
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      while (it.hasNext) {
-        val ts = it.next()._2
-        rows += 1
-        if (ts < mn) mn = ts
-        if (ts > mx) mx = ts
-      }
-      (rows, mn, mx)
-    } finally it.close()
-  }
-
   /** Frame-level identity IGNORING timestamps: same (id, data) sequence.
     * The replay-idempotency check must use this, not raw byte equality —
     * a writer stamps wall-clock `ts` into frames when the input has no ts
@@ -1149,9 +1071,11 @@ object SegmentCodec {
 /** One planned compaction merge, in plain strings so a distributed
   * strategy can ship it to an executor task: stream-concatenate `members`
   * (absolute segment paths, offset order) into `out`. `bytes` is the
-  * total member payload — the routing input for a local-vs-distributed
-  * threshold. Frames are length-prefixed with no file header/footer, so
-  * the merge is a plain byte concatenation wherever it runs.
+  * members' total length from their commit records — the routing input
+  * for a local-vs-distributed threshold. Frames are length-prefixed with
+  * no file header/footer, so the merge is a plain byte concatenation
+  * wherever it runs, and the driver derives the product's record from
+  * the members' records.
   *
   * A strategy returns, for each task it finished, `out` -> the path it
   * wrote: `out` itself, or an attempt-unique sibling of it (a distributed
@@ -1166,15 +1090,18 @@ case class ConcatTask(members: Seq[String], out: String, bytes: Long)
   * decode `members` ((absolute path, start offset), offset order), keep
   * the latest record per key, write the sparse product to `out` under
   * `codec` ([[SegmentCodec.rewriteLatestPerKey]]). `bytes` is total member
-  * bytes — the local-vs-distributed routing input; the strategy's result
-  * is the same `out` -> written path map as for [[ConcatTask]].
+  * bytes — the local-vs-distributed routing input. The strategy returns,
+  * for each task it finished, `out` -> the [[SegmentCodec.KeyedRewrite]]
+  * of the path it wrote (`out` or an attempt-unique sibling, as for
+  * [[ConcatTask]]): the product's stats travel with its path, so the
+  * commit never reads the product back.
   */
 case class KeyedTask(members: Seq[(String, Long)], out: String, bytes: Long,
   codec: Int, maxKeys: Int = SegmentCodec.DefaultKeyHeapEntries,
   tombstoneFloorMs: Long = Long.MinValue)
 
-/** Weight-bounded string-keyed LRU for driver-side parsed metadata: total
-  * weight (caller-defined, e.g. parsed entries held) is capped and the
+/** Weight-bounded string-keyed LRU for driver-side metadata: total
+  * weight (caller-defined, e.g. segments held) is capped and the
   * least-recently-ACCESSED entries evict first. All operations are
   * synchronized on the map — these caches sit behind one small-file read
   * per miss, so lock cost is noise next to what a hit saves. A single
@@ -1196,11 +1123,6 @@ private[log] final class BoundedLru[V <: AnyRef](maxWeight: Long, weigh: V => Lo
       val e = it.next()
       if (e.getKey != k) { total -= e.getValue._2; it.remove() }
     }
-  }
-
-  def remove(k: String): Unit = m.synchronized {
-    val old = m.remove(k)
-    if (old != null) total -= old._2
   }
 
   def removeIf(p: String => Boolean): Unit = m.synchronized {
@@ -1295,11 +1217,14 @@ object FileTopicLog {
   *     rename = copy+delete): `create(path, overwrite = false)`, a
   *     conditional PUT that is atomic-visible at close.
   *
+  * Each commit record carries its segment's facts — offsets, row count,
+  * (minTs, maxTs) and byte length ([[SegMeta]]) — as the writer knew them
+  * at commit, so every planner reads them from the cached commit state
+  * without opening or statting a data file, on every scheme alike.
   * Where rename is atomic, replace-style metadata writes (consumer
-  * cursors, markers, `.tsidx`) go through temp + rename, and key-compacted
-  * products are renamed to carry their exact row count before their
-  * commit; object stores write those documents as direct overwriting PUTs
-  * (already atomic-visible) and keep flag-only sparse names.
+  * cursors, markers, topic config) go through temp + rename; object
+  * stores write those documents as direct overwriting PUTs (already
+  * atomic-visible).
   */
 class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     checkpointInterval: Int) extends TopicLog {
@@ -1319,7 +1244,7 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
   val root: HPath = fs.makeQualified(new HPath(rootUri))
   private val isLocal = scheme == "file"
   /** Whether this filesystem renames a single file atomically — picks the
-    * overwrite style of metadata writes and the sparse product's name.
+    * overwrite style of metadata writes.
     */
   private val renameAtomic = LogFs.atomicRename(fs)
   fs.mkdirs(root)
@@ -1328,14 +1253,11 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
 
   def bucketDir(tb: TopicBucket): HPath = new HPath(new HPath(root, tb.topic), tb.bucket)
 
-  def fileLen(p: HPath): Long =
-    try fs.getFileStatus(p).getLen catch { case _: java.io.IOException => 0L }
-
   /** tmp + rename with replace semantics on every filesystem: POSIX rename
     * replaces natively; HDFS rename refuses an existing target, so the
     * target is deleted first — a transient not-there window each call site
-    * tolerates (a missing cursor, marker or `.tsidx` only falls back to an
-    * earlier lower bound or a re-scan).
+    * tolerates (a missing cursor, marker or config document only falls
+    * back to an earlier lower bound or the defaults).
     */
   private def renameOverwrite(src: HPath, dst: HPath): Unit =
     if (!fs.rename(src, dst)) {
@@ -1383,92 +1305,43 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     } finally in.close()
   }
 
-  /** Parsed-metadata caches. Two, both BOUNDED by weight = parsed entries
-    * held (one per segment), capped at [[metaCacheMaxWeight]] with LRU
-    * eviction, so a long-lived driver planning over 10^4 buckets × 10^3+
-    * segments never holds the parsed metadata plane of the whole
-    * deployment. Eviction is correctness-free by construction: a miss
-    * re-reads exactly like a cold call. Entries for a deleted topic are
-    * dropped eagerly via [[invalidateTopicCaches]].
-    *
-    *   - `bucketMeta`: per bucket, the [[CommitLog]] (whose warm read
-    *     costs two stats, see its doc), the `(path, start, count)` view of
-    *     the state it last returned, and the timestamp-seek index built on
-    *     that state.
-    *   - `parsedMetaCache`: the parsed `.tsidx`, keyed by path and served
-    *     while its (modificationTime, length) stamp is unchanged. The file
-    *     is replaced atomically by every rewrite; two same-length rewrites
-    *     inside one mtime tick could alias, which serves a derived cache
-    *     one tick stale at worst — never an uncommitted view.
+  /** Per-bucket commit-log views, BOUNDED by weight = segments held,
+    * capped at [[metaCacheMaxWeight]] with LRU eviction, so a long-lived
+    * driver planning over 10^4 buckets × 10^3+ segments never holds the
+    * metadata plane of the whole deployment. Eviction is correctness-free
+    * by construction: a miss re-reads exactly like a cold call. Entries
+    * for a deleted topic are dropped eagerly via [[invalidateTopicCaches]].
     */
   private[graft] def metaCacheMaxWeight: Long = 1L << 20 // def: test seam
-  private val parsedMetaCache =
-    new BoundedLru[(Long, Long, AnyRef)](metaCacheMaxWeight, _._3 match {
-      case s: Seq[_]                    => s.size.toLong
-      case m: scala.collection.Map[_, _] => m.size.toLong
-      case _                            => 1L
-    })
 
-  /** One bucket's cached commit-log view: `segs` is the start-sorted
-    * `(path, start, count)` form of `state`, `overlap` the message of its
-    * first overlap (a contract violation, thrown by [[segments]]), and
-    * `seek` the timestamp-seek index once built on this state.
+  /** One bucket's cached commit-log view: the [[CommitLog]] (whose warm
+    * read costs two stats, see its doc), the state it last returned, that
+    * state's segments as `(path, record)` and as `(path, start, count)`,
+    * and `overlap`, the message of its first overlap (a contract
+    * violation, thrown by [[segments]]). `runMaxTs`, the running max of
+    * the segments' maxTs, is the timestamp seek's index; it is built on
+    * first use and belongs to exactly this state.
     */
   private final class BucketMeta(val log: CommitLog, val state: CommitState,
-      val segs: Seq[(HPath, Long, Long)], val overlap: Option[String]) {
-    @volatile var seek: SeekIndex = null
+      val recs: Seq[(HPath, SegMeta)], val overlap: Option[String]) {
+    val segs: Seq[(HPath, Long, Long)] = recs.map { case (p, m) => (p, m.start, m.count) }
+    lazy val runMaxTs: Array[Long] =
+      recs.iterator.map(_._2.maxTs)
+        .scanLeft(Long.MinValue)((a, b) => math.max(a, b)).drop(1).toArray
   }
   private val bucketMeta =
-    new BoundedLru[BucketMeta](metaCacheMaxWeight, _.segs.size.toLong)
+    new BoundedLru[BucketMeta](metaCacheMaxWeight, _.recs.size.toLong)
 
-  /** Drop every cached parse, commit-log view and seek index belonging to
-    * `topic` — called by topic deletion so a long-lived driver does not
-    * pin dead metadata until LRU pressure happens to reach it.
+  /** Drop every cached commit-log view belonging to `topic` — called by
+    * topic deletion so a long-lived driver does not pin dead metadata
+    * until LRU pressure happens to reach it.
     */
-  def invalidateTopicCaches(topic: String): Unit = {
-    val prefix = new HPath(root, topic).toString + "/"
-    parsedMetaCache.removeIf(_.startsWith(prefix))
+  def invalidateTopicCaches(topic: String): Unit =
     bucketMeta.removeIf(_.startsWith(topic + "/"))
-  }
 
-  /** Cache introspection for specs: (entries, weight) over both caches. */
-  private[graft] def metaCacheEntries: Int =
-    parsedMetaCache.size + bucketMeta.size
-  private[graft] def metaCacheWeight: Long =
-    parsedMetaCache.weight + bucketMeta.weight
-
-  /** None when `path` does not exist (callers keep their fallback);
-    * parse failures propagate uncached.
-    */
-  private def cachedParse[A <: AnyRef](path: HPath)(parse: Array[Byte] => A): Option[A] = {
-    val key = path.toString
-    val st =
-      try fs.getFileStatus(path)
-      catch { case _: java.io.FileNotFoundException =>
-        parsedMetaCache.remove(key); return None }
-    parsedMetaCache.get(key) match {
-      case Some((mt, len, v)) if mt == st.getModificationTime && len == st.getLen =>
-        Some(v.asInstanceOf[A])
-      case _ =>
-        val bytes =
-          try readFileBytes(path)
-          catch { case _: java.io.FileNotFoundException =>
-            parsedMetaCache.remove(key); return None }
-        val parsed = parse(bytes)
-        // cache only when the stamp is UNCHANGED after the read: a rewrite
-        // landing in the stat→read window would otherwise pair the old
-        // stamp with new content and serve it until the next mutation
-        val unchanged =
-          try {
-            val st2 = fs.getFileStatus(path)
-            st2.getModificationTime == st.getModificationTime && st2.getLen == st.getLen
-          } catch { case _: java.io.FileNotFoundException => false }
-        if (unchanged)
-          parsedMetaCache.put(key, (st.getModificationTime, st.getLen, parsed))
-        else parsedMetaCache.remove(key)
-        Some(parsed)
-    }
-  }
+  /** Cache introspection for specs: (entries, weight). */
+  private[graft] def metaCacheEntries: Int = bucketMeta.size
+  private[graft] def metaCacheWeight: Long = bucketMeta.weight
 
   private def listStatus(dir: HPath): Array[FileStatus] =
     try fs.listStatus(dir)
@@ -1491,13 +1364,13 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
       case _ =>
         if (st.version < 0) refuseLegacyLayout(tb)
         val dir = bucketDir(tb)
-        val segs = st.segs.map(s => (new HPath(dir, s.name), s.start, s.count))
-        val overlap = segs.sliding(2).collectFirst {
-          case Seq((_, s1, c1), (p2, s2, _)) if s1 + c1 > s2 =>
-            s"overlapping segments in ${tb.path}: [$s1,+$c1) overlaps $p2 " +
-              "(single-writer-per-bucket contract violated)"
+        val recs = st.segs.map(s => (new HPath(dir, s.name), s))
+        val overlap = recs.sliding(2).collectFirst {
+          case Seq((_, a), (p2, b)) if a.start + a.count > b.start =>
+            s"overlapping segments in ${tb.path}: [${a.start},+${a.count}) " +
+              s"overlaps $p2 (single-writer-per-bucket contract violated)"
         }
-        val m = new BucketMeta(cl, st, segs, overlap)
+        val m = new BucketMeta(cl, st, recs, overlap)
         bucketMeta.put(tb.path, m)
         m
     }
@@ -1528,10 +1401,18 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * single-writer-per-bucket contract was violated and reads would
     * double-count, so fail loudly instead.
     */
-  def segments(tb: TopicBucket): Seq[(HPath, Long, Long)] = {
+  def segments(tb: TopicBucket): Seq[(HPath, Long, Long)] = checkedMeta(tb).segs
+
+  /** [[segments]] with each segment's commit record ([[SegMeta]]): its
+    * rows, (minTs, maxTs) and bytes, read from the cached commit state —
+    * no data file is opened or statted.
+    */
+  def segmentRecords(tb: TopicBucket): Seq[(HPath, SegMeta)] = checkedMeta(tb).recs
+
+  private def checkedMeta(tb: TopicBucket): BucketMeta = {
     val m = meta(tb)
     m.overlap.foreach(msg => throw new IllegalStateException(msg))
-    m.segs
+    m
   }
 
   /** Crashed-holder takeover threshold. Bucket critical sections are
@@ -1661,102 +1542,6 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
 
   // --- timestamp seek ------------------------------------------------------
 
-  private def tsIndexPath(tb: TopicBucket): HPath =
-    new HPath(bucketDir(tb), ".tsidx")
-
-  /** `.tsidx` cache: one `<segmentName> <minTsMillis> <maxTsMillis>` line
-    * per segment. Pure read-repair cache — correctness never depends on it
-    * (a missing, stale, or torn file only costs a bounded frame re-scan),
-    * so it is written best-effort with overwrite semantics and parsed
-    * tolerantly (malformed lines are recomputed). Keyed by segment NAME:
-    * retention deletes and in-place compaction both produce new names, so
-    * stale entries simply stop matching and are dropped at the next
-    * rewrite.
-    */
-  private def readTsIndex(tb: TopicBucket): Map[String, (Long, Long)] =
-    try cachedParse[Map[String, (Long, Long)]](tsIndexPath(tb)) { bytes =>
-      new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        .split('\n').iterator.flatMap { ln =>
-          ln.split(' ') match {
-            case Array(name, mn, mx) =>
-              try Some(name -> (mn.toLong, mx.toLong))
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-    }.getOrElse(Map.empty)
-    catch { case _: java.io.IOException => Map.empty }
-
-  /** (min, max) frame timestamp of one segment, skipping payload bytes
-    * (frames must be walked — the format has no footer — but the data
-    * bytes are never materialized).
-    */
-  private def segTsRange(path: HPath): (Long, Long) = {
-    // the shared header-only walk (payload bytes seeked past, extended/
-    // compressed frames handled) — not a hand-rolled v1 parser
-    val it = SegmentCodec.readHeaders(fs, path)
-    try {
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      while (it.hasNext) {
-        val ts = it.next()._2
-        if (ts < mn) mn = ts
-        if (ts > mx) mx = ts
-      }
-      (mn, mx)
-    } finally it.close()
-  }
-
-  /** Record publish-time (min, max) frame-ts stats for freshly published
-    * segments, sparing readers the one-time backfill frame scan — the
-    * writer already has every timestamp in hand, so this is free. Same
-    * cache discipline as [[tsStats]]' rewrite: best-effort read-modify-
-    * write with overwrite semantics (a lost race or failed write only
-    * re-opens the read-repair path); stale names are pruned by the next
-    * [[tsStats]] rewrite, not here.
-    */
-  def recordTsStats(tb: TopicBucket, entries: Map[String, (Long, Long)]): Unit = {
-    if (entries.isEmpty) return
-    val merged = readTsIndex(tb) ++ entries
-    try writeFileAtomic(tsIndexPath(tb),
-      merged.toSeq.sortBy(_._1)
-        .map { case (n, (mn, mx)) => s"$n $mn $mx" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(_) => () } // cache only
-  }
-
-  /** Per-segment (minTsMillis, maxTsMillis) for `segs`, served from the
-    * `.tsidx` read-repair cache — the topic-log analog of parquet footer
-    * stats. Segments the cache has not seen are frame-scanned once and
-    * the cache rewritten (amortized O(new segments)); consumers are the
-    * timestamp seek, the connector's ts-predicate segment pruning, and
-    * the metadata MIN/MAX(ts) aggregate pushdown.
-    */
-  def tsStats(tb: TopicBucket,
-      segs: Seq[(HPath, Long, Long)]): Map[String, (Long, Long)] = {
-    if (segs.isEmpty) return Map.empty
-    val cached = readTsIndex(tb)
-    var repaired = Map.empty[String, (Long, Long)]
-    val out = segs.map { case (p, _, _) =>
-      val n = p.getName
-      n -> cached.getOrElse(n, {
-        val r = segTsRange(p)
-        repaired += (n -> r)
-        r
-      })
-    }.toMap
-    if (repaired.nonEmpty) {
-      val names = segs.map(_._1.getName).toSet
-      val all = cached.filter { case (n, _) => names.contains(n) } ++ repaired
-      try writeFileAtomic(tsIndexPath(tb),
-        all.toSeq.sortBy(_._1)
-          .map { case (n, (mn, mx)) => s"$n $mn $mx" }.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(_) => () } // cache only
-    }
-    out
-  }
-
   /** Earliest offset whose record timestamp is `>= tsMillis` — the analog
     * of Kafka's `offsetsForTimes` seek, which the reference cannot express
     * (its replay cursor is offset-only, `core.go:46-64`). Returns the
@@ -1769,89 +1554,46 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * running max of per-segment max timestamps, which is monotone by
     * construction — the first offset where the running max reaches
     * `tsMillis` IS the first record with `ts >= tsMillis`, whatever the
-    * ordering (Kafka's time-index argument). Cost at scale: per-segment
-    * max-ts values come from the `.tsidx` read-repair cache, so a seek
-    * over a 10^4-segment bucket reads one small cache file plus the frames
-    * of the ONE boundary segment (plus a one-time backfill scan of
-    * segments the cache has not seen — amortized O(new segments)).
+    * ordering (Kafka's time-index argument). Cost at scale: the per-segment
+    * max-ts values come from the commit records, and the running max is
+    * cached with the commit state it was built from, so a seek over a
+    * 10^4-segment bucket is a warm commit-log read, a binary search and
+    * a header walk of the ONE boundary segment.
     */
-  /** Derived seek structure: the bucket's sorted segments plus the running
-    * max of per-segment max timestamps. Cached on the bucket's commit-log
-    * view (so keyed to the commit state it was built from) together with
-    * the `.tsidx` (mtime, length) stamp: any mutation commits a new state,
-    * and a `.tsidx` repair replaces that file, so a matching pair means
-    * the index is current. Makes the WARM seek O(log segments) + one
-    * boundary segment walk (a warm commit-log read, one getFileStatus, a
-    * binary search, no O(N) re-parse or map build per call) — the round-13
-    * q154w probe measured the previous per-call O(segments) parse at ~10×
-    * cost per 10× segments, real planner overhead under a
-    * seek-per-trigger pattern at 10^5 segments.
-    */
-  private case class SeekIndex(tsidxStamp: (Long, Long),
-      segs: Seq[(HPath, Long, Long)], runMax: Array[Long])
-
-  private def metaStamp(p: HPath): (Long, Long) = LogFs.stamp(fs, p).getOrElse((-1L, -1L))
-
   def offsetForTimestamp(tb: TopicBucket, tsMillis: Long): Long =
     offsetForTimestamp(tb, tsMillis, retriesLeft = 3)
 
   private def offsetForTimestamp(tb: TopicBucket, tsMillis: Long,
       retriesLeft: Int): Long = {
-    val m = meta(tb)
-    val tStamp = metaStamp(tsIndexPath(tb))
-    val cachedSeek = m.seek
-    val idx =
-      if (cachedSeek != null && tStamp._1 >= 0 && cachedSeek.tsidxStamp == tStamp) cachedSeek
-      else {
-        m.overlap.foreach(msg => throw new IllegalStateException(msg))
-        val segs = m.segs
-        if (segs.isEmpty) return 0L
-        val stats = tsStats(tb, segs) // may backfill + rewrite .tsidx
-        val runMax = new Array[Long](segs.size)
-        var mx = Long.MinValue
-        var i = 0
-        segs.foreach { case (p, _, _) =>
-          val mxp = stats(p.getName)._2
-          if (mxp > mx) mx = mxp
-          runMax(i) = mx
-          i += 1
-        }
-        // the .tsidx is re-statted (tsStats' repair path legitimately
-        // rewrote it just now); the segment list is the commit state `m`
-        // was built from, so the index belongs to exactly that state
-        val built = SeekIndex(metaStamp(tsIndexPath(tb)), segs, runMax)
-        if (built.tsidxStamp._1 >= 0) m.seek = built
-        built
-      }
+    val m = checkedMeta(tb)
+    if (m.recs.isEmpty) return 0L
+    val runMax = m.runMaxTs
+    if (runMax.last < tsMillis) return m.state.endOffset // nothing qualifies
     // Binary search the running max (monotone by construction): the first
     // segment where it reaches tsMillis holds the globally-first frame
-    // with ts >= tsMillis, whatever the record-timestamp ordering
-    // (Kafka's time-index argument; see the running-max note above).
+    // with ts >= tsMillis, whatever the record-timestamp ordering.
     var lo = 0
-    var hi = idx.runMax.length - 1
-    if (idx.runMax(hi) < tsMillis) // nothing qualifies → bucket end
-      return idx.segs.map { case (_, s, c) => s + c }.max
+    var hi = runMax.length - 1
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (idx.runMax(mid) >= tsMillis) hi = mid else lo = mid + 1
+      if (runMax(mid) >= tsMillis) hi = mid else lo = mid + 1
     }
-    val (p, start, _) = idx.segs(lo)
+    val (p, rec) = m.recs(lo)
     var answer = -1L
     val fit = // headers only: the walk needs ts, never payload bytes
       try SegmentCodec.readHeaders(fs, p)
       catch {
         case e: java.io.FileNotFoundException =>
-          // the boundary segment vanished under the index (compaction/
-          // retention committed after the state was read): drop it and
-          // re-resolve from fresh metadata
-          m.seek = null
+          // the boundary segment vanished under the cached state
+          // (compaction/retention committed after it was read): re-resolve
+          // from the commit log's current state
           if (retriesLeft <= 0) throw new java.io.IOException(
             s"seek in ${tb.path} kept resolving to vanished segments — " +
               "metadata churn outran 3 retries", e)
           return offsetForTimestamp(tb, tsMillis, retriesLeft - 1)
       }
     try {
-      var cur = start - 1
+      var cur = rec.start - 1
       while (answer < 0 && fit.hasNext) {
         val (_, ts, _) = fit.next()
         // sparse-aware cursor rule: an explicit frame offset (key-compacted
@@ -1860,22 +1602,12 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
         if (ts >= tsMillis) answer = cur
       }
     } finally fit.close()
-    // the boundary segment's cached maxTs promised a qualifying frame; a
-    // vanished promise means the stats lied (torn cache) — re-repair
-    if (answer >= 0) answer
-    else {
-      m.seek = null
-      val segs = segments(tb)
-      val stats = tsStats(tb, segs.filter(_._1.getName == p.getName))
-      if (stats.get(p.getName).exists(_._2 >= tsMillis))
-        throw new IllegalStateException(
-          s"seek invariant violated in ${tb.path}: segment ${p.getName} " +
-            s"stats promise ts >= $tsMillis but no frame qualifies")
-      if (retriesLeft <= 0) throw new java.io.IOException(
-        s"seek in ${tb.path} kept hitting lying segment stats — " +
-          "metadata churn outran 3 retries")
-      offsetForTimestamp(tb, tsMillis, retriesLeft - 1)
-    }
+    // the commit record's maxTs is exact, so a boundary segment without a
+    // qualifying frame is corruption, not a stale statistic
+    if (answer < 0) throw new IllegalStateException(
+      s"seek invariant violated in ${tb.path}: segment ${p.getName} " +
+        s"records maxTs ${rec.maxTs} >= $tsMillis but no frame qualifies")
+    answer
   }
 
   /** Frame timestamp of the record at `offset` — one bounded segment
@@ -1920,19 +1652,20 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     val cl = commitLog(tb)
     if (rows.isEmpty) return cl.read().endOffset
     fs.mkdirs(bucketDir(tb))
+    val n = rows.size.toLong
     var attempt = 0
     var data: HPath = null
+    var bytes = 0L
     while (true) {
       val st = cl.read()
       val start = st.endOffset
       if (data == null) {
-        data = new HPath(bucketDir(tb), SegmentCodec.dataName(start, rows.size.toLong))
-        SegmentCodec.write(fs, data, rows.map(p => (p, now)))
+        data = new HPath(bucketDir(tb), SegmentCodec.dataName(start, n))
+        bytes = SegmentCodec.write(fs, data, rows.map(p => (p, now)))
       }
-      if (cl.tryCommit(st, Seq(SegMeta(data.getName, start, rows.size.toLong)), Set.empty).isDefined) {
-        recordTsStats(tb, Map(data.getName -> (now, now)))
+      if (cl.tryCommit(st, Seq(SegMeta(data.getName, start, n, now, now, bytes, n)),
+          Set.empty).isDefined)
         return start
-      }
       attempt += 1
       if (attempt > 200) {
         // giving up: remove the never-committed data file (vacuum would
@@ -1959,12 +1692,9 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
   def appendAt(tb: TopicBucket, start: Long, rows: Seq[(Payload, Long)]): Long = {
     if (rows.isEmpty) return start
     fs.mkdirs(bucketDir(tb))
-    val published = commitRanges(tb, Seq(Pending(start, rows.size.toLong,
+    commitRanges(tb, Seq(Pending(start, rows.size.toLong,
+      rows.iterator.map(_._2).min, rows.iterator.map(_._2).max,
       q => SegmentCodec.write(fs, q, rows), committed => sameAsRows(committed, rows))))
-    // publish-time ts stats: the rows are in hand, so the read side never
-    // pays the .tsidx backfill scan for this segment
-    published.head.foreach(n => recordTsStats(tb, Map(n ->
-      (rows.iterator.map(_._2).min, rows.iterator.map(_._2).max))))
     start
   }
 
@@ -1989,14 +1719,15 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
       } finally it.close()
     } catch { case _: java.io.IOException => false }
 
-  /** One offset range to make live: `materialize(p)` must produce the frame
-    * file at the unique bucket path `p` (a direct write or a move of a
-    * staged file — `p` is invisible until committed, so neither needs
-    * atomicity); `sameAs(c)` frame-compares the candidate content with an
+  /** One dense offset range to make live, with its frames' (`minTs`,
+    * `maxTs`): `materialize(p)` must produce the frame file at the unique
+    * bucket path `p` (a direct write or a move of a staged file — `p` is
+    * invisible until committed, so neither needs atomicity) and return
+    * its length; `sameAs(c)` frame-compares the candidate content with an
     * already-committed segment file `c`.
     */
-  private case class Pending(start: Long, count: Long,
-      materialize: HPath => Unit, sameAs: HPath => Boolean)
+  private case class Pending(start: Long, count: Long, minTs: Long, maxTs: Long,
+      materialize: HPath => Long, sameAs: HPath => Boolean)
 
   /** Positional publish of several ranges of one bucket in ONE commit.
     * Per range: an already-committed twin with the same records is an
@@ -2010,6 +1741,7 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     val cl = commitLog(tb)
     val dir = bucketDir(tb)
     val data = new Array[HPath](ranges.size)
+    val bytes = new Array[Long](ranges.size)
     def dropData(): Unit = data.foreach(p =>
       if (p != null) try fs.delete(p, false) catch { case _: java.io.IOException => () })
     var attempt = 0
@@ -2040,10 +1772,10 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
         val r = ranges(i)
         if (data(i) == null) {
           val q = new HPath(dir, SegmentCodec.dataName(r.start, r.count))
-          r.materialize(q)
+          bytes(i) = r.materialize(q)
           data(i) = q
         }
-        SegMeta(data(i).getName, r.start, r.count)
+        SegMeta(data(i).getName, r.start, r.count, r.minTs, r.maxTs, bytes(i), r.count)
       }
       if (adds.isEmpty || cl.tryCommit(st, adds, Set.empty).isDefined) {
         // a replayed twin's candidate (materialized on an earlier attempt
@@ -2068,35 +1800,39 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
   }
 
   /** Publish staged frame files as segments of `tb` — the connector's
-    * driver-side commit step. Each `(start, count, staged)` is moved into
-    * the bucket under a unique name (a rename within one filesystem; the
-    * name is invisible until committed, so a copy-rename is fine too),
-    * and ALL of them become live in ONE commit. Replay identity and
-    * foreign-writer refusal follow [[appendAt]]: a range already committed
-    * with the same frames consumes its staged file as a no-op; different
-    * frames or an overlap fail loudly. Returns, per file, the committed
-    * data-file name (None for a replayed twin). Every staged file is
-    * consumed: moved into the log, or deleted.
+    * driver-side commit step. Each staged file comes as the record it is
+    * to be committed under: its `name` is the staged file's full path,
+    * and its offsets, (minTs, maxTs) and `bytes` are what the writer task
+    * recorded while framing it. Each is moved into the bucket under a
+    * unique name (a rename within one filesystem; the name is invisible
+    * until committed, so a copy-rename is fine too), and ALL of them
+    * become live in ONE commit. Replay identity and foreign-writer
+    * refusal follow [[appendAt]]: a range already committed with the same
+    * frames consumes its staged file as a no-op; different frames or an
+    * overlap fail loudly. Returns, per file, the committed data-file name
+    * (None for a replayed twin). Every staged file is consumed: moved
+    * into the log, or deleted.
     */
-  def publishStaged(tb: TopicBucket,
-      files: Seq[(Long, Long, HPath)]): Seq[Option[String]] = {
-    if (files.isEmpty) return Seq.empty
+  def publishStaged(tb: TopicBucket, staged: Seq[SegMeta]): Seq[Option[String]] = {
+    if (staged.isEmpty) return Seq.empty
     fs.mkdirs(bucketDir(tb))
-    val current = files.map(_._3).toArray
-    val published = commitRanges(tb, files.indices.map { i =>
-      val (start, count, _) = files(i)
-      Pending(start, count,
+    val origin = staged.map(f => new HPath(f.name))
+    val current = origin.toArray
+    val published = commitRanges(tb, staged.indices.map { i =>
+      val f = staged(i)
+      Pending(f.start, f.count, f.minTs, f.maxTs,
         materialize = q => {
           if (!fs.rename(current(i), q))
             throw new java.io.IOException(s"stage move ${current(i)} -> $q failed")
           current(i) = q
+          f.bytes
         },
         sameAs = committed => SegmentCodec.sameFrames(fs, committed, current(i)))
     })
     // a replayed twin never moved its staged file: drop the original
-    files.indices.foreach { i =>
-      if (published(i).isEmpty && current(i) == files(i)._3)
-        try fs.delete(files(i)._3, false) catch { case _: java.io.IOException => () }
+    staged.indices.foreach { i =>
+      if (published(i).isEmpty && current(i) == origin(i))
+        try fs.delete(origin(i), false) catch { case _: java.io.IOException => () }
     }
     published
   }
@@ -2142,8 +1878,7 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * here retention is a pure metadata op. Returns deleted segment count.
     */
   def truncateBefore(topic: String, floorOffset: Long): Int =
-    truncateWhere(topic)((_, seg) => seg match {
-      case (_, start, count) => start + count <= floorOffset })
+    truncateWhere(topic)((_, seg) => seg.start + seg.count <= floorOffset)
 
   /** Per-bucket retention floors (bucket name → floor); buckets absent
     * from the map are untouched. The consumer-protecting facade
@@ -2151,9 +1886,8 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * per bucket, which a single global floor cannot express.
     */
   def truncateBefore(topic: String, floors: Map[String, Long]): Int =
-    truncateWhere(topic)((tb, seg) => seg match {
-      case (_, start, count) =>
-        floors.get(tb.bucket).exists(f => start + count <= f) })
+    truncateWhere(topic)((tb, seg) =>
+      floors.get(tb.bucket).exists(f => seg.start + seg.count <= f))
 
   /** Time-based retention: delete whole segments older than `maxAgeMillis`
     * (by segment file mtime — set at publish, so always >= the newest
@@ -2170,13 +1904,13 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     // floor survive regardless of age — the clamp the snapshot-pin /
     // consumer-protection facades pass down (graft.api.Ripple); absent
     // buckets are unconstrained
-    truncateWhere(topic)((tb, seg) => seg._1.getModificationTime < cutoff &&
-      (seg match { case (_, start, count) =>
-        protectedFloors.get(tb.bucket).forall(f => start + count <= f) }))
+    truncateWhere(topic)((tb, seg) =>
+      protectedFloors.get(tb.bucket).forall(f => seg.start + seg.count <= f) &&
+        fs.getFileStatus(new HPath(bucketDir(tb), seg.name)).getModificationTime < cutoff)
   }
 
   /** Size-based retention (Kafka `retention.bytes`): per bucket, keep the
-    * largest TRAILING run of whole segments whose file bytes total at most
+    * largest TRAILING run of whole segments whose recorded bytes total at most
     * `maxBytes` and drop everything older — the missing twin of the
     * time/offset policies, without which a runaway producer fills the
     * store until a time horizon passes. The newest segment always
@@ -2199,9 +1933,8 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
   def byteFloors(topic: String, maxBytes: Long): Map[String, Long] = {
     require(maxBytes >= 0, s"maxBytes must be >= 0, got $maxBytes")
     buckets(topic).flatMap { tb =>
-      val segs = segments(tb)
       FileTopicLog.byteFloorWalk(
-        segs.map { case (p, start, _) => (start, fileLen(p)) }, maxBytes)
+        segmentRecords(tb).map { case (_, m) => (m.start, m.bytes) }, maxBytes)
         .map(tb.bucket -> _)
     }.toMap
   }
@@ -2212,10 +1945,12 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * put-if-absent, so it can never race a publish into a lost update —
     * THEN the data files are deleted: readers resolve the committed state
     * and never plan a ghost segment. No lock is needed; a lost commit race
-    * (a concurrent publish advanced the version) re-reads and retries.
+    * (a concurrent publish advanced the version) re-reads and retries, and
+    * so does an `expired` that found a committed file gone (stale state
+    * against a concurrent retention commit).
     */
   private def truncateWhere(topic: String)(
-      expired: (TopicBucket, (FileStatus, Long, Long)) => Boolean): Int = {
+      expired: (TopicBucket, SegMeta) => Boolean): Int = {
     var deleted = 0
     buckets(topic).foreach { tb =>
       val cl = commitLog(tb)
@@ -2227,22 +1962,17 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
         if (st.segs.isEmpty) done = true
         else {
           try {
-            val withStatus = st.segs.map { s =>
-              (s, (fs.getFileStatus(new HPath(dir, s.name)), s.start, s.count))
-            }
             // never the newest segment (see above)
-            val toDelete = withStatus.dropRight(1).filter { case (_, view) => expired(tb, view) }
+            val toDelete = st.segs.dropRight(1).filter(expired(tb, _))
             if (toDelete.isEmpty) done = true
-            else if (cl.tryCommit(st, Seq.empty, toDelete.map(_._1.name).toSet).isDefined) {
-              toDelete.foreach { case (s, _) =>
+            else if (cl.tryCommit(st, Seq.empty, toDelete.map(_.name).toSet).isDefined) {
+              toDelete.foreach { s =>
                 if (try fs.delete(new HPath(dir, s.name), false)
                     catch { case _: java.io.IOException => false }) deleted += 1
               }
               done = true
             }
           } catch {
-            // committed file vanished mid-walk: stale state vs a concurrent
-            // retention commit — re-read and re-decide
             case _: java.io.FileNotFoundException => ()
           }
           if (!done) {
@@ -2341,12 +2071,13 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * Same 3-phase shape as [[compactSegments]] — plan (metadata only),
     * REWRITE the bytes (`rewrite` strategy: driver-local default, or a
     * Spark job via the connector's distributed runner), then ONE commit
-    * swapping the members for the sparse product. Where rename is atomic
-    * the product is first renamed to carry its exact retained count
-    * (`k<rows>`, [[SegmentCodec.sparseName]]); object stores keep the
-    * flag-only name. A member vanishing mid-rewrite (racing retention)
-    * loses the commit and replans; a crash before the commit leaves only
-    * an unreferenced file.
+    * swapping the members for the sparse product, whose record carries
+    * the retained rows, (minTs, maxTs) and bytes the rewrite task
+    * returned beside its path. A product that retained nothing (every
+    * record an aged-out tombstone) commits rows 0 and the ts sentinels.
+    * A member vanishing mid-rewrite (racing retention) drops that
+    * rewrite or loses the commit and replans; a crash before the commit
+    * leaves only an unreferenced file.
     *
     * `minStartByBucket` clamps the compaction to offsets AT OR ABOVE the
     * given floor per bucket — the snapshot-pin composition: a live pin
@@ -2371,7 +2102,8 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     * by sparse products + healed).
     */
   def compactKeyed(topic: String, onlyBuckets: Option[Set[String]] = None,
-      rewrite: Seq[KeyedTask] => Map[String, String] = null, codec: Int = Codecs.None,
+      rewrite: Seq[KeyedTask] => Map[String, SegmentCodec.KeyedRewrite] = null,
+      codec: Int = Codecs.None,
       minStartByBucket: Map[String, Long] = Map.empty,
       keyHeap: Int = SegmentCodec.DefaultKeyHeapEntries,
       tombstoneRetentionMs: Long = SegmentCodec.DefaultTombstoneRetentionMs): Int = {
@@ -2387,70 +2119,46 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
   }
 
   /** Default rewrite strategy for [[compactKeyed]]: decode in the calling
-    * JVM. Member-vanished tolerance mirrors [[localConcat]].
+    * JVM. Member-vanished tolerance mirrors [[localConcat]]. Each
+    * result's `spillRuns` is per-call proof for callers asserting the
+    * bounded path engaged for THEIR rewrite (the probe cell, specs),
+    * exact even when concurrent compactions share the JVM.
     */
-  def localKeyed(tasks: Seq[KeyedTask]): Map[String, String] = localKeyedCounted(tasks)._1
-
-  /** [[localKeyed]], returning the number of spill runs the tasks wrote —
-    * per-call proof for callers asserting the bounded path engaged for
-    * THEIR rewrite (the probe cell, specs), exact even when concurrent
-    * compactions share the JVM.
-    */
-  def localKeyedCounted(tasks: Seq[KeyedTask]): (Map[String, String], Long) = {
-    val done = tasks.flatMap { t =>
-      try {
-        val out = new HPath(t.out)
-        val r = SegmentCodec.rewriteLatestPerKey(fs,
-          t.members.map { case (p, s) => (new HPath(p), s) }, out, t.codec,
-          t.maxKeys, t.tombstoneFloorMs)
-        SegmentCodec.writeStatSidecar(fs, out, r.rows, r.minTs, r.maxTs)
-        Some((t.out, r.spillRuns))
-      } catch {
+  def localKeyed(tasks: Seq[KeyedTask]): Map[String, SegmentCodec.KeyedRewrite] =
+    tasks.flatMap { t =>
+      try Some(t.out -> SegmentCodec.rewriteLatestPerKey(fs,
+        t.members.map { case (p, s) => (new HPath(p), s) }, new HPath(t.out), t.codec,
+        t.maxKeys, t.tombstoneFloorMs))
+      catch {
         case _: java.io.FileNotFoundException =>
           try fs.delete(new HPath(t.out), false)
           catch { case _: java.io.IOException => () }
           None
       }
-    }
-    (done.map { case (out, _) => out -> out }.toMap, done.map(_._2).sum)
-  }
+    }.toMap
 
   /** Eligible members of one bucket's keyed compaction: the
     * clamp-filtered suffix. None when there is nothing to do (empty, or a
     * single already-sparse segment — its keys are unique by construction).
     */
-  private def keyedMembers(segs: Seq[(HPath, Long, Long, Long)],
-      clamp: Long): Option[Seq[(HPath, Long, Long, Long)]] = {
-    val elig = segs.filter(_._2 >= clamp)
-    if (elig.isEmpty ||
-        (elig.size == 1 && SegmentCodec.isSparse(elig.head._1.getName))) None
+  private def keyedMembers(segs: Seq[SegMeta], clamp: Long): Option[Seq[SegMeta]] = {
+    val elig = segs.filter(_.start >= clamp)
+    if (elig.isEmpty || (elig.size == 1 && SegmentCodec.isSparse(elig.head.name))) None
     else Some(elig)
   }
 
   private def compactKeyedAll(tbs: Seq[TopicBucket],
-      rewrite: Seq[KeyedTask] => Map[String, String], codec: Int,
+      rewrite: Seq[KeyedTask] => Map[String, SegmentCodec.KeyedRewrite], codec: Int,
       clamps: Map[String, Long], keyHeap: Int, tombFloor: Long): Int = {
-    case class KeyedPlan(tb: TopicBucket,
-        members: Seq[(HPath, Long, Long, Long)], add: SegMeta, agingOk: Boolean)
+    case class KeyedPlan(tb: TopicBucket, members: Seq[SegMeta], agingOk: Boolean) {
+      val start: Long = members.head.start
+      val span: Long = members.last.start + members.last.count - start
+      val out = new HPath(bucketDir(tb), SegmentCodec.sparseName(start, span))
+    }
     val plans = tbs.flatMap { tb =>
-      val dir = bucketDir(tb)
-      val segs = commitLog(tb).read().segs.map { s =>
-        val p = new HPath(dir, s.name)
-        (p, s.start, s.count,
-          try fs.getFileStatus(p).getLen
-          catch { case _: java.io.FileNotFoundException => -1L })
-      }
+      val segs = commitLog(tb).read().segs
       val clamp = clamps.getOrElse(tb.bucket, Long.MinValue)
-      // a member vanished under a racing retention: skip this pass
-      if (segs.exists(_._4 < 0)) None
-      else keyedMembers(segs, clamp).map { ms =>
-        val start = ms.head._2
-        val span = ms.last._2 + ms.last._3 - start
-        // flag-only sparse name: it is fixed before the rewrite knows the
-        // retained count; the commit below renames it where that is cheap
-        KeyedPlan(tb, ms, SegMeta(SegmentCodec.sparseName(start, span, None),
-          start, span), agingOk = segs.forall(_._2 >= clamp))
-      }
+      keyedMembers(segs, clamp).map(KeyedPlan(tb, _, agingOk = segs.forall(_.start >= clamp)))
     }
     // tombstone aging only when the plan covers the bucket's WHOLE
     // retained range: a pin-clamped (suffix-only) compaction that aged a
@@ -2458,72 +2166,42 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     // once the pin releases — the delete would be silently lost. Clamped
     // plans ship a disabled floor; the tombstone waits for a full pass.
     val written = rewrite(plans.map(p => KeyedTask(
-      p.members.map(m => (m._1.toString, m._2)),
-      new HPath(bucketDir(p.tb), p.add.name).toString,
-      p.members.map(_._4).sum, codec, keyHeap,
+      p.members.map(m => (new HPath(bucketDir(p.tb), m.name).toString, m.start)),
+      p.out.toString, p.members.map(_.bytes).sum, codec, keyHeap,
       if (p.agingOk) tombFloor else Long.MinValue)))
-    plans.map { p =>
-      val dir = bucketDir(p.tb)
-      val product = written.get(new HPath(dir, p.add.name).toString).map(new HPath(_))
-      // (rows, minTs, maxTs) of the product, None when the rewrite dropped
-      // it (a member vanished under it): the rewrite task ships them in a
-      // sidecar so the driver never header-walks the product; the walk is
-      // the fallback (the sidecar is never load-bearing)
-      val stats = product.flatMap { out =>
-        try {
-          fs.getFileStatus(out)
-          Some(SegmentCodec.readStatSidecar(fs, out)
-            .getOrElse(SegmentCodec.statFrames(fs, out)))
-        } catch { case _: java.io.IOException => None }
-      }
-      product.foreach { out =>
-        try fs.delete(SegmentCodec.statSidecar(out), false)
-        catch { case _: java.io.IOException => () }
-      }
-      // exact retained count in the name where a rename is atomic and cheap
-      // (DESCRIBE rows, the metadata COUNT(*), the dirty-ratio gate read
-      // it); object stores keep the flag-only name
-      val add = (product, stats) match {
-        case (Some(out), Some((rows, _, _))) if renameAtomic =>
-          val named = SegmentCodec.sparseName(p.add.start, p.add.count, Some(rows))
-          p.add.copy(name =
-            if (fs.rename(out, new HPath(dir, named))) named else out.getName)
-        case (Some(out), _) => p.add.copy(name = out.getName)
-        case _ => p.add
-      }
-      val done = commitSwaps(p.tb,
-        Seq((p.members.map(_._1.getName), add, stats.isDefined)))
-      for (_ <- done; (_, minTs, maxTs) <- stats if minTs <= maxTs)
-        recordTsStats(p.tb, Map(add.name -> (minTs, maxTs)))
-      done.map(_._1.size).sum
+    // a plan absent from the result was dropped by the strategy (a member
+    // vanished under its rewrite), which left no product behind
+    plans.flatMap(p => written.get(p.out.toString).map(p -> _)).map { case (p, r) =>
+      val add = SegMeta(new HPath(r.path).getName, p.start, p.span, r.minTs, r.maxTs, r.bytes, r.rows)
+      commitSwaps(p.tb, Seq((p.members.map(_.name), add, true))).map(_._1.size).sum
     }.sum
   }
 
   /** Contiguous runs of at least `minSegments` segments whose combined
     * bytes fit `targetBytes`. Input must be start-sorted and overlap-free.
     */
-  private def compactionGroups(segs: Seq[(HPath, Long, Long, Long)],
-      targetBytes: Long, minSegments: Int): Seq[Seq[(HPath, Long, Long, Long)]] = {
-    val groups = Seq.newBuilder[Seq[(HPath, Long, Long, Long)]]
-    var cur = List.empty[(HPath, Long, Long, Long)] // reversed
+  private def compactionGroups(segs: Seq[SegMeta],
+      targetBytes: Long, minSegments: Int): Seq[Seq[SegMeta]] = {
+    val groups = Seq.newBuilder[Seq[SegMeta]]
+    var cur = List.empty[SegMeta] // reversed
     var curBytes = 0L
     def flush(): Unit = {
       if (cur.size >= minSegments) groups += cur.reverse
       cur = Nil; curBytes = 0L
     }
-    segs.foreach { case seg @ (path, start, _, len) =>
+    segs.foreach { seg =>
       // a SPARSE member (key compaction product) never joins a byte-concat
       // group: a dense member concatenated AFTER it would inherit a
       // mid-gap positional cursor. compactKeyed itself re-merges
       // sparse+dense runs (it decodes anyway).
-      if (SegmentCodec.isSparse(path.getName)) flush()
+      if (SegmentCodec.isSparse(seg.name)) flush()
       else cur match {
-        case (_, pStart, pCount, _) :: _
-            if pStart + pCount == start && curBytes + len <= targetBytes =>
-          cur ::= seg; curBytes += len
+        case prev :: _
+            if prev.start + prev.count == seg.start && curBytes + seg.bytes <= targetBytes =>
+          cur ::= seg; curBytes += seg.bytes
         case _ =>
           flush()
-          if (len < targetBytes) { cur = List(seg); curBytes = len }
+          if (seg.bytes < targetBytes) { cur = List(seg); curBytes = seg.bytes }
       }
     }
     flush()
@@ -2540,29 +2218,14 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     } finally o.close()
   }
 
-  /** Carry `.tsidx` stats across a compaction: a merged segment's (min,
-    * max) is the combine of its members' — but only when EVERY member had
-    * a cached entry (a partial combine would understate the range);
-    * otherwise the merged file falls back to read-repair.
-    */
-  private def carryTsStats(tb: TopicBucket,
-      groups: Seq[(Seq[String], String)]): Unit = {
-    val cached = readTsIndex(tb)
-    val entries = groups.flatMap { case (members, merged) =>
-      val stats = members.flatMap(cached.get)
-      if (stats.nonEmpty && stats.size == members.size)
-        Some(merged -> (stats.map(_._1).min, stats.map(_._2).max))
-      else None
-    }.toMap
-    recordTsStats(tb, entries)
-  }
-
   /** A planned bucket compaction: merged files land under unique names
     * (invisible until their commit), so the byte movement needs no lock at
-    * all — only the put-if-absent commit serializes.
+    * all — only the put-if-absent commit serializes. Each merge's record
+    * combines its members' records: (min minTs, max maxTs, sum bytes, sum
+    * rows) — a byte concatenation changes none of them.
     */
   private case class CompactPlan(tb: TopicBucket,
-      groups: Seq[Seq[(HPath, Long, Long, Long)]], adds: Seq[SegMeta])
+      groups: Seq[Seq[SegMeta]], adds: Seq[SegMeta])
 
   private def compactAll(tbs: Seq[TopicBucket], targetBytes: Long,
       minSegments: Int, concat: Seq[ConcatTask] => Map[String, String]): Int = {
@@ -2570,9 +2233,10 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
     // data plane: ALL buckets' merges in one call (one Spark job under a
     // distributed strategy); files are invisible until committed
     val written = concat(plans.flatMap { p =>
+      val dir = bucketDir(p.tb)
       p.groups.zip(p.adds).map { case (g, a) =>
-        ConcatTask(g.map(_._1.toString),
-          new HPath(bucketDir(p.tb), a.name).toString, g.map(_._4).sum) }
+        ConcatTask(g.map(m => new HPath(dir, m.name).toString),
+          new HPath(dir, a.name).toString, a.bytes) }
     })
     plans.map { p =>
       val dir = bucketDir(p.tb)
@@ -2582,29 +2246,24 @@ class FileTopicLog private[graft] (rootUri: String, hadoopConf: Configuration,
       val done = commitSwaps(p.tb, p.groups.zip(p.adds).map { case (g, a) =>
         val product = written.get(new HPath(dir, a.name).toString).map(new HPath(_))
         val ready = product.exists { f =>
-          try fs.getFileStatus(f).getLen == g.map(_._4).sum
+          try fs.getFileStatus(f).getLen == a.bytes
           catch { case _: java.io.FileNotFoundException => false }
         }
-        (g.map(_._1.getName), product.fold(a)(f => a.copy(name = f.getName)), ready)
+        (g.map(_.name), product.fold(a)(f => a.copy(name = f.getName)), ready)
       })
-      carryTsStats(p.tb, done.map { case (members, a) => members -> a.name })
       done.map(_._1.size).sum
     }.sum
   }
 
   private def planCompaction(tb: TopicBucket, targetBytes: Long,
       minSegments: Int): Option[CompactPlan] = {
-    val dir = bucketDir(tb)
-    val segs = commitLog(tb).read().segs.map { s =>
-      val p = new HPath(dir, s.name)
-      (p, s.start, s.count, try fs.getFileStatus(p).getLen
-        catch { case _: java.io.FileNotFoundException => return None }) // racing retention: skip this pass
-    }
-    val groups = compactionGroups(segs, targetBytes, minSegments)
+    val groups = compactionGroups(commitLog(tb).read().segs, targetBytes, minSegments)
     if (groups.isEmpty) None
     else Some(CompactPlan(tb, groups, groups.map { g =>
-      SegMeta(SegmentCodec.dataName(g.head._2, g.map(_._3).sum), g.head._2,
-        g.map(_._3).sum) }))
+      val count = g.map(_.count).sum
+      SegMeta(SegmentCodec.dataName(g.head.start, count), g.head.start, count,
+        g.map(_.minTs).min, g.map(_.maxTs).max, g.map(_.bytes).sum, g.map(_.rows).sum)
+    }))
   }
 
   /** The commit step of both compactions: in ONE commit against the

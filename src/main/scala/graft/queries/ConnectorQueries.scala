@@ -450,9 +450,9 @@ object ConnectorQueries {
   /** ts-predicate segment pruning (round 12): events packed with their
     * timestamps into 4 buckets in NATURAL (unordered) per-bucket ts
     * order, filtered by `_ts >= T` on the lifted read. The pushed
-    * predicate prunes whole segments by `.tsidx` stats AND is re-applied
-    * row-wise by Spark, so the result is exactly `WHERE ts >= T`
-    * regardless of ordering; T is millisecond-integral (event 700's
+    * predicate prunes whole segments by their commit records' ts stats
+    * AND is re-applied row-wise by Spark, so the result is exactly
+    * `WHERE ts >= T` regardless of ordering; T is millisecond-integral (event 700's
     * floored ts) so frame-millis ≡ full-precision compare.
     */
   def tsPruneAgg(s: SparkSession, d: String): DataFrame = {
@@ -476,8 +476,8 @@ object ConnectorQueries {
   }
 
   /** Metadata MIN/MAX aggregate pushdown (round 12): count + offset and
-    * timestamp extrema answered from segment manifests and `.tsidx`
-    * stats, zero frames read (the ConnectorSpec asserts the plan; this
+    * timestamp extrema answered from the segments' commit records, zero
+    * frames read (the ConnectorSpec asserts the plan; this
     * gate asserts the VALUES). Offsets equal event_ids by the q41
     * construction (dense ids, one bucket, id order); ts extrema are
     * frame millis, so the oracle floors to milliseconds before taking
@@ -561,7 +561,7 @@ object ConnectorQueries {
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     def bytes(topic: String): Long = {
       val tb = graft.model.TopicBucket(topic, "b0000")
-      log.segments(tb).map { case (p, _, _) => log.fileLen(p) }.sum
+      log.segmentRecords(tb).map(_._2.bytes).sum
     }
     // raw twin (equal rows, no codec) — the footprint yardstick
     Ripple.createTopic(root, "craw", numBuckets = 1)
@@ -1146,7 +1146,7 @@ object ConnectorQueries {
     }
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     def bytes(t: String): Long =
-      log.segments(graft.model.TopicBucket(t, "b0000")).map(s => log.fileLen(s._1)).sum
+      log.segmentRecords(graft.model.TopicBucket(t, "b0000")).map(_._2.bytes).sum
     // two bars: >=15% TOTAL footprint cut (the ~21-byte record envelope
     // is incompressible by design — offsets and the skip walk need it —
     // so total is envelope-floored on 40 B payloads), and >=25% of the

@@ -495,13 +495,15 @@ object ScaleProbe {
     * over N tiny segments (claim: linear in segment count — the first
     * run of this cell caught the rename-mode heal sweep running
     * all-pairs, 22× at 10× segments, fixed to one sorted pass), q154c =
-    * cold timestamp seek (one-time `.tsidx` backfill — linear), q154w =
-    * warm seek (claim: O(one boundary segment) FRAME reads on top of the
-    * per-call O(segments) metadata parse — segment list + `.tsidx` lines —
-    * so the RATIO tracks segment count at small absolute cost, ~0.1 s at
-    * 2×10^4 segments, while a frame-linear implementation would sit at
-    * seconds). Their ratios are the CLAIMS under test, so Bench excludes
-    * them from the "did anything scale super-linearly" stdout headline.
+    * cold timestamp seek (the first seek after the publish reads the
+    * commit log and builds the bucket's view and running-max index from
+    * the records' maxTs — linear in segments, no frame scan), q154w =
+    * warm seek (claim: the cached index plus O(one boundary segment)
+    * FRAME reads, so the cost stays near-flat in segment count while a
+    * frame-linear implementation would sit at seconds). The cold/warm
+    * split thus measures the commit-log read. Their ratios are the CLAIMS
+    * under test, so Bench excludes them from the "did anything scale
+    * super-linearly" stdout headline.
     */
   val SyntheticCellKeys: Set[String] = Set("q152c", "q154c", "q154w", "q163s",
     "q167c")
@@ -515,9 +517,10 @@ object ScaleProbe {
     val base = System.currentTimeMillis()
     log.publishStaged(tb, (0 until nSegs).map { i =>
       val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
-      graft.log.SegmentCodec.write(log.fs, p,
+      val bytes = graft.log.SegmentCodec.write(log.fs, p,
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), base + i)))
-      (i.toLong * rowsPer, rowsPer.toLong, p)
+      graft.log.SegMeta(p.toString, i.toLong * rowsPer, rowsPer.toLong, base + i, base + i,
+        bytes, rowsPer.toLong)
     })
     (log, tb, base)
   }
@@ -555,8 +558,8 @@ object ScaleProbe {
         require(o == (n / 2).toLong * rowsPer, s"seek returned $o at n=$n")
         (System.nanoTime() - t) / 1e9
       }
-      val cold = seek() // pays the one-time .tsidx backfill over n segments
-      val warm = seek() // cache hit + ONE boundary segment walk
+      val cold = seek() // reads the commit log, builds the view + index over n segments
+      val warm = seek() // cached index + ONE boundary segment walk
       val t = System.nanoTime()
       val merged = log.compactSegments("tiny")
       require(merged == n, s"compaction merged $merged of $n")
@@ -623,26 +626,30 @@ object ScaleProbe {
       val one = Array[Byte](1)
       log.publishStaged(tb, (0 until 2).map { m =>
         val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$m")
-        val o = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-          log.fs.create(p, true), 1 << 16))
+        val raw = log.fs.create(p, true)
+        val o = new java.io.DataOutputStream(new java.io.BufferedOutputStream(raw, 1 << 16))
         var i = 0
         while (i < k) { SegmentCodec.writeFrame(o, i, base + i, one); i += 1 }
         o.close()
-        (m.toLong * k, k.toLong, p)
+        graft.log.SegMeta(p.toString, m.toLong * k, k.toLong, base, base + k - 1,
+          raw.getPos, k.toLong)
       })
       var spills = 0L
       val t = System.nanoTime()
       require(log.compactKeyed("kcap",
-          rewrite = ts => { val (done, n) = log.localKeyedCounted(ts); spills += n; done },
+          rewrite = ts => {
+            val done = log.localKeyed(ts)
+            spills += done.valuesIterator.map(_.spillRuns).sum
+            done
+          },
           keyHeap = 1 << 17) == 2,
         "both segments must compact")
       val sec = (System.nanoTime() - t) / 1e9
       require(spills > 0,
         s"the $k-key rewrite must take the spill path under a 2^17 budget")
-      val seg = log.segments(tb)
-      require(seg.size == 1 &&
-        SegmentCodec.sparseRows(seg.head._1.getName).contains(k.toLong),
-        s"exactly $k retained keys, got ${seg.map(_._1.getName)}")
+      val seg = log.segmentRecords(tb)
+      require(seg.size == 1 && seg.head._2.rows == k.toLong,
+        s"exactly $k retained keys, got ${seg.map(_._2)}")
       try log.fs.delete(log.root, true)
       catch { case _: java.io.IOException => () }
       sec
@@ -674,12 +681,12 @@ object ScaleProbe {
     * verdict task #6): per-trigger `latestOffset` under a composite
     * min/max admission limit + `planInputPartitions` over the admitted
     * range + the full `ReportsSourceMetrics` read (offset AND time lag),
-    * against an n-segment single-bucket topic in its steady state
-    * (`.tsidx` stamped at publish, as the connector's publish path does —
-    * the cold backfill is q154c's claim). The cell's claim: the whole
-    * plane reads METADATA only — the commit-log/.tsidx caches serve
-    * warm triggers at O(stat-check) + an O(segments) in-memory stats map
-    * per metrics read, no frame IO; the ZERO-FRAMES half is asserted
+    * against an n-segment single-bucket topic whose commit records carry
+    * each segment's ts stats, as every publish path writes them. The
+    * cell's claim: the whole plane reads METADATA only — the cached
+    * commit-log view serves warm triggers at O(stat-check) + an
+    * O(segments) in-memory walk of the records per metrics read, no
+    * frame IO; the ZERO-FRAMES half is asserted
     * mechanically in StreamingSpec's counting-FS test. Needs an active
     * Spark session (RippleConf broadcasts the Hadoop conf), so the
     * no-Spark dev loop skips it.
@@ -690,9 +697,7 @@ object ScaleProbe {
     val rowsPer = 5
     val triggers = 20
     def measure(n: Int): Double = {
-      val (log, tb, base) = tinySegBucket(n)
-      log.recordTsStats(tb, log.segments(tb).zipWithIndex.map { case ((p, _, _), i) =>
-        p.getName -> (base + i, base + i) }.toMap)
+      val (log, _, _) = tinySegBucket(n)
       val conf = graft.connector.RippleConf(root = log.root.toString,
         topic = "tiny", bucket = None, numBuckets = 1, startingOffset = 0L,
         endingOffset = Long.MaxValue, maxOffsetsPerTrigger = 50L,

@@ -465,7 +465,7 @@ class ConnectorSpec extends AnyFunSuite {
     assert(Ripple.endOffsets(root, "os") == Map("b0000" -> 25L, "b0001" -> 25L))
     // epoch replay: re-publishing the same epoch must be a no-op (the
     // streaming sink's exactly-once contract, here via the commit log)
-    import graft.connector.{RippleConf, RipplePublish, RippleCommitMessage, StagedFile}
+    import graft.connector.{RippleConf, RipplePublish, RippleCommitMessage}
     val conf = RippleConf(root, "os", None, 2, 0L, Long.MaxValue, Long.MaxValue)
     val log = conf.log
     val fs = log.fs
@@ -473,7 +473,7 @@ class ConnectorSpec extends AnyFunSuite {
       val p = new org.apache.hadoop.fs.Path(root + "/os/.staging/ep-" + java.util.UUID.randomUUID())
       graft.log.SegmentCodec.write(fs, p,
         (0 until 5).map(i => (graft.model.Payload(i, Array[Byte](i.toByte)), 1000L + i)))
-      Array(RippleCommitMessage(Seq(StagedFile("b0000", p.toString, 5L, 0))))
+      Array(RippleCommitMessage(Seq(SegFacts.stagedFile(fs, "b0000", p.toString, 0))))
     }
     RipplePublish.publish(conf, stageEpoch(), epochId = Some(7L), queryId = "q-os")
     val afterFirst = Ripple.read(spark, root, "os").count()
@@ -529,7 +529,7 @@ class ConnectorSpec extends AnyFunSuite {
     graft.log.SegmentCodec.write(log.fs, new org.apache.hadoop.fs.Path(log.bucketDir(tb), forged),
       (0 until 3).map(i => (graft.model.Payload(i, Array[Byte]()), 0L)))
     val cl = log.commitLog(tb)
-    assert(cl.tryCommit(cl.read(), Seq(graft.log.SegMeta(forged, 5L, 3L)), Set.empty).isDefined)
+    assert(cl.tryCommit(cl.read(), Seq(SegFacts.meta(forged, 5L, 3L)), Set.empty).isDefined)
     val e = intercept[Exception] { Ripple.read(spark, root, "ov").count() }
     assert(e.getMessage.contains("overlap") ||
       (e.getCause != null && e.getCause.getMessage.contains("overlap")), e.getMessage)
@@ -586,7 +586,7 @@ class ConnectorSpec extends AnyFunSuite {
   }
 
   test("exactly-once markers are per-query: a second query's epoch 0 still lands") {
-    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish, StagedFile}
+    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish}
     val root = tmp()
     Ripple.createTopic(root, "qm", 1)
     val conf = RippleConf(root, "qm", None, 1, 0L, Long.MaxValue, Long.MaxValue)
@@ -596,7 +596,7 @@ class ConnectorSpec extends AnyFunSuite {
       val p = staging.resolve(s"stage-${java.util.UUID.randomUUID()}")
       graft.log.SegmentCodec.write(p,
         (0 until 5).map(i => (graft.model.Payload(i, Array[Byte](tag)), 0L)))
-      Array(RippleCommitMessage(Seq(StagedFile("b0000", p.toString, 5L))))
+      Array(RippleCommitMessage(Seq(SegFacts.stagedFile(conf.log.fs, "b0000", p.toString, -1))))
     }
     val tb = graft.model.TopicBucket("qm", "b0000")
     val log = new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
@@ -611,7 +611,7 @@ class ConnectorSpec extends AnyFunSuite {
   }
 
   test("crash between link and marker: replayed epoch completes, no duplicates") {
-    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish, StagedFile}
+    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish}
     val root = tmp()
     Ripple.createTopic(root, "qr", 1)
     val conf = RippleConf(root, "qr", None, 1, 0L, Long.MaxValue, Long.MaxValue)
@@ -629,7 +629,7 @@ class ConnectorSpec extends AnyFunSuite {
     }
     def msg(p: java.nio.file.Path, pid: Int) =
       Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
-        RippleCommitMessage(Seq(StagedFile("b0000", p.toString, 5L, pid))))
+        RippleCommitMessage(Seq(SegFacts.stagedFile(conf.log.fs, "b0000", p.toString, pid))))
     val epoch0 = (0 until 5).map(i => graft.model.Payload(i, Array[Byte](0, i.toByte)))
     RipplePublish.publish(conf, msg(stage(epoch0), 0), Some(0L), "qcrash")
     assert(log.size(tb) == 5)
@@ -667,7 +667,7 @@ class ConnectorSpec extends AnyFunSuite {
   // In-process we verify the adjacent invariant: a foreign writer's
   // published segment is never clobbered and our batch lands after it.
   test("foreign pre-published segment is never clobbered; our batch lands after it") {
-    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish, StagedFile}
+    import graft.connector.{RippleCommitMessage, RippleConf, RipplePublish}
     val root = tmp()
     Ripple.createTopic(root, "cc", 1)
     val conf = RippleConf(root, "cc", None, 1, 0L, Long.MaxValue, Long.MaxValue)
@@ -684,7 +684,7 @@ class ConnectorSpec extends AnyFunSuite {
       (0 until 5).map(i => (graft.model.Payload(100 + i, Array[Byte](1, 1)), 0L)))
     RipplePublish.publish(conf,
       Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
-        RippleCommitMessage(Seq(StagedFile("b0000", p.toString, 5L)))),
+        RippleCommitMessage(Seq(SegFacts.stagedFile(conf.log.fs, "b0000", p.toString, -1)))),
       epochId = None)
     // both batches present: foreign [0,5) intact, ours republished at [5,10)
     assert(log.size(tb) == 10)
@@ -1328,7 +1328,7 @@ class ConnectorSpec extends AnyFunSuite {
     }
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val segBytes = log.segments(graft.model.TopicBucket("sz", "b0000"))
-      .map { case (p, _, _) => log.fileLen(p) }
+      .map { case (p, _, _) => log.fs.getFileStatus(p).getLen }
     assert(segBytes.size == 3)
     // a snapshot pinned BEFORE retention — its floor is offset 0
     val token = Ripple.snapshot(root, "sz")
@@ -1701,7 +1701,7 @@ class ConnectorSpec extends AnyFunSuite {
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val tb = graft.model.TopicBucket("dup", "b0000")
     val segs = log.segments(tb)
-    val bytes = segs.map(s => log.fileLen(s._1)).sum
+    val bytes = segs.map(s => log.fs.getFileStatus(s._1).getLen).sum
     val out = new org.apache.hadoop.fs.Path(log.bucketDir(tb),
       graft.log.SegmentCodec.dataName(0L, segs.map(_._3).sum))
     val task = graft.log.ConcatTask(segs.map(_._1.toString), out.toString, bytes)
@@ -1720,7 +1720,7 @@ class ConnectorSpec extends AnyFunSuite {
     written.foreach { w =>
       val p = new org.apache.hadoop.fs.Path(w)
       assert(p.getParent == log.bucketDir(tb) &&
-        graft.log.SegmentCodec.parse(p.getName).contains((0L, segs.map(_._3).sum)),
+        p.getName.startsWith(out.getName.stripSuffix(graft.log.SegmentCodec.SegmentSuffix) + "-a"),
         s"an attempt's file keeps the planned data-name fields: $w")
       val got = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri)).toSeq
       assert(got == expected, "duplicate attempts never interleave writes")
@@ -1862,7 +1862,7 @@ class ConnectorSpec extends AnyFunSuite {
     writeOne(None) // seg [10,20)
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val segBytes = log.segments(graft.model.TopicBucket("rb", "b0000"))
-      .map { case (p, _, _) => log.fileLen(p) }
+      .map { case (p, _, _) => log.fs.getFileStatus(p).getLen }
     // third publish carries a budget of ~two segments: the oldest expires
     // at publish time, exactly like retentionMs
     writeOne(Some(segBytes.sum))
@@ -2350,17 +2350,13 @@ class ConnectorSpec extends AnyFunSuite {
       }.toDF("id", "data", "ts").repartition(1).sortWithinPartitions("id")
       Ripple.write(df, root, "tp", numBuckets = 1)
     }
-    // publish-time stamping: BEFORE any read runs, the connector writes
-    // above must already have left a populated .tsidx (writer-tracked
-    // min/max) — this proves the publish path, not read-repair
-    val idx = java.nio.file.Paths.get(root, "tp", "b0000", ".tsidx")
-    assert(java.nio.file.Files.exists(idx), ".tsidx stamped at publish")
-    val stamped = new String(java.nio.file.Files.readAllBytes(idx), "UTF-8")
-      .split('\n').filter(_.nonEmpty)
-    assert(stamped.length == 4 && stamped.forall(_.split(' ').length == 3),
-      s"4 stamped segments with (min,max): ${stamped.toSeq}")
-    assert(stamped.exists(_.endsWith(" 0 900")) &&
-      stamped.exists(_.endsWith(" 30000 30900")), stamped.toSeq.toString)
+    // publish-time stats: the connector writes above committed each
+    // segment under a record carrying the writer-tracked (min, max)
+    val stamped = new graft.log.FileTopicLog(java.nio.file.Paths.get(root))
+      .segmentRecords(graft.model.TopicBucket("tp", "b0000"))
+      .map { case (_, m) => (m.minTs, m.maxTs) }
+    assert(stamped == Seq((0L, 900L), (10000L, 10900L), (20000L, 20900L), (30000L, 30900L)),
+      s"4 segments with recorded (min,max): $stamped")
 
     val env = Ripple.read(spark, root, "tp")
     assert(env.rdd.getNumPartitions == 4, "four segments planned unpruned")
@@ -2496,7 +2492,7 @@ class ConnectorSpec extends AnyFunSuite {
     assert(d.rows == 10L && d.bytes > 0L)
     assert(d.buckets("b0000") ==
       Ripple.BucketState(0L, 10L, d.buckets("b0000").segments,
-        d.buckets("b0000").bytes, Some(9000L)))
+        d.buckets("b0000").bytes, Some(9000L), 10L))
     assert(d.consumers == Seq("g") && d.schema.isEmpty)
     graft.connector.TopicSchemas.register(
       graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf),
@@ -2592,7 +2588,7 @@ class ConnectorSpec extends AnyFunSuite {
         .mode("append").save()
       val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
       val onDisk = log.buckets("sq1").flatMap(log.segments)
-        .map { case (p, _, _) => log.fileLen(p) }.sum
+        .map { case (p, _, _) => log.fs.getFileStatus(p).getLen }.sum
       assert(onDisk * 2 < (0 until 60).map(text(_).length + 16L).sum,
         "SQL-set compression must apply to the sink")
       // loud refusals: unknown key, bad value, unknown codec
@@ -2742,7 +2738,7 @@ class ConnectorSpec extends AnyFunSuite {
     }
     def bucketBytes(topic: String): Long = {
       val tb = graft.model.TopicBucket(topic, "b0000")
-      log.segments(tb).map { case (p, _, _) => log.fileLen(p) }.sum
+      log.segments(tb).map { case (p, _, _) => log.fs.getFileStatus(p).getLen }.sum
     }
     // twin topics, same rows: compressed on-disk footprint must drop hard
     Ripple.createTopic(root, "craw", numBuckets = 1)
@@ -2916,8 +2912,8 @@ class ConnectorSpec extends AnyFunSuite {
     val seg = log.segments(tb).last
     assert(graft.log.SegmentCodec.isSparse(seg._1.getName))
     val rawRetained = 4L * ("xx: " + ("padding " * 30)).getBytes.length
-    assert(log.fileLen(seg._1) * 3 < rawRetained,
-      s"re-encode must compress: ${log.fileLen(seg._1)} vs $rawRetained")
+    assert(log.fs.getFileStatus(seg._1).getLen * 3 < rawRetained,
+      s"re-encode must compress: ${log.fs.getFileStatus(seg._1).getLen} vs $rawRetained")
     // distributed rewrite path: same result via the Spark-job runner
     Ripple.createTopic(root, "kd", numBuckets = 2)
     Ripple.write((0 until 40).map(i => (i % 8, s"v$i".getBytes("UTF-8")))
@@ -3066,10 +3062,10 @@ class ConnectorSpec extends AnyFunSuite {
     assert(row.getLong(2) == 8L)
   }
 
-  test("raced metadata COUNT over a fully-covered sparse segment answers from the name — zero data-file opens") {
+  test("raced metadata COUNT over a fully-covered sparse segment answers from the commit record — zero data-file opens") {
     // the race fix must not cost O(retained rows) of driver I/O on a
     // large compacted topic: a window covering the WHOLE product takes
-    // the retained count from the publish-time name, no header walk
+    // the retained count from its commit record, no header walk
     spark.sparkContext.hadoopConfiguration
       .set("fs.cntfs.impl", classOf[CountingReadFs].getName)
     val root = "cntfs:" + tmp()
@@ -3469,9 +3465,9 @@ class ConnectorSpec extends AnyFunSuite {
     // and the total stays below the all-raw floor (raw explicit-offset
     // envelope = 25 B/record)
     val rawFloor = kept.map(_._3.getBytes("UTF-8").length + 25L).sum
-    assert(log.fileLen(segs.head._1) < rawFloor,
+    assert(log.fs.getFileStatus(segs.head._1).getLen < rawFloor,
       s"compacted product must beat the raw floor: " +
-        s"${log.fileLen(segs.head._1)} vs $rawFloor")
+        s"${log.fs.getFileStatus(segs.head._1).getLen} vs $rawFloor")
   }
 
   test("AdminKvs: quoted values may contain '=' and ','; first '=' splits the pair") {
@@ -3572,5 +3568,156 @@ class ConnectorSpec extends AnyFunSuite {
         array(lit("not-a-struct"))), root, "hdr", numBuckets = 2)
     }
     assert(bad.getMessage.contains("headers"), bad.getMessage)
+  }
+
+  test("commit records carry exact stats on every scheme, for every writer; object stores gate and describe on rows") {
+    import org.apache.spark.sql.functions._
+    import graft.connector.DistributedConcat
+    import graft.model.{Payload, TopicBucket}
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.hdfstest.impl", classOf[StrictHdfsTestFs].getName)
+    hc.set("fs.ostest.impl", classOf[ObjectStoreTestFs].getName)
+    hc.set("graft.log.nonAtomicRenameSchemes", "s3,s3a,gs,abfs,ostest")
+    import spark.implicits._
+    for (scheme <- Seq("file", "hdfstest", "ostest")) {
+      val root = s"$scheme:" + tmp()
+      val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
+      // every committed segment's record equals a header walk + stat of its file
+      def exact(topic: String, writer: String): Unit =
+        log.buckets(topic).foreach { tb =>
+          log.segmentRecords(tb).foreach { case (p, m) =>
+            assert(SegFacts.of(log.fs, p) == ((m.rows, m.minTs, m.maxTs, m.bytes)),
+              s"$scheme/$writer: record $m disagrees with ${SegFacts.of(log.fs, p)}")
+          }
+        }
+      val tb = TopicBucket("x", "b0000")
+      Ripple.createTopic(root, "x", numBuckets = 1)
+      log.append(tb, (0 until 4).map(i => Payload(i, s"a$i".getBytes("UTF-8"))))
+      exact("x", "append")
+      log.appendAt(tb, log.size(tb), Seq(
+        (Payload(1, "b1".getBytes("UTF-8")), 5000L), (Payload(2, "b2".getBytes("UTF-8")), 3000L),
+        (Payload(3, "b3".getBytes("UTF-8")), 7000L)))
+      exact("x", "appendAt")
+      def put(keys: Seq[Int], t0: Long): Unit =
+        Ripple.write(keys.zipWithIndex.map { case (k, i) =>
+          (k, s"v$k-$t0".getBytes("UTF-8"), new java.sql.Timestamp(t0 - 100L * i)) }
+          .toDF("id", "data", "ts").repartition(1), root, "x", numBuckets = 1)
+      put(Seq(1, 4, 5), 9000L)
+      exact("x", "publishStaged")
+      assert(log.compactSegments("x") == 3)
+      exact("x", "compactSegments (local)")
+      put(Seq(6, 7), 11000L); put(Seq(1, 8), 12000L)
+      assert(log.compactSegments("x", concat =
+        DistributedConcat.runner(spark, log, minBytes = 0L)) == 3)
+      exact("x", "compactSegments (runner)")
+      assert(log.compactKeyed("x") == 1)
+      exact("x", "compactKeyed (local)")
+      put(Seq(2, 9), 13000L); put(Seq(6), 14000L)
+      assert(log.compactKeyed("x", rewrite =
+        DistributedConcat.keyedRunner(spark, log, minBytes = 0L)) == 3)
+      exact("x", "compactKeyed (keyedRunner)")
+      val live = Ripple.read(spark, root, "x").count()
+      assert(live == 10L, s"$scheme: ten distinct keys retained, got $live")
+      assert(log.segmentRecords(tb).map(_._2.rows) == Seq(live))
+      // an all-tombstone bucket whose deletes aged out: the product
+      // retains nothing and records rows 0 with the ts sentinels
+      for ((topic, mover) <- Seq[(String, Seq[graft.log.KeyedTask] =>
+          Map[String, graft.log.SegmentCodec.KeyedRewrite])](
+          "e" -> log.localKeyed, "er" -> DistributedConcat.keyedRunner(spark, log, 0L))) {
+        val te = TopicBucket(topic, "b0000")
+        Ripple.createTopic(root, topic, numBuckets = 1)
+        def dels(start: Long, keys: Seq[Int]): Unit =
+          log.appendAt(te, start, keys.map(k => (Payload(k, null), 1000L + k)))
+        dels(0L, Seq(1, 2)); dels(2L, Seq(3))
+        assert(log.compactKeyed(topic, rewrite = mover) == 2) // first pass keeps deletes
+        dels(3L, Seq(4)); dels(4L, Seq(5))
+        assert(log.compactKeyed(topic, rewrite = mover,
+          minStartByBucket = Map("b0000" -> 3L)) == 2)
+        val old = System.currentTimeMillis() - 2 * 86400000L
+        log.segments(te).foreach { case (p, _, _) => log.fs.setTimes(p, old, -1) }
+        assert(log.compactKeyed(topic, rewrite = mover) == 2)
+        exact(topic, s"compactKeyed (aged tombstones, $topic)")
+        val recs = log.segmentRecords(te).map(_._2)
+        assert(recs.map(m => (m.start, m.count, m.rows, m.minTs, m.maxTs, m.bytes)) ==
+          Seq((0L, 5L, 0L, Long.MaxValue, Long.MinValue, 0L)), recs.toString)
+        // readers prune it: no rows, no partitions under a ts predicate,
+        // no freshness, and the seek answers the end offset
+        assert(Ripple.read(spark, root, topic).count() == 0L)
+        assert(Ripple.read(spark, root, topic)
+          .filter(col("ts") >= lit(new java.sql.Timestamp(0L))).rdd.getNumPartitions == 0)
+        val d = Ripple.describeTopic(root, topic).buckets("b0000")
+        assert(d.rows == 0L && d.latestTs.isEmpty, d.toString)
+        assert(log.offsetForTimestamp(te, 0L) == 5L)
+      }
+      // DESCRIBE rows and the metadata COUNT(*) are exact for a keyed
+      // topic; the sink's dirty-ratio gate counts rows, not bytes
+      Ripple.createTopic(root, "mc", numBuckets = 1)
+      Ripple.write((0 until 9).map(i => (i % 3, s"m$i".getBytes("UTF-8")))
+        .toDF("id", "data").repartition(1), root, "mc", numBuckets = 1)
+      val agg = Ripple.read(spark, root, "mc").agg(count(lit(1)))
+      assert(agg.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.exists(_.isInstanceOf[graft.connector.RippleMetaAggScan]))
+      assert(Ripple.compactKeyed(root, "mc") > 0)
+      assert(agg.collect().head.getLong(0) == 3L, s"$scheme: metadata COUNT(*)")
+      assert(Ripple.describeTopic(root, "mc").buckets("b0000").rows == 3L)
+      Ripple.createTopic(root, "dg", numBuckets = 1)
+      Ripple.setTopicConfig(root, "dg", graft.connector.TopicConfig(
+        cleanupPolicy = Some("compact"), autoCompactSegments = Some(3)))
+      val tg = TopicBucket("dg", "b0000")
+      def putDg(keys: Seq[Int], pad: Int): Unit =
+        Ripple.write(keys.map(k => (k, ("v" + "#" * pad).getBytes("UTF-8")))
+          .toDF("id", "data").repartition(1), root, "dg", numBuckets = 1)
+      // a HEAVY cleaned prefix of 7 keys, then LIGHT dirt: 5 dense rows
+      // stay below it (deferred: byte-concat), 7 reach it — by rows; by
+      // bytes the light dirt would never reach the heavy prefix
+      putDg(1 to 4, 600); putDg(5 to 6, 600); putDg(Seq(7), 600)
+      assert(log.segments(tg).size == 1, "first crossing keyed-compacts")
+      putDg(11 to 13, 1); putDg(14 to 15, 1)
+      assert(log.segments(tg).size == 2, "5 dirty rows < 7 clean rows: deferred")
+      putDg(Seq(1, 2), 1)
+      val end = log.segments(tg)
+      assert(end.size == 1 && graft.log.SegmentCodec.isSparse(end.head._1.getName),
+        s"$scheme: 7 dirty rows reach 7 clean rows: keyed compaction, got " +
+          end.map(_._1.getName).mkString(", "))
+      assert(Ripple.describeTopic(root, "dg").buckets("b0000").rows == 12L,
+        s"$scheme: DESCRIBE rows = retained keys, not the 14-offset span")
+    }
+  }
+
+  test("planners open and stat no data file: describe, statistics, MIN/MAX(ts), byteFloors, ts pruning, cold seek") {
+    import org.apache.spark.sql.functions._
+    import graft.model.{Payload, TopicBucket}
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingReadFs].getName)
+    val root = "cntfs:" + tmp()
+    val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
+    Ripple.createTopic(root, "pl", numBuckets = 1)
+    val tb = TopicBucket("pl", "b0000")
+    // 50 segments of 4 rows, segment i stamped [i s, i s + 3 ms]
+    (0 until 50).foreach { i =>
+      log.appendAt(tb, 4L * i, (0 until 4).map(j =>
+        (Payload(4 * i + j, Array[Byte](1, 2, 3)), 1000L * i + j)))
+    }
+    CountingReadFs.reset()
+    val d = Ripple.describeTopic(root, "pl").buckets("b0000")
+    assert(d.rows == 200L && d.segments == 50 && d.latestTs.contains(49003L) && d.bytes > 0L)
+    val stats = Ripple.read(spark, root, "pl").queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(200)) && stats.sizeInBytes == BigInt(d.bytes))
+    val ext = Ripple.read(spark, root, "pl").agg(min("ts"), max("ts")).collect().head
+    assert(ext.getTimestamp(0).getTime == 0L && ext.getTimestamp(1).getTime == 49003L)
+    assert(log.byteFloors("pl", d.bytes / 2).get("b0000").exists(_ > 0L))
+    assert(Ripple.read(spark, root, "pl")
+      .filter(col("ts") >= lit(new java.sql.Timestamp(25000L))).rdd.getNumPartitions == 25)
+    assert(CountingReadFs.dataOpens.get == 0L && CountingReadFs.dataStats.get == 0L,
+      s"planners touched data files: ${CountingReadFs.touched}")
+    // a cold seek (fresh instance, no cached view) walks ONE boundary segment
+    val cold = new graft.log.FileTopicLog(root, graft.log.LogFs.activeHadoopConf)
+    assert(cold.offsetForTimestamp(tb, 25002L) == 102L)
+    val boundary = log.segments(tb)(25)._1.getName
+    assert(CountingReadFs.touched.asScala.toSet == Set(boundary),
+      s"only the boundary segment may be touched: ${CountingReadFs.touched}")
+    assert(CountingReadFs.dataOpens.get == 1L)
   }
 }

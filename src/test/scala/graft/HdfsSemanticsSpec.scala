@@ -83,10 +83,10 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     val dir = new HPath(log.bucketDir(tb), ".commitlog")
     val cl = new graft.log.CommitLog(log.fs, dir, 64)
     val st = cl.read()
-    assert(cl.tryCommit(st, Seq(graft.log.SegMeta("data-a", 0L, 2L)), Set.empty).isDefined)
+    assert(cl.tryCommit(st, Seq(SegFacts.meta("data-a", 0L, 2L)), Set.empty).isDefined)
     // a second writer at the same stale version: the temp + rename arm's
     // rename refuses the existing version file
-    assert(cl.tryCommit(st, Seq(graft.log.SegMeta("data-b", 0L, 2L)), Set.empty).isEmpty)
+    assert(cl.tryCommit(st, Seq(SegFacts.meta("data-b", 0L, 2L)), Set.empty).isEmpty)
     assert(cl.read().segs.map(_.name) == Vector("data-a"))
   }
 
@@ -139,18 +139,23 @@ class HdfsSemanticsSpec extends AnyFunSuite {
       "landed offsets stay dense over strict FS")
   }
 
-  test(".tsidx rewrite exercises the delete+retry rename window; retention + floor work") {
+  test("topic-config rewrite exercises the delete+retry rename window; seek, retention + floor work") {
+    import graft.connector.TopicConfig
     val log = newLog()
     val now = System.currentTimeMillis()
-    log.appendAt(tb, 0L, payloads(5, 1).map(p => (p, now)))       // .tsidx v1
-    log.appendAt(tb, 5L, payloads(5, 2).map(p => (p, now + 1)))   // rewrite: dst EXISTS
-    log.appendAt(tb, 10L, payloads(5, 3).map(p => (p, now + 2)))  // rewrite again
-    // every .tsidx write after the first took renameOverwrite's
-    // delete+retry arm (strict rename refuses the existing file); the
-    // cache must still hold one entry per segment
-    val idx = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      new HPath(log.bucketDir(tb), ".tsidx").toUri.getPath)), "UTF-8")
-    assert(log.segments(tb).forall(s => idx.contains(s._1.getName + " ")), idx)
+    log.createTopic("t", 1)
+    TopicConfig.write(log, "t", TopicConfig(retentionMs = Some(60000L)))
+    // the document exists now: strict rename refuses to replace it, so the
+    // rewrite must take renameOverwrite's delete+retry arm
+    TopicConfig.write(log, "t", TopicConfig(retentionMs = Some(120000L),
+      compression = Some("lz4")))
+    val cfg = TopicConfig.read(log, "t")
+    assert(cfg.retentionMs.contains(120000L) && cfg.compression.contains("lz4"), cfg.toString)
+    assert(!log.fs.listStatus(new HPath(log.root, "t"))
+      .exists(_.getPath.getName.startsWith(".tmp-")), "no temp file left behind")
+    log.appendAt(tb, 0L, payloads(5, 1).map(p => (p, now)))
+    log.appendAt(tb, 5L, payloads(5, 2).map(p => (p, now + 1)))
+    log.appendAt(tb, 10L, payloads(5, 3).map(p => (p, now + 2)))
     assert(log.offsetForTimestamp(tb, now + 1) == 5L)
     assert(log.segments(TopicBucket("t", "b0")).map(_._2) == Seq(0L, 5L, 10L))
     assert(log.truncateBefore("t", 5L) == 1)
@@ -208,7 +213,7 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     // publish protocol (staging file → stage move → commit)
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val onDisk = log.buckets("hz").flatMap(log.segments)
-      .map { case (p, _, _) => log.fileLen(p) }.sum
+      .map { case (p, _, _) => log.fs.getFileStatus(p).getLen }.sum
     assert(onDisk * 2 < (0 until 40).map(text(_).length + 16L).sum,
       s"lz4 must shrink repetitive text >=2x, got $onDisk")
   }

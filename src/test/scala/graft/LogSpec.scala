@@ -100,7 +100,7 @@ class LogSpec extends AnyFunSuite {
     val staged = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-usurped")
     SegmentCodec.write(log.fs, staged, payloads(3, tag = 9).map(p => (p, now)))
     val e = intercept[IllegalStateException] {
-      log.publishStaged(tb, Seq((0L, 3L, staged)))
+      log.publishStaged(tb, Seq(SegFacts.staged(log.fs, staged, 0L)))
     }
     assert(e.getMessage.contains("DIFFERENT records"), e.getMessage)
     assert(log.segments(tb).map(_._1) == Seq(target))
@@ -111,24 +111,52 @@ class LogSpec extends AnyFunSuite {
     // and a successful publish consumes the staged file (no leak)
     val staged2 = new org.apache.hadoop.fs.Path(log.bucketDir(tb), ".tmp-fresh")
     SegmentCodec.write(log.fs, staged2, payloads(2, tag = 2).map(p => (p, now)))
-    assert(log.publishStaged(tb, Seq((3L, 2L, staged2))).head.isDefined)
+    assert(log.publishStaged(tb, Seq(SegFacts.staged(log.fs, staged2, 3L))).head.isDefined)
     assert(!Files.exists(nio(staged2)))
     assert(log.size(tb) == 5)
   }
 
   test("segment name round-trip") {
     val n = SegmentCodec.dataName(42L, 7L)
-    assert(SegmentCodec.parse(n).contains((42L, 7L)))
-    assert(!SegmentCodec.isSparse(n) && SegmentCodec.sparseRows(n).isEmpty)
+    assert(!SegmentCodec.isSparse(n))
     assert(SegmentCodec.dataName(42L, 7L) != n, "unique per call")
-    val k = SegmentCodec.sparseName(40L, 9L, Some(3L))
-    assert(SegmentCodec.parse(k).contains((40L, 9L)))
-    assert(SegmentCodec.isSparse(k) && SegmentCodec.sparseRows(k).contains(3L))
-    val flag = SegmentCodec.sparseName(40L, 9L, None)
-    assert(SegmentCodec.isSparse(flag) && SegmentCodec.sparseRows(flag).isEmpty)
-    assert(SegmentCodec.parse("garbage.log").isEmpty)
-    assert(SegmentCodec.parse("data-x-y-z.log").isEmpty)
-    assert(SegmentCodec.parse("seg-00000000000000000001-0000000002.log").isEmpty)
+    val k = SegmentCodec.sparseName(40L, 9L)
+    assert(SegmentCodec.isSparse(k) && k != SegmentCodec.sparseName(40L, 9L))
+  }
+
+  test("commit records round-trip with their stats; the retired four-field A line is refused loudly") {
+    // a record written by one CommitLog reads back field for field
+    // through a cold instance, in a delta and in a checkpoint
+    import org.apache.hadoop.fs.{Path => HPath}
+    val dir = new HPath("file:" + Files.createTempDirectory("graftrec"), ".commitlog")
+    val fs = graft.log.LogFs.get(dir, new org.apache.hadoop.conf.Configuration())
+    val writer = new graft.log.CommitLog(fs, dir, 2)
+    val recs = Seq(
+      graft.log.SegMeta(SegmentCodec.dataName(42L, 7L), 42L, 7L, -5L, 1700000000123L, 4096L, 7L),
+      graft.log.SegMeta(SegmentCodec.sparseName(49L, 9L), 49L, 9L,
+        Long.MaxValue, Long.MinValue, 0L, 0L))
+    recs.foreach(r => assert(writer.tryCommit(writer.read(), Seq(r), Set.empty).isDefined))
+    assert(new graft.log.CommitLog(fs, dir, 2).read().segs == recs)
+    (0 until 2).foreach(_ => assert(writer.tryCommit(writer.read(),
+      Seq(SegFacts.meta(SegmentCodec.dataName(0L, 1L), 100L, 1L)), Set.empty).isDefined))
+    assert(fs.exists(new HPath(dir, f"k-${2L}%020d")), "a checkpoint was written")
+    assert(new graft.log.CommitLog(fs, dir, 2).read().segs.take(2) == recs)
+    // the retired format carried offsets only; parsing it as zero stats
+    // would make every ts predicate prune the segment and every byte
+    // budget ignore it, and reading it as empty would lose the bucket
+    for (kind <- Seq("c", "k")) {
+      val log = fileLog()
+      val cl = new java.io.File(log.bucketDir(tb).toUri.getPath, ".commitlog")
+      cl.mkdirs()
+      Files.write(cl.toPath.resolve(f"$kind-${if (kind == "c") 0L else 64L}%020d"),
+        s"A 0 5 ${SegmentCodec.dataName(0L, 5L)}".getBytes("UTF-8"))
+      for (read <- Seq[() => Any](() => log.segments(tb), () => log.size(tb),
+          () => log.offsetForTimestamp(tb, 0L))) {
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains("retired four-field commit line") &&
+          e.getMessage.contains(s"$kind-"), e.getMessage)
+      }
+    }
   }
 
   test("property: range(i,j) == slice for arbitrary appends (seeded, 200 cases)") {
@@ -202,7 +230,7 @@ class LogSpec extends AnyFunSuite {
     }
     val segs = log.segments(tb)
     assert(segs.size == 4)
-    val segBytes = segs.map { case (p, _, _) => log.fileLen(p) }
+    val segBytes = segs.map { case (p, _, _) => log.fs.getFileStatus(p).getLen }
     assert(segBytes.forall(_ > 0))
     // budget = the last two segments exactly → first two expire
     val floors2 = log.byteFloors(tb.topic, segBytes.drop(2).sum)
@@ -223,7 +251,7 @@ class LogSpec extends AnyFunSuite {
     log.appendAt(tb2, 1L, (0 until 40).map(i =>
       (graft.model.Payload(i, Array.fill(64)(7: Byte)), now)))       // big
     log.appendAt(tb2, 41L, payloads(1).map(p => (p, now)))           // small
-    val s2 = log.segments(tb2).map { case (p, _, _) => log.fileLen(p) }
+    val s2 = log.segments(tb2).map { case (p, _, _) => log.fs.getFileStatus(p).getLen }
     // budget covers newest + NOT the big middle → floor lands at the big
     // segment's end; the tiny head expires despite fitting by itself
     assert(log.byteFloors(tb.topic, s2.last + 1).get("b1").contains(41L))
@@ -283,7 +311,7 @@ class LogSpec extends AnyFunSuite {
     val before = log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq))
     assert(log.segments(tb).size == 10)
     // target sized for ~5 tiny segments per merged file → two groups
-    val segBytes = log.fileLen(log.segments(tb).head._1)
+    val segBytes = log.fs.getFileStatus(log.segments(tb).head._1).getLen
     val merged = log.compactSegments("t", targetBytes = segBytes * 5)
     assert(merged == 10, s"all 10 tiny segments merge away, got $merged")
     val segsAfter = log.segments(tb)
@@ -343,7 +371,7 @@ class LogSpec extends AnyFunSuite {
     assert(log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq)) == before)
   }
 
-  test("offsetForTimestamp: boundaries, out-of-order stamps, .tsidx repair, compaction, retention") {
+  test("offsetForTimestamp: boundaries, out-of-order stamps, commit-record stats, compaction, retention") {
     val dir = Files.createTempDirectory("tsseek")
     val log = new FileTopicLog(dir)
     def rows(tag: Byte, tss: Seq[Long], base: Int) =
@@ -363,24 +391,17 @@ class LogSpec extends AnyFunSuite {
     val expect = Seq(0L, 0L, 1L, 2L, 3L, 2L, 5L, 7L, 8L)
     assert(seeks() == expect)
 
-    // appendAt stamped the per-bucket cache at publish (and the seeks
-    // above TRUSTED it — wrong stamped values would have failed them);
-    // corrupting it must not change any answer (tolerant parse + frame
-    // re-scan + rewrite)
-    val idx = dir.resolve("t").resolve("b0").resolve(".tsidx")
-    assert(Files.exists(idx), ".tsidx cache stamped at publish")
-    Files.write(idx, "garbage\ndata-junk notanumber\n".getBytes("UTF-8"))
-    assert(seeks() == expect, "corrupt cache must self-heal")
-    assert(log.segments(tb).forall(s =>
-      new String(Files.readAllBytes(idx), "UTF-8").contains(s._1.getName + " ")),
-      "cache rewritten after repair")
+    // appendAt recorded each segment's ts range in its commit record (and
+    // the seeks above TRUSTED it — wrong recorded values would have
+    // failed them); no side file holds them
+    def tsRanges() = log.segmentRecords(tb).map { case (_, m) => (m.minTs, m.maxTs) }
+    assert(tsRanges() == Seq((10L, 30L), (25L, 50L), (60L, 70L)))
+    assert(!dir.resolve("t").resolve("b0").toFile.list().exists(_.startsWith(".ts")))
 
-    // in-place compaction carries the stats: the merged segment's entry
-    // is the combine of its members' — no re-scan needed
+    // in-place compaction combines the members' records: the merged
+    // segment's range is (min, max) of theirs — no re-scan needed
     assert(log.compactSegments("t") == 3)
-    val carried = new String(Files.readAllBytes(idx), "UTF-8")
-    assert(carried.contains(
-      s"${log.segments(tb).head._1.getName} 10 70"), carried)
+    assert(tsRanges() == Seq((10L, 70L)))
     assert(seeks() == expect, "seek invariant under compaction")
 
     // retention: a timestamp predating every retained record resolves to
@@ -411,7 +432,7 @@ class LogSpec extends AnyFunSuite {
       tss.zipWithIndex.map { case (t, i) => (Payload(base + i, Array(tag)), t) }
     log.appendAt(tb, 0L, stamped(1, 0, Seq(10L, 20L)))
     log.appendAt(tb, 2L, stamped(2, 2, Seq(30L, 40L)))
-    // warm every cache: manifest parse, .tsidx parse, seek index
+    // warm the cached commit-log view and its seek index
     assert(log.offsetForTimestamp(tb, 25L) == 2L)
     assert(log.offsetForTimestamp(tb, 25L) == 2L) // warm hit
     assert(log.metaCacheEntries > 0, "caches populated")
@@ -455,7 +476,7 @@ class LogSpec extends AnyFunSuite {
     val fromRef = probes.map { case (b, ts) =>
       reference.offsetForTimestamp(TopicBucket("t", s"b$b"), ts) }
     assert(fromCapped == fromRef, "eviction is invisible to results")
-    assert(capped.metaCacheWeight <= 2L + 2L, // one over-cap survivor per cache
+    assert(capped.metaCacheWeight <= 2L, // one over-cap survivor
       s"cap enforced, weight=${capped.metaCacheWeight}")
     assert(reference.metaCacheEntries >= 4, "uncapped instance retains entries")
   }
@@ -467,7 +488,7 @@ class LogSpec extends AnyFunSuite {
       log.appendAt(tb, e * 2L, payloads(2, e.toByte).map(p => (p, now)))
     }
     val before = log.range(tb, 0, Long.MaxValue).map(r => (r.offset, r.id, r.data.toSeq))
-    val segBytes = log.fileLen(log.segments(tb).head._1)
+    val segBytes = log.fs.getFileStatus(log.segments(tb).head._1).getLen
     // two groups of 3; a "retention job" deletes a member of group 1
     // between plan and concat — exactly the unlocked phase-2 window
     var sabotaged = false
@@ -576,24 +597,17 @@ class LogSpec extends AnyFunSuite {
     // ORIGINAL offsets: 1->5(a3), 2->4(b2), 3->3(c1)
     val segs = log.segments(tbk)
     assert(segs.size == 1 && SegmentCodec.isSparse(segs.head._1.getName))
-    assert(SegmentCodec.sparseRows(segs.head._1.getName).contains(3L))
+    val rec = log.segmentRecords(tbk).head._2
+    assert((rec.rows, rec.minTs, rec.maxTs) == ((3L, 40L, 60L)), rec.toString)
+    assert(rec.bytes == log.fs.getFileStatus(segs.head._1).getLen)
     assert(segs.head._2 == 0L && segs.head._3 == 6L, "span covers [0,6)")
     assert(log.size(tbk) == endBefore, "end offset unchanged")
     val got = log.range(tbk, 0, 10).map(r => (r.offset, r.id, new String(r.data)))
     assert(got == Seq((3L, 3, "c1"), (4L, 2, "b2"), (5L, 1, "a3")))
-    // the rewrite's stats sidecar was consumed by the commit — no
-    // .tmp-stat leftovers (and the driver never header-walked the product)
-    assert(!log.fs.listStatus(log.bucketDir(tbk))
-      .exists(_.getPath.getName.startsWith(".tmp-stat-")),
-      "stat sidecar must be consumed at commit")
-    // sidecar round-trip + torn-document fallback (None, never a throw)
-    val sc = new org.apache.hadoop.fs.Path(log.bucketDir(tbk), "probe")
-    SegmentCodec.writeStatSidecar(log.fs, sc, 7L, 100L, 900L)
-    assert(SegmentCodec.readStatSidecar(log.fs, sc).contains((7L, 100L, 900L)))
-    val torn = log.fs.create(SegmentCodec.statSidecar(sc), true)
-    torn.write("gar bage".getBytes); torn.close()
-    assert(SegmentCodec.readStatSidecar(log.fs, sc).isEmpty)
-    log.fs.delete(SegmentCodec.statSidecar(sc), false)
+    // the rewrite's stats travelled beside its path into the record: the
+    // bucket holds nothing but the product and the commit log
+    assert(log.fs.listStatus(log.bucketDir(tbk)).map(_.getPath.getName).sorted.toSeq ==
+      Seq(".commitlog", segs.head._1.getName), "no side file")
     // re-compaction of a lone sparse segment is a no-op
     assert(log.compactKeyed("kc") == 0)
     // new updates append after; keyed compaction merges sparse + dense
@@ -610,17 +624,16 @@ class LogSpec extends AnyFunSuite {
     log.appendAt(tbh, 0L, Seq((Payload(1, "x1".getBytes), 10L),
       (Payload(1, "x2".getBytes), 20L)))
     val dir = log.bucketDir(tbh)
-    val sparse = new org.apache.hadoop.fs.Path(dir,
-      SegmentCodec.sparseName(0L, 2L, Some(1L)))
+    val sparse = new org.apache.hadoop.fs.Path(dir, SegmentCodec.sparseName(0L, 2L))
     val out = new java.io.DataOutputStream(log.fs.create(sparse, true))
     SegmentCodec.writeFrame(out, 1, 20L, "x2".getBytes, offset = 1L)
     out.close()
     assert(log.range(tbh, 0, 2).map(r => (r.offset, new String(r.data))) ==
       Seq((0L, "x1"), (1L, "x2")), "the uncommitted product is invisible")
     assert(log.compactKeyed("kh") == 1, "the next pass compacts the dense member")
-    val healed = log.segments(tbh).map(_._1.getName)
-    assert(healed.size == 1 && healed.head != sparse.getName &&
-      SegmentCodec.sparseRows(healed.head).contains(1L), healed.toString)
+    val healed = log.segmentRecords(tbh).map { case (p, m) => (p.getName, m.rows) }
+    assert(healed.size == 1 && healed.head._1 != sparse.getName &&
+      healed.head._2 == 1L, healed.toString)
     assert(log.range(tbh, 0, 2).map(r => (r.offset, new String(r.data))) ==
       Seq((1L, "x2")))
     assert(log.vacuum("kh", graceMs = 0L,
@@ -675,7 +688,7 @@ class LogSpec extends AnyFunSuite {
     SegmentCodec.writeFrame(out, 5, 5000L, ("v5" * 100).getBytes, Codecs.Zstd, offset = 5L)
     SegmentCodec.writeFrame(out, 9, 9000L, "v9".getBytes, Codecs.None, offset = 9L)
     out.close()
-    log.publishStaged(tbs, Seq((0L, 10L, seg)))
+    log.publishStaged(tbs, Seq(SegFacts.staged(log.fs, seg, 0L).copy(count = 10L)))
     // range: retained records surface at their ORIGINAL offsets; gaps skip
     val all = log.range(tbs, 0, 10)
     assert(all.map(r => (r.offset, r.id)) == Seq((2L, 2), (5L, 5), (9L, 9)))
@@ -816,7 +829,7 @@ class LogSpec extends AnyFunSuite {
     // latest-per-key = {1@0 empty, 2@3 tomb, 3@4}. The product name is
     // sparse-marked like a real publish, so the aging arms below see it
     // as a compaction product.
-    val keep = new org.apache.hadoop.fs.Path(dir, ".out-keep-k3.log")
+    val keep = new org.apache.hadoop.fs.Path(dir, ".out-keep-k.log")
     val rKeep = SegmentCodec.rewriteLatestPerKey(log.fs, members, keep,
       tombstoneFloorMs = Long.MaxValue)
     assert(rKeep.rows == 3L, s"first-pass tombstone retained, got $rKeep")
@@ -1215,7 +1228,7 @@ class LogSpec extends AnyFunSuite {
   }
 
   test("commit-log read cache: a GC that passes a reader mid read-ahead sends it to a full read") {
-    import graft.log.{CommitLog, SegMeta}
+    import graft.log.CommitLog
     import org.apache.hadoop.fs.{Path => HPath}
     val conf = new org.apache.hadoop.conf.Configuration()
     val dir = new HPath("file:" + Files.createTempDirectory("graftra"), ".commitlog")
@@ -1233,7 +1246,7 @@ class LogSpec extends AnyFunSuite {
     val reader = new CommitLog(hooked, dir, 2)
     def commit(i: Int): Unit = {
       val st = writer.read()
-      assert(writer.tryCommit(st, Seq(SegMeta(s"d$i", i, 1)), Set.empty).isDefined)
+      assert(writer.tryCommit(st, Seq(SegFacts.meta(s"d$i", i, 1)), Set.empty).isDefined)
     }
     (0 until 3).foreach(commit)
     assert(reader.read().version == 2) // warm at version 2

@@ -1,6 +1,6 @@
 package graft
 
-import graft.log.{CommitLog, FileTopicLog, SegMeta, SegmentCodec}
+import graft.log.{CommitLog, FileTopicLog, SegmentCodec}
 import graft.model.{Payload, TopicBucket}
 
 import org.apache.hadoop.conf.Configuration
@@ -80,17 +80,17 @@ class ObjectStoreSpec extends AnyFunSuite {
       p
     }
     val s1 = stage(1)
-    log.publishStaged(tb, Seq((0L, 4L, s1)))
+    log.publishStaged(tb, Seq(SegFacts.staged(log.fs, s1, 0L)))
     assert(!fs.exists(s1), "staged file consumed by the publish")
     assert(log.size(tb) == 4)
     // epoch replay: same offsets, same records — consumed, no new segment
     val s2 = stage(1)
-    log.publishStaged(tb, Seq((0L, 4L, s2)))
+    log.publishStaged(tb, Seq(SegFacts.staged(log.fs, s2, 0L)))
     assert(!fs.exists(s2))
     assert(log.segments(tb).size == 1)
     // foreign writer: same offsets, different records
     val s3 = stage(9)
-    val e = intercept[IllegalStateException] { log.publishStaged(tb, Seq((0L, 4L, s3))) }
+    val e = intercept[IllegalStateException] { log.publishStaged(tb, Seq(SegFacts.staged(log.fs, s3, 0L))) }
     assert(e.getMessage.contains("DIFFERENT"))
     assert(log.range(tb, 0, 4).map(_.data(0)) == Seq[Byte](1, 1, 1, 1))
   }
@@ -228,11 +228,11 @@ class ObjectStoreSpec extends AnyFunSuite {
     // … then 12 commits + checkpoints land meanwhile (GC floor passes v=0)
     var st = cl.read()
     (0 until 12).foreach { i =>
-      st = cl.tryCommit(st, Seq(SegMeta(s"data-x$i", i.toLong, 1L)), Set.empty).get
+      st = cl.tryCommit(st, Seq(SegFacts.meta(s"data-x$i", i.toLong, 1L)), Set.empty).get
     }
     // the stale writer now tries to commit version 0 — create-exclusive
     // would WIN (c-0 was GC'd); the guard must detect and refuse
-    assert(cl.tryCommit(stale, Seq(SegMeta("data-stale", 99L, 1L)), Set.empty).isEmpty,
+    assert(cl.tryCommit(stale, Seq(SegFacts.meta("data-stale", 99L, 1L)), Set.empty).isEmpty,
       "resurrected version must be refused, not silently ignored by readers")
     val now = cl.read()
     assert(now.segs.size == 12 && !now.segs.exists(_.name == "data-stale"))
@@ -245,8 +245,8 @@ class ObjectStoreSpec extends AnyFunSuite {
     val dir = new HPath(new HPath(new HPath(log.root, "t"), "b0"), ".commitlog")
     val cl = new CommitLog(log.fs, dir, 64)
     val st = cl.read()
-    assert(cl.tryCommit(st, Seq(SegMeta("data-a", 0L, 2L)), Set.empty).isDefined)
-    assert(cl.tryCommit(st, Seq(SegMeta("data-b", 0L, 2L)), Set.empty).isEmpty,
+    assert(cl.tryCommit(st, Seq(SegFacts.meta("data-a", 0L, 2L)), Set.empty).isDefined)
+    assert(cl.tryCommit(st, Seq(SegFacts.meta("data-b", 0L, 2L)), Set.empty).isEmpty,
       "stale writer refused through the typed conditional-PUT branch")
     assert(cl.read().segs.map(_.name) == Vector("data-a"))
     // local: the hard-link arm refuses through java.nio's typed class
@@ -254,8 +254,8 @@ class ObjectStoreSpec extends AnyFunSuite {
     val ldir = new HPath(tmp(), ".commitlog")
     val lcl = new CommitLog(lfs, ldir, 64)
     val lst = lcl.read()
-    assert(lcl.tryCommit(lst, Seq(SegMeta("data-a", 0L, 2L)), Set.empty).isDefined)
-    assert(lcl.tryCommit(lst, Seq(SegMeta("data-b", 0L, 2L)), Set.empty).isEmpty)
+    assert(lcl.tryCommit(lst, Seq(SegFacts.meta("data-a", 0L, 2L)), Set.empty).isDefined)
+    assert(lcl.tryCommit(lst, Seq(SegFacts.meta("data-b", 0L, 2L)), Set.empty).isEmpty)
     assert(lcl.read().segs.map(_.name) == Vector("data-a"))
   }
 
@@ -273,7 +273,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val cl = new CommitLog(fs, noDir, 4)
     val e = intercept[java.io.IOException] {
       cl.tryCommit(graft.log.CommitState(-1L, Vector.empty),
-        Seq(SegMeta("data-a", 0L, 1L)), Set.empty)
+        Seq(SegFacts.meta("data-a", 0L, 1L)), Set.empty)
     }
     assert(e.getMessage.contains("Parent path does not exist"),
       s"storage fault must rethrow as itself, got: ${e.getMessage}")
@@ -283,8 +283,8 @@ class ObjectStoreSpec extends AnyFunSuite {
     val dir = new HPath(tmp(), ".commitlog")
     val cl2 = new CommitLog(fs, dir, 4)
     val st = cl2.read()
-    assert(cl2.tryCommit(st, Seq(SegMeta("data-a", 0L, 1L)), Set.empty).isDefined)
-    assert(cl2.tryCommit(st, Seq(SegMeta("data-b", 0L, 1L)), Set.empty).isEmpty,
+    assert(cl2.tryCommit(st, Seq(SegFacts.meta("data-a", 0L, 1L)), Set.empty).isDefined)
+    assert(cl2.tryCommit(st, Seq(SegFacts.meta("data-b", 0L, 1L)), Set.empty).isEmpty,
       "untyped already-exists with target present is a put-if-absent refusal")
     assert(cl2.read().segs.map(_.name) == Vector("data-a"))
   }
@@ -300,7 +300,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     assert(order.toArray.toSeq == Seq(1, 2, 3), "second holder waited for release")
   }
 
-  test("timestamp seek over the store: exact offsets, .tsidx via direct PUT, compaction-safe") {
+  test("timestamp seek over the store: exact offsets, stats from the commit records, compaction-safe") {
     val log = newLog()
     def rows(tag: Byte, tss: Seq[Long], base: Int) =
       tss.zipWithIndex.map { case (t, i) =>
@@ -311,14 +311,14 @@ class ObjectStoreSpec extends AnyFunSuite {
       Seq(Long.MinValue, 25L, 31L, 45L, 51L).map(log.offsetForTimestamp(tb, _))
     val expect = Seq(0L, 2L, 3L, 5L, 6L)
     assert(seeks() == expect)
-    // the cache write is a direct overwrite PUT on the store (no rename);
-    // a second reader instance sees it and agrees
+    // the stats travel in the commit records: a second reader instance
+    // reads them from the log and agrees
     val log2 = new FileTopicLog("ostest:" + log.root.toUri.getPath, conf())
     assert(Seq(Long.MinValue, 25L, 31L, 45L, 51L)
       .map(log2.offsetForTimestamp(tb, _)) == expect)
-    // compaction renames nothing but re-keys the segment list; stale
-    // cache entries stop matching and the seek recomputes
+    // compaction renames nothing; the merged record combines the members'
     assert(log.compactSegments("t") == 2)
+    assert(log.segmentRecords(tb).map { case (_, m) => (m.minTs, m.maxTs) } == Seq((10L, 50L)))
     assert(seeks() == expect, "seek invariant under manifest-mode compaction")
   }
 
@@ -331,10 +331,10 @@ class ObjectStoreSpec extends AnyFunSuite {
     // sequenced commit (the connector's publish path)
     val staged = new HPath(log.root, s".staged-${java.util.UUID.randomUUID()}")
     SegmentCodec.write(log.fs, staged, stamped, Codecs.Zstd)
-    val compressedLen = log.fileLen(staged)
+    val compressedLen = log.fs.getFileStatus(staged).getLen
     assert(compressedLen * 3 < stamped.map(_._1.data.length + 16L).sum,
       "zstd must shrink repetitive text >=3x on this rig too")
-    assert(log.publishStaged(tb, Seq((0L, 40L, staged))).head.isDefined)
+    assert(log.publishStaged(tb, Seq(SegFacts.staged(log.fs, staged, 0L))).head.isDefined)
     // mixed bucket: a raw append lands after the compressed segment
     log.append(tb, (40 until 50).map(i => Payload(i, text(i))))
     def content() = log.range(tb, 0, 100).map(r => (r.offset, r.id, new String(r.data)))
@@ -345,7 +345,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     assert(log.compactSegments("t") > 0)
     assert(log.segments(tb).size == 1)
     assert(content() == before, "compaction over mixed frames is invisible")
-    // header-walk seek never decompresses; ts stats carried/backfilled
+    // header-walk seek never decompresses; ts stats combined at compaction
     assert(log.offsetForTimestamp(tb, 100L + 25) == 25L)
   }
 
@@ -377,7 +377,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val stamped = (0 until 600).map(i => (Payload(i, pay(i)), 100L + i))
     val staged = new HPath(log.root, s".staged-${java.util.UUID.randomUUID()}")
     SegmentCodec.write(log.fs, staged, stamped, graft.log.Codecs.ZstdDict)
-    assert(log.publishStaged(tb, Seq((0L, 600L, staged))).head.isDefined)
+    assert(log.publishStaged(tb, Seq(SegFacts.staged(log.fs, staged, 0L))).head.isDefined)
     // raw tail after the dict segment (mixed bucket), then byte-concat:
     // the concatenated object is (dict, records...) ++ (raw records...)
     log.append(tb, (600 until 620).map(i => Payload(i, pay(i))))

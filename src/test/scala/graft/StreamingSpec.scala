@@ -1071,7 +1071,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = tmp()
     Ripple.createTopic(root, "met", numBuckets = 1)
     // 20 rows with explicit, spread timestamps (one per second) so the
-    // publish-time .tsidx stats make behind-latest TIME computable
+    // ts stats in the commit records make behind-latest TIME computable
     val base = 1700000000000L
     val df = (0 until 20).map(i =>
         (i, s"m$i".getBytes("UTF-8"), new java.sql.Timestamp(base + 1000L * i)))
@@ -1101,7 +1101,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(behinds.min == 0L, s"the final batch must report caught-up: $behinds")
       assert(progresses.forall(p => m(p, "minOffsetsBehindLatest").isDefined &&
         m(p, "avgOffsetsBehindLatest").isDefined))
-      // behind-latest TIME from .tsidx stats: rows are 1 s apart, so an
+      // behind-latest TIME from the records' ts stats: rows are 1 s apart, so an
       // n-row backlog reads as >= (n-1) seconds and <= 19 s (conservative
       // upper bound off the segment min stat)
       val lagging = progresses.filter(p =>
@@ -1121,18 +1121,17 @@ class StreamingSpec extends AnyFunSuite {
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     val tb = graft.model.TopicBucket("zf", "b0000")
     log.fs.mkdirs(log.bucketDir(tb))
-    // 500 published segments in their steady state: ts stats stamped at
-    // publish (the connector's publish path does this), one commit
+    // 500 published segments in one commit, each record carrying its ts
+    // stats as every publish path writes them
     val rowsPer = 5
     val base = 1700000000000L
-    val names = log.publishStaged(tb, (0 until 500).map { i =>
+    log.publishStaged(tb, (0 until 500).map { i =>
       val p = new org.apache.hadoop.fs.Path(log.bucketDir(tb), s".staged-$i")
-      graft.log.SegmentCodec.write(log.fs, p,
+      val bytes = graft.log.SegmentCodec.write(log.fs, p,
         (0 until rowsPer).map(j => (graft.model.Payload(j, Array[Byte](1)), base + i)))
-      (i.toLong * rowsPer, rowsPer.toLong, p)
-    }).flatten
-    log.recordTsStats(tb, names.zipWithIndex.map { case (n, i) =>
-      n -> (base + i, base + i) }.toMap)
+      graft.log.SegMeta(p.toString, i.toLong * rowsPer, rowsPer.toLong, base + i, base + i,
+        bytes, rowsPer.toLong)
+    })
     // one fresh segment past the backlog — the only rows the query consumes
     log.append(tb, (0 until 6).map(i => graft.model.Payload(100 + i, Array[Byte](2))))
     CountingReadFs.dataOpens.set(0L)
@@ -1157,8 +1156,7 @@ class StreamingSpec extends AnyFunSuite {
         p.sources(0).metrics.get("maxOffsetsBehindLatest") != null))
     } finally q.stop()
     // THE claim: planning + admission + metrics over the 500-segment
-    // backlog opened only the ONE consumed segment's frames (reader +
-    // the .tsidx read-repair of the freshly-appended segment) — a
+    // backlog opened only the ONE consumed segment's frames — a
     // frame-reading metrics/planning path would show ~500 opens
     val opens = CountingReadFs.dataOpens.get
     assert(opens > 0 && opens <= 4,
@@ -1252,7 +1250,7 @@ class StreamingSpec extends AnyFunSuite {
     val log = graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf)
     def lastSegLen(t: String): Long = {
       val segs = log.segments(graft.model.TopicBucket(t, "b0000"))
-      log.fileLen(segs.last._1)
+      log.fs.getFileStatus(segs.last._1).getLen
     }
     assert(lastSegLen("rtb") * 3 < lastSegLen("rta"),
       s"rtb's epoch must be zstd-framed: ${lastSegLen("rtb")} vs ${lastSegLen("rta")}")
