@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
   *   - AskQuery consume loop (`consumer/server/core.go:46-64`)  → [[read]] /
   *     [[readStream]] (+ checkpoint = consumer identity, SURVEY A7)
   *   - GOB payload decode (`pkg/p2p/encoder/default_encoder.go:13-22`) →
-  *     [[lift]] with an explicit schema (`from_json`)
+  *     [[lift]] with an explicit schema (`from_json` values)
   */
 object Ripple {
 
@@ -830,9 +830,13 @@ object Ripple {
     * over the reference's byte blobs (SURVEY §1.3): topics become fully
     * queryable tables. Envelope metadata is underscore-prefixed so payload
     * fields (which may legitimately be named ts/id/offset) never collide.
+    * The payload columns are [[graft.functions.PayloadJson]]'s: the values
+    * `from_json(cast(data as string), schema)` gives, decoded once per
+    * record straight from the payload bytes in the session time zone.
+    * Batch and streaming envelopes alike.
     */
   def lift(envelope: DataFrame, schema: StructType): DataFrame =
-    envelope.withColumn("v", from_json(col("data").cast("string"), schema))
+    envelope.withColumn("v", graft.functions.payload.payload_json(col("data"), schema))
       .select(col("topic").as("_topic"), col("bucket").as("_bucket"),
         col("offset").as("_offset"), col("id").as("_id"), col("ts").as("_ts"),
         col("v.*"))
@@ -846,9 +850,11 @@ object Ripple {
       FileTopicLog.cached(root, LogFs.activeHadoopConf), topic))
 
   /** Typed batch scan of a schema-registered topic: underscore envelope
-    * metadata + payload columns, parsed executor-side in the connector
-    * (option `lift`) — equivalent to `lift(read(...), root, topic)` but
-    * with offset/bucket pushdown intact on the `_offset`/`_bucket` names.
+    * metadata + payload columns, decoded executor-side in the connector
+    * (option `lift`) by the same [[graft.functions.PayloadJsonDecoder]] in
+    * the session time zone — row for row equal to
+    * `lift(read(...), root, topic)`, with offset/bucket pushdown intact on
+    * the `_offset`/`_bucket` names.
     */
   def readLifted(spark: SparkSession, root: String, topic: String): DataFrame =
     spark.read.format("ripple").option("path", root).option("topic", topic)

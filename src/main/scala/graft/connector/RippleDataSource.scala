@@ -172,8 +172,10 @@ import scala.jdk.CollectionConverters._
   *     payload bytes and parses only the raw header blocks
   *   - `lift` (read, default false): expose the topic's REGISTERED payload
   *     schema ([[TopicSchemas]]) as typed columns (underscore-prefixed
-  *     envelope metadata + payload fields), parsed executor-side; loud
-  *     when the topic has no registered schema. The schema is CAPTURED at
+  *     envelope metadata + payload fields), decoded executor-side in the
+  *     session time zone by [[graft.functions.PayloadJsonDecoder]], so the
+  *     values equal [[graft.api.Ripple.lift]]'s; loud when the topic has
+  *     no registered schema. The schema is CAPTURED at
   *     query/plan time: a RUNNING lifted stream keeps the shape it
   *     started with across a concurrent [[TopicSchemas.evolve]] (a frame
   *     cannot change columns mid-query) and picks the evolution up on

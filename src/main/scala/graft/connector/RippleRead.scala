@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -758,20 +759,23 @@ class RippleBatch(conf: RippleConf, schema: StructType, lo: Long, hi: Long,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new RippleReaderFactory(schema, conf.hconf, conf.lift)
+    new RippleReaderFactory(schema, conf.hconf, conf.lift,
+      SQLConf.get.sessionLocalTimeZone)
 }
 
 /** Ships the driver's Hadoop configuration to executor-side readers so the
   * segment paths resolve against the same filesystem (`hdfs://`, `file:/`)
   * the planner listed them from. `lift` switches readers to the typed
-  * payload view (underscore metadata + parsed JSON payload columns).
+  * payload view (underscore metadata + decoded JSON payload columns),
+  * decoded in `timeZoneId`, the planning session's time zone.
   */
 class RippleReaderFactory(schema: StructType,
     hconf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
-    lift: Boolean = false)
+    lift: Boolean, timeZoneId: String)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new RipplePartitionReader(partition.asInstanceOf[RippleInputPartition], schema, hconf, lift)
+    new RipplePartitionReader(partition.asInstanceOf[RippleInputPartition], schema, hconf,
+      lift, timeZoneId)
 }
 
 /** Streams frames from one segment slice; the executor-side analog of the
@@ -780,7 +784,7 @@ class RippleReaderFactory(schema: StructType,
   */
 class RipplePartitionReader(p: RippleInputPartition, schema: StructType,
     hconf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
-    lift: Boolean = false)
+    lift: Boolean, timeZoneId: String)
     extends PartitionReader[InternalRow] {
 
   /** Open the planned segment file; when it VANISHED between planning and
@@ -834,47 +838,25 @@ class RipplePartitionReader(p: RippleInputPartition, schema: StructType,
   private val topicU = UTF8String.fromString(p.topic)
   private val bucketU = UTF8String.fromString(p.bucket)
 
-  /** Lifted payload parsing (schema-registry reads): the pruned schema's
-    * non-underscore fields, parsed from each frame's JSON payload with
-    * Catalyst's own [[org.apache.spark.sql.catalyst.json.JacksonParser]]
-    * (the `from_json` engine — same type coercions, executor-side, no
-    * driver round-trip). Pruning works through Jackson: a 2-field read of
-    * a 50-field payload tokenizes but never materializes the other 48.
-    * Malformed payloads yield all-null payload columns (PERMISSIVE), not a
+  /** Lifted payload decoding (schema-registry reads): the pruned schema's
+    * non-underscore fields, decoded from each frame's JSON payload by
+    * [[graft.functions.PayloadJsonDecoder]] in the session time zone —
+    * the decoder [[graft.api.Ripple.lift]] runs, so a lifted scan returns
+    * `lift(read(...))`'s values, partial results of a type-mismatched
+    * record included. Pruning works through Jackson: a 2-field read of a
+    * 50-field payload tokenizes but never materializes the other 48.
+    * Malformed payloads yield null payload columns (PERMISSIVE), not a
     * poisoned partition — blobs written by pre-registry producers stay
     * readable as nulls next to their envelope metadata.
     */
   private val liftedFieldNames =
     Set("_topic", "_bucket", "_offset", "_id", "_ts", "_headers")
-  private val payloadParse: Option[(org.apache.spark.sql.catalyst.json.JacksonParser, Map[String, Int], Int)] =
-    if (!lift) None else {
-      val payloadFields = schema.fields.filter(f => !liftedFieldNames.contains(f.name))
-      if (payloadFields.isEmpty) None
-      else {
-        val ps = StructType(payloadFields.toIndexedSeq)
-        val parser = new org.apache.spark.sql.catalyst.json.JacksonParser(
-          ps, new org.apache.spark.sql.catalyst.json.JSONOptions(
-            Map.empty[String, String], "UTC", ""),
-          false, Seq.empty)
-        Some((parser, ps.fieldNames.zipWithIndex.toMap, ps.length))
-      }
-    }
-
-  private def parsePayload(data: Array[Byte]): InternalRow =
-    payloadParse match {
-      case None => null
-      case Some((parser, _, n)) =>
-        if (data == null || data.isEmpty) new GenericInternalRow(n)
-        else try {
-          parser.parse[UTF8String](UTF8String.fromBytes(data),
-              org.apache.spark.sql.catalyst.json.CreateJacksonParser.utf8String,
-              identity[UTF8String])
-            .headOption.getOrElse(new GenericInternalRow(n))
-        } catch {
-          case _: org.apache.spark.sql.catalyst.util.BadRecordException =>
-            new GenericInternalRow(n) // PERMISSIVE: malformed → nulls
-        }
-    }
+  private val payloadSchema = StructType(
+    if (lift) schema.fields.filter(f => !liftedFieldNames.contains(f.name)).toIndexedSeq
+    else Nil)
+  private val payloadParse: Option[graft.functions.PayloadJsonDecoder] =
+    if (payloadSchema.isEmpty) None
+    else Some(new graft.functions.PayloadJsonDecoder(payloadSchema, timeZoneId))
 
   // Precomputed per-field extractors for the pruned schema. Envelope mode
   // uses the bare names; lifted mode the underscore names, with every other
@@ -913,8 +895,7 @@ class RipplePartitionReader(p: RippleInputPartition, schema: StructType,
           (_: Int, ts: Long, _: Array[Byte], _: InternalRow) =>
             java.lang.Long.valueOf(ts * 1000L) // millis → micros
         case (other, true) =>
-          val idx = payloadParse.map(_._2).getOrElse(Map.empty).getOrElse(other,
-            throw new IllegalArgumentException(s"unknown lifted column $other"))
+          val idx = payloadSchema.fieldIndex(other)
           val dt = f.dataType
           (_: Int, _: Long, _: Array[Byte], pr: InternalRow) =>
             if (pr == null || pr.isNullAt(idx)) null else pr.get(idx, dt)
@@ -933,7 +914,7 @@ class RipplePartitionReader(p: RippleInputPartition, schema: StructType,
       curOff = if (it.explicitOffset >= 0) it.explicitOffset else off
       off = curOff + 1
       if (curOff >= p.from && curOff < p.until) {
-        val pr = if (payloadParse.isDefined) parsePayload(data) else null
+        val pr = if (payloadParse.isEmpty) null else payloadParse.get.decode(data)
         val values = new Array[Any](getters.length)
         var i = 0
         while (i < getters.length) { values(i) = getters(i)(id, ts, data, pr); i += 1 }
@@ -1301,7 +1282,8 @@ class RippleMicroBatchStream(conf: RippleConf, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new RippleReaderFactory(schema, conf.hconf, conf.lift)
+    new RippleReaderFactory(schema, conf.hconf, conf.lift,
+      SQLConf.get.sessionLocalTimeZone)
 
   /** The checkpoint is the PRIMARY commit log; a configured `consumerId`
     * additionally records the committed end as a broker-side cursor (always

@@ -16,14 +16,11 @@ import org.apache.spark.sql.types.StructType
   */
 object TopicStreams {
 
-  /** Lift a ripple envelope stream's JSON payloads into columns —
-    * streaming twin of [[graft.api.Ripple.lift]].
+  /** Lift a ripple envelope stream's JSON payloads into columns: this is
+    * [[graft.api.Ripple.lift]], which serves batch and streaming alike.
     */
   def lift(stream: DataFrame, schema: StructType): DataFrame =
-    stream.withColumn("v", from_json(col("data").cast("string"), schema))
-      .select(col("topic").as("_topic"), col("bucket").as("_bucket"),
-        col("offset").as("_offset"), col("id").as("_id"), col("ts").as("_ts"),
-        col("v.*"))
+    graft.api.Ripple.lift(stream, schema)
 
   /** Tumbling or sliding event-time window aggregation with a watermark
     * bounding state (late data beyond `lateness` is dropped — the

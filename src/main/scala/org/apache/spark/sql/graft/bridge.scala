@@ -13,6 +13,13 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `t` with every field, array element and map value nullable — the
+    * `private[spark]` `DataType.asNullable` that `from_json` parses into
+    * (a payload may omit any field, whatever the declared schema says).
+    */
+  def asNullable(t: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = t.asNullable
+
   /** One of Spark's provisioned scratch directories for the current JVM
     * (`spark.local.dir` / YARN `LOCAL_DIRS` — the NVMe scratch a real
     * cluster provisions), `None` in a bare JVM. Spill files belong here,

@@ -267,6 +267,9 @@ class ConnectorSpec extends AnyFunSuite {
     Ripple.createTopic(root, "s1", numBuckets = 2)
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Int]
+    // data first: an AvailableNow query fixes its end offset at start, so
+    // rows added after start() may or may not be in its one epoch
+    mem.addData(1 to 50: _*)
     val q = mem.toDS().toDF("n")
       .select(col("n").cast("int").as("id"),
         concat(lit("ev-"), col("n")).cast("binary").as("data"))
@@ -274,7 +277,6 @@ class ConnectorSpec extends AnyFunSuite {
       .option("path", root).option("topic", "s1").option("buckets", 2)
       .option("checkpointLocation", tmp())
       .trigger(Trigger.AvailableNow()).start()
-    mem.addData(1 to 50: _*)
     q.awaitTermination(30000)
 
     val back = Ripple.read(spark, root, "s1")
@@ -502,7 +504,7 @@ class ConnectorSpec extends AnyFunSuite {
       val p = graft.connector.RippleInputPartition(root, "cp", "b0000",
         path.toString, start, start, start + count)
       val r = new graft.connector.RipplePartitionReader(p,
-        graft.model.Schemas.envelope, hb)
+        graft.model.Schemas.envelope, hb, lift = false, timeZoneId = "UTC")
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
       try while (r.next()) {
         val row = r.get()
@@ -853,6 +855,50 @@ class ConnectorSpec extends AnyFunSuite {
       Ripple.readLifted(spark, root, "blob").collect()
     }
     assert(e2.getMessage.contains("no registered payload schema"), e2.getMessage)
+  }
+
+  test("lifted scan ≡ lift(read): batch and streaming, non-UTC session zone, partial results") {
+    import org.apache.spark.sql.Row
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val root = tmp()
+    Ripple.createTopic(root, "pj", numBuckets = 2)
+    val payloads = PayloadCorpus.edges.map(_._2) ++ PayloadCorpus.events(seed = 5L, n = 400)
+    Ripple.write(s.createDataFrame(
+      s.sparkContext.parallelize(payloads.zipWithIndex.map { case (b, i) => Row(i, b) }, 3),
+      StructType(Seq(StructField("id", IntegerType, nullable = false),
+        StructField("data", BinaryType)))), root, "pj", numBuckets = 2)
+    graft.connector.TopicSchemas.register(
+      graft.log.FileTopicLog.cached(root, graft.log.LogFs.activeHadoopConf), "pj",
+      PayloadCorpus.schema)
+    def rows(df: DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(r => (r.getString(1), r.getLong(2)))
+    def assertSame(native: Seq[Row], lifted: Seq[Row]): Unit = {
+      assert(native.size == payloads.size && lifted.size == payloads.size)
+      val diffs = native.zip(lifted).filter { case (a, b) => a != b }
+      assert(diffs.isEmpty, diffs.take(3).mkString("\n"))
+    }
+    val batch = rows(Ripple.readLifted(s, root, "pj"))
+    assertSame(batch, rows(Ripple.lift(Ripple.read(s, root, "pj"), root, "pj")))
+    // the two ways the scan used to differ: a zone-less timestamp parses in
+    // the session zone, and a type mismatch keeps the record's other fields
+    val byId = batch.map(r => r.getInt(3) -> r).toMap
+    val at = batch.head.fieldIndex("at")
+    val edgeId = PayloadCorpus.edges.map(_._1).zipWithIndex.toMap
+    assert(byId(edgeId("zone-less timestamp")).getTimestamp(at).toInstant ==
+      java.time.Instant.parse("2026-01-01T05:00:00Z"))
+    assert(byId(edgeId("type mismatch")).getAs[String]("name") == "x")
+    // streaming: the lifted source against lift over the envelope stream
+    def drain(df: DataFrame, name: String): Seq[Row] = {
+      val q = df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", tmp()).start()
+      try q.processAllAvailable() finally q.stop()
+      rows(s.table(name))
+    }
+    assertSame(
+      drain(s.readStream.format("ripple").option("path", root).option("topic", "pj")
+        .option("lift", "true").load(), "pj_native"),
+      drain(Ripple.lift(Ripple.readStream(s, root, "pj"), root, "pj"), "pj_lifted"))
   }
 
   test("additive schema evolution: old blobs lift with NULL new columns; non-additive refused") {

@@ -257,4 +257,68 @@ class FunctionsSpec extends AnyFunSuite {
         s"w=$w: winnow minima diverge:\n" + diff.limit(3).collect().mkString("\n"))
     }
   }
+
+  test("PayloadJson ≡ from_json(cast(data as string)): generated events + byte-level edge cases, non-UTC zone") {
+    import graft.functions.payload.payload_json
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val cases = PayloadCorpus.edges ++
+      PayloadCorpus.events(seed = 7L, n = 3000).zipWithIndex.map { case (b, i) => s"event $i" -> b }
+    val input = s.createDataFrame(
+      s.sparkContext.parallelize(cases.map { case (n, b) => Row(n, b) }, 4),
+      StructType(Seq(StructField("case", StringType), StructField("data", BinaryType))))
+    val schema = PayloadCorpus.schema
+    val got = input.select(col("case"),
+        payload_json(col("data"), schema).as("p"),
+        from_json(col("data").cast("string"), schema).as("f"))
+      .collect().map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
+    assert(got.size == cases.size)
+    val diffs = got.collect { case (n, (p, f)) if p != f => s"$n: payload_json=$p from_json=$f" }
+    assert(diffs.isEmpty, diffs.take(5).mkString("\n"))
+    // the edge cases exercise what they name: partial results, all-null
+    // rows, null structs, zone-dependent timestamps
+    def edge(n: String) = got(n)._1.asInstanceOf[Row]
+    assert(edge("null payload") == null && edge("empty") == null && edge("whitespace") == null)
+    assert(edge("bom").toSeq.forall(_ == null), "from_json reads a BOM as a bad record")
+    assert(edge("type mismatch").getAs[String]("name") == "x" &&
+      edge("type mismatch").isNullAt(0), "partial result keeps name")
+    assert(edge("invalid utf-8").getAs[String]("name") == "a\ufffd(")
+    assert(edge("zone-less timestamp").getAs[java.sql.Timestamp]("at").toInstant ==
+      java.time.Instant.parse("2026-01-01T05:00:00Z"), "parsed in the session zone")
+    assert(got.count { case (n, (p, _)) => n.startsWith("event") && p != null &&
+      !p.asInstanceOf[Row].isNullAt(5) } > 1000, "events carry parsed timestamps")
+  }
+
+  test("PayloadJson allocates at most 4 KB per pubsub-shaped record on the evaluating thread") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types._
+    val r = new scala.util.Random(11L)
+    val kinds = Seq("view", "click", "search", "add_to_cart", "checkout", "purchase")
+    val n = 20000
+    val rows = Array.tabulate(n) { i =>
+      InternalRow(PayloadCorpus.pubsubEvent(1L << 32 | i, r.nextInt(100000),
+        kinds(r.nextInt(kinds.size)), r.nextInt(100000), r.nextInt(1000),
+        1767225600000L + r.nextInt(21600000)).getBytes("UTF-8"))
+    }
+    val expr = graft.functions.PayloadJson(BoundReference(0, BinaryType, nullable = true),
+      PayloadCorpus.pubsubSchema, Some("UTC"))
+    def evalAll(): Long = {
+      var sum = 0L
+      var i = 0
+      while (i < n) { sum += expr.eval(rows(i)).asInstanceOf[InternalRow].getLong(4); i += 1 }
+      sum
+    }
+    evalAll(); evalAll() // warm: parser built, JIT compiled
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val sum = evalAll()
+    val perRecord = (mx.getThreadAllocatedBytes(tid) - before) / n
+    assert(sum > 0)
+    assert(perRecord <= 4096, s"$perRecord B allocated per record")
+  }
 }

@@ -54,6 +54,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.contains(("2024-01-01 10:10:00.0", 1L)), rows.toString)
   }
 
+  test("lifted pubsub stream decodes each payload once: one PayloadJson, no JsonToStructs") {
+    import spark.implicits._
+    val root = tmp()
+    Ripple.createTopic(root, "pj", numBuckets = 2)
+    val events = (0 until 200).map { i =>
+      (i, PayloadCorpus.pubsubEvent(i, i, "view", i, i % 7, 1767225600000L + i * 60000L)
+        .getBytes("UTF-8"))
+    }
+    Ripple.write(events.toDF("id", "data"), root, "pj", numBuckets = 2)
+    // no trailing no-data epoch: the last execution is the one that decoded
+    val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val lifted = TopicStreams.lift(Ripple.readStream(s, root, "pj"), PayloadCorpus.pubsubSchema)
+      .withColumn("ets", timestamp_millis(col("ts_ms")))
+    val q = TopicStreams.windowedCounts(lifted, "ets", "3650 days", "1 hour")
+      .writeStream.format("memory").queryName("pj_windows").outputMode("update")
+      .option("checkpointLocation", tmp()).start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.optimizedPlan
+      def count(p: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+        plan.flatMap(_.expressions.flatMap(_.collect { case e if p(e) => e })).size
+      assert(count(_.isInstanceOf[graft.functions.PayloadJson]) == 1, plan.toString)
+      assert(count(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.JsonToStructs]) == 0, plan.toString)
+    } finally q.stop()
+    // update mode: a window re-emitted by a later epoch carries its running totals
+    val totals = s.table("pj_windows").groupBy("win_start")
+      .agg(max("n").as("n"), max("total").as("total"))
+      .agg(sum("n"), sum("total")).collect().head
+    assert(totals.getLong(0) == 200L && totals.getLong(1) == (0 until 200).map(_ % 7).sum)
+  }
+
   test("sliding window emits overlapping buckets") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
